@@ -48,7 +48,7 @@ object AlertaMain {
     val specs = AlertSpecs.loadAll(specsMask)
     val runner = new Runner(spark, new AlertStore(storeDir), new InflightStore(storeDir))
     val stats = runner.runOnce(lakeNorm, specs, now)
-    println(s"""{"alerts_saved":${stats.alertsSaved},"sequences_completed":${stats.sequencesCompleted},"specs":${specs.size},"inflight":${runner.inflight.count}}""")
+    println(s"""{"alerts_saved":${stats.alertsSaved},"sequences_completed":${stats.sequencesCompleted},"specs":${specs.size},"inflight":${runner.inflight.count},"evaluations":${stats.evaluations},"evaluations_skipped":${stats.evaluationsSkipped}}""")
     spark.stop()
   }
 }

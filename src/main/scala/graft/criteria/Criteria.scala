@@ -360,14 +360,13 @@ object Criteria {
     * [[graft.functions.Functions.register]] ran on the session. The
     * engine entry points all register up front; for ad-hoc callers
     * compiling criteria on a bare session, toColumn registers on the
-    * active session defensively (idempotent — registration is
-    * createOrReplace of the same builders).
+    * active session when that session's registry lacks the dialect.
     */
   def toColumn(presto: String): Column =
     if (presto.trim.isEmpty) lit(true)
     else {
       org.apache.spark.sql.SparkSession.getActiveSession
-        .foreach(graft.functions.Functions.register)
+        .foreach(graft.functions.Functions.ensureRegistered)
       expr(rewrite(presto))
     }
 

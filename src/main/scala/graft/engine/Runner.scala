@@ -2,6 +2,8 @@ package graft.engine
 
 import java.time.Instant
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.criteria.Criteria
@@ -20,6 +22,26 @@ import graft.store.{AlertStore, InflightStore}
   * spec's criteria is a filter over the shared cache — identical
   * semantics, N× less I/O. At cluster scale the cache is the hot last
   * 2 hours of partitions.
+  *
+  * The fire-probe: on most runs most specs fire nothing, yet each
+  * evaluation costs a multi-stage query. Before ①, one query
+  * ([[Trigger.mayFire]]) bounds every threshold evaluation of the run
+  * — each threshold spec, and the first unfilled threshold slot of
+  * each inflight doc and sequence spec, criteria rendered — and ①/②
+  * run the exact path (fetch → dedup → trigger → save) only for those
+  * that may fire. Skipping is exact, not a heuristic:
+  *   - the probe dedups against the pre-run alerted ids (and inflight
+  *     ids, for slots); phases ① and ② only add ids (deletes come in
+  *     ③/④), so it removes no more than the exact path does;
+  *   - it counts without the per-spec `limit`, so its group counts
+  *     bound the exact path's from above;
+  *   - key values are built as [[Trigger.threshold]] builds them (NULL
+  *     keys drop out) and a NULL criteria result matches nothing;
+  *   - deadman specs and slots, evaluations whose criteria or key does
+  *     not build or resolve, and everything when the probe query
+  *     throws are never skipped — the exact path runs and logs them
+  *     as before;
+  *   - a skipped slot saves nothing, as a zero-row trigger does.
   */
 class Runner(
     spark: SparkSession,
@@ -29,7 +51,11 @@ class Runner(
 
   private val log = org.apache.log4j.Logger.getLogger(getClass)
 
-  case class RunStats(alertsSaved: Int, sequencesCompleted: Int)
+  /** `evaluations` counts the specs and inflight docs of phases ① and
+    * ②; `evaluationsSkipped` those the fire-probe ruled out.
+    */
+  case class RunStats(alertsSaved: Int, sequencesCompleted: Int,
+      evaluations: Int, evaluationsSkipped: Int)
 
   def runOnce(lake: DataFrame, specs: Seq[Doc],
       now: Instant = Dates.utcnow()): RunStats = {
@@ -46,12 +72,29 @@ class Runner(
       val seq = new SequenceEngine(spark, alerts, inflight, fetch, idField)
       var saved = 0
 
-      // ① advance stored inflight sequences first (alerta.py:495)
-      seq.processInflightAlerts(now)
+      // the fire-probe, over the pre-run stores
+      val docs = inflight.all()
+      val evals = docs.map(seq.slotEvaluation(_, now)) ++ specs.map { params =>
+        AlertDoc.str(params, "alert_type") match {
+          case "threshold" => Try(Shells.threshold(params, now)).toOption.map(shell =>
+            Trigger.Evaluation(AlertDoc.str(shell, "criteria"), shell, slot = false))
+          case "sequence" => seq.slotEvaluation(params, now)
+          case _          => None
+        }
+      }
+      val mayFire = Trigger.mayFire(window, evals, alerts.alertedEventIds(spark, idField),
+        inflight.inflightEventIds(spark, idField), idField)
+      val (docsMayFire, specsMayFire) = mayFire.splitAt(docs.size)
+
+      // ① advance stored inflight sequences first, utcepoch-desc
+      // (alerta.py:210-215, 495)
+      docs.lazyZip(docsMayFire).foreach { (doc, may) =>
+        if (may) seq.processSequenceAlert(doc, now)
+      }
 
       // ② evaluate definitions (alerta.py:499-506)
-      specs.foreach { params =>
-        AlertDoc.str(params, "alert_type") match {
+      specs.lazyZip(specsMayFire).foreach { (params, may) =>
+        if (may) AlertDoc.str(params, "alert_type") match {
           case "threshold" => saved += processThreshold(params, fetch, now, idField)
           case "deadman"   => saved += processDeadman(params, fetch, now)
           case "sequence"  => seq.processSequenceAlert(params, now)
@@ -62,7 +105,7 @@ class Runner(
       // ③ complete + ④ expire (alerta.py:510-513)
       val completed = seq.createSequenceAlerts()
       seq.expireSequenceAlerts(now)
-      RunStats(saved + completed.size, completed.size)
+      RunStats(saved + completed.size, completed.size, mayFire.size, mayFire.count(!_))
     } finally window.unpersist()
   }
 
@@ -72,7 +115,7 @@ class Runner(
   private def processThreshold(params: Doc, fetch: String => Option[DataFrame],
       now: Instant, idField: String): Int = {
     val shell = Shells.threshold(params, now)
-    fetch(AlertDoc.str(shell, "criteria")).filter(ev => !ev.isEmpty).map { ev =>
+    fetch(AlertDoc.str(shell, "criteria")).map { ev =>
       val fresh = Dedup.removePreviouslyAlerted(
         ev, alerts.alertedEventIds(spark, idField), idField)
       val rows = Trigger.threshold(fresh, shell, now).collect()

@@ -2,6 +2,8 @@ package graft.engine
 
 import java.time.Instant
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.{Dates, Template}
@@ -32,16 +34,39 @@ class SequenceEngine(
 
   private val log = org.apache.log4j.Logger.getLogger(getClass)
 
-  /** process_sequence_alert (alerta.py:274-317). */
-  def processSequenceAlert(params: Doc, now: Instant = Dates.utcnow()): Unit = {
+  /** The first unfilled slot of a sequence (early termination,
+    * alerta.py:283-285) with its criteria rendered: cross-slot template
+    * refs resolve against the full alert doc, BEFORE SQL parsing —
+    * dynamic, data-dependent query synthesis (alerta.py:291).
+    */
+  private case class NextSlot(alert: Doc, slots: Seq[Doc], index: Int, criteria: String) {
+    def slot: Doc = slots(index)
+  }
+
+  private def nextSlot(params: Doc, now: Instant): Option[NextSlot] = {
     val alert = AlertDoc.merge(params, Shells.sequence(params, now))
     val slots = AlertDoc.docs(alert, "slots")
     val index = slots.indexWhere(s => !s.contains("triggered"))
-    if (index >= 0) {
+    if (index < 0) None
+    else Some(NextSlot(alert, slots, index,
+      Template.render(AlertDoc.str(slots(index), "criteria"), alert)))
+  }
+
+  /** The next slot as the fire-probe sees it ([[Trigger.mayFire]]):
+    * threshold slots only — a deadman slot must evaluate absence — and
+    * None when the doc does not even render, so the exact path meets
+    * the failure where it does today.
+    */
+  def slotEvaluation(params: Doc, now: Instant): Option[Trigger.Evaluation] =
+    Try(nextSlot(params, now)).toOption.flatten.collect {
+      case n if AlertDoc.str(n.slot, "alert_type") == "threshold" =>
+        Trigger.Evaluation(n.criteria, n.slot, slot = true)
+    }
+
+  /** process_sequence_alert (alerta.py:274-317). */
+  def processSequenceAlert(params: Doc, now: Instant = Dates.utcnow()): Unit =
+    nextSlot(params, now).foreach { case NextSlot(alert, slots, index, criteria) =>
       val slot = slots(index)
-      // cross-slot template refs resolve against the full alert doc,
-      // BEFORE SQL parsing — dynamic, data-dependent query synthesis.
-      val criteria = Template.render(AlertDoc.str(slot, "criteria"), alert)
       val events: Option[DataFrame] =
         try fetch(criteria)
         catch { case e: Exception => log.error(s"query failed: $criteria", e); None }
@@ -54,13 +79,12 @@ class SequenceEngine(
 
       AlertDoc.str(slot, "alert_type") match {
         case "threshold" =>
-          events.filter(ev => !ev.isEmpty).foreach { ev =>
+          events.foreach { ev =>
             // threshold slots dedup against both stores (alerta.py:297-308)
             val fresh = Dedup.removePreviouslyAlerted(
               Dedup.removeInflightEvents(ev, inflight.inflightEventIds(spark, idField), idField),
               alerts.alertedEventIds(spark, idField), idField)
-            if (!fresh.isEmpty)
-              saveSlotAlerts(Trigger.threshold(fresh, slot, now))
+            saveSlotAlerts(Trigger.threshold(fresh, slot, now))
           }
         case "deadman" =>
           // deadman slots skip dedup entirely — the Q5 quirk
@@ -73,13 +97,6 @@ class SequenceEngine(
           log.warn(s"unknown slot alert_type '$other' — skipped")
       }
     }
-  }
-
-  /** process_inflight_alerts (alerta.py:210-215): advance stored
-    * sequences before reading definitions — utcepoch-desc order.
-    */
-  def processInflightAlerts(now: Instant = Dates.utcnow()): Unit =
-    inflight.all().foreach(processSequenceAlert(_, now))
 
   /** create_sequence_alerts (alerta.py:218-237): all slots filled
     * (`events` present) → render final summary over the full doc, save
@@ -104,9 +121,4 @@ class SequenceEngine(
       if (exp.nonEmpty && Dates.toUTC(exp).isBefore(now))
         inflight.delete(AlertDoc.str(doc, "_id"))
     }
-
-  private def emptyEvents: DataFrame = {
-    import spark.implicits._
-    spark.emptyDataset[(String, String)].toDF("eventid", "source")
-  }
 }

@@ -2,10 +2,13 @@ package graft.engine
 
 import java.time.Instant
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.criteria.Criteria
 import graft.functions.{Dates, Paths, Template}
 import graft.model.AlertDoc
 import graft.model.AlertDoc.Doc
@@ -30,10 +33,83 @@ object Trigger {
 
   /** G2: fire on count >= threshold. */
   def threshold(events: DataFrame, spec: Doc, now: Instant = Dates.utcnow()): DataFrame = {
-    val th = AlertDoc.int(spec, "threshold", 1)
-    val groups = grouped(events, aggKey(spec)).where(col("__count") >= th)
+    val groups = grouped(events, aggKey(spec)).where(col("__count") >= minCount(spec))
     alertify(groups, spec, now, events.schema)
   }
+
+  private def minCount(spec: Doc): Int = AlertDoc.int(spec, "threshold", 1)
+
+  /** One threshold evaluation of a run as [[mayFire]] bounds it: the
+    * criteria (a slot's already rendered) and the spec or slot that
+    * supplies `aggregation_key` and `threshold`. A `slot` evaluation
+    * also drops inflight event ids (alerta.py:297-308).
+    */
+  case class Evaluation(criteria: String, spec: Doc, slot: Boolean)
+
+  /** The fire-probe: one query over the run's window answers, for every
+    * threshold evaluation at once, whether [[threshold]] could return a
+    * row. Each window row is tagged with the (evaluation, key value)
+    * pairs whose criteria it matches, after the same [[Dedup]]
+    * anti-joins against the ids passed in; an evaluation may fire when
+    * its largest group reaches its threshold.
+    *
+    * Returns one flag per entry, false only where the evaluation
+    * provably fires nothing. `None` entries (deadman, which must
+    * evaluate absence; unknown types), evaluations whose criteria or
+    * key fails to build, resolve or is nondeterministic, and every
+    * entry when the probe query throws are true, so the caller's exact
+    * path runs and logs them as before.
+    */
+  def mayFire(window: DataFrame, evals: Seq[Option[Evaluation]],
+      alertedIds: => DataFrame, inflightIds: => DataFrame,
+      idField: String): Seq[Boolean] = {
+    val probed: Map[Int, (Int, Column, Boolean)] = evals.zipWithIndex.flatMap {
+      case (Some(e), k) => probeTag(window, e, k).map(k -> _)
+      case _            => None
+    }.toMap
+    def tags(slot: Boolean) = probed.values.collect { case (_, t, `slot`) => t }.toSeq
+    def matches(rows: => DataFrame, ts: Seq[Column]): Option[DataFrame] =
+      if (ts.isEmpty) None
+      else Some(rows.select(explode(array(ts: _*)).as("t"))
+        .where(col("t.v").isNotNull).select("t.k", "t.v"))
+    val largest: Option[Map[Int, Long]] =
+      if (probed.isEmpty) Some(Map.empty)
+      else try {
+        val fresh = Dedup.removePreviouslyAlerted(window, alertedIds, idField)
+        val tagged = (matches(fresh, tags(slot = false)) ++ matches(
+          Dedup.removeInflightEvents(fresh, inflightIds, idField), tags(slot = true)))
+          .reduce(_ unionByName _)
+        Some(tagged.groupBy("k", "v").count().groupBy("k").agg(max("count"))
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+      } catch {
+        case NonFatal(e) =>
+          log.warn("fire-probe failed — evaluating every spec", e)
+          None
+      }
+    evals.indices.map(k => (largest, probed.get(k)) match {
+      case (Some(counts), Some((th, _, _))) => counts.get(k).exists(_ >= th)
+      case _                                => true
+    })
+  }
+
+  /** The probe's tag for one evaluation — (threshold, tag column, slot)
+    * — or None when the exact path must see it: its key is blank or
+    * unresolvable (logged in [[grouped]]), or its criteria fails to
+    * parse or analyse in the same `where` that `Runner`'s fetch builds.
+    * The key value is built exactly as [[grouped]] builds it; a NULL
+    * criteria result tags nothing.
+    */
+  private def probeTag(window: DataFrame, e: Evaluation,
+      k: Int): Option[(Int, Column, Boolean)] =
+    try {
+      val key = aggKey(e.spec)
+      val criteria = Criteria.toColumn(e.criteria)
+      val analysed = window.where(criteria).queryExecution.analyzed
+      if (key.trim.isEmpty || Paths.leafType(window.schema, key).isEmpty ||
+          !analysed.expressions.forall(_.deterministic)) None
+      else Some((minCount(e.spec), when(criteria, struct(lit(k).as("k"),
+        Paths.column(window.schema, key).cast(StringType).as("v"))), e.slot))
+    } catch { case NonFatal(_) => None }
 
   /** G3: fire on count <= threshold; absent events/groups synthesize
     * the deadman meta-event and a zero count (alerta.py:366-386).

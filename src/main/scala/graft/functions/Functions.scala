@@ -731,9 +731,21 @@ object Functions {
     // top-level [[JsonSizeFn]] so the registered closure stays free of
     // `Functions$` (which is not Serializable — capturing it made the
     // UDF throw Task-not-serializable on any executor-side eval).
-    spark.udf.register(guarded("json_size"),
+    // keep last: ensureRegistered reads its presence as "all registered"
+    spark.udf.register(guarded(lastRegistered),
       (json: String, path: String) => JsonSizeFn.size(json, path))
   }
+
+  private val lastRegistered = "json_size"
+
+  /** [[register]] unless this session's own registry already holds
+    * the dialect — the check lives in the session, so a new session
+    * registers afresh and nothing is cached process-wide.
+    */
+  def ensureRegistered(spark: SparkSession): Unit =
+    if (!spark.sessionState.functionRegistry
+        .functionExists(FunctionIdentifier(lastRegistered)))
+      register(spark)
 
   /** MySQL %-token datetime format (Presto's date_format/date_parse
     * dialect) → Java DateTimeFormatter pattern. Literal runs are

@@ -3,6 +3,7 @@ package graft.store
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths => JPaths, StandardOpenOption}
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -63,8 +64,10 @@ class AlertStore(dir: String) extends JsonlFile {
 
   // The append-only file is read once at open; saves update the cache
   // in place — alertedEventIds would otherwise re-read and re-parse a
-  // forever-growing file once per spec per run.
+  // forever-growing file once per spec per run. The id set of each id
+  // field asked for is built once from the docs, then grown per save.
   private var docs: Vector[Doc] = readAll().toVector
+  private val idSets = mutable.Map.empty[String, mutable.LinkedHashSet[String]]
 
   /** save_alert (alerta.py:76-89): stamp _id, normalized timestamp,
     * utcepoch; append.
@@ -77,6 +80,9 @@ class AlertStore(dir: String) extends JsonlFile {
       "utcepoch" -> ts.getEpochSecond)
     appendLine(doc)
     docs = docs :+ doc
+    idSets.foreach { case (field, ids) =>
+      ids ++= StoreIds.idsOf(doc, field, includeTopLevel = true)
+    }
     doc
   }
 
@@ -88,8 +94,12 @@ class AlertStore(dir: String) extends JsonlFile {
     * anti-join stays distributed; the id set is small → callers
     * broadcast it against the event scan.
     */
-  def alertedEventIds(spark: SparkSession, idField: String = "eventid"): DataFrame =
-    StoreIds.eventIds(spark, all(), idField, includeTopLevel = true)
+  def alertedEventIds(spark: SparkSession, idField: String = "eventid"): DataFrame = {
+    import spark.implicits._
+    idSets.getOrElseUpdate(idField, mutable.LinkedHashSet.from(
+      docs.iterator.flatMap(StoreIds.idsOf(_, idField, includeTopLevel = true))))
+      .toSeq.toDF(idField)
+  }
 }
 
 /** Inflight sequence state (S9/S10/S12): upsert by `_id`, scan in
@@ -134,28 +144,28 @@ class InflightStore(dir: String) extends JsonlFile {
   /** Ids already captured in inflight slots (alerta.py:60-73) — note:
     * slots only, not top-level events.
     */
-  def inflightEventIds(spark: SparkSession, idField: String = "eventid"): DataFrame =
-    StoreIds.eventIds(spark, all(), idField, includeTopLevel = false)
+  def inflightEventIds(spark: SparkSession, idField: String = "eventid"): DataFrame = {
+    import spark.implicits._
+    docs.flatMap(StoreIds.idsOf(_, idField, includeTopLevel = false)).distinct.toDF(idField)
+  }
 }
 
+/** Event ids are extracted from alert docs driver-side and
+  * parallelized: the docs are bounded, and this avoids Spark JSON
+  * schema inference over heterogeneous alert files. The *join* against
+  * candidate events is what must scale, and it receives the ids as a
+  * broadcast.
+  */
 private object StoreIds {
-  /** Extract event ids from alert docs driver-side and parallelize:
-    * the docs are bounded, and this avoids Spark JSON schema inference
-    * over heterogeneous alert files. The *join* against candidate
-    * events is what must scale, and it receives this as a broadcast.
+  /** The event ids of one alert doc, at `events[]` (when
+    * `includeTopLevel`) and `slots[].events[]` (alerta.py:47-54).
     */
-  def eventIds(spark: SparkSession, docs: Seq[Doc], idField: String,
-      includeTopLevel: Boolean): DataFrame = {
-    import spark.implicits._
-    def idsOf(events: Seq[Any]): Seq[String] = events.collect {
+  def idsOf(doc: Doc, idField: String, includeTopLevel: Boolean): Seq[String] = {
+    def ids(events: Seq[Any]): Seq[String] = events.collect {
       case m: Map[_, _] =>
         m.asInstanceOf[Doc].get(idField).filter(_ != null).map(_.toString)
     }.flatten
-    val ids = docs.flatMap { d =>
-      val top = if (includeTopLevel) idsOf(AlertDoc.seq(d, "events")) else Seq.empty
-      val slotted = AlertDoc.docs(d, "slots").flatMap(s => idsOf(AlertDoc.seq(s, "events")))
-      top ++ slotted
-    }.distinct
-    ids.toDF(idField)
+    val top = if (includeTopLevel) ids(AlertDoc.seq(doc, "events")) else Seq.empty
+    top ++ AlertDoc.docs(doc, "slots").flatMap(s => ids(AlertDoc.seq(s, "events")))
   }
 }

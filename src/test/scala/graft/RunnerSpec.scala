@@ -36,6 +36,22 @@ class RunnerSpec extends AnyFunSuite with SparkSuite {
     "summary" -> "expected refund events are missing",
     "aggregation_key" -> "user_id", "threshold" -> 0)
 
+  val purchaseThenError = Map[String, Any](
+    "alert_name" -> "purchase_then_error", "alert_type" -> "sequence",
+    "lifespan" -> "1 hour",
+    "summary" -> "user {{slots.1.metadata.value}} purchased then errored",
+    "slots" -> Seq(
+      Map[String, Any]("alert_name" -> "buy", "alert_type" -> "threshold",
+        "criteria" -> "event_type='purchase'",
+        "summary" -> "{{metadata.count}} purchases by {{metadata.value}}",
+        "aggregation_key" -> "user_id", "threshold" -> 1, "event_sample_count" -> 0),
+      Map[String, Any]("alert_name" -> "fail", "alert_type" -> "threshold",
+        // cross-slot ref: the error must belong to the user captured
+        // by slot 0 of THIS inflight doc
+        "criteria" -> "event_type='error' AND user_id = {{slots.0.metadata.value}}",
+        "summary" -> "error by {{metadata.value}}",
+        "aggregation_key" -> "user_id", "threshold" -> 1, "event_sample_count" -> 0)))
+
   test("run fires threshold alerts within the 2-hour window; dedup stops re-fire") {
     val runner = mkRunner()
     val lake = Tables(spark, sf(), "events")
@@ -74,24 +90,8 @@ class RunnerSpec extends AnyFunSuite with SparkSuite {
   test("sequence lifecycle end-to-end over the real lake (§3.3 phase order)") {
     val runner = mkRunner()
     val lake = Tables(spark, sf("sf0.01"), "events")
-    val seqSpec = Map[String, Any](
-      "alert_name" -> "purchase_then_error", "alert_type" -> "sequence",
-      "lifespan" -> "1 hour",
-      "summary" -> "user {{slots.1.metadata.value}} purchased then errored",
-      "slots" -> Seq(
-        Map[String, Any]("alert_name" -> "buy", "alert_type" -> "threshold",
-          "criteria" -> "event_type='purchase'",
-          "summary" -> "{{metadata.count}} purchases by {{metadata.value}}",
-          "aggregation_key" -> "user_id", "threshold" -> 1, "event_sample_count" -> 0),
-        Map[String, Any]("alert_name" -> "fail", "alert_type" -> "threshold",
-          // cross-slot ref: the error must belong to the user captured
-          // by slot 0 of THIS inflight doc
-          "criteria" -> "event_type='error' AND user_id = {{slots.0.metadata.value}}",
-          "summary" -> "error by {{metadata.value}}",
-          "aggregation_key" -> "user_id", "threshold" -> 1, "event_sample_count" -> 0)))
-
     // run 1: slot 0 fires per purchasing user → one inflight doc per group
-    runner.runOnce(lake, Seq(seqSpec), now)
+    runner.runOnce(lake, Seq(purchaseThenError), now)
     val created = runner.inflight.count
     assert(created > 1)
     assert(runner.alerts.all().isEmpty)
@@ -99,7 +99,7 @@ class RunnerSpec extends AnyFunSuite with SparkSuite {
     // run 2: phase ① advances each inflight (rendered slot-1 criteria);
     // only user 54 purchased AND errored in the window → exactly one
     // sequence completes (phase ③) and leaves inflight
-    runner.runOnce(lake, Seq(seqSpec), now)
+    runner.runOnce(lake, Seq(purchaseThenError), now)
     val completed = runner.alerts.all()
     assert(completed.size === 1)
     assert(completed.head("summary").toString === "user 54 purchased then errored")
@@ -143,4 +143,85 @@ class RunnerSpec extends AnyFunSuite with SparkSuite {
     runner.runOnce(Tables(spark, sf(), "events"), specs, now)
     assert(runner.alerts.all().nonEmpty)
   }
+
+  // --- the fire-probe ------------------------------------------------------
+
+  /** What `body` logs under the named loggers, with its result. */
+  def logged[A](loggers: String*)(body: => A): (A, Seq[String]) = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("runner-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val targets = loggers.map(LogManager.getLogger(_).asInstanceOf[CoreLogger])
+    targets.foreach(_.addAppender(appender))
+    try (body, seen.toArray(Array.empty[String]).toSeq)
+    finally { targets.foreach(_.removeAppender(appender)); appender.stop() }
+  }
+
+  test("fire-probe: a spec whose events an earlier spec saved this run does not fire") {
+    val runner = mkRunner()
+    val again = thresholdSpec + ("alert_name" -> "purchases_again")
+    val stats = runner.runOnce(Tables(spark, sf(), "events"), Seq(thresholdSpec, again), now)
+    // the probe dedups against the store as it was before the run, so it
+    // keeps both; the exact path sees what the first spec just saved
+    assert(stats.evaluations === 2 && stats.evaluationsSkipped === 0)
+    val names = runner.alerts.all().map(AlertDoc.str(_, "alert_name"))
+    assert(names.nonEmpty && names.forall(_ == "purchases"))
+  }
+
+  test("fire-probe: a deadman fires on an empty window, a quiet threshold is skipped") {
+    val runner = mkRunner()
+    val stats = runner.runOnce(Tables(spark, sf(), "events"),
+      Seq(thresholdSpec, deadmanSpec), Instant.parse("2030-01-01T00:00:00Z"))
+    assert(stats.evaluations === 2 && stats.evaluationsSkipped === 1)
+    assert(runner.alerts.all().map(AlertDoc.str(_, "alert_name")) === Seq("no_refunds"))
+  }
+
+  test("fire-probe: bad criteria and an unresolvable key are logged, not skipped") {
+    val runner = mkRunner()
+    val badCriteria = thresholdSpec ++ Map("alert_name" -> "bad_criteria",
+      "criteria" -> "THIS IS NOT ((( SQL")
+    val badKey = thresholdSpec ++ Map("alert_name" -> "bad_key",
+      "aggregation_key" -> "no.such.key")
+    val (stats, messages) = logged("graft.engine.Runner", "graft.engine.Trigger$") {
+      runner.runOnce(Tables(spark, sf(), "events"), Seq(badCriteria, badKey), now)
+    }
+    assert(messages.exists(_.startsWith("bad criteria: THIS IS NOT")))
+    assert(messages.exists(_.startsWith("aggregation_key 'no.such.key' does not resolve")))
+    assert(stats.evaluationsSkipped === 0)
+    assert(runner.alerts.all().isEmpty)
+  }
+
+  test("fire-probe failure: the run takes the exact path, which fails as it did") {
+    // the criteria throws at run time in the probe and on the exact path;
+    // a probe that swallowed its failure and skipped would return quietly
+    val runner = mkRunner()
+    val failing = thresholdSpec + ("criteria" -> "assert_true(value < 0) IS NULL")
+    val (_, messages) = logged("graft.engine.Trigger$") {
+      intercept[Exception](runner.runOnce(Tables(spark, sf(), "events"), Seq(failing), now))
+    }
+    assert(messages.exists(_.startsWith("fire-probe failed")))
+  }
+
+  test("fire-probe: skipped inflight slots leave their docs unchanged") {
+    val runner = mkRunner()
+    val lake = Tables(spark, sf("sf0.01"), "events")
+    runner.runOnce(lake, Seq(purchaseThenError), now)
+    val before = runner.inflight.all()
+    val stats = runner.runOnce(lake, Seq(purchaseThenError), now)
+    // one doc completes (see the lifecycle test); every other doc's slot
+    // 1 and the spec's slot 0, whose events are all inflight, are skipped
+    assert(stats.sequencesCompleted === 1)
+    assert(stats.evaluations === before.size + 1)
+    assert(stats.evaluationsSkipped === before.size)
+    val after = runner.inflight.all()
+    assert(after.size === before.size - 1 && after.toSet.subsetOf(before.toSet))
+  }
 }
+

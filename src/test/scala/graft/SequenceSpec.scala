@@ -77,7 +77,7 @@ class SequenceSpec extends AnyFunSuite with SparkSuite {
 
     // run 2: inflight advanced — slot 1 criteria renders the cross-slot
     // ref {{slots.0.events.0.useridentity.type}} → 'Root'
-    engine.processInflightAlerts()
+    inflight.all().foreach(engine.processSequenceAlert(_))
     assert(inflight.count === 1)
     val advanced = inflight.all().head
     assert(AlertDoc.docs(advanced, "slots")(1).get("triggered").contains(true))
@@ -108,7 +108,8 @@ class SequenceSpec extends AnyFunSuite with SparkSuite {
 
     engine.processSequenceAlert(spec)
     assert(inflight.count === 1)
-    engine.processInflightAlerts() // deadman slot: no bitwarden events → fires
+    // deadman slot: no bitwarden events → fires
+    inflight.all().foreach(engine.processSequenceAlert(_))
     val completed = engine.createSequenceAlerts()
     assert(completed.size === 1)
     val summary = completed.head("summary").toString

@@ -73,4 +73,18 @@ class StoreSpec extends AnyFunSuite with SparkSuite {
     assert(reopened.count === 1)
     assert(reopened.all().head("_id") === d("_id"))
   }
+
+  test("alerted ids stay current across saves and match a reopened store") {
+    val dir = tmp()
+    val store = new AlertStore(dir)
+    def ids(s: AlertStore): Set[String] =
+      s.alertedEventIds(spark).as[String].collect().toSet
+    store.save(Shells.threshold(Map()) + ("events" -> sampleEvents.take(1)))
+    assert(ids(store) === Set("aaa-1")) // the id set now exists; saves grow it
+    store.save(Shells.sequence(Map()) + ("slots" -> Seq(Map("events" -> sampleEvents))))
+    store.save(Shells.threshold(Map()) + ("events" -> Seq(Map("eventid" -> "bbb-1"))))
+    assert(ids(store) === Set("aaa-1", "aaa-2", "bbb-1"))
+    assert(ids(store) === ids(new AlertStore(dir)))
+    assert(store.alertedEventIds(spark).count() === 3) // no duplicates
+  }
 }

@@ -123,4 +123,80 @@ class TriggerSpec extends AnyFunSuite with SparkSuite {
     val spec = Shells.threshold(Map("aggregation_key" -> "no.such.path"))
     assert(Trigger.threshold(cloudtrailEvents, spec).isEmpty)
   }
+
+  // --- the fire-probe (Trigger.mayFire) -----------------------------------
+
+  def noIds: DataFrame = Seq.empty[String].toDF("event_id")
+
+  test("fire-probe soundness: a dropped evaluation fires nothing on the exact path") {
+    import scala.util.Try
+    import graft.criteria.Criteria
+    import graft.engine.Dedup
+    val lake = Tables(spark, sf(), "events").cache()
+    // mostly selective criteria: their largest groups sit near the
+    // thresholds, where a wrong bound shows
+    val good = Seq("event_type='purchase'", "event_type='error' AND value > 100",
+      "value > 200", "event_id % 40 = 0", "event_id % 97 < 3 OR value > 250",
+      "CAST(json_extract_scalar(props, '$.k') AS INTEGER) < 3", "user_id < 5",
+      "", "event_type IN ('click', 'view') AND value < 5", "value > NULL")
+    val bad = Seq("THIS IS NOT ((( SQL", "no_such_col = 1", "rand() < 0.5")
+    val goodKeys = Seq("user_id", "event_type", "props", "props.k", "value")
+    val badKeys = Seq("no_such_key", "")
+    val ids = lake.selectExpr("CAST(event_id AS STRING)").as[String].collect().toSeq
+    val rnd = new scala.util.Random(20240130)
+    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+    for (_ <- 1 to 4) {
+      val alerted = ids.filter(_ => rnd.nextInt(3) == 0).toDF("event_id")
+      val inflight = ids.filter(_ => rnd.nextInt(3) == 0).toDF("event_id")
+      val evals = Seq.fill(20) {
+        val criteria = if (rnd.nextInt(8) == 0) pick(bad) else pick(good)
+        val key = if (rnd.nextInt(8) == 0) pick(badKeys) else pick(goodKeys)
+        Trigger.Evaluation(criteria, Map("alert_name" -> "p",
+          "aggregation_key" -> key, "threshold" -> rnd.nextInt(6)), slot = rnd.nextBoolean())
+      }
+      val mayFire = Trigger.mayFire(lake, evals.map(Some(_)), alerted, inflight, "event_id")
+      evals.zip(mayFire).foreach { case (e, may) =>
+        // the exact path, as Runner and SequenceEngine run it
+        val fired = Try {
+          val ev = lake.where(Criteria.toColumn(e.criteria)).limit(1000)
+          val unslotted = if (e.slot) Dedup.removeInflightEvents(ev, inflight, "event_id") else ev
+          Trigger.threshold(Dedup.removePreviouslyAlerted(unslotted, alerted, "event_id"),
+            e.spec).count()
+        }.getOrElse(0L)
+        if (!may) assert(fired === 0, s"dropped $e, but the exact path fires $fired")
+        // with the limit not binding (1000 rows) the bound is tight, and
+        // anything the probe cannot judge is kept
+        val judged = good.contains(e.criteria) && goodKeys.contains(e.spec("aggregation_key"))
+        assert(may === (!judged || fired > 0), s"$e: may=$may fired=$fired")
+      }
+    }
+    lake.unpersist()
+  }
+
+  test("fire-probe failure keeps every evaluation") {
+    val lake = Tables(spark, sf(), "events")
+    def eval(criteria: String) = Some(Trigger.Evaluation(criteria,
+      Map("aggregation_key" -> "user_id"), slot = false))
+    assert(Trigger.mayFire(lake, Seq(eval("value < 0")), noIds, noIds, "event_id") ===
+      Seq(false))
+    // the probe query throws at run time: nothing is dropped
+    assert(Trigger.mayFire(lake,
+      Seq(eval("value < 0"), eval("assert_true(value < 0) IS NULL"), None),
+      noIds, noIds, "event_id") === Seq(true, true, true))
+    // so does a store that fails to produce its ids
+    assert(Trigger.mayFire(lake, Seq(eval("value < 0")),
+      throw new IllegalStateException("store unavailable"), noIds, "event_id") === Seq(true))
+  }
+
+  test("fire-probe: inflight ids drop events of slot evaluations only") {
+    val lake = Tables(spark, sf(), "events")
+    val purchases = lake.where("event_type = 'purchase'")
+      .selectExpr("CAST(event_id AS STRING) AS event_id")
+    val evals = Seq(false, true).map(slot => Some(Trigger.Evaluation(
+      "event_type = 'purchase'", Map("aggregation_key" -> "event_type"), slot)))
+    // (threshold spec, sequence slot)
+    assert(Trigger.mayFire(lake, evals, noIds, purchases, "event_id") === Seq(true, false))
+    assert(Trigger.mayFire(lake, evals, purchases, noIds, "event_id") === Seq(false, false))
+  }
 }
+
