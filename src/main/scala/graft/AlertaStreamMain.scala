@@ -1,33 +1,33 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.{AlertDoc, AlertSpecs}
-import graft.streaming.StreamingAlerts
+import graft.streaming.{StreamingAlerts, StreamingAlertsTws}
 
 /** Streaming CLI entry point — the north-star mode: the same YAML
   * specs the batch Runner consumes, evaluated continuously over a
   * growing events directory with Structured Streaming.
   *
   * Usage:
-  *   AlertaStreamMain <eventsDir> <specsGlob> <outDir> [availableNow] [seqEngine]
+  *   AlertaStreamMain <eventsDir> <specsGlob> <outDir> [availableNow|continuous]
   *
-  * `seqEngine` picks the sequence implementation: `fmgws` (default,
-  * [[StreamingAlerts.sequenceStream]]) or `tws` — the N-slot
-  * transformWithState chain ([[graft.streaming.StreamingAlertsTws
-  * .sequenceStreamTwsN]], RocksDB state store set automatically),
-  * the implementation with middle-deadman support, per-key rendered
-  * criteria on the emitted alert, and watermark-horizon-bounded
-  * state.
-  *
-  * One streaming query per spec (threshold/deadman/sequence →
-  * [[StreamingAlerts]]), each appending alert rows to
+  * One streaming query per spec, each appending alert rows to
   * `<outDir>/<alert_name>` with its own checkpoint under
-  * `<outDir>/_checkpoints`. With `availableNow` (the default) each
-  * query drains the data currently in the directory and stops —
-  * drive-testable and restartable (checkpoints make re-runs
-  * incremental); drop the flag for continuous micro-batches.
+  * `<outDir>/_checkpoints`: threshold and deadman specs run
+  * [[StreamingAlerts]]; sequence specs run the N-slot transformWithState
+  * chain [[StreamingAlertsTws.sequenceStreamTwsN]] (keyed by slot 0's
+  * `aggregation_key`, needs an `event_id` column), whose queries start
+  * on the RocksDB state store while the others keep the session's
+  * default. A spec whose query cannot be built or started is logged
+  * and skipped, as is an unknown `alert_type`; the rest still run.
+  * With `availableNow` (the default) each query drains the data
+  * currently in the directory and stops — drive-testable and
+  * restartable (checkpoints make re-runs incremental); `continuous`
+  * keeps micro-batches running.
   *
   * The schema comes from a static read of the same directory —
   * production would pin an explicit schema/catalog table instead of
@@ -44,9 +44,6 @@ object AlertaStreamMain {
       case Some(other) => sys.error(
         s"unknown mode '$other' — expected availableNow or continuous")
     }
-    val seqEngine = args.lift(4).getOrElse("fmgws")
-    require(seqEngine == "fmgws" || seqEngine == "tws",
-      s"unknown seqEngine '$seqEngine' — expected fmgws or tws")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Tables.configure(SparkSession.builder()
       .master(s"local[$cpus]")
@@ -69,27 +66,29 @@ object AlertaStreamMain {
       val base = AlertDoc.str(spec, "alert_name", "unnamed")
       val dup = seen.updateWith(base)(c => Some(c.getOrElse(0) + 1)).get
       val name = if (dup == 1) base else base + "-" + dup
-      val out = AlertDoc.str(spec, "alert_type") match {
-        case "threshold" => Some(StreamingAlerts.thresholdStream(events, spec).toDF())
-        case "deadman"   => Some(StreamingAlerts.deadmanStream(events, spec).toDF())
-        case "sequence" if seqEngine == "tws" =>
-          // transformWithState requires the RocksDB provider
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-          Some(graft.streaming.StreamingAlertsTws
-            .sequenceStreamTwsN(events, spec).toDF())
-        case "sequence"  => Some(StreamingAlerts.sequenceStream(events, spec).toDF())
-        case other =>
-          System.err.println(s"[stream] unknown alert_type '$other' for $name — skipped")
-          None
-      }
-      out.map { df =>
+      def start(df: DataFrame) = {
         val w = df.writeStream
           .format("parquet")
           .option("path", s"$outDir/$name")
           .option("checkpointLocation", s"$outDir/_checkpoints/$name")
           .outputMode("append")
-        (name, (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start())
+        (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+      }
+      try AlertDoc.str(spec, "alert_type") match {
+        case "threshold" =>
+          Some(name -> start(StreamingAlerts.thresholdStream(events, spec)))
+        case "deadman" =>
+          Some(name -> start(StreamingAlerts.deadmanStream(events, spec).toDF()))
+        case "sequence" =>
+          val df = StreamingAlertsTws.sequenceStreamTwsN(events, spec).toDF()
+          Some(name -> StreamingAlertsTws.withRocksDb(spark)(start(df)))
+        case other =>
+          System.err.println(s"[stream] unknown alert_type '$other' for $name — skipped")
+          None
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[stream] $name not started — skipped: $e")
+          None
       }
     }
 

@@ -863,12 +863,8 @@ private[graft] object QueriesExt {
         cache.getOrElseUpdate(key, drain(s, dir))(name)
       }
 
-    private def drain(s: SparkSession, dir: String): Map[String, DataFrame] = {
-      val provider = "spark.sql.streaming.stateStore.providerClass"
-      val saved = s.conf.getOption(provider)
-      s.conf.set(provider, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
+    private def drain(s: SparkSession, dir: String): Map[String, DataFrame] =
+      graft.streaming.StreamingAlertsTws.withRocksDb(s) {
         val branches: Seq[(String, DataFrame)] = specs.map { case (n, sp) =>
           val events = QueriesAlert.tableStream(s, dir, "events")
           val out =
@@ -892,11 +888,7 @@ private[graft] object QueriesExt {
             .select(from_json(col("__js"), schemas(n)).as("__r"))
             .select(col("__r.*"))
         }.toMap
-      } finally saved match {
-        case Some(v) => s.conf.set(provider, v)
-        case None    => s.conf.unset(provider)
       }
-    }
   }
 
   private def thirdBatch: Seq[Q] = Seq(

@@ -14,8 +14,8 @@ import graft.model.AlertDoc.Doc
 
 /** Streaming alert evaluation (SURVEY.md §2.8 note / BASELINE.json
   * north star): the cron-batch 2-hour lookback becomes watermarked
-  * event-time windows; inflight sequence state becomes keyed state in
-  * `flatMapGroupsWithState`.
+  * event-time windows; deadman silence becomes a keyed event-time
+  * timeout in `flatMapGroupsWithState`.
   *
   * Contract differences from batch, by design:
   *   - threshold: one alert per (window, group) instead of per run —
@@ -23,10 +23,10 @@ import graft.model.AlertDoc.Doc
   *   - deadman: absence can't be aggregated (empty groups emit no
   *     rows); it's a keyed event-time timeout — when the watermark
   *     passes last-seen + lifespan, the alert fires.
-  *   - sequence: slot criteria are compiled once against the stream
-  *     (static criteria only — the batch engine remains the home of
-  *     cross-slot *templated* criteria, which synthesize SQL from
-  *     data and cannot be one static DAG).
+  *
+  * Sequences have one streaming engine, the N-slot transformWithState
+  * chain [[StreamingAlertsTws.sequenceStreamTwsN]], which holds the
+  * batch [[graft.engine.SequenceEngine]]'s semantics (ReplaySpec).
   */
 object StreamingAlerts {
 
@@ -44,7 +44,7 @@ object StreamingAlerts {
     val name = AlertDoc.str(spec, "alert_name", "unnamed")
     val keyCol = Paths.column(events.schema, AlertDoc.str(spec, "aggregation_key"))
       .cast(StringType)
-    // cast then watermark FIRST (same rule as deadmanKeyed: a cast
+    // cast then watermark FIRST (same rule as deadmanStream: a cast
     // after withWatermark mints an untagged attribute), and watermark
     // BEFORE the criteria filter: the event-time clock must advance on
     // ANY lake traffic, or a quiet criteria would freeze window
@@ -99,31 +99,6 @@ object StreamingAlerts {
     * last-seen + lifespan with no refresh, the deadman fires (once per
     * silence — state resets so a comeback re-arms it).
     */
-  /** Shared deadman input plumbing: cast then watermark FIRST (a cast
-    * after withWatermark mints an untagged attribute), and before the
-    * criteria filter so the clock advances on any traffic — a deadman
-    * whose monitored events go totally silent must still see the
-    * watermark move. Used by both the flatMapGroupsWithState and the
-    * transformWithState ([[StreamingAlertsTws]]) variants.
-    */
-  private[streaming] def deadmanKeyed(events: DataFrame, spec: Doc,
-      tsCol: String, watermarkDelay: String)
-      : org.apache.spark.sql.KeyValueGroupedDataset[String, (String, Timestamp)] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val keyCol = Paths.column(events.schema, AlertDoc.str(spec, "aggregation_key"))
-      .cast(StringType)
-    whereAfterWatermark(
-      events
-        .withColumn("__ts", col(tsCol).cast("timestamp"))
-        .withWatermark("__ts", watermarkDelay)
-        .withColumn("__value", keyCol),
-      criteriaColumn(spec) && col("__value").isNotNull && col("__ts").isNotNull)
-      .select(col("__value").as("k"), col("__ts").as("ts"))
-      .as[(String, Timestamp)]
-      .groupByKey(_._1)
-  }
-
   def deadmanStream(events: DataFrame, spec: Doc,
       tsCol: String = "ts", lifespan: String = "1 hour",
       watermarkDelay: String = "10 minutes"): Dataset[StreamAlert] = {
@@ -134,7 +109,21 @@ object StreamingAlerts {
     // the parameter is only the default for spec-less callers
     val lifespanMs = graft.functions.Dates.interval(
       AlertDoc.str(spec, "lifespan", lifespan)).toMillis
-    val keyed = deadmanKeyed(events, spec, tsCol, watermarkDelay)
+    val keyCol = Paths.column(events.schema, AlertDoc.str(spec, "aggregation_key"))
+      .cast(StringType)
+    // cast then watermark FIRST (a cast after withWatermark mints an
+    // untagged attribute), and before the criteria filter so the clock
+    // advances on any traffic — a deadman whose monitored events go
+    // totally silent must still see the watermark move
+    val keyed = whereAfterWatermark(
+      events
+        .withColumn("__ts", col(tsCol).cast("timestamp"))
+        .withWatermark("__ts", watermarkDelay)
+        .withColumn("__value", keyCol),
+      criteriaColumn(spec) && col("__value").isNotNull && col("__ts").isNotNull)
+      .select(col("__value").as("k"), col("__ts").as("ts"))
+      .as[(String, Timestamp)]
+      .groupByKey(_._1)
 
     keyed.flatMapGroupsWithState(
       OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
@@ -158,195 +147,6 @@ object StreamingAlerts {
             math.max(last + lifespanMs, state.getCurrentWatermarkMs() + 1))
           Iterator.empty
         }
-      })
-  }
-
-  /** `hits` counts matching events toward the CURRENT slot's
-    * threshold (batch parity: Trigger.threshold fills a slot once its
-    * per-key count meets the slot threshold). For a deadman slot,
-    * `hits` counts matching events inside the current observation
-    * window and `dmDeadlineMs` is the window's end — the slot fills if
-    * the window closes with hits ≤ threshold (absence), and a
-    * violating burst restarts the window from the violating event.
-    *
-    * CHECKPOINT COMPATIBILITY: `hits` and `dmDeadlineMs` were added
-    * when deadman slots landed — the state encoder schema changed, so
-    * a sequenceStream checkpoint written by the earlier two-field
-    * SlotProgress cannot be resumed; start deadman-enabled queries
-    * from a fresh checkpoint dir.
-    */
-  case class SlotProgress(next: Int, slotNames: List[String], startedMs: Long,
-      hits: Int = 0, dmDeadlineMs: Long = 0L)
-
-  /** Q1-Q2 as a stream, static-criteria form: per correlation key, a
-    * slot cursor advances whenever the current slot's (pre-compiled)
-    * predicate accumulates `threshold` matching events; completing the
-    * last slot emits one alert and resets. Slot predicates are
-    * evaluated in the plan (one boolean array column), so the state
-    * function never parses SQL.
-    *
-    * Deadman (absence) slots are supported at positions > 0: when the
-    * preceding slot fills at T, the deadman slot observes
-    * (T, T + slot lifespan]; if at most `threshold` (default 0)
-    * matching events arrive inside the window it fills at the window
-    * end — the streaming analogue of Trigger.deadman's `count ≤
-    * threshold` over the engine-run window. More than `threshold`
-    * matches restart the observation from the violating event (the
-    * batch loop likewise keeps re-querying until a quiet window
-    * appears). Window closure is driven by the event-time watermark —
-    * inline for chatty keys, via the state timeout for silent ones;
-    * within a batch, an in-order event past the deadline also closes
-    * it (sorted processing makes that sound for the batch's own data,
-    * and a violation arriving LATER than the watermark delay after
-    * the close is dropped state-side anyway — the standard
-    * completeness-for-latency trade every watermarked aggregation
-    * makes). A deadman slot at position 0 has no clock origin per key
-    * and is rejected.
-    */
-  def sequenceStream(events: DataFrame, spec: Doc,
-      tsCol: String = "ts", watermarkDelay: String = "10 minutes"): Dataset[StreamAlert] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val name = AlertDoc.str(spec, "alert_name", "unnamed")
-    val slots = AlertDoc.docs(spec, "slots")
-    require(slots.nonEmpty, "sequence spec needs slots")
-    val kinds: IndexedSeq[String] =
-      slots.map(s => AlertDoc.str(s, "alert_type", "threshold")).toIndexedSeq
-    require(kinds.forall(k => k == "threshold" || k == "deadman"),
-      s"unknown slot alert_type in ${kinds.mkString(",")}")
-    require(kinds.head == "threshold",
-      "a deadman slot needs a preceding slot to start its observation window")
-    val thresholds: IndexedSeq[Int] = slots.zip(kinds).map { case (s, k) =>
-      if (k == "deadman") math.max(AlertDoc.int(s, "threshold", 0), 0)
-      else math.max(AlertDoc.int(s, "threshold", 1), 1)
-    }.toIndexedSeq
-    // a deadman slot's observation window = its lifespan (1h default —
-    // the engine-run window analogue)
-    val dmWindowMs: IndexedSeq[Long] = slots.map(s => graft.functions.Dates
-      .interval(AlertDoc.str(s, "lifespan", "1 hour")).toMillis).toIndexedSeq
-    // lifespan (Q3): a partially-filled sequence expires when the
-    // watermark passes its start + lifespan — the streaming analogue
-    // of expire_sequence_alerts (alerta.py:240-248)
-    val lifespanMs = graft.functions.Dates
-      .interval(AlertDoc.str(spec, "lifespan", "3 days")).toMillis
-    val keyCol = Paths.column(events.schema, AlertDoc.str(spec, "aggregation_key"))
-      .cast(StringType)
-    // coalesce each predicate: SQL three-valued logic can yield NULL
-    // (missing JSON key, null column), and a null element in the
-    // Seq[Boolean]-encoded array would kill the streaming query;
-    // blank criteria (shell default) matches nothing for a slot
-    val slotMatch: Column = array(slots.map { s =>
-      val text = AlertDoc.str(s, "criteria").trim
-      if (text.isEmpty) lit(false)
-      else coalesce(Criteria.toColumn(text), lit(false))
-    }: _*)
-
-    val keyed = whereAfterWatermark(
-      events
-        .withColumn("__ts", col(tsCol).cast("timestamp"))
-        .withWatermark("__ts", watermarkDelay)
-        .withColumn("__value", keyCol),
-      col("__value").isNotNull && col("__ts").isNotNull)
-      .select(col("__value").as("k"), col("__ts").as("ts"), slotMatch.as("m"))
-      .as[(String, Timestamp, Seq[Boolean])]
-      .groupByKey(_._1)
-
-    keyed.flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-      (key: String, rows: Iterator[(String, Timestamp, Seq[Boolean])],
-       state: GroupState[SlotProgress]) => {
-        val out = List.newBuilder[StreamAlert]
-
-        // fill the CURRENT slot at `atMs`: emit + reset on completion,
-        // else advance — arming the next slot's observation window
-        // when it is a deadman
-        def fill(st: SlotProgress, atMs: Long): SlotProgress = {
-          val named = st.slotNames :+
-            AlertDoc.str(slots(st.next), "alert_name", s"slot${st.next}")
-          if (st.next + 1 == slots.size) {
-            val t = new Timestamp(atMs)
-            out += StreamAlert(name, key, slots.size.toLong, t, t,
-              s"$name: sequence [${named.mkString(" -> ")}] completed by $key")
-            SlotProgress(0, Nil, 0L)
-          } else {
-            val nxt = st.next + 1
-            SlotProgress(nxt, named, st.startedMs, 0,
-              if (kinds(nxt) == "deadman") atMs + dmWindowMs(nxt) else 0L)
-          }
-        }
-
-        // advance every deadman observation window that closed quietly
-        // before `uptoMs` (hits ≤ threshold holds by construction: a
-        // violating burst already restarted the window). A window
-        // whose close falls PAST the sequence's lifespan expires the
-        // sequence instead of completing it — expire_sequence_alerts
-        // wins over a late fill, whatever order the clocks are read.
-        def drainDeadman(st0: SlotProgress, uptoMs: Long): SlotProgress = {
-          var st = st0
-          while (st.next > 0 && st.next < slots.size &&
-              kinds(st.next) == "deadman" && uptoMs > st.dmDeadlineMs)
-            st =
-              if (st.dmDeadlineMs > st.startedMs + lifespanMs)
-                SlotProgress(0, Nil, 0L)
-              else fill(st, st.dmDeadlineMs)
-          st
-        }
-
-        val wm = state.getCurrentWatermarkMs()
-        var st = state.getOption.getOrElse(SlotProgress(0, Nil, 0L))
-        // watermark-driven progress first (also the whole job of the
-        // timeout callback for silent keys): close due deadman
-        // windows, then expire the sequence if its lifespan passed —
-        // like expire_sequence_alerts, expiry emits nothing
-        st = drainDeadman(st, wm)
-        if ((st.next > 0 || st.hits > 0) && wm > st.startedMs + lifespanMs)
-          st = SlotProgress(0, Nil, 0L)
-        if (!state.hasTimedOut) {
-          // event-time order within the batch so slot order is honored
-          rows.toSeq.sortBy(_._2.getTime).foreach { case (_, ts, m) =>
-            // a deadman window that closed before this event fills first
-            st = drainDeadman(st, ts.getTime)
-            if (st.next < slots.size && m(st.next)) {
-              if (kinds(st.next) == "deadman") {
-                val hits = st.hits + 1
-                st =
-                  if (hits > thresholds(st.next))
-                    // violation: restart the observation window here
-                    st.copy(hits = 0,
-                      dmDeadlineMs = ts.getTime + dmWindowMs(st.next))
-                  else st.copy(hits = hits)
-              } else {
-                // the sequence clock starts at the FIRST matching
-                // event of slot 0, even before its threshold fills
-                val started =
-                  if (st.next == 0 && st.hits == 0) ts.getTime else st.startedMs
-                val hits = st.hits + 1
-                st =
-                  if (hits >= thresholds(st.next))
-                    fill(st.copy(startedMs = started), ts.getTime)
-                  else SlotProgress(st.next, st.slotNames, started, hits)
-              }
-            }
-          }
-        }
-        if (st.next == 0 && st.hits == 0) {
-          // no in-flight progress: drop the state entry entirely —
-          // keeping it would grow the store by one row per distinct
-          // key ever seen
-          if (state.exists) state.remove()
-        } else {
-          state.update(st)
-          // next wake-up: the earlier of sequence expiry and the
-          // current deadman window's close; clamp above the watermark
-          // (a timeout at/below it throws and kills the query)
-          val expiryTs = st.startedMs + lifespanMs
-          val timerTs =
-            if (kinds(st.next) == "deadman" && st.dmDeadlineMs > 0)
-              math.min(expiryTs, st.dmDeadlineMs)
-            else expiryTs
-          state.setTimeoutTimestamp(math.max(timerTs, wm + 1))
-        }
-        out.result().iterator
       })
   }
 }

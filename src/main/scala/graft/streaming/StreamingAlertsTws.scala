@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
   TimeMode, TimerValues, TTLConfig}
@@ -11,55 +9,6 @@ import org.apache.spark.sql.types.StringType
 import graft.functions.Paths
 import graft.model.AlertDoc
 import graft.model.AlertDoc.Doc
-import graft.streaming.StreamingAlerts.StreamAlert
-
-/** Deadman state for the transformWithState variant: last event-time
-  * seen for the key and the single armed timer (so refreshes replace
-  * the timer instead of accumulating stale ones). Top-level class —
-  * encoder codegen cannot reach nested/private case classes.
-  */
-case class DeadmanTwsState(lastMs: Long, timerMs: Long)
-
-/** The deadman monitor as a Spark 4 `transformWithState`
-  * StatefulProcessor — the successor API to flatMapGroupsWithState
-  * with explicit typed state and first-class timers (requires the
-  * RocksDB state store provider). Semantics identical to
-  * [[StreamingAlerts.deadmanStream]]: every qualifying event refreshes
-  * the key; when the watermark passes last-seen + lifespan with no
-  * refresh, the alert fires once and the state clears so a comeback
-  * re-arms it.
-  */
-class DeadmanProcessor(name: String, lifespanMs: Long)
-    extends StatefulProcessor[String, (String, Timestamp), StreamAlert] {
-
-  @transient private var st: org.apache.spark.sql.streaming.ValueState[DeadmanTwsState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[DeadmanTwsState](
-      "deadman", Encoders.product[DeadmanTwsState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[(String, Timestamp)],
-      timerValues: TimerValues): Iterator[StreamAlert] = {
-    val maxMs = rows.map(_._2.getTime).max
-    val prev = Option(st.get())
-    val last = math.max(prev.map(_.lastMs).getOrElse(0L), maxMs)
-    // timers below the watermark are invalid — clamp to the next tick
-    val timer = math.max(last + lifespanMs, timerValues.getCurrentWatermarkInMs() + 1)
-    prev.map(_.timerMs).filter(_ != timer).foreach(getHandle.deleteTimer)
-    if (!prev.exists(_.timerMs == timer)) getHandle.registerTimer(timer)
-    st.update(DeadmanTwsState(last, timer))
-    Iterator.empty
-  }
-
-  override def handleExpiredTimer(key: String, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[StreamAlert] = {
-    val last = Option(st.get()).map(_.lastMs).getOrElse(0L)
-    st.clear() // re-arms when the key comes back
-    Iterator.single(StreamAlert(name, key, 0L,
-      new Timestamp(last), new Timestamp(last + lifespanMs),
-      s"$name: expected events from $key are missing"))
-  }
-}
 
 /** One buffered event for the streaming sequence: slot membership
   * flag (slot-0/threshold vs slot-1/deadman family), event-time
@@ -295,6 +244,8 @@ class NSeqTwsProcessor(name: String, slotSpecs: Seq[NSeqSlot],
 
   require(slotSpecs.nonEmpty && slotSpecs.head.kind == "threshold",
     "slot 0 must be a threshold")
+  require(slotSpecs.forall(sp => sp.kind == "threshold" || sp.kind == "deadman"),
+    s"unknown slot alert_type in ${slotSpecs.map(_.kind).mkString(",")}")
   require(slotSpecs.zipWithIndex.drop(1).dropRight(1).forall { case (sp, _) =>
     sp.kind == "threshold" || sp.windowMs > 0L },
     "a deadman at a middle position needs its own window (slot lifespan)")
@@ -487,23 +438,24 @@ class NSeqTwsProcessor(name: String, slotSpecs: Seq[NSeqSlot],
 
 object StreamingAlertsTws {
 
-  /** [[StreamingAlerts.deadmanStream]] re-expressed on the
-    * transformWithState API. The input plumbing (watermark before the
-    * criteria filter so any lake traffic advances the clock, cast
-    * before watermark) is shared verbatim — only the keyed-state
-    * machinery differs.
+  /** Runs `body` with the session's state store provider set to
+    * RocksDB (transformWithState requires it) and restores the previous
+    * value afterwards. A streaming query keeps the provider it was
+    * started with — `StreamExecution` clones the session conf when it
+    * is constructed — so wrapping a query's `start()` (or a drain that
+    * starts and finishes one) leaves queries started outside on the
+    * session default.
     */
-  def deadmanStreamTws(events: DataFrame, spec: Doc,
-      tsCol: String = "ts", lifespan: String = "1 hour",
-      watermarkDelay: String = "10 minutes"): Dataset[StreamAlert] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val name = AlertDoc.str(spec, "alert_name", "unnamed")
-    val lifespanMs = graft.functions.Dates.interval(
-      AlertDoc.str(spec, "lifespan", lifespan)).toMillis
-    val keyed = StreamingAlerts.deadmanKeyed(events, spec, tsCol, watermarkDelay)
-    keyed.transformWithState(
-      new DeadmanProcessor(name, lifespanMs), TimeMode.EventTime(), OutputMode.Append)
+  def withRocksDb[T](s: SparkSession)(body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val saved = s.conf.getOption(key)
+    s.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally saved match {
+      case Some(v) => s.conf.set(key, v)
+      case None    => s.conf.unset(key)
+    }
   }
 
   /** Split a criteria string on top-level ANDs (outside parens and
@@ -560,11 +512,19 @@ object StreamingAlertsTws {
   }
 
   /** The full N-SLOT sequence as a stream — [[NSeqTwsProcessor]]'s
-    * driver: derives each slot's family predicate from its criteria
-    * automatically (template-bearing conjuncts stripped), tags each
-    * event with a slot-membership bitmask, and runs one keyed chain
-    * state machine per aggregation value. Slot 0 and middle slots are
-    * thresholds; the final slot may be a threshold or a deadman.
+    * driver and the one streaming sequence engine: derives each slot's
+    * family predicate from its criteria automatically
+    * (template-bearing conjuncts stripped), tags each event with a
+    * slot-membership bitmask, and runs one keyed chain state machine
+    * per slot-0 `aggregation_key` value. Slot 0 is a threshold; later
+    * slots are thresholds or deadmans (a middle deadman needs its own
+    * `lifespan`). Defaults follow the batch engine: sequence
+    * `lifespan` 3 days (`Shells.sequence`), slot `threshold` 1 for
+    * threshold slots and 0 for deadman slots (`Trigger`). Needs ≥2
+    * slots, a slot-0 `aggregation_key` that resolves against the events
+    * and an `idCol` column; a spec that breaks these throws here, when
+    * the stream is built. Run it on the RocksDB state store
+    * ([[withRocksDb]]).
     */
   def sequenceStreamTwsN(events: DataFrame, spec: Doc,
       tsCol: String = "ts", idCol: String = "event_id",
@@ -573,17 +533,20 @@ object StreamingAlertsTws {
     import spark.implicits._
     val name = AlertDoc.str(spec, "alert_name", "unnamed")
     val lifespanMs = graft.functions.Dates.interval(
-      AlertDoc.str(spec, "lifespan", "1 hour")).toMillis
+      AlertDoc.str(spec, "lifespan", "3 days")).toMillis
     val slots = AlertDoc.docs(spec, "slots")
     require(slots.size >= 2, s"sequenceStreamTwsN wants ≥2 slots, got ${slots.size}")
     val slotSpecs = slots.map { s =>
       val w = AlertDoc.str(s, "lifespan", "")
-      NSeqSlot(AlertDoc.str(s, "alert_type", "threshold"),
-        AlertDoc.str(s, "threshold", "1").toLong,
+      val kind = AlertDoc.str(s, "alert_type", "threshold")
+      NSeqSlot(kind,
+        AlertDoc.long(s, "threshold", if (kind == "deadman") 0L else 1L),
         if (w.isEmpty) 0L else graft.functions.Dates.interval(w).toMillis)
     }
-    val keyCol = Paths.column(events.schema,
-      AlertDoc.str(slots.head, "aggregation_key")).cast(StringType)
+    val keyPath = AlertDoc.str(slots.head, "aggregation_key")
+    require(Paths.leafType(events.schema, keyPath).isDefined,
+      s"slot 0 aggregation_key '$keyPath' does not resolve against the events")
+    val keyCol = Paths.column(events.schema, keyPath).cast(StringType)
     val famCols = slots.map(s => familyColumn(AlertDoc.str(s, "criteria")))
     val maskCol = famCols.zipWithIndex.map { case (c, i) =>
       when(coalesce(c, lit(false)), lit(1L << i)).otherwise(lit(0L))
@@ -632,7 +595,7 @@ object StreamingAlertsTws {
     import spark.implicits._
     val name = AlertDoc.str(spec, "alert_name", "unnamed")
     val lifespanMs = graft.functions.Dates.interval(
-      AlertDoc.str(spec, "lifespan", "1 hour")).toMillis
+      AlertDoc.str(spec, "lifespan", "3 days")).toMillis
     val slots = AlertDoc.docs(spec, "slots")
     require(slots.size == 2, s"sequenceStreamTws wants 2 slots, got ${slots.size}")
     val (slot0, slot1) = (slots(0), slots(1))

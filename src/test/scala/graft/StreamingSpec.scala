@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingAlerts
+import graft.streaming.StreamingAlertsTws.withRocksDb
 
 class StreamingSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
@@ -98,40 +99,6 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     } finally q.stop()
   }
 
-  test("transformWithState deadman matches the FMGWS variant's behavior") {
-    implicit val sc = spark.sqlContext
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[Ev]
-      val spec = Map[String, Any]("alert_name" -> "heartbeat",
-        "criteria" -> "event_type='heartbeat'",
-        "aggregation_key" -> "user_id")
-      val out = graft.streaming.StreamingAlertsTws.deadmanStreamTws(mem.toDF(), spec,
-        lifespan = "30 minutes", watermarkDelay = "1 minute")
-      val q = out.writeStream.format("memory").queryName("dmtws")
-        .outputMode(OutputMode.Append).start()
-      try {
-        mem.addData(Ev(ts(0), 1, "heartbeat"), Ev(ts(1), 2, "heartbeat"))
-        q.processAllAvailable()
-        // user 2 keeps beating; user 1 goes silent past its deadline
-        mem.addData(Ev(tsH(11, 0), 2, "heartbeat"))
-        q.processAllAvailable()
-        mem.addData(Ev(tsH(12, 0), 2, "heartbeat"))
-        q.processAllAvailable()
-        val fired = spark.table("dmtws").collect()
-        assert(fired.map(_.getAs[String]("value")).contains("1"))
-        assert(!fired.map(_.getAs[String]("value")).contains("2"))
-        assert(fired.head.getAs[String]("summary").contains("missing"))
-      } finally q.stop()
-    } finally saved match {
-      case Some(v) => spark.conf.set(provider, v)
-      case None => spark.conf.unset(provider)
-    }
-  }
-
   test("familyCriteria strips template-bearing conjuncts, keeps the rest") {
     import graft.streaming.StreamingAlertsTws.{familyCriteria, topLevelConjuncts}
     assert(familyCriteria(
@@ -151,11 +118,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   test("a slot whose criteria is ENTIRELY template-bearing watches " +
       "every event of the key (documented match-all family)") {
     implicit val sc = spark.sqlContext
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val mem = MemoryStream[(Timestamp, Long, String, Long)]
       val spec = Map[String, Any]("alert_name" -> "all_templated",
         "lifespan" -> "1 hour",
@@ -194,20 +157,13 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
         assert(rows.head.getAs[String]("criteria")
           === "json_extract_scalar(details,'$.user')='1'")
       } finally q.stop()
-    } finally saved match {
-      case Some(v) => spark.conf.set(provider, v)
-      case None => spark.conf.unset(provider)
     }
   }
 
   test("N-slot TWS sequence chains thresholds into a deadman; " +
       "rendered last-slot criteria embeds the previous slot's value") {
     implicit val sc = spark.sqlContext
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       case class EvId(ts: Timestamp, user_id: Long, event_type: String,
         event_id: Long)
       val mem = MemoryStream[(Timestamp, Long, String, Long)]
@@ -267,20 +223,13 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
         assert(r.getAs[String]("summary") === "2 clicks then 1 errors for 1")
         assert(r.getAs[Long]("dm_count") === 1L)
       } finally q.stop()
-    } finally saved match {
-      case Some(v) => spark.conf.set(provider, v)
-      case None => spark.conf.unset(provider)
     }
   }
 
   test("N-slot TWS: mid-chain expiry is silent; all-threshold chain " +
       "completes on its last trip") {
     implicit val sc = spark.sqlContext
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val mem = MemoryStream[(Timestamp, Long, String, Long)]
       def spec(slots: Seq[Map[String, Any]]) = Map[String, Any](
         "alert_name" -> "nseq2", "lifespan" -> "30 minutes",
@@ -314,19 +263,12 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
         assert(rows.head.getAs[Long]("dm_count") === 0L) // threshold-final
         assert(rows.head.getAs[String]("summary") === "done 1")
       } finally q.stop()
-    } finally saved match {
-      case Some(v) => spark.conf.set(provider, v)
-      case None => spark.conf.unset(provider)
     }
   }
 
   test("N-slot TWS: a MIDDLE deadman slot trips on quiet, aborts on noise") {
     implicit val sc = spark.sqlContext
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val mem = MemoryStream[(Timestamp, Long, String, Long)]
       val spec = Map[String, Any]("alert_name" -> "quiet_then_click",
         "lifespan" -> "1 hour",
@@ -371,19 +313,12 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
         assert(r.getAs[Long]("t_last_us") === ts(15).getTime * 1000L)
         assert(r.getAs[Long]("dm_count") === 0L)
       } finally q.stop()
-    } finally saved match {
-      case Some(v) => spark.conf.set(provider, v)
-      case None => spark.conf.unset(provider)
     }
   }
 
   test("N-slot TWS: consecutive middle deadmans cascade in one tick") {
     implicit val sc = spark.sqlContext
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val mem = MemoryStream[(Timestamp, Long, String, Long)]
       val spec = Map[String, Any]("alert_name" -> "double_quiet",
         "lifespan" -> "2 hours",
@@ -421,20 +356,13 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
         assert(rows.map(_.getAs[String]("value")).toSeq === Seq("1"))
         assert(rows.head.getAs[Long]("t_last_us") === ts(25).getTime * 1000L)
       } finally q.stop()
-    } finally saved match {
-      case Some(v) => spark.conf.set(provider, v)
-      case None => spark.conf.unset(provider)
     }
   }
 
   test("N-slot TWS: a final-threshold event AT the inclusive sequence " +
       "deadline still completes when the watermark lands exactly on it") {
     implicit val sc = spark.sqlContext
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val mem = MemoryStream[(Timestamp, Long, String, Long)]
       val spec = Map[String, Any]("alert_name" -> "boundary",
         "lifespan" -> "1 hour",
@@ -479,20 +407,13 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
         assert(spark.table("bdry").collect()
           .map(_.getAs[String]("value")).toSeq === Seq("1"))
       } finally q.stop()
-    } finally saved match {
-      case Some(v) => spark.conf.set(provider, v)
-      case None => spark.conf.unset(provider)
     }
   }
 
   test("N-slot TWS state stays bounded by the watermark horizon for " +
       "keys that never complete (no per-batch growth)") {
     implicit val sc = spark.sqlContext
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val mem = MemoryStream[(Timestamp, Long, String, Long)]
       // threshold 1000 never trips: the key sits in slot 0 forever
       // while events keep arriving — the r5 leak shape. Finalized
@@ -539,185 +460,202 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
           s"state grew with batch count: $rowsPerBatch")
         assert(late < 40, s"state not bounded: $rowsPerBatch")
       } finally q.stop()
-    } finally saved match {
-      case Some(v) => spark.conf.set(provider, v)
-      case None => spark.conf.unset(provider)
     }
   }
 
+  /** One N-slot chain over a memory stream of (ts, user_id,
+    * event_type) events, started on the RocksDB store. `add` feeds one
+    * micro-batch (event ids in arrival order) and drains it; `rows`
+    * reads the sink. Watermark delay 1 minute: the chain only emits
+    * once the watermark passes the deciding events, so pins feed a
+    * later event to advance it.
+    */
+  private class Chain(spec: Map[String, Any], sink: String) {
+    private implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
+    private val mem = MemoryStream[(Timestamp, Long, String, Long)]
+    private var id = 0L
+    val query = withRocksDb(spark) {
+      graft.streaming.StreamingAlertsTws.sequenceStreamTwsN(
+        mem.toDF().toDF("ts", "user_id", "event_type", "event_id"),
+        spec, watermarkDelay = "1 minute")
+        .writeStream.format("memory").queryName(sink)
+        .outputMode(OutputMode.Append).start()
+    }
+    def add(evs: (Timestamp, Long, String)*): Unit = {
+      mem.addData(evs.map { case (t, u, ty) => id += 1; (t, u, ty, id) }: _*)
+      query.processAllAvailable()
+    }
+    def rows: Array[org.apache.spark.sql.Row] = spark.table(sink).collect()
+    def values: Seq[String] = rows.map(_.getAs[String]("value")).toSeq.sorted
+  }
+
+  private def slot(alertType: String, criteria: String,
+      extra: (String, Any)*): Map[String, Any] =
+    Map[String, Any]("alert_type" -> alertType, "criteria" -> criteria) ++
+      extra ++ Map("aggregation_key" -> "user_id")
+
   test("sequenceStream expires partially-filled sequences past their lifespan") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val spec = Map[String, Any]("alert_name" -> "slow_seq",
-      "aggregation_key" -> "user_id", "lifespan" -> "30 minutes",
-      "slots" -> Seq(
-        Map[String, Any]("alert_name" -> "buy", "criteria" -> "event_type='purchase'"),
-        Map[String, Any]("alert_name" -> "fail", "criteria" -> "event_type='error'")))
-    val out = StreamingAlerts.sequenceStream(mem.toDF(), spec,
-      watermarkDelay = "1 minute")
-    val q = out.writeStream.format("memory").queryName("expseq")
-      .outputMode(OutputMode.Append).start()
+    val c = new Chain(Map("alert_name" -> "slow_seq", "lifespan" -> "30 minutes",
+      "summary" -> "{{slots.0.metadata.value}}",
+      "slots" -> Seq(slot("threshold", "event_type='purchase'", "threshold" -> 2),
+        slot("threshold", "event_type='error'"))), "expseq")
     try {
-      // user 1 fills slot 0, then goes silent past the 30-min lifespan
-      mem.addData(Ev(ts(0), 1, "purchase"))
-      q.processAllAvailable()
-      mem.addData(Ev(tsH(12, 0), 2, "view")) // advances watermark → expiry
-      q.processAllAvailable()
+      // user 1 trips slot 0 at 10:01, then goes silent past the 30-min
+      // lifespan. User 3's first purchase is at 10:00 but slot 0 trips
+      // only at its second, 10:25: the lifespan runs from the TRIP, as
+      // in batch, where the inflight doc — and its expiration — is
+      // created when slot 0 fires (Shells.sequence). Its 10:40 error
+      // is inside (10:25, 10:55] and completes it.
+      c.add((ts(0), 1, "purchase"), (ts(1), 1, "purchase"),
+        (ts(0), 3, "purchase"), (ts(25), 3, "purchase"), (ts(40), 3, "error"))
+      c.add((tsH(12, 0), 2, "view")) // advances the watermark → expiry
       // the error arrives too late: the sequence was expired, and a
       // lone error can't fill slot 0 (criteria mismatch)
-      mem.addData(Ev(tsH(12, 1), 1, "error"))
-      q.processAllAvailable()
-      assert(spark.table("expseq").isEmpty)
-    } finally q.stop()
+      c.add((tsH(12, 1), 1, "error"))
+      c.add((tsH(12, 30), 2, "view"))
+      c.add((tsH(12, 31), 2, "view"))
+      assert(c.values === Seq("3"))
+    } finally c.query.stop()
   }
 
   test("sequenceStream survives slot criteria that evaluate to SQL NULL") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val spec = Map[String, Any]("alert_name" -> "null_pred",
-      "aggregation_key" -> "user_id",
-      "slots" -> Seq(
-        // json path missing on every event → predicate is NULL, which
-        // must coalesce to false instead of killing the query
-        Map[String, Any]("alert_name" -> "never",
-          "criteria" -> "CAST(NULL AS BOOLEAN)")))
-    val out = StreamingAlerts.sequenceStream(mem.toDF(), spec)
-    val q = out.writeStream.format("memory").queryName("nullseq")
-      .outputMode(OutputMode.Append).start()
+    val c = new Chain(Map("alert_name" -> "null_pred",
+      "slots" -> Seq(slot("threshold", "event_type='purchase'"),
+        // the predicate is NULL on every event, which must coalesce to
+        // false instead of killing the query
+        slot("threshold", "CAST(NULL AS BOOLEAN)"))), "nullseq")
     try {
-      mem.addData(Ev(ts(1), 1, "purchase"))
-      q.processAllAvailable() // would throw pre-fix
-      assert(spark.table("nullseq").count() === 0)
-    } finally q.stop()
+      c.add((ts(1), 1, "purchase"), (ts(2), 1, "purchase"))
+      c.add((tsH(11, 0), 9, "view")) // would throw pre-fix
+      c.add((tsH(11, 1), 9, "view"))
+      assert(c.rows.isEmpty)
+    } finally c.query.stop()
   }
 
   test("sequenceStream completes ordered slots per key") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val spec = Map[String, Any]("alert_name" -> "buy_then_fail",
-      "aggregation_key" -> "user_id",
-      "slots" -> Seq(
-        Map[String, Any]("alert_name" -> "buy", "criteria" -> "event_type='purchase'"),
-        Map[String, Any]("alert_name" -> "fail", "criteria" -> "event_type='error'")))
-    val out = StreamingAlerts.sequenceStream(mem.toDF(), spec)
-    val q = out.writeStream.format("memory").queryName("seqs")
-      .outputMode(OutputMode.Append).start()
+    val c = new Chain(Map("alert_name" -> "buy_then_fail",
+      "summary" -> "{{slots.0.metadata.value}}: buy -> fail",
+      "slots" -> Seq(slot("threshold", "event_type='purchase'"),
+        slot("threshold", "event_type='error'"))), "seqs")
     try {
       // user 1: purchase then error (completes); user 2: error then
       // purchase (wrong order — slot 0 only fires on purchase, then
       // awaits an error that never comes)
-      mem.addData(Ev(ts(1), 1, "purchase"), Ev(ts(2), 1, "error"),
-        Ev(ts(1), 2, "error"), Ev(ts(2), 2, "purchase"))
-      q.processAllAvailable()
-      val rows = spark.table("seqs").collect()
-      assert(rows.length === 1)
-      assert(rows.head.getAs[String]("value") === "1")
-      assert(rows.head.getAs[String]("summary").contains("buy -> fail"))
-    } finally q.stop()
+      c.add((ts(1), 1, "purchase"), (ts(2), 1, "error"),
+        (ts(1), 2, "error"), (ts(2), 2, "purchase"))
+      c.add((tsH(11, 0), 9, "view"))
+      c.add((tsH(11, 1), 9, "view"))
+      assert(c.values === Seq("1"))
+      // the summary is the spec's template rendered over the filled
+      // slots, as batch createSequenceAlerts renders it
+      assert(c.rows.head.getAs[String]("summary") === "1: buy -> fail")
+      assert(c.rows.head.getAs[Long]("t0_us") === ts(1).getTime * 1000L)
+      assert(c.rows.head.getAs[Long]("t_last_us") === ts(2).getTime * 1000L)
+    } finally c.query.stop()
   }
 
   test("sequenceStream slot with threshold>1 needs that many matches to advance") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val spec = Map[String, Any]("alert_name" -> "two_buys_then_fail",
-      "aggregation_key" -> "user_id",
-      "slots" -> Seq(
-        Map[String, Any]("alert_name" -> "buys", "threshold" -> 2,
-          "criteria" -> "event_type='purchase'"),
-        Map[String, Any]("alert_name" -> "fail", "criteria" -> "event_type='error'")))
-    val out = StreamingAlerts.sequenceStream(mem.toDF(), spec)
-    val q = out.writeStream.format("memory").queryName("thseq")
-      .outputMode(OutputMode.Append).start()
+    val c = new Chain(Map("alert_name" -> "two_buys_then_fail",
+      "slots" -> Seq(slot("threshold", "event_type='purchase'", "threshold" -> 2),
+        slot("threshold", "event_type='error'"))), "thseq")
     try {
       // user 1: two purchases fill slot 0, the error completes — the
       // same fill condition batch Trigger.threshold applies (count >=
       // slot threshold). user 2: ONE purchase then an error — slot 0
       // stays half-filled, the error must not advance anything.
-      mem.addData(Ev(ts(1), 1, "purchase"), Ev(ts(2), 1, "purchase"),
-        Ev(ts(3), 1, "error"),
-        Ev(ts(1), 2, "purchase"), Ev(ts(2), 2, "error"))
-      q.processAllAvailable()
-      val rows = spark.table("thseq").collect()
-      assert(rows.length === 1)
-      assert(rows.head.getAs[String]("value") === "1")
-      assert(rows.head.getAs[String]("summary").contains("buys -> fail"))
-      // a late second purchase from user 2 fills slot 0; a following
-      // error then completes user 2's sequence too
-      mem.addData(Ev(ts(4), 2, "purchase"), Ev(ts(5), 2, "error"))
-      q.processAllAvailable()
-      val rows2 = spark.table("thseq").collect()
-      assert(rows2.length === 2)
-      assert(rows2.map(_.getAs[String]("value")).sorted === Array("1", "2"))
-    } finally q.stop()
+      c.add((ts(1), 1, "purchase"), (ts(2), 1, "purchase"), (ts(3), 1, "error"),
+        (ts(1), 2, "purchase"), (ts(2), 2, "error"))
+      c.add((ts(10), 9, "view"))
+      assert(c.values === Seq("1"))
+      // a second purchase from user 2 fills slot 0; a following error
+      // then completes user 2's sequence too (its 10:02 error precedes
+      // the trip and does not count)
+      c.add((ts(11), 2, "purchase"), (ts(12), 2, "error"))
+      c.add((ts(30), 9, "view"))
+      c.add((ts(31), 9, "view"))
+      assert(c.values === Seq("1", "2"))
+    } finally c.query.stop()
   }
 
-  test("sequenceStream deadman slot fills on absence, restarts on violation") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[Ev]
+  test("sequenceStream deadman slot fills on absence, aborts on violation") {
     // purchase, then 30 quiet minutes WITHOUT a heartbeat → alert
-    val spec = Map[String, Any]("alert_name" -> "buy_then_silence",
-      "aggregation_key" -> "user_id", "lifespan" -> "1 day",
-      "slots" -> Seq(
-        Map[String, Any]("alert_name" -> "buy",
-          "criteria" -> "event_type='purchase'"),
-        Map[String, Any]("alert_name" -> "silence", "alert_type" -> "deadman",
-          "lifespan" -> "30 minutes", "criteria" -> "event_type='heartbeat'")))
-    val out = StreamingAlerts.sequenceStream(mem.toDF(), spec,
-      watermarkDelay = "1 minute")
-    val q = out.writeStream.format("memory").queryName("dmseq")
-      .outputMode(OutputMode.Append).start()
+    val c = new Chain(Map("alert_name" -> "buy_then_silence", "lifespan" -> "1 day",
+      "summary" -> "{{slots.0.metadata.value}} went quiet",
+      "slots" -> Seq(slot("threshold", "event_type='purchase'"),
+        slot("deadman", "event_type='heartbeat'", "lifespan" -> "30 minutes"))),
+      "dmseq")
     try {
-      // both users purchase at 10:01; user 2 heartbeats at 10:10
-      // (violation → its window restarts there), user 1 stays silent
-      mem.addData(Ev(ts(1), 1, "purchase"), Ev(ts(1), 2, "purchase"),
-        Ev(ts(10), 2, "heartbeat"))
-      q.processAllAvailable()
-      // watermark to 10:35: user 1's (10:01, 10:31] window closed
-      // quietly; user 2's restarted window (10:10, 10:40] is still open
-      mem.addData(Ev(ts(36), 9, "view"))
-      q.processAllAvailable()
-      val fired = spark.table("dmseq").collect()
-      assert(fired.map(_.getAs[String]("value")).toSeq === Seq("1"))
-      assert(fired.head.getAs[String]("summary").contains("buy -> silence"))
-      // user 2 then stays quiet past 10:40 → its deadman fills too
-      // (watermark-timeout path, no further user-2 traffic)
-      mem.addData(Ev(tsH(11, 0), 9, "view"))
-      q.processAllAvailable()
-      val fired2 = spark.table("dmseq").collect()
-      assert(fired2.map(_.getAs[String]("value")).sorted === Array("1", "2"))
-    } finally q.stop()
+      // both users purchase at 10:01; user 2 heartbeats once at 10:10.
+      // The slot sets no threshold, so the batch deadman default of 0
+      // applies (Trigger.deadman) and one heartbeat violates it.
+      c.add((ts(1), 1, "purchase"), (ts(1), 2, "purchase"), (ts(10), 2, "heartbeat"))
+      // watermark to 10:36: both (10:01, 10:31] windows are closed
+      c.add((ts(37), 9, "view"))
+      c.add((ts(38), 9, "view"))
+      assert(c.values === Seq("1"))
+      assert(c.rows.head.getAs[String]("summary") === "1 went quiet")
+      assert(c.rows.head.getAs[Long]("dm_count") === 0L)
+      // user 2's violated window ABORTS the sequence instead of
+      // restarting it, as in batch: the deadman is scored once at its
+      // window end and a violated slot never fills (ReplaySpec, q358) —
+      // however long user 2 then stays quiet
+      c.add((tsH(11, 0), 9, "view"))
+      c.add((tsH(11, 1), 9, "view"))
+      assert(c.values === Seq("1"))
+    } finally c.query.stop()
   }
 
   test("sequenceStream: lifespan expiry beats a later deadman window close") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    // sequence lifespan 30 min but the deadman window is 2 hours: the
-    // sequence expires before the window can close — no alert, ever
+    // sequence lifespan 30 min but the deadman's own window is 2 hours:
+    // the window is cut at the sequence deadline (10:31), and the click
+    // that would complete the chain comes after it — no alert, ever
     // (expire_sequence_alerts wins over a late fill)
-    val spec = Map[String, Any]("alert_name" -> "expires_first",
-      "aggregation_key" -> "user_id", "lifespan" -> "30 minutes",
-      "slots" -> Seq(
-        Map[String, Any]("alert_name" -> "buy",
-          "criteria" -> "event_type='purchase'"),
-        Map[String, Any]("alert_name" -> "silence", "alert_type" -> "deadman",
-          "lifespan" -> "2 hours", "criteria" -> "event_type='heartbeat'")))
-    val out = StreamingAlerts.sequenceStream(mem.toDF(), spec,
-      watermarkDelay = "1 minute")
-    val q = out.writeStream.format("memory").queryName("dmexp")
-      .outputMode(OutputMode.Append).start()
+    val mid = new Chain(Map("alert_name" -> "expires_first", "lifespan" -> "30 minutes",
+      "slots" -> Seq(slot("threshold", "event_type='purchase'"),
+        slot("deadman", "event_type='heartbeat'", "lifespan" -> "2 hours"),
+        slot("threshold", "event_type='click'"))), "dmexp")
+    // a FINAL deadman with the same windows is scored at the sequence
+    // deadline instead: batch evaluates a deadman slot at
+    // min(previous trip + own window, expiration), when the doc is
+    // still inflight (expiry drops it only strictly after), and the
+    // quiet window completes the sequence
+    val last = new Chain(Map("alert_name" -> "capped_final", "lifespan" -> "30 minutes",
+      "slots" -> Seq(slot("threshold", "event_type='purchase'"),
+        slot("deadman", "event_type='heartbeat'", "lifespan" -> "2 hours"))), "dmcap")
     try {
-      mem.addData(Ev(ts(1), 1, "purchase"))
-      q.processAllAvailable()
-      // watermark far past BOTH the expiry (10:31) and the window
-      // close (12:01) — timeout path must expire, not complete
-      mem.addData(Ev(tsH(13, 0), 9, "view"))
-      q.processAllAvailable()
-      // inline path for a chatty key: late user-1 traffic after the
-      // deadline must not resurrect the expired sequence either
-      mem.addData(Ev(tsH(13, 5), 1, "view"))
-      q.processAllAvailable()
-      assert(spark.table("dmexp").isEmpty)
-    } finally q.stop()
+      Seq(mid, last).foreach { c =>
+        c.add((ts(1), 1, "purchase"), (ts(45), 1, "click"))
+        // watermark far past BOTH the expiry (10:31) and the window
+        // close (12:01)
+        c.add((tsH(13, 0), 9, "view"))
+        // late user-1 traffic after the deadline must not resurrect
+        // the expired sequence either
+        c.add((tsH(13, 5), 1, "click"))
+        c.add((tsH(13, 30), 9, "view"))
+        c.add((tsH(13, 31), 9, "view"))
+      }
+      assert(mid.rows.isEmpty)
+      assert(last.values === Seq("1"))
+      assert(last.rows.head.getAs[Long]("t0_us") === ts(1).getTime * 1000L)
+    } finally { mid.query.stop(); last.query.stop() }
+  }
+
+  test("N-slot TWS: a spec without lifespan gets the batch default of 3 days") {
+    val c = new Chain(Map("alert_name" -> "default_lifespan",
+      "slots" -> Seq(slot("threshold", "event_type='purchase'"),
+        slot("threshold", "event_type='error'"))), "dflt")
+    def day(d: Int, h: Int, m: Int) =
+      Timestamp.valueOf(f"2026-01-$d%02d $h%02d:$m%02d:00")
+    try {
+      // Shells.sequence defaults lifespan to 3 days: user 1's error 71
+      // hours after its trip completes; user 2's, 3 days and 1 minute
+      // after, comes too late
+      c.add((day(1, 10, 0), 1, "purchase"), (day(1, 10, 0), 2, "purchase"))
+      c.add((day(4, 9, 0), 1, "error"), (day(4, 10, 1), 2, "error"))
+      c.add((day(5, 0, 0), 9, "view"))
+      c.add((day(5, 0, 1), 9, "view"))
+      assert(c.values === Seq("1"))
+    } finally c.query.stop()
   }
 
   case class Doc(ts: Timestamp, doc_id: Long, text: String)
@@ -1277,11 +1215,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // and the rendered slot-1 criteria must contain the SLOT-0 value
     // (its `assert "bitwarden" in criteria` shape).
     implicit val sc = spark.sqlContext
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val mem = MemoryStream[SeqEv]
       val spec: graft.model.AlertDoc.Doc = Map(
         "alert_name" -> "root_no_pw_manager",
@@ -1329,9 +1263,6 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
         // t0 = the 2nd (threshold-th) root login's event time
         assert(r.getAs[Long]("t0_us") === ts(2).getTime * 1000L)
       } finally q.stop()
-    } finally saved match {
-      case Some(v) => spark.conf.set(provider, v)
-      case None    => spark.conf.unset(provider)
     }
   }
 
