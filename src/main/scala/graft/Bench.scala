@@ -23,6 +23,9 @@ object Bench {
       try new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
+    // JSON numbers: a decimal point whatever the JVM default locale
+    def num(x: Double, digits: Int): String =
+      s"%.${digits}f".formatLocal(java.util.Locale.ROOT, x)
     val benchT0 = System.nanoTime()
     val meta = scala.collection.mutable.LinkedHashMap[String,
       (Double, Double, Double)]()
@@ -65,7 +68,7 @@ object Bench {
     // per-query [start_offset_sec, loadavg_before, loadavg_after] —
     // diagnostic additions; the driver reads only the fields above
     val metaJson = meta.map { case (k, (off, l0, l1)) =>
-      f""""$k":[$off%.1f,$l0%.2f,$l1%.2f]"""
+      s""""$k":[${num(off, 1)},${num(l0, 2)},${num(l1, 2)}]"""
     }.mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","meta":$metaJson}"""
@@ -88,12 +91,12 @@ object Bench {
     println(line)
     val top = results.filter { case (k, _) => !failed(k) }
       .sortBy(-_._2).take(20)
-      .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
+      .map { case (k, v) => s""""$k":${num(v, 3)}""" }.mkString("{", ",", "}")
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
       s""""n_queries":${results.size},"failed":$failedJson,""" +
-      f""""load_start":${meta.headOption.map(_._2._2).getOrElse(-1.0)}%.2f,""" +
-      f""""load_end":${loadavg()}%.2f,""" +
+      s""""load_start":${num(meta.headOption.map(_._2._2).getOrElse(-1.0), 2)},""" +
+      s""""load_end":${num(loadavg(), 2)},""" +
       s""""queries":$top,"queries_note":"top-20 slowest; full per-query in bench_out.json"}""")
     spark.stop()
   }

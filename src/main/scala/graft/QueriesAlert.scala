@@ -60,11 +60,6 @@ private[graft] object QueriesAlert {
   private lazy val orcTmpDir: String =
     java.nio.file.Files.createTempDirectory("graft-orc").toString
 
-  /** Drain a streaming DataFrame into a memory sink (AvailableNow) and
-    * return the sink table. Streaming aggs materialize one state-store
-    * instance per shuffle partition per microbatch, so the fan-out is
-    * capped at 8 — never raised above a smaller session default.
-    */
   /** Session-scoped RAM-backed root for drain checkpoints. A drain's
     * checkpoint (offset log, commit log, per-partition state deltas —
     * dozens of small fsync'd files per stateful operator per batch)
@@ -100,6 +95,13 @@ private[graft] object QueriesAlert {
 
   private val drainSeq = new java.util.concurrent.atomic.AtomicInteger
 
+  /** Drain a streaming DataFrame into a memory sink (AvailableNow) and
+    * return the sink table. Streaming aggs materialize one state-store
+    * instance per shuffle partition per microbatch, so the fan-out is
+    * capped at 8 — never raised above a smaller session default. The
+    * sink is a temp view of `s`; a drain that throws drops it, so no
+    * partial table outlives the failure.
+    */
   private[graft] def drainToMemory(s: SparkSession, df: DataFrame, sink: String,
       mode: org.apache.spark.sql.streaming.OutputMode): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
@@ -119,6 +121,9 @@ private[graft] object QueriesAlert {
         .option("checkpointLocation", cp.getAbsolutePath)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
+    } catch { case e: Throwable =>
+      s.catalog.dropTempView(sink)
+      throw e
     } finally {
       sp0.foreach(v => s.conf.set(sp, v.toString))
       deleteRec(cp)
@@ -139,11 +144,13 @@ private[graft] object QueriesAlert {
     * every "single-microbatch replay == batch fold" parity contract)
     * needs the whole replay inside a single batch — across batches
     * the advancing watermark could drop late keys and expire dedup
-    * state, both diverging from the batch op.
+    * state, both diverging from the batch op. The file schema comes
+    * from the per-path cache of [[Tables.readCachedSchema]], so
+    * building the plan runs no schema-inference job after the first.
     */
   private[graft] def tableStream(s: SparkSession, dir: String,
       name: String): DataFrame = {
-    val raw = s.read.parquet(s"$dir/$name.parquet").schema
+    val raw = Tables.readCachedSchema(s, s"$dir/$name.parquet").schema
     Tables.normalizeTs(s.readStream.schema(raw)
       .option("maxFilesPerTrigger", Int.MaxValue)
       .parquet(s"$dir/$name.[p]arquet"))
@@ -164,7 +171,7 @@ private[graft] object QueriesAlert {
           .withColumn("text", concat_ws("|", col("user_id"), col("event_type")))
         val deduped = graft.streaming.StreamingPipeline.dedupStream(keyed)
           .select(col("user_id"), col("event_type"))
-        StreamFamilies.cached(s, dir, "q54", OutputMode.Append())(deduped)
+        drainToMemory(s, deduped, "q54_sink", OutputMode.Append())
           .orderBy("user_id", "event_type")
       },
       Some("""SELECT DISTINCT user_id, event_type FROM events
@@ -188,7 +195,7 @@ private[graft] object QueriesAlert {
           "threshold" -> 2)
         val alerts = graft.streaming.StreamingAlerts
           .thresholdStream(eventStream(s, dir), spec, windowDuration = "1 hour")
-        StreamFamilies.cached(s, dir, "q53", OutputMode.Complete())(alerts)
+        drainToMemory(s, alerts, "q53_sink", OutputMode.Complete())
           .orderBy("value", "window_start")
       },
       Some("""SELECT 'stream_threshold' AS alert_name,

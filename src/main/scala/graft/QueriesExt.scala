@@ -403,7 +403,8 @@ private[graft] object QueriesExt {
         import org.apache.spark.sql.streaming.OutputMode
         val out = graft.streaming.StreamingPipeline.seqPairStream(
           QueriesAlert.tableStream(s, dir, "events"))
-        val drained = StreamFamilies.cached(s, dir, "q312", OutputMode.Append())(out.toDF())
+        val drained = QueriesAlert.drainToMemory(s, out.toDF(), "q312_sink",
+          OutputMode.Append())
         Analytics.pairSupportFromUt(drained)
       },
       Some(SeqPairOracle)),
@@ -702,7 +703,8 @@ private[graft] object QueriesExt {
         import org.apache.spark.sql.streaming.OutputMode
         val out = graft.streaming.StreamingPipeline.rfmStream(
           QueriesAlert.tableStream(s, dir, "events"))
-        val drained = StreamFamilies.cached(s, dir, "q324", OutputMode.Append())(out.toDF())
+        val drained = QueriesAlert.drainToMemory(s, out.toDF(), "q324_sink",
+          OutputMode.Append())
           // cumulative emissions: the final state per user is the
           // max of every tracked (all three are nondecreasing)
           .groupBy("u").agg(max("last_d").as("last_d"),
@@ -742,33 +744,22 @@ private[graft] object QueriesExt {
     out.getAbsolutePath
   }
 
-  /** Sequence-twin family shared drain (r12 verdict task #8): the
-    * four sequence specs — q350's 2-slot threshold→deadman and the
-    * q352/q358/q361 N-slot chains — drain in ONE AvailableNow
-    * streaming query instead of four. Per-drain cost at sf0.1 is
-    * ~1.5-2.3 s of pure micro-batch machinery (query startup, source
-    * listing, RocksDB store lifecycle, commit) regardless of the
-    * tiny state involved, so four separate drains paid that floor
-    * four times. The union is append-mode legal: four INDEPENDENT
-    * stateful operators, one watermark each (identical derivations of
-    * the same column, so the global minimum changes nothing), branch
-    * outputs tagged and JSON-encoded to unify the schema (all fields
-    * String/Long — the round-trip is exact), re-inflated per branch
-    * through from_json.
-    *
-    * The drained memory table is a pure function of (sf dir, specs) —
-    * the q109-lake artifact discipline: it materializes once per
-    * (JVM, sf) and every family query slices it, so verify and bench
-    * measure the SEQUENCE SEMANTICS (and q361's independent batch
-    * replay, which stays live) instead of re-paying the harness floor
-    * per query. Restart/recovery pins live in StreamingSpec against
+  /** The sequence-twin family's specs: q350's 2-slot
+    * threshold→deadman and the q352/q358/q361 N-slot chains. Their
+    * streaming halves drain in ONE AvailableNow query
+    * ([[StreamFamilies.sequences]]) instead of four: per-drain cost at
+    * sf0.1 is ~1.5-2.3 s of micro-batch machinery (query startup,
+    * source listing, RocksDB store lifecycle, commit) regardless of
+    * the tiny state involved. The drained table is a temp view of the
+    * session that ran it, so the four queries share one drain per
+    * session; q361's batch replay stays live in its body.
+    * Restart/recovery pins live in StreamingSpec against
     * StreamingPipeline streams and are untouched by this.
     */
   private object SeqTwins {
-    import org.apache.spark.sql.streaming.OutputMode
     import graft.model.AlertDoc.Doc
 
-    private val specs: Seq[(String, Doc)] = Seq(
+    val specs: Seq[(String, Doc)] = Seq(
       "q350" -> Map(
         "alert_name" -> "purchases_then_quiet",
         "alert_type" -> "sequence",
@@ -853,42 +844,6 @@ private[graft] object QueriesExt {
 
     /** q361's spec is also the batch-replay side's input — one copy. */
     def spec(name: String): Doc = specs.find(_._1 == name).get._2
-
-    private val cache =
-      scala.collection.mutable.Map.empty[String, Map[String, DataFrame]]
-
-    def slice(s: SparkSession, dir: String, name: String): DataFrame =
-      synchronized {
-        val key = s"${System.identityHashCode(s)}|${Tables.sfTag(dir)}"
-        cache.getOrElseUpdate(key, drain(s, dir))(name)
-      }
-
-    private def drain(s: SparkSession, dir: String): Map[String, DataFrame] =
-      graft.streaming.StreamingAlertsTws.withRocksDb(s) {
-        val branches: Seq[(String, DataFrame)] = specs.map { case (n, sp) =>
-          val events = QueriesAlert.tableStream(s, dir, "events")
-          val out =
-            if (n == "q350") graft.streaming.StreamingAlertsTws
-              .sequenceStreamTws(events, sp).toDF()
-            else graft.streaming.StreamingAlertsTws
-              .sequenceStreamTwsN(events, sp).toDF()
-          n -> out
-        }
-        val schemas = branches.map { case (n, df) => n -> df.schema }.toMap
-        val tagged = branches.map { case (n, df) =>
-          df.select(lit(n).as("__q"),
-            to_json(struct(df.columns.map(col): _*)).as("__js"))
-        }.reduce(_.union(_))
-        val sink =
-          "seqtwins_" + Tables.sfTag(dir).replaceAll("[^A-Za-z0-9_]", "_")
-        val t = QueriesAlert.drainToMemory(s, tagged, sink,
-          OutputMode.Append())
-        branches.map { case (n, _) =>
-          n -> t.where(col("__q") === n)
-            .select(from_json(col("__js"), schemas(n)).as("__r"))
-            .select(col("__r.*"))
-        }.toMap
-      }
   }
 
   private def thirdBatch: Seq[Q] = Seq(
@@ -979,7 +934,8 @@ private[graft] object QueriesExt {
         import org.apache.spark.sql.streaming.OutputMode
         val out = graft.streaming.StreamingPipeline.beaconStream(
           QueriesAlert.tableStream(s, dir, "events"))
-        val drained = StreamFamilies.cached(s, dir, "q327", OutputMode.Append())(out.toDF())
+        val drained = QueriesAlert.drainToMemory(s, out.toDF(), "q327_sink",
+          OutputMode.Append())
           // cumulative emissions: counts only grow, so the final
           // histogram per (key, bucket) is the max
           .groupBy("u", "t", "gap_bucket").agg(max("c").as("c"))
@@ -1782,7 +1738,8 @@ private[graft] object QueriesExt {
         import org.apache.spark.sql.streaming.OutputMode
         val out = graft.streaming.StreamingPipeline.sprayStream(
           QueriesAlert.tableStream(s, dir, "events"))
-        val drained = StreamFamilies.cached(s, dir, "q346", OutputMode.Append())(out.toDF())
+        val drained = QueriesAlert.drainToMemory(s, out.toDF(), "q346_sink",
+          OutputMode.Append())
           // cumulative emissions: counts only grow — final is the max
           .groupBy("t", "h", "u").agg(max("c").as("c"))
         Security.sprayFromPerUser(drained)
@@ -1885,9 +1842,10 @@ private[graft] object QueriesExt {
     Q("q350_stream_sequence",
       // slot1Family intentionally omitted in the family builder — the
       // template-free family (event_type='error') is derived from the
-      // criteria. Spec + drain live in SeqTwins (one shared
-      // AvailableNow query for the whole sequence-twin family).
-      (s, dir) => SeqTwins.slice(s, dir, "q350").orderBy("value"),
+      // criteria. The spec lives in SeqTwins; the drain is the
+      // sequence-twin family's one AvailableNow query.
+      (s, dir) => StreamFamilies.sequences(s, dir, SeqTwins.specs, "q350")
+        .orderBy("value"),
       Some("""WITH ev AS (SELECT * FROM events
              |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
              |    AND event_id IS NOT NULL),
@@ -1933,7 +1891,8 @@ private[graft] object QueriesExt {
     // count filter, rn=2 click after the window end, finalization
     // gate t2 < watermark.
     Q("q358_stream_sequence_middm",
-      (s, dir) => SeqTwins.slice(s, dir, "q358").orderBy("value"),
+      (s, dir) => StreamFamilies.sequences(s, dir, SeqTwins.specs, "q358")
+        .orderBy("value"),
       Some("""WITH ev AS (SELECT * FROM events
              |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
              |    AND event_id IS NOT NULL),
@@ -2155,7 +2114,8 @@ private[graft] object QueriesExt {
         // LIVE — the equivalence gate compares the two engines, so
         // only the micro-batch harness is shared, never the replay.
         val spec = SeqTwins.spec("q361")
-        val streamDf = SeqTwins.slice(s, dir, "q361")
+        val streamDf =
+          StreamFamilies.sequences(s, dir, SeqTwins.specs, "q361")
           .select(col("value"), col("t0_us"), col("t_last_us"),
             col("dm_count"))
           .withColumn("in_stream", lit(true))
@@ -2321,7 +2281,8 @@ private[graft] object QueriesExt {
     // oracle restates the chain relationally: rn=3 purchase, rn=2
     // in-window click, window error count, ms-floored watermark gate.
     Q("q352_stream_sequence3",
-      (s, dir) => SeqTwins.slice(s, dir, "q352").orderBy("value"),
+      (s, dir) => StreamFamilies.sequences(s, dir, SeqTwins.specs, "q352")
+        .orderBy("value"),
       Some("""WITH ev AS (SELECT * FROM events
              |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
              |    AND event_id IS NOT NULL),
@@ -2636,7 +2597,8 @@ private[graft] object QueriesExt {
           .where(col("doc_id") % 5 =!= 0)
         val out = graft.streaming.StreamingPipeline
           .decontaminateStream(stream, evals)
-        StreamFamilies.cached(s, dir, "q371", OutputMode.Append())(out).orderBy("doc_id")
+        QueriesAlert.drainToMemory(s, out, "q371_sink",
+          OutputMode.Append()).orderBy("doc_id")
       },
       Some("""WITH ew AS (SELECT doc_id AS eval_id,
              |    string_split(text, ' ') AS ws FROM documents
@@ -2737,7 +2699,8 @@ private[graft] object QueriesExt {
         val stream = QueriesAlert.tableStream(s, dir, "documents")
         val out = graft.streaming.StreamingPipeline
           .gopherGateStream(stream, minStopHits = 1L)
-        StreamFamilies.cached(s, dir, "q374", OutputMode.Append())(out).orderBy("doc_id")
+        QueriesAlert.drainToMemory(s, out, "q374_sink",
+          OutputMode.Append()).orderBy("doc_id")
       },
       Some("""WITH w AS (SELECT doc_id, text,
              |    string_split(text, ' ') AS ws
@@ -2890,7 +2853,8 @@ private[graft] object QueriesExt {
         val stream = QueriesAlert.tableStream(s, dir, "documents")
         val out = graft.streaming.StreamingPipeline
           .selfDedupStream(stream)
-        StreamFamilies.cached(s, dir, "q377", OutputMode.Append())(out.toDF()).orderBy("doc_id", "c_id", "band")
+        QueriesAlert.drainToMemory(s, out.toDF(), "q377_sink",
+          OutputMode.Append()).orderBy("doc_id", "c_id", "band")
       },
       Some(s"""WITH ${QueriesPipeline.duckShingles("", "documents")},
               |mh AS (SELECT doc_id, s,
@@ -3122,7 +3086,8 @@ private[graft] object QueriesExt {
         val gated = graft.streaming.StreamingPipeline
           .urlGateStream(stream, blockedDomains = Seq("tracker.net"))
           .select("canonical_url")
-        StreamFamilies.cached(s, dir, "q382", OutputMode.Append())(gated).orderBy("canonical_url")
+        QueriesAlert.drainToMemory(s, gated, "q382_sink",
+          OutputMode.Append()).orderBy("canonical_url")
       },
       Some("""SELECT DISTINCT 'https://ex.com/t/' || event_type
              |    || '?a=1&b=' || (user_id % 10) AS canonical_url
@@ -3370,7 +3335,8 @@ private[graft] object QueriesExt {
         val gated = graft.streaming.StreamingPipeline.dsirGateStream(
           QueriesAlert.tableStream(s, dir, "documents"), w,
           minScore = 188000L)
-        StreamFamilies.cached(s, dir, "q388", OutputMode.Append())(gated).orderBy("doc_id")
+        QueriesAlert.drainToMemory(s, gated, "q388_sink",
+          OutputMode.Append()).orderBy("doc_id")
       },
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
              |  FROM documents WHERE text IS NOT NULL),
@@ -3699,7 +3665,8 @@ private[graft] object QueriesExt {
         val stream = QueriesAlert.tableStream(s, dir, "documents")
         val sampled = graft.streaming.StreamingPipeline
           .prioritySampleStream(stream, k = 10).toDF()
-        val out = StreamFamilies.cached(s, dir, "q396", OutputMode.Update())(sampled)
+        val out = QueriesAlert.drainToMemory(s, sampled, "q396_sink",
+          OutputMode.Update())
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("label")
         out.withColumn("mx", max(col("upd")).over(w))
@@ -3892,7 +3859,8 @@ private[graft] object QueriesExt {
             col("ts"), col("event_type").as("content_hash"))
         val stats = graft.streaming.StreamingPipeline
           .recrawlStatsStream(stream).toDF()
-        val out = StreamFamilies.cached(s, dir, "q400", OutputMode.Update())(stats)
+        val out = QueriesAlert.drainToMemory(s, stats, "q400_sink",
+          OutputMode.Update())
         val w = org.apache.spark.sql.expressions.Window.partitionBy("u")
         graft.ops.Curation.recrawlRank(
           out.withColumn("mx", max(col("upd")).over(w))
@@ -3943,7 +3911,8 @@ private[graft] object QueriesExt {
           .where(col("doc_id").isNotNull && col("text").isNotNull)
         val chunks = Curation.chunkWindowsUnsorted(stream,
           width = 8, stride = 5)
-        StreamFamilies.cached(s, dir, "q401", OutputMode.Append())(chunks).orderBy("doc_id", "win_idx")
+        QueriesAlert.drainToMemory(s, chunks, "q401_sink",
+          OutputMode.Append()).orderBy("doc_id", "win_idx")
       },
       Some("""WITH t AS (
              |  SELECT doc_id, string_split(text, ' ') AS ws
@@ -4042,11 +4011,13 @@ private[graft] object QueriesExt {
     Q("q403_crawl_loop_equiv",
       (s, dir) => {
         // STREAM half (robots gate → trap gate → url-dedup gate →
-        // recrawl stats, the multi-stateful one-query loop): drains
-        // once per (session, sf) via StreamFamilies (corpus, rules,
-        // traps and fetch-log kernels live there, shared with this
-        // batch half — the equivalence pin's one-definition rule)
-        val drained = StreamFamilies.q403Stream(s, dir)
+        // recrawl stats, the multi-stateful one-query loop), drained
+        // on every run (corpus, rules, traps and fetch-log kernels
+        // live in StreamFamilies, shared with this batch half — the
+        // equivalence pin's one-definition rule)
+        val drained = QueriesAlert.drainToMemory(s,
+          StreamFamilies.q403StreamBranch(s, dir), "q403_sink",
+          org.apache.spark.sql.streaming.OutputMode.Update())
         val wU = org.apache.spark.sql.expressions.Window.partitionBy("u")
         val streamR = graft.ops.Curation.recrawlRank(
             drained.withColumn("mx", max(col("upd")).over(wU))
@@ -4233,7 +4204,7 @@ private[graft] object QueriesExt {
               |  END""".stripMargin))
         val traps = graft.streaming.StreamingPipeline
           .crawlerTrapsStream(stream, minUrls = 50L)
-        StreamFamilies.cached(s, dir, "q408", OutputMode.Update())(traps)
+        QueriesAlert.drainToMemory(s, traps, "q408_sink", OutputMode.Update())
           .groupBy("template", "depth")
           .agg(max(col("n_urls")).as("n_urls"))
           .withColumn("is_trap", col("n_urls") >= 50L)

@@ -1983,7 +1983,7 @@ private[graft] object QueriesPipeline {
         val fresh = docStream(s, dir).where(col("doc_id") % 5 === 0)
         val out = graft.streaming.StreamingPipeline
           .corpusFilterStream(fresh, sigs).select("doc_id")
-        StreamFamilies.cached(s, dir, "q69", OutputMode.Append())(out)
+        QueriesAlert.drainToMemory(s, out, "q69_sink", OutputMode.Append())
           .orderBy("doc_id")
       },
       Some("""SELECT f.doc_id FROM documents f
@@ -2008,7 +2008,7 @@ private[graft] object QueriesPipeline {
         val fresh = docStream(s, dir).where(col("doc_id") % 5 === 0)
         val out = graft.streaming.StreamingPipeline
           .nearDupAlarmStream(fresh, sigs)
-        StreamFamilies.cached(s, dir, "q70", OutputMode.Append())(out)
+        QueriesAlert.drainToMemory(s, out, "q70_sink", OutputMode.Append())
           .orderBy("doc_id", "c_id", "band")
       },
       Some(s"""WITH fr AS (SELECT * FROM documents WHERE doc_id % 5 = 0),
@@ -2307,7 +2307,7 @@ private[graft] object QueriesPipeline {
             min(unix_micros(col("ts"))).as("start_us"),
             max(unix_micros(col("ts"))).as("end_us"))
           .select(col("user_id"), col("n_events"), col("start_us"), col("end_us"))
-        StreamFamilies.cached(s, dir, "q87", OutputMode.Complete())(agg)
+        QueriesAlert.drainToMemory(s, agg, "q87_sink", OutputMode.Complete())
           .orderBy("user_id", "start_us")
       },
       Some("""WITH t AS (SELECT user_id, epoch_us(ts) AS us FROM events
@@ -2423,7 +2423,7 @@ private[graft] object QueriesPipeline {
         import org.apache.spark.sql.streaming.OutputMode
         val out = graft.streaming.StreamingPipeline
           .ewmaStream(QueriesAlert.eventStream(s, dir)).toDF()
-        StreamFamilies.cached(s, dir, "q92", OutputMode.Update())(out)
+        QueriesAlert.drainToMemory(s, out, "q92_sink", OutputMode.Update())
           .orderBy("user_id")
       },
       Some("""WITH t AS (SELECT user_id, epoch_us(ts) AS us, event_id,
@@ -4136,8 +4136,8 @@ private[graft] object QueriesPipeline {
         import org.apache.spark.sql.streaming.OutputMode
         val sk = graft.streaming.StreamingPipeline
           .heavyHittersStream(QueriesAlert.eventStream(s, dir)).toDF()
-        val cand = StreamFamilies.cached(s, dir, "q150",
-            OutputMode.Update())(sk)
+        val cand = QueriesAlert.drainToMemory(s, sk, "q150_sink",
+          OutputMode.Update())
           .select(col("item")).distinct()
         val ev = Tables(s, dir, "events")
         val n = ev.where(col("user_id").isNotNull).count()
@@ -4569,7 +4569,7 @@ private[graft] object QueriesPipeline {
               (col("eff_to").isNull || col("us") < col("eff_to")))
           .select(col("event_id"), col("user_id"), col("state"),
             col("eff_from"))
-        StreamFamilies.cached(s, dir, "q164", OutputMode.Append())(joined)
+        QueriesAlert.drainToMemory(s, joined, "q164_sink", OutputMode.Append())
           .orderBy("event_id")
       },
       Some("""WITH b AS (SELECT user_id, event_type,
@@ -7023,7 +7023,8 @@ private[graft] object QueriesPipeline {
         val out = graft.streaming.StreamingPipeline.tokenBucketStream(
           QueriesAlert.eventStream(s, dir), capacity = 3,
           refillUs = 86400000000L)
-        StreamFamilies.cached(s, dir, "q251", OutputMode.Append())(out.toDF())
+        QueriesAlert.drainToMemory(s, out.toDF(), "q251_sink",
+          OutputMode.Append())
           .orderBy("user_id", "event_id")
       },
       Some(tokenBucketOracle)),
@@ -7849,7 +7850,8 @@ private[graft] object QueriesPipeline {
         import org.apache.spark.sql.streaming.OutputMode
         val out = graft.streaming.StreamingPipeline.funnelStream(
           QueriesAlert.eventStream(s, dir), "view", "purchase")
-        StreamFamilies.cached(s, dir, "q274", OutputMode.Append())(out.toDF())
+        QueriesAlert.drainToMemory(s, out.toDF(), "q274_sink",
+          OutputMode.Append())
           .orderBy("user_id")
       },
       Some(funnelOracle)),
@@ -8472,7 +8474,8 @@ private[graft] object QueriesPipeline {
         import org.apache.spark.sql.streaming.OutputMode
         val counts = graft.streaming.StreamingPipeline.leaderboardStream(
           QueriesAlert.eventStream(s, dir))
-        val drained = StreamFamilies.cached(s, dir, "q294", OutputMode.Complete())(counts)
+        val drained = QueriesAlert.drainToMemory(s, counts, "q294_sink",
+          OutputMode.Complete())
         val w = Window.partitionBy("window_start")
           .orderBy(col("cnt").desc, col("event_type"))
         drained.withColumn("rank", row_number().over(w))
@@ -8608,7 +8611,8 @@ private[graft] object QueriesPipeline {
         import org.apache.spark.sql.streaming.OutputMode
         val out = graft.streaming.StreamingPipeline.centroidStream(
           QueriesAlert.tableStream(s, dir, "embeddings"))
-        StreamFamilies.cached(s, dir, "q279", OutputMode.Append())(out.toDF())
+        QueriesAlert.drainToMemory(s, out.toDF(), "q279_sink",
+          OutputMode.Append())
           .orderBy("label", "idx")
       },
       Some(centroidOracle)),

@@ -4,79 +4,73 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-/** Family-shared AvailableNow drains — the r12/r13 SeqTwins pattern
-  * (one streaming query per FAMILY instead of one per query),
-  * extended per the r14 verdict to the crawl/stream-join group.
+/** Family-shared AvailableNow drains: different queries whose
+  * streaming halves replay the same events run as ONE streaming query
+  * per family instead of one each.
   *
   * Why: at sf0.1 every AvailableNow drain pays ~1.5-2.5 s of pure
   * micro-batch machinery (query startup, file-source listing,
   * state-store lifecycle, offset/commit log writes) regardless of the
   * tiny state involved; a family of three drains paid that floor
-  * three times per execution — and the bench pays it 3x again
-  * (best-of-3). The union is append-mode legal: independent stateful
+  * three times. The union is append-mode legal: independent stateful
   * operators, each branch watermarking the same events-replay column,
   * branch outputs tagged and JSON-encoded to unify the schema (all
   * fields String/Long — the round-trip is exact), re-inflated per
   * branch through from_json.
   *
-  * The drained memory table is a pure function of (sf dir, branch
-  * programs) and materializes once per (session, sf, family); every
-  * family query slices its branch back out. Sharing the DRAIN is
-  * infrastructure (the q109-lake / SeqTwins discipline, sanctioned in
-  * the r12-r14 verdicts); each query's computation OVER the drained
-  * rows — and every batch half it compares against — stays live in
-  * its timed body, and each query's oracle still pins its full
-  * semantics. No cross-query RESULT is shared: the branches are
-  * disjoint row sets tagged at the source.
+  * The session holds the drain: the memory sink's temp view lives in
+  * the session that ran it, and a member reuses it when its own
+  * session has it, else drains, so no session sees another's rows.
+  * Each query's computation over its branch — and every batch half
+  * it compares against — stays live, and its oracle pins its full
+  * semantics. A query alone in its stream calls
+  * [[QueriesAlert.drainToMemory]] and drains on every run.
   */
 private[graft] object StreamFamilies {
-  private val cache =
-    scala.collection.mutable.Map.empty[String, Map[String, DataFrame]]
 
-  private def slice(s: SparkSession, dir: String, family: String,
-      mode: OutputMode,
-      branches: (SparkSession, String) => Seq[(String, DataFrame)],
+  /** Branch `name` of `family`'s drain over `dir`. `branches` are
+    * rebuilt on every call for their from_json schemas (analysis
+    * only, no job); they drain only when the session lacks the view.
+    * Synchronized because the view is registered when the drain
+    * starts, before its rows are complete.
+    */
+  private[graft] def slice(s: SparkSession, dir: String, family: String,
+      mode: OutputMode, branches: Seq[(String, DataFrame)],
       name: String): DataFrame = synchronized {
-    val key = s"${System.identityHashCode(s)}|${Tables.sfTag(dir)}|$family"
-    cache.getOrElseUpdate(key,
-      drain(s, dir, family, mode, branches(s, dir)))(name)
-  }
-
-  private def drain(s: SparkSession, dir: String, family: String,
-      mode: OutputMode,
-      branches: Seq[(String, DataFrame)]): Map[String, DataFrame] = {
     val sink = family + "_" +
       Tables.sfTag(dir).replaceAll("[^A-Za-z0-9_]", "_")
-    if (branches.sizeIs == 1) {
-      // single-branch family: no tagging needed, drain as-is
-      Map(branches.head._1 ->
-        QueriesAlert.drainToMemory(s, branches.head._2, sink, mode))
-    } else {
-      val schemas = branches.map { case (n, df) => n -> df.schema }.toMap
-      val tagged = branches.map { case (n, df) =>
+    val t =
+      if (s.catalog.tableExists(sink)) s.table(sink)
+      else QueriesAlert.drainToMemory(s, branches.map { case (n, df) =>
         df.select(lit(n).as("__q"),
           to_json(struct(df.columns.map(col): _*)).as("__js"))
-      }.reduce(_.union(_))
-      val t = QueriesAlert.drainToMemory(s, tagged, sink, mode)
-      branches.map { case (n, _) =>
-        n -> t.where(col("__q") === n)
-          .select(from_json(col("__js"), schemas(n)).as("__r"))
-          .select(col("__r.*"))
-      }.toMap
-    }
+      }.reduce(_.union(_)), sink, mode)
+    t.where(col("__q") === name)
+      .select(from_json(col("__js"), branches.toMap.apply(name).schema)
+        .as("__r"))
+      .select(col("__r.*"))
   }
 
-  /** Single-query cached drain — the family pattern with one member
-    * (no tagging): the query's streaming half drains once per
-    * (session, sf) and every execution reads the drained table. Same
-    * infrastructure/result line as the families: the drain is harness
-    * machinery, the query's computation over the drained rows stays
-    * live per execution, the oracle pins full semantics. `branch` is
-    * by-name and only built on the first call.
-    */
-  def cached(s: SparkSession, dir: String, name: String,
-      mode: OutputMode)(branch: => DataFrame): DataFrame =
-    slice(s, dir, name, mode, (_, _) => Seq(name -> branch), name)
+  // ------------------------------------------------------------------
+  // sequence-twin family: the streaming sequence specs of QueriesExt's
+  // SeqTwins — q350's 2-slot threshold→deadman processor and the
+  // N-slot transformWithState chains — on the RocksDB state store.
+  // ------------------------------------------------------------------
+
+  def sequences(s: SparkSession, dir: String,
+      specs: Seq[(String, graft.model.AlertDoc.Doc)],
+      name: String): DataFrame = {
+    import graft.streaming.StreamingAlertsTws
+    StreamingAlertsTws.withRocksDb(s) {
+      slice(s, dir, "seqtwins", OutputMode.Append(), specs.map {
+        case (n, sp) =>
+          val events = QueriesAlert.tableStream(s, dir, "events")
+          n -> (if (n == "q350") StreamingAlertsTws
+            .sequenceStreamTws(events, sp).toDF()
+          else StreamingAlertsTws.sequenceStreamTwsN(events, sp).toDF())
+      }, name)
+    }
+  }
 
   // ------------------------------------------------------------------
   // crawl family: q104 stream-stream join, q394 robots gate, q384
@@ -85,7 +79,8 @@ private[graft] object StreamFamilies {
   // ------------------------------------------------------------------
 
   def crawl(s: SparkSession, dir: String, name: String): DataFrame =
-    slice(s, dir, "crawlfam", OutputMode.Append(), crawlBranches, name)
+    slice(s, dir, "crawlfam", OutputMode.Append(), crawlBranches(s, dir),
+      name)
 
   private def crawlBranches(s: SparkSession,
       dir: String): Seq[(String, DataFrame)] = Seq(
@@ -167,17 +162,15 @@ private[graft] object StreamFamilies {
   }
 
   // ------------------------------------------------------------------
-  // q403 crawl-loop family (single branch, Update mode): the
-  // multi-stateful-operator stream half drains once per (session,
-  // sf); the batch replay + the full-outer equivalence join stay live
-  // in the query body.
+  // q403 crawl loop: not a family (its stream is its own), but its
+  // stream half and the batch half in the query body share these
+  // kernels.
   // ------------------------------------------------------------------
 
-  def q403Stream(s: SparkSession, dir: String): DataFrame =
-    slice(s, dir, "q403fam", OutputMode.Update(),
-      (s2, d2) => Seq("q403" -> q403StreamBranch(s2, d2)), "q403")
-
-  private def q403StreamBranch(s: SparkSession, dir: String): DataFrame = {
+  /** q403's multi-stateful-operator stream half, drained by the q403
+    * body on every run.
+    */
+  def q403StreamBranch(s: SparkSession, dir: String): DataFrame = {
     val rules = q403Rules(s)
     val allowedS = graft.streaming.StreamingPipeline.robotsGateStream(
       q403Corpus(QueriesAlert.tableStream(s, dir, "events")), rules,

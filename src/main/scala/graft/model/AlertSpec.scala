@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.yaml.snakeyaml.Yaml
 
-import graft.functions.{Dates, Json}
+import graft.functions.Dates
 
 /** Alert documents and specs are nested string-keyed maps, exactly as
   * in the reference (YAML → dict → deep-merged shells → Mongo BSON;
@@ -192,7 +192,4 @@ object AlertSpecs {
       finally stream.close()
     }
   }
-
-
-  def toJson(doc: AlertDoc.Doc): String = Json.write(doc)
 }

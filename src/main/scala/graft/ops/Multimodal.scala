@@ -319,11 +319,6 @@ object Multimodal {
     }
   }
 
-  /** documents → blobs → metadata → sampled frames, oracle-ordered. */
-  def framePipeline(docs: DataFrame): DataFrame =
-    sampleFrames(extractMetadata(toBlobs(docs))).toDF()
-      .orderBy("doc_id", "frame_idx")
-
   /** documents → real image bytes → header metadata → sampled frames
     * (GIF docs fan out per real frame count), oracle-ordered.
     */

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Lake-ingest helpers (S13/S14/P9).
@@ -52,23 +52,11 @@ object Ingest {
     blobs.flatMap(splitJsonBlocks _)
   }
 
-  /** Parse brace-concatenated blobs straight into a DataFrame. */
-  def readJsonBlocks(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    // wholetext: the brace-balance splitter needs the full blob — a
-    // line-based read would shred multi-line objects before it runs
-    spark.read.option("wholetext", "true").text(path).as[String]
-      .transform(jsonBlocks)
-      .transform(ds => spark.read.json(ds))
-  }
-
   /** CloudTrail delivery filename classifier (P9,
     * utils/helpers.py:10,39-41) as a plan-side predicate on
     * input_file_name — case-insensitive like the reference's re.I.
     */
   def isCloudtrailFile = input_file_name().rlike("(?i)\\d+_cloudtrail_.+\\.json\\.gz$")
-
-  def shortUuid(): String = java.util.UUID.randomUUID().toString.take(8)
 
   /** WARC-lite record splitter — the crawl-native container's text
     * profile, the S13 tokenizer family applied to fetcher output:

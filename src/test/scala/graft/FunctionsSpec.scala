@@ -391,6 +391,27 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
     assert(Ingest.splitJsonBlocks("""{"s":"}{\"{"}""") === Seq("""{"s":"}{\"{"}"""))
   }
 
+  test("isCloudtrailFile matches <digits>_cloudtrail_*.json.gz " +
+      "case-insensitively (utils/helpers.py:39-41)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ct")
+    def write(name: String, gz: Boolean): Unit = {
+      val f = new java.io.FileOutputStream(dir.resolve(name).toFile)
+      val out =
+        if (gz) new java.util.zip.GZIPOutputStream(f) else f
+      try out.write("{\"a\":1}\n".getBytes("UTF-8")) finally out.close()
+    }
+    write("123_CloudTrail_x.json.gz", gz = true)
+    write("123_cloudtrail_x.json", gz = false)
+    write("foo.json.gz", gz = true)
+    val got = spark.read.json(dir.toString)
+      .select(org.apache.spark.sql.functions.input_file_name(),
+        Ingest.isCloudtrailFile)
+      .collect()
+      .map(r => r.getString(0).split('/').last -> r.getBoolean(1)).toMap
+    assert(got === Map("123_CloudTrail_x.json.gz" -> true,
+      "123_cloudtrail_x.json" -> false, "foo.json.gz" -> false))
+  }
+
   test("warcRecords: concatenated WARC records explode with headers " +
       "parsed case-insensitively, CRLF tolerated, payload trimmed") {
     val body =

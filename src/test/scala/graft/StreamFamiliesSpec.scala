@@ -1,0 +1,88 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
+import org.apache.spark.sql.streaming.StreamingQueryListener._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Drain honesty and session scope: a query that is alone in its
+  * stream drains on every run, a family shares one drain per session,
+  * and a drain that fails leaves nothing to reuse.
+  */
+class StreamFamiliesSpec extends AnyFunSuite with SparkSuite {
+
+  /** Counts streaming queries started in the sessions it is added to
+    * (QueryStartedEvent reaches listeners on the starting thread).
+    */
+  class Starts extends StreamingQueryListener {
+    val n = new AtomicInteger
+    def onQueryStarted(e: QueryStartedEvent): Unit = n.incrementAndGet(): Unit
+    def onQueryProgress(e: QueryProgressEvent): Unit = ()
+    def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+  }
+
+  def session(starts: Starts): SparkSession = {
+    val s = spark.newSession()
+    s.streams.addListener(starts)
+    s
+  }
+
+  def rows(s: SparkSession, q: String): Seq[String] =
+    SparkEntry.queries(q)(s, sf()).collect().toSeq.map(_.toString).sorted
+
+  test("every run of a single-query drain starts its own streaming query") {
+    for (q <- Seq("q53_stream_threshold", "q403_crawl_loop_equiv")) {
+      val starts = new Starts
+      val s = session(starts)
+      val first = rows(s, q)
+      val second = rows(s, q)
+      assert(starts.n.get === 2, q)
+      assert(first.nonEmpty, q)
+      assert(second === first, q)
+    }
+  }
+
+  test("crawl family members share one drain per session, never across " +
+      "sessions") {
+    val starts = new Starts
+    val a = session(starts)
+    val a104 = rows(a, "q104_stream_stream_join")
+    val a394 = rows(a, "q394_stream_robots_gate")
+    assert(starts.n.get === 1)
+    val b = session(starts)
+    val b104 = rows(b, "q104_stream_stream_join")
+    val b394 = rows(b, "q394_stream_robots_gate")
+    assert(starts.n.get === 2)
+    assert(a104.nonEmpty && a394.nonEmpty)
+    assert(b104 === a104)
+    assert(b394 === a394)
+  }
+
+  test("a family member whose drain fails leaves no view, and the next " +
+      "run re-drains") {
+    val starts = new Starts
+    val s = session(starts)
+    val dir = sf()
+    // `fail` is baked into the plan, and branches are rebuilt on every
+    // call, so the second call drains a healthy plan
+    def member(name: String, fail: Boolean) = {
+      val ev = QueriesAlert.tableStream(s, dir, "events")
+        .where(col("event_id").isNotNull)
+      StreamFamilies.slice(s, dir, "failfam", OutputMode.Append(), Seq(
+        "ids" -> ev.select(when(lit(fail), raise_error(lit("boom")))
+          .otherwise(col("event_id")).cast("long").as("id")),
+        "types" -> ev.select(col("event_type"))), name)
+    }
+    intercept[Exception](member("ids", fail = true))
+    assert(starts.n.get === 1)
+    assert(!s.catalog.listTables().collect().exists(_.name.startsWith("failfam")))
+    val want = Tables(s, dir, "events").where(col("event_id").isNotNull)
+      .count()
+    assert(member("ids", fail = false).count() === want)
+    assert(member("types", fail = false).count() === want)
+    assert(starts.n.get === 2)
+  }
+}
