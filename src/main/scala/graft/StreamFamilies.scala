@@ -24,7 +24,9 @@ import org.apache.spark.sql.streaming.OutputMode
   * Each query's computation over its branch — and every batch half
   * it compares against — stays live, and its oracle pins its full
   * semantics. A query alone in its stream calls
-  * [[QueriesAlert.drainToMemory]] and drains on every run.
+  * [[QueriesAlert.drainToMemory]] and drains on every run. `graft.Bench`
+  * drops the family views ([[sinks]]) before each timed repeat, so
+  * every repeat of a member pays its drain too.
   */
 private[graft] object StreamFamilies {
 
@@ -37,8 +39,7 @@ private[graft] object StreamFamilies {
   private[graft] def slice(s: SparkSession, dir: String, family: String,
       mode: OutputMode, branches: Seq[(String, DataFrame)],
       name: String): DataFrame = synchronized {
-    val sink = family + "_" +
-      Tables.sfTag(dir).replaceAll("[^A-Za-z0-9_]", "_")
+    val sink = sinkName(family, dir)
     val t =
       if (s.catalog.tableExists(sink)) s.table(sink)
       else QueriesAlert.drainToMemory(s, branches.map { case (n, df) =>
@@ -51,6 +52,18 @@ private[graft] object StreamFamilies {
       .select(col("__r.*"))
   }
 
+  private def sinkName(family: String, dir: String): String =
+    family + "_" + Tables.sfTag(dir).replaceAll("[^A-Za-z0-9_]", "_")
+
+  private val seqFamily = "seqtwins"
+  private val crawlFamily = "crawlfam"
+
+  /** The session views that hold the family drains over `dir`; a member
+    * called after they are dropped drains again.
+    */
+  private[graft] def sinks(dir: String): Seq[String] =
+    Seq(seqFamily, crawlFamily).map(sinkName(_, dir))
+
   // ------------------------------------------------------------------
   // sequence-twin family: the streaming sequence specs of QueriesExt's
   // SeqTwins — q350's 2-slot threshold→deadman processor and the
@@ -62,7 +75,7 @@ private[graft] object StreamFamilies {
       name: String): DataFrame = {
     import graft.streaming.StreamingAlertsTws
     StreamingAlertsTws.withRocksDb(s) {
-      slice(s, dir, "seqtwins", OutputMode.Append(), specs.map {
+      slice(s, dir, seqFamily, OutputMode.Append(), specs.map {
         case (n, sp) =>
           val events = QueriesAlert.tableStream(s, dir, "events")
           n -> (if (n == "q350") StreamingAlertsTws
@@ -79,7 +92,7 @@ private[graft] object StreamFamilies {
   // ------------------------------------------------------------------
 
   def crawl(s: SparkSession, dir: String, name: String): DataFrame =
-    slice(s, dir, "crawlfam", OutputMode.Append(), crawlBranches(s, dir),
+    slice(s, dir, crawlFamily, OutputMode.Append(), crawlBranches(s, dir),
       name)
 
   private def crawlBranches(s: SparkSession,

@@ -138,6 +138,9 @@ class SequenceTwsProcessor(name: String, thresholdT: Int, deadmanMax: Long,
 
   override def handleExpiredTimer(key: String, timerValues: TimerValues,
       expiredTimerInfo: ExpiredTimerInfo): Iterator[StreamSeqAlert] = {
+    // the timer kept in `armed` is the one firing, and Spark deletes it
+    // after this call: a rearm must not delete it again
+    armed.clear()
     val wmUs = timerValues.getCurrentWatermarkInMs() * 1000L
     val c0 = Option(compact.get()).getOrElse(SeqCompact(0L, 0L, Nil))
 
@@ -185,7 +188,7 @@ class SequenceTwsProcessor(name: String, thresholdT: Int, deadmanMax: Long,
       } else {
         val b = bCntFinal +
           act.count(e => !e.isA && e.tsUs > t0Us && e.tsUs <= deadlineUs)
-        buf.clear(); armed.clear(); compact.clear() // completion re-arms the key
+        buf.clear(); compact.clear() // completion re-arms the key
         if (b > deadmanMax) Iterator.empty
         else {
           // the slots doc the batch engine would hold at this point:
@@ -344,12 +347,13 @@ class NSeqTwsProcessor(name: String, slotSpecs: Seq[NSeqSlot],
 
   override def handleExpiredTimer(key: String, timerValues: TimerValues,
       expiredTimerInfo: ExpiredTimerInfo): Iterator[StreamNSeqAlert] = {
+    armed.clear() // the firing timer; Spark deletes it after this call
     val wmUs = timerValues.getCurrentWatermarkInMs() * 1000L
     val st0 = Option(chain.get()).getOrElse(NSeqChain(0, Nil, 0L, 0L, Nil))
     val evs = buf.get().toVector
     val (fin, act) = evs.partition(_.tsUs < wmUs)
 
-    def clearAll(): Unit = { buf.clear(); chain.clear(); armed.clear() }
+    def clearAll(): Unit = { buf.clear(); chain.clear() }
     def emit(st: NSeqChain): Iterator[StreamNSeqAlert] = {
       val slotDocs: Seq[AlertDoc.Doc] = slotSpecs.zipWithIndex.map {
         case (sp, i) =>

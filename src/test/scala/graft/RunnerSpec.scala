@@ -146,24 +146,6 @@ class RunnerSpec extends AnyFunSuite with SparkSuite {
 
   // --- the fire-probe ------------------------------------------------------
 
-  /** What `body` logs under the named loggers, with its result. */
-  def logged[A](loggers: String*)(body: => A): (A, Seq[String]) = {
-    import org.apache.logging.log4j.LogManager
-    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("runner-spec", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    val targets = loggers.map(LogManager.getLogger(_).asInstanceOf[CoreLogger])
-    targets.foreach(_.addAppender(appender))
-    try (body, seen.toArray(Array.empty[String]).toSeq)
-    finally { targets.foreach(_.removeAppender(appender)); appender.stop() }
-  }
-
   test("fire-probe: a spec whose events an earlier spec saved this run does not fire") {
     val runner = mkRunner()
     val again = thresholdSpec + ("alert_name" -> "purchases_again")
@@ -223,5 +205,97 @@ class RunnerSpec extends AnyFunSuite with SparkSuite {
     val after = runner.inflight.all()
     assert(after.size === before.size - 1 && after.toSet.subsetOf(before.toSet))
   }
-}
 
+  // --- deadman evaluations beside the probe --------------------------------
+
+  def names(runner: Runner): Seq[String] = runner.alerts.all().map(AlertDoc.str(_, "alert_name"))
+
+  test("concurrent deadman: a later threshold dedups against the ids it saved") {
+    val lake = Tables(spark, sf(), "events")
+    // every purchasing user is under this bound, so the deadman saves
+    // each purchase group with its events
+    val fewPurchases = deadmanSpec ++ Map("alert_name" -> "few_purchases",
+      "criteria" -> "event_type='purchase'", "threshold" -> 1000)
+    val alone = mkRunner()
+    alone.runOnce(lake, Seq(thresholdSpec), now)
+    assert(names(alone).nonEmpty)
+
+    val runner = mkRunner()
+    val stats = runner.runOnce(lake, Seq(fewPurchases, thresholdSpec), now)
+    // the same two specs one run after the other: the store order of
+    // evaluating them in sequence
+    val sequential = mkRunner()
+    sequential.runOnce(lake, Seq(fewPurchases), now)
+    sequential.runOnce(lake, Seq(thresholdSpec), now)
+    assert(stats.evaluationsSkipped === 0)
+    assert(names(runner).nonEmpty && names(runner).forall(_ == "few_purchases"))
+    assert(runner.alerts.all().map(_ - "_id") === sequential.alerts.all().map(_ - "_id"))
+  }
+
+  test("concurrent deadman: a deadman whose shell throws surfaces that " +
+      "exception at its position") {
+    val runner = mkRunner()
+    val badShell = deadmanSpec ++ Map("alert_name" -> "bad_shell", "threshold" -> "not a number")
+    val e = intercept[NumberFormatException] {
+      runner.runOnce(Tables(spark, sf(), "events"),
+        Seq(thresholdSpec, badShell, deadmanSpec), now)
+    }
+    assert(e.getMessage.contains("not a number"))
+    // the threshold before it saved; the deadman after it never did
+    assert(names(runner).nonEmpty && names(runner).forall(_ == "purchases"))
+  }
+
+  test("concurrent deadman: no job of a run is active after it returns or throws") {
+    val sc = spark.sparkContext
+    // the status store trails the scheduler by its listener queue
+    def active(): Seq[Int] = {
+      val deadline = System.nanoTime() + 500L * 1000 * 1000
+      var ids = sc.statusTracker.getActiveJobIds.toSeq
+      while (ids.nonEmpty && System.nanoTime() < deadline) {
+        Thread.sleep(10)
+        ids = sc.statusTracker.getActiveJobIds.toSeq
+      }
+      ids
+    }
+    val lake = Tables(spark, sf("sf0.01"), "events")
+    mkRunner().runOnce(lake, Seq(thresholdSpec, deadmanSpec), now)
+    assert(active().isEmpty)
+
+    // the threshold at position 0 throws while the deadman's job, 0.3 s
+    // per window row, has seconds left to run
+    val failing = thresholdSpec + ("criteria" -> "assert_true(value < 0) IS NULL")
+    val slow = deadmanSpec + ("criteria" -> "reflect('java.lang.Thread', 'sleep', 300L) IS NOT NULL")
+    intercept[Exception](mkRunner().runOnce(lake, Seq(failing, slow), now))
+    assert(active().isEmpty)
+  }
+
+  test("every job of a run carries a description naming its evaluation; " +
+      "the caller's is restored") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val lake = Tables(spark, sf(), "events")
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse("<none>"))
+    }
+    sc.addSparkListener(listener)
+    val descs = try {
+      sc.setJobDescription("caller")
+      mkRunner().runOnce(lake, Seq(thresholdSpec, deadmanSpec, purchaseThenError), now)
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      // listener events arrive in order: a marker job closes the run's
+      sc.setJobDescription("marker")
+      spark.range(1).count()
+      Iterator.continually(seen.poll(10, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(d => d != null && d != "marker").toSeq
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    assert(descs.nonEmpty && !descs.exists(d => d == "<none>" || d == "caller"), descs)
+    assert(Set("fire-probe", "threshold purchases", "deadman no_refunds",
+      "sequence purchase_then_error").subsetOf(descs.toSet), descs)
+  }
+}

@@ -30,6 +30,24 @@ trait SparkSuite extends BeforeAndAfterAll { self: AnyFunSuite =>
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
+  /** What `body` logs under the named loggers, with its result. */
+  def logged[A](loggers: String*)(body: => A): (A, Seq[String]) = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("captured", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val targets = loggers.map(LogManager.getLogger(_).asInstanceOf[CoreLogger])
+    targets.foreach(_.addAppender(appender))
+    try (body, seen.toArray(Array.empty[String]).toSeq)
+    finally { targets.foreach(_.removeAppender(appender)); appender.stop() }
+  }
+
   override def afterAll(): Unit = {
     if (sparkStarted) {
       val r = spark.sql(

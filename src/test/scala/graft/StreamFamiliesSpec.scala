@@ -61,6 +61,18 @@ class StreamFamiliesSpec extends AnyFunSuite with SparkSuite {
     assert(b394 === a394)
   }
 
+  test("with the family sinks dropped before each call, every call of a " +
+      "member drains") {
+    val starts = new Starts
+    val s = session(starts)
+    val runs = (1 to 3).map { _ =>
+      StreamFamilies.sinks(sf()).foreach(s.catalog.dropTempView)
+      rows(s, "q104_stream_stream_join")
+    }
+    assert(starts.n.get === 3)
+    assert(runs.head.nonEmpty && runs.forall(_ == runs.head))
+  }
+
   test("a family member whose drain fails leaves no view, and the next " +
       "run re-drains") {
     val starts = new Starts

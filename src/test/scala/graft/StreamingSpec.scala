@@ -1208,6 +1208,49 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   case class SeqEv(ts: Timestamp, user_id: Long, event_id: Long,
       event_type: String)
 
+  test("TWS sequence processors re-arm without deleting a timer that " +
+      "already fired") {
+    import org.apache.spark.sql.execution.streaming.operators.stateful.transformwithstate.timers.TimerStateImpl
+    implicit val sc = spark.sqlContext
+    val spec: graft.model.AlertDoc.Doc = Map(
+      "alert_name" -> "buy_then_quiet", "lifespan" -> "30 minutes",
+      "summary" -> "{{slots.0.metadata.value}} bought, then no error",
+      "slots" -> Seq(
+        Map("alert_type" -> "threshold", "criteria" -> "event_type='purchase'",
+          "aggregation_key" -> "user_id", "threshold" -> 1),
+        Map("alert_type" -> "deadman",
+          "criteria" -> "event_type='error' AND user_id='{{slots.0.metadata.value}}'",
+          "threshold" -> 0)))
+    val processors = Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)](
+      "rearm2" -> (df => graft.streaming.StreamingAlertsTws.sequenceStreamTws(df, spec,
+        slot1Family = org.apache.spark.sql.functions.col("event_type") === "error",
+        watermarkDelay = "1 minute").toDF()),
+      "rearmn" -> (df => graft.streaming.StreamingAlertsTws.sequenceStreamTwsN(df, spec,
+        watermarkDelay = "1 minute").toDF()))
+    val (values, messages) = logged(classOf[TimerStateImpl].getName) {
+      withRocksDb(spark) {
+        processors.map { case (sink, build) =>
+          val mem = MemoryStream[SeqEv]
+          val q = build(mem.toDF()).writeStream.format("memory").queryName(sink)
+            .outputMode(OutputMode.Append).start()
+          try {
+            // user 1 trips slot 0 and arms a timer at the next watermark
+            // tick; the later batches carry only other users' events, so
+            // that timer fires with the deadman window still open and the
+            // key re-arms, until the watermark passes the deadline
+            Seq(SeqEv(ts(0), 1, 1, "purchase"), SeqEv(ts(10), 9, 2, "view"),
+                SeqEv(tsH(11, 0), 9, 3, "view"), SeqEv(tsH(11, 1), 9, 4, "view"))
+              .foreach { e => mem.addData(e); q.processAllAvailable() }
+            spark.table(sink).select("value").as[String].collect().toSeq
+          } finally q.stop()
+        }
+      }
+    }
+    assert(values === Seq(Seq("1"), Seq("1")))
+    assert(!messages.exists(_.startsWith("Failed to delete timer")), messages)
+  }
+
   test("transformWithState sequence: cross-slot criteria renders the slot-0 value") {
     // the reference's threshold→deadman scenario
     // (tests/test_alerts.py:345-435): slot 0 trips on the T-th
