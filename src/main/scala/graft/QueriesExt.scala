@@ -745,8 +745,9 @@ private[graft] object QueriesExt {
   }
 
   /** The sequence-twin family's specs: q350's 2-slot
-    * threshold→deadman and the q352/q358/q361 N-slot chains. Their
-    * streaming halves drain in ONE AvailableNow query
+    * threshold→deadman and the q352/q358/q361 longer chains, all on
+    * the one N-slot streaming chain. Their streaming halves drain in
+    * ONE AvailableNow query
     * ([[StreamFamilies.sequences]]) instead of four: per-drain cost at
     * sf0.1 is ~1.5-2.3 s of micro-batch machinery (query startup,
     * source listing, RocksDB store lifecycle, commit) regardless of
@@ -1827,23 +1828,23 @@ private[graft] object QueriesExt {
         .stripMargin)),
 
     // STREAMING sequence parity (tests/test_alerts.py:345-435's
-    // threshold→deadman scenario) through the transformWithState
-    // path end-to-end: slot 0 trips on the 3rd purchase per user
+    // threshold→deadman scenario) through the N-slot transformWithState
+    // chain end-to-end: slot 0 trips on the 3rd purchase per user
     // (event-time order, id tiebreak), slot 1 is a deadman over the
     // 7-day window after the trip — ≤1 follow-up error completes the
     // sequence when the watermark passes the deadline. The emitted
     // row carries the RENDERED slot-1 criteria (cross-slot template
     // resolved to the slot-0 value — the reference's
-    // `assert "bitwarden" in criteria` shape) and the final summary.
-    // The oracle restates the full state machine relationally,
-    // including the watermark gate (max event time − 10 min, floored
-    // to the ms timer clock): a sequence whose window is still open
-    // at end-of-stream must NOT emit.
+    // `assert "bitwarden" in criteria` shape) and the final summary,
+    // whose `{{slots.0.metadata.count}}` is the threshold that tripped
+    // slot 0 (the batch engine's slot doc) and
+    // `{{slots.1.metadata.count}}` the deadman window count. The
+    // oracle restates the full state machine relationally, including
+    // the watermark gate (max event time − 10 min, floored to the ms
+    // timer clock): a sequence whose window is still open at
+    // end-of-stream must NOT emit. The spec lives in SeqTwins; the
+    // drain is the sequence-twin family's one AvailableNow query.
     Q("q350_stream_sequence",
-      // slot1Family intentionally omitted in the family builder — the
-      // template-free family (event_type='error') is derived from the
-      // criteria. The spec lives in SeqTwins; the drain is the
-      // sequence-twin family's one AvailableNow query.
       (s, dir) => StreamFamilies.sequences(s, dir, SeqTwins.specs, "q350")
         .orderBy("value"),
       Some("""WITH ev AS (SELECT * FROM events
@@ -1856,8 +1857,6 @@ private[graft] object QueriesExt {
              |    ROW_NUMBER() OVER (PARTITION BY user_id
              |      ORDER BY ts, event_id) AS rn
              |  FROM ev WHERE event_type = 'purchase'),
-             |a AS (SELECT user_id,
-             |    CAST(COUNT(*) AS BIGINT) AS a_cnt FROM p GROUP BY 1),
              |t0 AS (SELECT user_id, us AS t0_us FROM p WHERE rn = 3),
              |fired AS (SELECT t0.user_id, t0.t0_us FROM t0, wm
              |  WHERE t0.t0_us + 604800000000 <= wm.wm_us),
@@ -1872,14 +1871,14 @@ private[graft] object QueriesExt {
              |SELECT 'purchases_then_quiet' AS alert_name,
              |  CAST(b.user_id AS VARCHAR) AS value,
              |  CAST(b.t0_us AS BIGINT) AS t0_us,
-             |  b.b_cnt AS b_count,
+             |  CAST(b.t0_us AS BIGINT) AS t_last_us,
+             |  b.b_cnt AS dm_count,
              |  'event_type=''error'' AND user_id='''
              |    || CAST(b.user_id AS VARCHAR) || '''' AS criteria,
-             |  CAST(a.a_cnt AS VARCHAR) || ' purchases by '
-             |    || CAST(b.user_id AS VARCHAR) || ' with only '
-             |    || CAST(b.b_cnt AS VARCHAR)
+             |  '3 purchases by ' || CAST(b.user_id AS VARCHAR)
+             |    || ' with only ' || CAST(b.b_cnt AS VARCHAR)
              |    || ' follow-up errors' AS summary
-             |FROM b JOIN a ON a.user_id = b.user_id
+             |FROM b
              |WHERE b.b_cnt <= 1
              |ORDER BY value""".stripMargin)),
 
@@ -2032,7 +2031,7 @@ private[graft] object QueriesExt {
     // the MIN event_id among clicks, restated with a FILTERed MIN.
     Q("q351_presto_dialect2",
       (s, dir) => {
-        graft.functions.Functions.register(s)
+        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -2191,7 +2190,7 @@ private[graft] object QueriesExt {
     // 1e6 in IEEE double on both sides).
     Q("q362_presto_dialect3",
       (s, dir) => {
-        graft.functions.Functions.register(s)
+        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -2225,7 +2224,7 @@ private[graft] object QueriesExt {
     // per user and restated exactly in DuckDB.
     Q("q364_presto_dialect4",
       (s, dir) => {
-        graft.functions.Functions.register(s)
+        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -2456,7 +2455,7 @@ private[graft] object QueriesExt {
     // strftime/strptime's C tokens (%i minute ↔ %M, %s second ↔ %S).
     Q("q368_presto_dialect5",
       (s, dir) => {
-        graft.functions.Functions.register(s)
+        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -2907,7 +2906,7 @@ private[graft] object QueriesExt {
     // date_format.
     Q("q378_presto_dialect6",
       (s, dir) => {
-        graft.functions.Functions.register(s)
+        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -3108,7 +3107,7 @@ private[graft] object QueriesExt {
     // the oracle states what the lambda computes, not how).
     Q("q383_presto_dialect7",
       (s, dir) => {
-        graft.functions.Functions.register(s)
+        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -3405,7 +3404,7 @@ private[graft] object QueriesExt {
     // the 'g' flag — DuckDB defaults to first-match-only).
     Q("q390_presto_dialect8",
       (s, dir) => {
-        graft.functions.Functions.register(s)
+        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -3611,7 +3610,7 @@ private[graft] object QueriesExt {
     // is C-style, to_hex is minimal-width).
     Q("q395_presto_dialect9",
       (s, dir) => {
-        graft.functions.Functions.register(s)
+        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -4118,7 +4117,7 @@ private[graft] object QueriesExt {
     // of these spellings).
     Q("q404_presto_dialect10",
       (s, dir) => {
-        graft.functions.Functions.register(s)
+        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -4267,7 +4266,7 @@ private[graft] object QueriesExt {
     // oracle-gated pins here.
     Q("q407_presto_dialect11",
       (s, dir) => {
-        graft.functions.Functions.register(s)
+        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -4305,7 +4304,7 @@ private[graft] object QueriesExt {
     // restates each component from the URL's construction.
     Q("q409_presto_dialect12",
       (s, dir) => {
-        graft.functions.Functions.register(s)
+        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -4519,7 +4518,7 @@ private[graft] object QueriesExt {
     // thirteenth-tranche rows.
     Q("q413_presto_dialect13",
       (s, dir) => {
-        graft.functions.Functions.register(s)
+        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id % 10 AS g,
@@ -4927,7 +4926,7 @@ private[graft] object QueriesExt {
     // restates each fold with the equivalent classical aggregate.
     Q("q418_presto_reduce_agg",
       (s, dir) => {
-        graft.functions.Functions.register(s)
+        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT g, fold_sum, fold_max, fold_view_sum,

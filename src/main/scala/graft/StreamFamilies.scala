@@ -66,8 +66,8 @@ private[graft] object StreamFamilies {
 
   // ------------------------------------------------------------------
   // sequence-twin family: the streaming sequence specs of QueriesExt's
-  // SeqTwins — q350's 2-slot threshold→deadman processor and the
-  // N-slot transformWithState chains — on the RocksDB state store.
+  // SeqTwins, each on the N-slot transformWithState chain, on the
+  // RocksDB state store.
   // ------------------------------------------------------------------
 
   def sequences(s: SparkSession, dir: String,
@@ -76,11 +76,8 @@ private[graft] object StreamFamilies {
     import graft.streaming.StreamingAlertsTws
     StreamingAlertsTws.withRocksDb(s) {
       slice(s, dir, seqFamily, OutputMode.Append(), specs.map {
-        case (n, sp) =>
-          val events = QueriesAlert.tableStream(s, dir, "events")
-          n -> (if (n == "q350") StreamingAlertsTws
-            .sequenceStreamTws(events, sp).toDF()
-          else StreamingAlertsTws.sequenceStreamTwsN(events, sp).toDF())
+        case (n, sp) => n -> StreamingAlertsTws.sequenceStreamTwsN(
+          QueriesAlert.tableStream(s, dir, "events"), sp).toDF()
       }, name)
     }
   }

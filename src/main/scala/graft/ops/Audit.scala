@@ -117,41 +117,6 @@ object Audit {
       .orderBy("rank")
   }
 
-  /** Execute the plan and return the TOTAL rows that crossed a
-    * shuffle — the one number that predicts a query's cost at 100 TB
-    * better than wall-clock on a laptop ("measure, don't guess" as an
-    * API instead of reading `.explain` by eye). Runs the query once
-    * (rows drained, nothing collected), then folds the executed
-    * plan's `ShuffleExchangeLike` metrics, unwrapping AQE's adaptive
-    * root and materialized query stages.
-    *
-    * A map-only pipeline reports 0; a groupBy reports its combiner
-    * output (map-side partial aggregation visible as a number);
-    * a broadcast join reports 0 for the broadcast side. PlanSpec pins
-    * all three.
-    */
-  def shuffledRows(df: DataFrame): Long = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val qe = df.queryExecution
-    qe.executedPlan.execute().foreach(_ => ())
-    def walk(p: SparkPlan): Long = {
-      val self = p match {
-        case s: ShuffleExchangeLike =>
-          s.metrics.get("shuffleRecordsWritten").map(_.value).getOrElse(0L)
-        case _ => 0L
-      }
-      val inner = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case _ => 0L
-      }
-      self + inner + p.children.map(walk).sum
-    }
-    walk(qe.executedPlan)
-  }
-
   /** Embedding-quality audit — the vector-table gate an ANN pipeline
     * runs before indexing: per vector, exact micro-unit squared norm
     * (the same left-fold dot every ANN surface uses), zero-element

@@ -83,15 +83,4 @@ object Bloom {
     }
     key.isNotNull && hit(0L) && hit(Salt)
   }
-
-  /** The full pattern: bloom the dim's key set, pre-filter the fact
-    * BEFORE its shuffle, then run the exact join (false positives die
-    * here). Result is row-for-row the plain join.
-    */
-  def prefilteredJoin(fact: DataFrame, dim: DataFrame, factKey: String,
-      dimKey: String, mBits: Int = 1 << 17): DataFrame = {
-    val words = build(dim.select(col(dimKey)), dimKey, mBits)
-    fact.where(mightContain(words, col(factKey)))
-      .join(dim, col(factKey) === dim(dimKey))
-  }
 }

@@ -57,28 +57,6 @@ object Entity {
       .orderBy("name_a", "name_b")
   }
 
-  /** Two-sided variant: resolve each `left` name to its best `right`
-    * name (lowest edit distance, ties to the lexicographically first
-    * candidate) within the shared block, or no row if nothing is
-    * within `maxDist`. The dirty-feed → canonical-dictionary mapping.
-    */
-  def fuzzyResolve(left: DataFrame, right: DataFrame, nameCol: String,
-      maxDist: Int = 2, block: Column => Column = lastTokenBlock): DataFrame = {
-    val l = left.select(col(nameCol).as("name")).where(col("name").isNotNull)
-      .distinct().withColumn("block", block(col("name")))
-    val r = right.select(col(nameCol).as("canon")).where(col("canon").isNotNull)
-      .distinct().withColumn("block", block(col("canon")))
-    val cand = l.join(r, Seq("block"))
-      .where(abs(length(col("name")) - length(col("canon"))) <= maxDist)
-      .withColumn("dist", levenshtein(col("name"), col("canon"), maxDist))
-      .where(col("dist") >= 0)
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("name").orderBy(col("dist"), col("canon"))
-    cand.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
-      .select("name", "canon", "dist")
-      .orderBy("name")
-  }
-
   /** Sorted-neighborhood dedup (Hernández–Stolfo): sort the corpus by
     * a normalized key, compare each record only with its `window`
     * successors in that order, verify candidates by edit distance on

@@ -245,26 +245,6 @@ object Multimodal {
     }
   }
 
-  /** Micro-batched decode: groups the partition iterator into
-    * fixed-size batches before decoding — the shape accelerator-backed
-    * decoders need (a GPU/ONNX session consumes a batch tensor, not
-    * one row). `grouped` is lazy over the iterator, so memory is
-    * bounded by batchSize regardless of partition size; a real decoder
-    * replaces the inner `map` with one batched inference call.
-    */
-  def extractMetadataBatched(blobs: Dataset[Blob], batchSize: Int = 32): Dataset[MediaMeta] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      // per-partition decoder/session init would go here
-      it.grouped(batchSize).flatMap { batch =>
-        // a batched-tensor decoder replaces this per-blob call with
-        // one inference over `batch`; header parsing needs no batching
-        batch.map(decode)
-      }
-    }
-  }
-
   /** End-to-end: documents → blobs → metadata, ordered for the oracle. */
   def pipeline(docs: DataFrame): DataFrame =
     extractMetadata(toBlobs(docs)).toDF().orderBy("doc_id")

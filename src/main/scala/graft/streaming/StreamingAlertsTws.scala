@@ -10,13 +10,6 @@ import graft.functions.Paths
 import graft.model.AlertDoc
 import graft.model.AlertDoc.Doc
 
-/** One buffered event for the streaming sequence: slot membership
-  * flag (slot-0/threshold vs slot-1/deadman family), event-time
-  * millis, and the id tiebreaker. Top-level — encoder codegen cannot
-  * reach nested case classes.
-  */
-case class SeqBufEvent(isA: Boolean, tsUs: Long, id: Long)
-
 /** The armed flush timer (wrapped so absent state is null, not 0). */
 case class SeqTimerState(timerMs: Long)
 
@@ -52,163 +45,6 @@ case class StreamNSeqAlert(alert_name: String, value: String,
     t0_us: Long, t_last_us: Long, dm_count: Long, criteria: String,
     summary: String)
 
-/** Compacted summary of FINALIZED events (event time below the
-  * watermark — Spark's late-row filter guarantees no future arrival
-  * can be ordered before them, so their contribution is fixed):
-  * total finalized slot-0 count, finalized in-window slot-1 count,
-  * and the first `threshold` slot-0 events in (ts, id) order (enough
-  * to pin t0 — every unfinalized event sorts after them). Keeps per-
-  * key state bounded by the watermark delay instead of the stream's
-  * lifetime.
-  */
-case class SeqCompact(aCntFinal: Long, bCntFinal: Long,
-    firstA: Seq[SeqBufEvent])
-
-/** Completed streaming sequence alert: slot-0 trip time, slot-1
-  * deadman count, the RENDERED slot-1 criteria (the cross-slot
-  * template reference resolved against slot-0's data — the
-  * reference's `assert "bitwarden" in criteria` shape,
-  * tests/test_alerts.py:406-408) and the final summary.
-  */
-case class StreamSeqAlert(alert_name: String, value: String,
-    t0_us: Long, b_count: Long, criteria: String, summary: String)
-
-/** The threshold→deadman sequence (tests/test_alerts.py:345-435's
-  * scenario) as ONE `transformWithState` StatefulProcessor — the
-  * streaming twin of [[graft.engine.SequenceEngine]]'s driver loop.
-  *
-  * Batch engine: slot N's criteria is Mustache-rendered against slots
-  * 0..N-1 and synthesizes a NEW lake query per sequence. Streaming
-  * twin: the cross-slot reference is the grouping key (slot-1's
-  * rendered criteria pins slot-0's aggregation value), so one keyed
-  * state machine per value evaluates both slots incrementally —
-  * slot-0 trips when the T-th qualifying event (event-time order,
-  * id tiebreak) arrives; the deadman window (t0, t0+lifespan] then
-  * counts slot-1-family events, and the sequence completes when the
-  * WATERMARK passes the deadline with ≤ `deadmanMax` of them. The
-  * rendered criteria/summary are produced by the same
-  * [[graft.functions.Template]] walker the batch engine uses, on the
-  * executor, against the same slots-doc shape.
-  *
-  * Scale shape: each timer tick compacts events finalized by the
-  * watermark into a [[SeqCompact]] summary (counts + the first
-  * `threshold` slot-0 events), so RocksDB state per key is bounded by
-  * the watermark-delay horizon — not the stream's lifetime; timers
-  * replace rather than accumulate, and completion clears state so the
-  * key re-arms.
-  */
-class SequenceTwsProcessor(name: String, thresholdT: Int, deadmanMax: Long,
-    lifespanMs: Long, criteriaTpl: String, summaryTpl: String)
-    extends StatefulProcessor[String, (String, Boolean, Long, Long), StreamSeqAlert] {
-
-  @transient private var buf: org.apache.spark.sql.streaming.ListState[SeqBufEvent] = _
-  @transient private var armed: org.apache.spark.sql.streaming.ValueState[SeqTimerState] = _
-  @transient private var compact: org.apache.spark.sql.streaming.ValueState[SeqCompact] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    buf = getHandle.getListState[SeqBufEvent](
-      "buf", Encoders.product[SeqBufEvent], TTLConfig.NONE)
-    armed = getHandle.getValueState[SeqTimerState](
-      "armed", Encoders.product[SeqTimerState], TTLConfig.NONE)
-    compact = getHandle.getValueState[SeqCompact](
-      "compact", Encoders.product[SeqCompact], TTLConfig.NONE)
-  }
-
-  private def rearm(at: Long): Unit = {
-    val prev = Option(armed.get()).map(_.timerMs)
-    if (!prev.contains(at)) {
-      prev.foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(at)
-      armed.update(SeqTimerState(at))
-    }
-  }
-
-  // event times travel as epoch-MICROS (the lake's native precision —
-  // Timestamp.getTime would truncate to ms and silently diverge from
-  // the µs-exact oracle); only the timer clock is ms.
-  override def handleInputRows(key: String,
-      rows: Iterator[(String, Boolean, Long, Long)],
-      timerValues: TimerValues): Iterator[StreamSeqAlert] = {
-    rows.foreach(r => buf.appendValue(SeqBufEvent(r._2, r._3, r._4)))
-    // flush check on the next watermark tick; handleExpiredTimer
-    // re-arms at the real deadline if the window is still open
-    rearm(timerValues.getCurrentWatermarkInMs() + 1)
-    Iterator.empty
-  }
-
-  override def handleExpiredTimer(key: String, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[StreamSeqAlert] = {
-    // the timer kept in `armed` is the one firing, and Spark deletes it
-    // after this call: a rearm must not delete it again
-    armed.clear()
-    val wmUs = timerValues.getCurrentWatermarkInMs() * 1000L
-    val c0 = Option(compact.get()).getOrElse(SeqCompact(0L, 0L, Nil))
-
-    // Compact: fold events finalized by the watermark (ts < wm — no
-    // future arrival can be ordered before them) into the summary.
-    //  * slot-0: bump the finalized count, keep only the first
-    //    `thresholdT` in (ts, id) order — enough to pin t0, since
-    //    every unfinalized event has ts ≥ wm > any finalized ts.
-    //  * slot-1: if t0 is already pinned by finalized slot-0 events,
-    //    count window members exactly; otherwise drop them — any
-    //    future t0 is ≥ wm > their ts, so the (t0, t0+lifespan]
-    //    window can never admit them.
-    val evs = buf.get().toVector
-    val (fin, act) = evs.partition(_.tsUs < wmUs)
-    val finA = fin.filter(_.isA)
-    val aCntFinal = c0.aCntFinal + finA.size
-    val firstA = (c0.firstA ++ finA).sortBy(e => (e.tsUs, e.id))
-      .take(thresholdT)
-    val t0Fixed = if (aCntFinal >= thresholdT)
-      Some(firstA(thresholdT - 1).tsUs) else None
-    val bCntFinal = c0.bCntFinal + (t0Fixed match {
-      case Some(t0) => fin.count(e =>
-        !e.isA && e.tsUs > t0 && e.tsUs <= t0 + lifespanMs * 1000L)
-      case None => 0L
-    })
-    def persist(): Unit = {
-      compact.update(SeqCompact(aCntFinal, bCntFinal, firstA))
-      buf.clear()
-      if (act.nonEmpty) buf.appendList(act.toArray)
-    }
-
-    val actA = act.filter(_.isA).sortBy(e => (e.tsUs, e.id))
-    val allA = firstA ++ actA // firstA all < wm ≤ actA: already ordered
-    val aTotal = aCntFinal + actA.size
-    if (allA.size < thresholdT) { persist(); Iterator.empty } // slot 0 not tripped yet
-    else {
-      val t0Us = allA(thresholdT - 1).tsUs
-      val deadlineUs = t0Us + lifespanMs * 1000L
-      if (wmUs < deadlineUs) {
-        // slot-1 window still open — wait it out (ceil to the ms tick
-        // at-or-after the µs deadline)
-        rearm((deadlineUs + 999L) / 1000L)
-        persist()
-        Iterator.empty
-      } else {
-        val b = bCntFinal +
-          act.count(e => !e.isA && e.tsUs > t0Us && e.tsUs <= deadlineUs)
-        buf.clear(); compact.clear() // completion re-arms the key
-        if (b > deadmanMax) Iterator.empty
-        else {
-          // the slots doc the batch engine would hold at this point:
-          // slot 0 triggered with its aggregation value/count — the
-          // cross-slot template refs resolve against it
-          val doc: AlertDoc.Doc = Map(
-            "alert_name" -> name,
-            "slots" -> Seq(
-              Map("metadata" -> Map("value" -> key, "count" -> aTotal),
-                "triggered" -> true),
-              Map("metadata" -> Map("value" -> key, "count" -> b))))
-          Iterator.single(StreamSeqAlert(name, key, t0Us, b,
-            graft.functions.Template.render(criteriaTpl, doc),
-            graft.functions.Template.render(summaryTpl, doc)))
-        }
-      }
-    }
-  }
-}
-
 /** The N-slot sequence state machine on `transformWithState` — the
   * streaming twin of [[graft.engine.SequenceEngine]]'s full N-slot
   * driver loop (alerta.py:274-317 fills slots strictly in order;
@@ -237,9 +73,11 @@ class SequenceTwsProcessor(name: String, thresholdT: Int, deadmanMax: Long,
   * tripping still completes when the global watermark passes its
   * boundary.
   *
-  * Reported slot counts: threshold slots report their threshold (the
-  * count that tripped them); deadman slots report their exact window
-  * count.
+  * Reported slot counts (`{{slots.k.metadata.count}}`): a threshold
+  * slot reports its threshold, the count that tripped it, and a
+  * deadman slot its exact window count — the batch engine's meaning,
+  * which saves a slot's doc when it trips and never updates it (later
+  * events of a tripped slot do not raise its count).
   */
 class NSeqTwsProcessor(name: String, slotSpecs: Seq[NSeqSlot],
     lifespanMs: Long, lastCriteriaTpl: String, summaryTpl: String)
@@ -440,6 +278,10 @@ class NSeqTwsProcessor(name: String, slotSpecs: Seq[NSeqSlot],
   }
 }
 
+/** The one streaming sequence engine: [[sequenceStreamTwsN]] runs
+  * every streamed sequence spec — `AlertaStreamMain`'s and the
+  * sequence-twin queries' — on [[NSeqTwsProcessor]].
+  */
 object StreamingAlertsTws {
 
   /** Runs `body` with the session's state store provider set to
@@ -571,61 +413,6 @@ object StreamingAlertsTws {
     keyed.transformWithState(
       new NSeqTwsProcessor(name, slotSpecs, lifespanMs,
         AlertDoc.str(slots.last, "criteria"), AlertDoc.str(spec, "summary")),
-      TimeMode.EventTime(), OutputMode.Append)
-  }
-
-  /** The threshold→deadman SEQUENCE as a stream (the reference's
-    * tests/test_alerts.py:345-435 scenario: "root login without a
-    * corresponding password manager access"). `spec` is the same
-    * sequence-shell doc the batch [[graft.engine.SequenceEngine]]
-    * consumes — slot 0 a threshold spec (criteria + aggregation_key +
-    * threshold), slot 1 a deadman spec whose `criteria` may carry a
-    * cross-slot template reference; the processor renders it against
-    * slot-0's data and emits it on the completed alert.
-    *
-    * `slot1Family` is the template-free part of slot-1's criteria (the
-    * event family the deadman watches) — needed up front because the
-    * streaming filter runs BEFORE per-key state exists; the rendered
-    * criteria's key-pinning clause is enforced structurally by the
-    * groupByKey. Defaults to [[familyCriteria]]'s automatic
-    * derivation (template-bearing conjuncts stripped); pass a Column
-    * only to override it.
-    */
-  def sequenceStreamTws(events: DataFrame, spec: Doc,
-      slot1Family: org.apache.spark.sql.Column = null,
-      tsCol: String = "ts", idCol: String = "event_id",
-      watermarkDelay: String = "10 minutes"): Dataset[StreamSeqAlert] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val name = AlertDoc.str(spec, "alert_name", "unnamed")
-    val lifespanMs = graft.functions.Dates.interval(
-      AlertDoc.str(spec, "lifespan", "3 days")).toMillis
-    val slots = AlertDoc.docs(spec, "slots")
-    require(slots.size == 2, s"sequenceStreamTws wants 2 slots, got ${slots.size}")
-    val (slot0, slot1) = (slots(0), slots(1))
-    val thresholdT = AlertDoc.str(slot0, "threshold", "1").toInt
-    val deadmanMax = AlertDoc.str(slot1, "threshold", "0").toLong
-    val keyCol = Paths.column(events.schema,
-      AlertDoc.str(slot0, "aggregation_key")).cast(StringType)
-    val slot0Col = StreamingAlerts.criteriaColumn(slot0)
-    val fam1 = Option(slot1Family)
-      .getOrElse(familyColumn(AlertDoc.str(slot1, "criteria")))
-    val keyed = StreamingAlerts.whereAfterWatermark(
-      events
-        .withColumn("__ts", col(tsCol).cast("timestamp"))
-        .withWatermark("__ts", watermarkDelay)
-        .withColumn("__k", keyCol)
-        .withColumn("__isA", coalesce(slot0Col, lit(false))),
-      (col("__isA") || coalesce(fam1, lit(false))) &&
-        col("__k").isNotNull && col("__ts").isNotNull &&
-        col(idCol).isNotNull)
-      .select(col("__k"), col("__isA"), unix_micros(col("__ts")).as("__us"),
-        col(idCol).cast("long").as("__id"))
-      .as[(String, Boolean, Long, Long)]
-      .groupByKey(_._1)
-    keyed.transformWithState(
-      new SequenceTwsProcessor(name, thresholdT, deadmanMax, lifespanMs,
-        AlertDoc.str(slot1, "criteria"), AlertDoc.str(spec, "summary")),
       TimeMode.EventTime(), OutputMode.Append)
   }
 }

@@ -30,15 +30,6 @@ class BloomSpec extends AnyFunSuite with SparkSuite {
     assert(d.where(Bloom.mightContain(words, col("k"))).count() === 1)
   }
 
-  test("prefilteredJoin returns exactly the plain join's rows") {
-    val fact = Tables(spark, sf(), "lineitem").select("l_orderkey", "l_quantity")
-    val dim = Tables(spark, sf(), "orders")
-      .where(col("o_totalprice") > 400000).select("o_orderkey")
-    val got = Bloom.prefilteredJoin(fact, dim, "l_orderkey", "o_orderkey").count()
-    val want = fact.join(dim, col("l_orderkey") === col("o_orderkey")).count()
-    assert(got === want)
-  }
-
   test("the bloom prunes most non-joining fact rows before the join") {
     val fact = Tables(spark, sf(), "lineitem")
     val dim = Tables(spark, sf(), "orders").where(col("o_totalprice") > 450000)

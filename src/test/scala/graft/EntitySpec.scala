@@ -24,24 +24,6 @@ class EntitySpec extends AnyFunSuite with SparkSuite {
     assert(r === Seq(("aaa x", "aab x"))) // "zzz x" is 3 edits away
   }
 
-  test("fuzzyResolve maps each dirty name to its nearest canonical") {
-    val dirty = Seq("red blot", "blue gear", "warm gizmo").toDF("name")
-    val canon = Seq("red bolt", "blue gear", "hot gear").toDF("name")
-    val r = Entity.fuzzyResolve(dirty, canon, "name").collect()
-      .map(x => x.getString(0) -> ((x.getString(1), x.getInt(2)))).toMap
-    // "red blot" blocks on "blot" — no canonical shares it; dropped
-    assert(!r.contains("red blot"))
-    assert(r("blue gear") === (("blue gear", 0)))
-    assert(!r.contains("warm gizmo")) // gizmo block has no canonical
-  }
-
-  test("fuzzyResolve tie-breaks equal distance to the first canonical") {
-    val dirty = Seq("aac x").toDF("name")
-    val canon = Seq("aab x", "aad x").toDF("name")
-    val r = Entity.fuzzyResolve(dirty, canon, "name").collect()
-    assert(r.head.getString(1) === "aab x")
-  }
-
   test("sortedNeighborhood finds adjacent near-dups, respects the window") {
     val docs = Seq(
       (1L, "alpha document one shared prefix body"),

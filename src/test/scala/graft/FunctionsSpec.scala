@@ -491,4 +491,18 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
     assert(out.exists(_("loaded") == true))
     assert(out.exists(e => AlertDoc.seq(e, "plugins") === Seq("loader_tag")))
   }
+
+  test("a dialect query's body registers the dialect once per session") {
+    val s = spark.newSession()
+    val replaced = "replaced a previously registered function"
+    val logger = s.sessionState.functionRegistry.getClass.getName
+    val body = SparkEntry.queries("q50_presto_dialect")
+    val first = body(s, sf()).collect().toSeq
+    val (second, messages) = logged(logger)(body(s, sf()).collect().toSeq)
+    assert(second === first)
+    assert(!messages.exists(_.contains(replaced)), messages.take(3))
+    // the probe sees a re-registration when one happens
+    val (_, again) = logged(logger)(Functions.register(s))
+    assert(again.exists(_.contains(replaced)))
+  }
 }

@@ -685,15 +685,6 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("multimodal batched decode equals the row-at-a-time decode") {
-    val docs = spark.read.parquet(sf() + "/documents.parquet")
-    val blobs = Multimodal.toBlobs(docs)
-    val rowWise = Multimodal.extractMetadata(blobs).collect().sortBy(_.doc_id)
-    val batched = Multimodal.extractMetadataBatched(blobs, batchSize = 7)
-      .collect().sortBy(_.doc_id)
-    assert(batched.toSeq === rowWise.toSeq)
-  }
-
   test("qualityScore: integer linear head, exact score and keep decision") {
     val d = Seq((1L, "aa bb aa the", "en", "s")).toDF("doc_id", "text", "lang", "source")
     val r = TextAnalysis.qualityScore(d).collect()(0)

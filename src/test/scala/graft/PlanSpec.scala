@@ -93,23 +93,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     assert(filtered.count() > 0)
   }
 
-  test("shuffledRows: map-only 0, groupBy = combiner rows, broadcast join 0") {
-    import graft.ops.Audit
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val d = (1L to 10000L).map(i => (i, i % 7, s"v$i")).toDF("id", "k", "v")
-      .repartition(4).localCheckpoint()
-    // map-only pipeline never shuffles
-    assert(Audit.shuffledRows(d.select(col("id") * 2, upper(col("v")))) === 0L)
-    // groupBy(k): partial aggregation means the shuffle carries
-    // combiner rows — at most |keys| × tasks, never the input
-    val g = Audit.shuffledRows(d.groupBy("k").count())
-    assert(g > 0L && g <= 7L * 4, s"expected <=28 combiner rows, got $g")
-    // broadcast join: the big side streams, nothing shuffles
-    val dim = Seq((0L, "x"), (1L, "y")).toDF("k", "name")
-    assert(Audit.shuffledRows(d.join(broadcast(dim), "k")) === 0L)
-  }
-
   test("q133: both nation dims broadcast; lineitem never builds a hash side") {
     val plan = SparkEntry.queries("q133_tpch_q7")(spark, sf())
       .queryExecution.sparkPlan.toString

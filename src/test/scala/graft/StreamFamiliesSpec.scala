@@ -47,18 +47,22 @@ class StreamFamiliesSpec extends AnyFunSuite with SparkSuite {
 
   test("crawl family members share one drain per session, never across " +
       "sessions") {
-    val starts = new Starts
-    val a = session(starts)
-    val a104 = rows(a, "q104_stream_stream_join")
-    val a394 = rows(a, "q394_stream_robots_gate")
-    assert(starts.n.get === 1)
-    val b = session(starts)
-    val b104 = rows(b, "q104_stream_stream_join")
-    val b394 = rows(b, "q394_stream_robots_gate")
-    assert(starts.n.get === 2)
-    assert(a104.nonEmpty && a394.nonEmpty)
-    assert(b104 === a104)
-    assert(b394 === a394)
+    for ((q1, q2) <- Seq(
+        ("q104_stream_stream_join", "q394_stream_robots_gate"),
+        ("q350_stream_sequence", "q352_stream_sequence3"))) {
+      val starts = new Starts
+      val a = session(starts)
+      val a1 = rows(a, q1)
+      val a2 = rows(a, q2)
+      assert(starts.n.get === 1, q1)
+      val b = session(starts)
+      val b1 = rows(b, q1)
+      val b2 = rows(b, q2)
+      assert(starts.n.get === 2, q1)
+      assert(a1.nonEmpty && a2.nonEmpty, q1)
+      assert(b1 === a1, q1)
+      assert(b2 === a2, q2)
+    }
   }
 
   test("with the family sinks dropped before each call, every call of a " +

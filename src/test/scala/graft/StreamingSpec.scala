@@ -1221,33 +1221,26 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
         Map("alert_type" -> "deadman",
           "criteria" -> "event_type='error' AND user_id='{{slots.0.metadata.value}}'",
           "threshold" -> 0)))
-    val processors = Seq[(String, org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame)](
-      "rearm2" -> (df => graft.streaming.StreamingAlertsTws.sequenceStreamTws(df, spec,
-        slot1Family = org.apache.spark.sql.functions.col("event_type") === "error",
-        watermarkDelay = "1 minute").toDF()),
-      "rearmn" -> (df => graft.streaming.StreamingAlertsTws.sequenceStreamTwsN(df, spec,
-        watermarkDelay = "1 minute").toDF()))
     val (values, messages) = logged(classOf[TimerStateImpl].getName) {
       withRocksDb(spark) {
-        processors.map { case (sink, build) =>
-          val mem = MemoryStream[SeqEv]
-          val q = build(mem.toDF()).writeStream.format("memory").queryName(sink)
-            .outputMode(OutputMode.Append).start()
-          try {
-            // user 1 trips slot 0 and arms a timer at the next watermark
-            // tick; the later batches carry only other users' events, so
-            // that timer fires with the deadman window still open and the
-            // key re-arms, until the watermark passes the deadline
-            Seq(SeqEv(ts(0), 1, 1, "purchase"), SeqEv(ts(10), 9, 2, "view"),
-                SeqEv(tsH(11, 0), 9, 3, "view"), SeqEv(tsH(11, 1), 9, 4, "view"))
-              .foreach { e => mem.addData(e); q.processAllAvailable() }
-            spark.table(sink).select("value").as[String].collect().toSeq
-          } finally q.stop()
-        }
+        val mem = MemoryStream[SeqEv]
+        val q = graft.streaming.StreamingAlertsTws.sequenceStreamTwsN(
+            mem.toDF(), spec, watermarkDelay = "1 minute")
+          .writeStream.format("memory").queryName("rearmn")
+          .outputMode(OutputMode.Append).start()
+        try {
+          // user 1 trips slot 0 and arms a timer at the next watermark
+          // tick; the later batches carry only other users' events, so
+          // that timer fires with the deadman window still open and the
+          // key re-arms, until the watermark passes the deadline
+          Seq(SeqEv(ts(0), 1, 1, "purchase"), SeqEv(ts(10), 9, 2, "view"),
+              SeqEv(tsH(11, 0), 9, 3, "view"), SeqEv(tsH(11, 1), 9, 4, "view"))
+            .foreach { e => mem.addData(e); q.processAllAvailable() }
+          spark.table("rearmn").select("value").as[String].collect().toSeq
+        } finally q.stop()
       }
     }
-    assert(values === Seq(Seq("1"), Seq("1")))
+    assert(values === Seq("1"))
     assert(!messages.exists(_.startsWith("Failed to delete timer")), messages)
   }
 
@@ -1256,57 +1249,56 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // (tests/test_alerts.py:345-435): slot 0 trips on the T-th
     // qualifying event, the deadman window then watches for absence,
     // and the rendered slot-1 criteria must contain the SLOT-0 value
-    // (its `assert "bitwarden" in criteria` shape).
-    implicit val sc = spark.sqlContext
-    withRocksDb(spark) {
-      val mem = MemoryStream[SeqEv]
-      val spec: graft.model.AlertDoc.Doc = Map(
-        "alert_name" -> "root_no_pw_manager",
-        "alert_type" -> "sequence",
-        "lifespan" -> "30 minutes",
-        "summary" -> ("{{slots.0.metadata.count}} root logins by " +
-          "{{slots.0.metadata.value}} without use of a password manager"),
-        "slots" -> Seq(
-          Map("alert_type" -> "threshold",
-            "criteria" -> "event_type='root_login'",
-            "aggregation_key" -> "user_id",
-            "threshold" -> 2),
-          Map("alert_type" -> "deadman",
-            "criteria" -> ("event_type='bitwarden' AND " +
-              "user_id='{{slots.0.metadata.value}}'"),
-            "threshold" -> 0)))
-      val out = graft.streaming.StreamingAlertsTws.sequenceStreamTws(
-        mem.toDF(), spec,
-        slot1Family = org.apache.spark.sql.functions.col("event_type") === "bitwarden",
-        watermarkDelay = "1 minute")
-      val q = out.writeStream.format("memory").queryName("seqtws")
-        .outputMode(OutputMode.Append).start()
-      try {
-        // user 1: two root logins, NO bitwarden access → completes.
-        // user 2: two root logins but a bitwarden access inside the
-        // window → deadman not satisfied, no alert.
-        mem.addData(
-          SeqEv(ts(1), 1, 11, "root_login"), SeqEv(ts(2), 1, 12, "root_login"),
-          SeqEv(ts(1), 2, 21, "root_login"), SeqEv(ts(2), 2, 22, "root_login"),
-          SeqEv(ts(10), 2, 23, "bitwarden"))
-        q.processAllAvailable()
-        // advance the watermark past both deadlines (t0 + 30 min)
-        mem.addData(SeqEv(tsH(12, 0), 9, 99, "root_login"))
-        q.processAllAvailable()
-        val rows = spark.table("seqtws").collect()
-        assert(rows.map(_.getAs[String]("value")).toSeq === Seq("1"))
-        val r = rows.head
-        // the bitwarden assertion shape: rendered criteria carries
-        // the slot-0 aggregation value
-        assert(r.getAs[String]("criteria") ===
-          "event_type='bitwarden' AND user_id='1'")
-        assert(r.getAs[String]("summary") ===
-          "2 root logins by 1 without use of a password manager")
-        assert(r.getAs[Long]("b_count") === 0L)
-        // t0 = the 2nd (threshold-th) root login's event time
-        assert(r.getAs[Long]("t0_us") === ts(2).getTime * 1000L)
-      } finally q.stop()
-    }
+    // (its `assert "bitwarden" in criteria` shape). The deadman family
+    // (event_type='bitwarden') is derived from the templated criteria.
+    val c = new Chain(Map(
+      "alert_name" -> "root_no_pw_manager",
+      "alert_type" -> "sequence",
+      "lifespan" -> "30 minutes",
+      "summary" -> ("{{slots.0.metadata.count}} root logins by " +
+        "{{slots.0.metadata.value}} without use of a password manager " +
+        "({{slots.1.metadata.count}} uses)"),
+      "slots" -> Seq(
+        slot("threshold", "event_type='root_login'", "threshold" -> 2),
+        slot("deadman", "event_type='bitwarden' AND " +
+          "user_id='{{slots.0.metadata.value}}'", "threshold" -> 1))),
+      "seqtws")
+    try {
+      // user 1: two root logins, NO bitwarden access → completes.
+      // user 2: two root logins but two bitwarden accesses inside the
+      // window → deadman violated, no alert.
+      // user 3: four root logins, more than the threshold, all before
+      // the deadline, and one bitwarden access inside the window (two
+      // more outside it). The summary renders slot 0's count as the
+      // threshold that tripped it — the batch engine saves the slot
+      // doc at the trip and never updates it — and slot 1's as the
+      // deadman window count.
+      c.add((ts(1), 1, "root_login"), (ts(2), 1, "root_login"),
+        (ts(1), 2, "root_login"), (ts(2), 2, "root_login"),
+        (ts(10), 2, "bitwarden"), (ts(11), 2, "bitwarden"),
+        (ts(0), 3, "bitwarden"), (ts(1), 3, "root_login"),
+        (ts(2), 3, "root_login"), (ts(3), 3, "root_login"),
+        (ts(20), 3, "root_login"), (ts(25), 3, "bitwarden"),
+        (ts(40), 3, "bitwarden"))
+      // advance the watermark past every deadline (t0 + 30 min)
+      c.add((tsH(12, 0), 9, "root_login"))
+      c.add((tsH(12, 1), 9, "view"))
+      assert(c.values === Seq("1", "3"))
+      val r = c.rows.map(r => r.getAs[String]("value") -> r).toMap
+      // the bitwarden assertion shape: rendered criteria carries
+      // the slot-0 aggregation value
+      assert(r("1").getAs[String]("criteria") ===
+        "event_type='bitwarden' AND user_id='1'")
+      assert(r("1").getAs[String]("summary") ===
+        "2 root logins by 1 without use of a password manager (0 uses)")
+      assert(r("1").getAs[Long]("dm_count") === 0L)
+      // t0 = the 2nd (threshold-th) root login's event time
+      assert(r("1").getAs[Long]("t0_us") === ts(2).getTime * 1000L)
+      assert(r("3").getAs[String]("summary") ===
+        "2 root logins by 3 without use of a password manager (1 uses)")
+      assert(r("3").getAs[Long]("dm_count") === 1L)
+      assert(r("3").getAs[Long]("t0_us") === ts(2).getTime * 1000L)
+    } finally c.query.stop()
   }
 
   test("selfDedupStream state is one row per occupied bucket and " +
