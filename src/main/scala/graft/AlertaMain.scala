@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.Runner
 import graft.functions.Dates
 import graft.model.AlertSpecs
@@ -33,16 +31,11 @@ object AlertaMain {
         sys.error("usage: AlertaMain <eventsParquet> <specsGlob> <storeDir> [nowIso] | -c config.yml")
     }
     val now = nowOpt.map(Dates.toUTC(_)).getOrElse(Dates.utcnow())
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Tables.session()
     spark.sparkContext.setLogLevel("WARN")
     // dialect functions the textual rewrite doesn't cover (element_at,
     // cardinality, strpos, …) resolve natively in criteria text
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
 
     val lakeNorm = Tables.normalizeTs(spark.read.parquet(eventsPath))
     val specs = AlertSpecs.loadAll(specsMask)

@@ -2,7 +2,7 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.{AlertDoc, AlertSpecs}
@@ -44,15 +44,10 @@ object AlertaStreamMain {
       case Some(other) => sys.error(
         s"unknown mode '$other' — expected availableNow or continuous")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Tables.session()
     spark.sparkContext.setLogLevel("WARN")
     // dialect functions beyond the textual rewrite resolve in criteria
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
 
     val schema = spark.read.parquet(eventsDir).schema
     val events = Tables.normalizeTs(

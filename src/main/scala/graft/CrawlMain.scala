@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Curation
@@ -49,12 +49,7 @@ object CrawlMain {
     val blockPath = args.lift(3).filter(_.nonEmpty)
     val agent = args.lift(4).getOrElse("*")
     val minTrapUrls = args.lift(5).map(_.toLong).filter(_ > 0L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Tables.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val urls = spark.read.parquet(urlsPath)

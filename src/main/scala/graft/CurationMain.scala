@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Curation, DocDedup, TextAnalysis}
@@ -29,12 +28,7 @@ object CurationMain {
     val Array(docsPath, outDir) = args.take(2)
     val ratePpk = if (args.length > 2) args(2).toInt else 500
     val budget = if (args.length > 3) args(3).toLong else 512L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Tables.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = spark.read.parquet(docsPath)

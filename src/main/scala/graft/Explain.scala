@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Formatted-plan dump for headline queries — the `.explain` audit
@@ -77,12 +76,7 @@ object Explain {
       "q414_warc_image_chain", "q415_wav_vad", "q416_wav_audio_match",
       "q417_warc_html_text_chain", "q418_presto_reduce_agg",
       "q419_html_text_scale", "q420_wav_g711")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Tables.session()
     spark.sparkContext.setLogLevel("ERROR")
     // GRAFT_EXPLAIN_EXEC=1: execute the query first so the dump shows
     // the FINAL adaptive plan (isFinalPlan=true — AQE join rewrites,

@@ -6584,34 +6584,34 @@ private[graft] object QueriesPipeline {
     Q("q239_ktruss",
       (s, dir) => Graph.kTruss(graft.ops.CoPurchase.undirectedSmall(s, dir),
         k = 4L, rounds = 3),
-      Some("""WITH pk AS (SELECT p_partkey FROM part WHERE p_size <= 5),
-             |li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+      Some("""WITH pk AS MATERIALIZED (SELECT p_partkey FROM part WHERE p_size <= 5),
+             |li AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
              |  FROM lineitem JOIN pk ON pk.p_partkey = l_partkey),
-             |e0 AS (SELECT DISTINCT a.p AS u, b.p AS v
+             |e0 AS MATERIALIZED (SELECT DISTINCT a.p AS u, b.p AS v
              |  FROM li a JOIN li b ON a.o = b.o AND a.p < b.p),
-             |adj0 AS (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
-             |sup0 AS (SELECT e.u, e.v, COUNT(*) AS sup FROM e0 e
+             |adj0 AS MATERIALIZED (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
+             |sup0 AS MATERIALIZED (SELECT e.u, e.v, COUNT(*) AS sup FROM e0 e
              |  JOIN adj0 a1 ON a1.u = e.u
              |  JOIN adj0 a2 ON a2.u = e.v AND a2.v = a1.v
              |  GROUP BY e.u, e.v),
-             |e1 AS (SELECT e.u, e.v FROM e0 e
+             |e1 AS MATERIALIZED (SELECT e.u, e.v FROM e0 e
              |  JOIN sup0 s ON s.u = e.u AND s.v = e.v WHERE s.sup >= 2),
-             |adj1 AS (SELECT u, v FROM e1 UNION ALL SELECT v, u FROM e1),
-             |sup1 AS (SELECT e.u, e.v, COUNT(*) AS sup FROM e1 e
+             |adj1 AS MATERIALIZED (SELECT u, v FROM e1 UNION ALL SELECT v, u FROM e1),
+             |sup1 AS MATERIALIZED (SELECT e.u, e.v, COUNT(*) AS sup FROM e1 e
              |  JOIN adj1 a1 ON a1.u = e.u
              |  JOIN adj1 a2 ON a2.u = e.v AND a2.v = a1.v
              |  GROUP BY e.u, e.v),
-             |e2 AS (SELECT e.u, e.v FROM e1 e
+             |e2 AS MATERIALIZED (SELECT e.u, e.v FROM e1 e
              |  JOIN sup1 s ON s.u = e.u AND s.v = e.v WHERE s.sup >= 2),
-             |adj2 AS (SELECT u, v FROM e2 UNION ALL SELECT v, u FROM e2),
-             |sup2 AS (SELECT e.u, e.v, COUNT(*) AS sup FROM e2 e
+             |adj2 AS MATERIALIZED (SELECT u, v FROM e2 UNION ALL SELECT v, u FROM e2),
+             |sup2 AS MATERIALIZED (SELECT e.u, e.v, COUNT(*) AS sup FROM e2 e
              |  JOIN adj2 a1 ON a1.u = e.u
              |  JOIN adj2 a2 ON a2.u = e.v AND a2.v = a1.v
              |  GROUP BY e.u, e.v),
-             |e3 AS (SELECT e.u, e.v FROM e2 e
+             |e3 AS MATERIALIZED (SELECT e.u, e.v FROM e2 e
              |  JOIN sup2 s ON s.u = e.u AND s.v = e.v WHERE s.sup >= 2),
-             |adj3 AS (SELECT u, v FROM e3 UNION ALL SELECT v, u FROM e3),
-             |supF AS (SELECT e.u, e.v, CAST(COUNT(*) AS BIGINT) AS sup
+             |adj3 AS MATERIALIZED (SELECT u, v FROM e3 UNION ALL SELECT v, u FROM e3),
+             |supF AS MATERIALIZED (SELECT e.u, e.v, CAST(COUNT(*) AS BIGINT) AS sup
              |  FROM e3 e
              |  JOIN adj3 a1 ON a1.u = e.u
              |  JOIN adj3 a2 ON a2.u = e.v AND a2.v = a1.v

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc SQL entry point — the `presto-cli`-shaped surface of the
   * library: every testdata table registered as a view, the Presto
   * function registry loaded, and the criteria-dialect rewrites
@@ -21,14 +19,9 @@ object SqlMain {
         val src = scala.io.Source.fromFile(q.drop(1))
         try src.mkString finally src.close()
       } else q
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Tables.session()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     Tables.names.foreach { t =>
       Tables(spark, sfDir, t).createOrReplaceTempView(t)
     }

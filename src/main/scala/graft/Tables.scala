@@ -83,6 +83,24 @@ object Tables {
       case None => df
     }
 
+  /** The session of every graft entry point: `master` (by default
+    * `local[N]`, N = `SPARK_GRAFT_CPUS` or 4), N shuffle partitions, no
+    * UI, and the [[configure]] settings. A `local-cluster` master runs
+    * executors in separate JVMs, which need the app classes from the
+    * driver's classpath.
+    */
+  private[graft] def session(master: Option[String] = None): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val m = master.getOrElse(s"local[$cpus]")
+    val b = configure(SparkSession.builder().master(m)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false"))
+    (if (m.startsWith("local-cluster"))
+      b.config("spark.executor.extraClassPath",
+        sys.props.getOrElse("java.class.path", ""))
+     else b).getOrCreate()
+  }
+
   /** Session settings every graft entry point needs. The extensions
     * class injects the native vector/fingerprint expressions
     * (graft.functions.GraftExtensions) into the function registry at

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,11 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER=local-cluster[2,2,1024] runs the gate with
     // executors in SEPARATE JVMs — the only local mode that catches
     // Task-not-serializable and executor-classpath bugs that
-    // local[*]'s shared JVM masks (the r5 json_size class). Executors
-    // then need the app classes, which live on the driver's classpath.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val b = Tables.configure(SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-    val spark = (if (master.startsWith("local-cluster"))
-      b.config("spark.executor.extraClassPath",
-        sys.props.getOrElse("java.class.path", ""))
-     else b)
-      .getOrCreate()
+    // local[*]'s shared JVM masks (the r5 json_size class).
+    val spark = Tables.session(sys.env.get("SPARK_GRAFT_MASTER"))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -11,90 +11,107 @@ import org.apache.spark.sql.functions._
   * for the rank join and by `dst` for the inflow aggregate, both
   * map-side combinable, and each round materializes
   * (localCheckpoint) so lineage stays flat.
+  *
+  * Every operator starts from one of two edge sets ([[directed]],
+  * [[undirected]]) and runs its rounds on one skeleton: [[iterate]]
+  * for fixed rounds, [[peel]] for the bounded peels of [[kCore]] and
+  * [[kTruss]].
   */
 object Graph {
 
-  /** Fixed-iteration PageRank in pure integer fixed-point: ranks are
-    * parts-per-`scale` of the total mass, the damping multiply and
-    * the out-degree split are floor divisions, so every engine (and
-    * every retry) computes bit-identical ranks — the property that
-    * makes an iterative float algorithm oracle-checkable at all.
-    *
-    * Variant contract (declared, deterministic): dangling mass is NOT
-    * redistributed — a sink node's rank leaks, as in the original
-    * sum formulation. Fixed `iterations`, not convergence-tested:
-    * ranking stabilizes in a few rounds and a fixed plan depth is
-    * what a relational pipeline wants.
-    *
-    * Shuffle shape: the edge set shuffles ONCE (pre-partitioned by
-    * dst, the per-round aggregate key); rank and degree tables are
-    * node-sized and broadcast, so each round is broadcast-join +
-    * exchange-free aggregate. That explicit broadcast is the
-    * nodes ≪ edges regime (every co-occurrence/citation graph);
-    * for a graph whose node table outgrows broadcast, drop the hint
-    * and pre-partition edges by src instead — rounds then pay one
-    * node-keyed shuffle each, never an edge shuffle.
+  /** The directed edge set: `srcCol`/`dstCol` renamed to `src`/`dst`,
+    * then the `extra` columns (each carrying its own alias); rows with
+    * a null in any of them are dropped, and so are self-loops unless
+    * `loops`. Lazy — callers add their own distinct, partitioning and
+    * checkpoint.
     */
-  /** Per-node triangle participation counts via degree-ordered
-    * orientation (the "compact-forward" order): every undirected edge
-    * is oriented from its (degree, id)-SMALLER endpoint to the
-    * larger, and each oriented edge (u, v) finds its triangles as the
-    * intersection of the two endpoints' OUT-neighbor lists
-    * ([[triangleNodes]]). Each triangle is produced exactly once.
-    *
-    * The orientation is the scale guard: out-degree under the
-    * degree-order is O(√m) for ANY graph (a node of degree d keeps
-    * only neighbors of degree ≥ d), so the total intersection work is
-    * bounded by Σ outdeg² ≤ m^1.5 instead of the hub-quadratic
-    * Σ deg² — the difference between a social-graph power law melting
-    * a reducer and not. The adjacency fold and the probe joins
-    * shuffle on node keys only.
-    *
-    * Returns the `topN` nodes by `(triangles desc, node)` — counts
-    * per node, each triangle crediting all three vertices.
+  private def directed(edges: DataFrame, srcCol: String, dstCol: String,
+      extra: Seq[Column] = Nil, loops: Boolean = true): DataFrame = {
+    val e = edges.select(col(srcCol).as("src") +: col(dstCol).as("dst") +: extra: _*)
+    val keep = e.columns.map(col(_).isNotNull) ++
+      (if (loops) Nil else Seq(col("src") =!= col("dst")))
+    e.where(keep.reduce(_ && _))
+  }
+
+  /** The canonical undirected edge set: each edge once as `(u, v)` with
+    * `u < v`, whichever direction (or both) the input carries; nulls
+    * and self-loops dropped.
     */
+  private def undirected(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    directed(edges, srcCol, dstCol, loops = false)
+      .select(least(col("src"), col("dst")).as("u"),
+        greatest(col("src"), col("dst")).as("v"))
+      .distinct()
+
+  /** Endpoint degrees `(node, d)`: every row of `e` credits both its
+    * `a` and its `b` endpoint once — one map-side-combinable aggregate
+    * over the two endpoint projections.
+    */
+  private def degrees(e: DataFrame, a: String, b: String): DataFrame =
+    e.select(col(a).as("node")).union(e.select(col(b).as("node")))
+      .groupBy("node").agg(count(lit(1)).as("d"))
+
+  /** `df` with the degrees `du`, `dv` of its `u`, `v` endpoints, read
+    * from the node-sized (broadcast) `deg` table of [[degrees]].
+    */
+  private def withDegrees(df: DataFrame, deg: DataFrame): DataFrame =
+    df.join(broadcast(deg.select(col("node").as("u"), col("d").as("du"))), "u")
+      .join(broadcast(deg.select(col("node").as("v"), col("d").as("dv"))), "v")
+
+  /** `n` fixed rounds of `step` (round numbers 1..n) from `init`, each
+    * round's result materialized (localCheckpoint) so lineage stays one
+    * round deep and the plan depth is static. Returns every state,
+    * `init` first — `.last` is the result.
+    */
+  private def iterate(n: Int, init: DataFrame)(
+      step: (DataFrame, Int) => DataFrame): Seq[DataFrame] =
+    (1 to n).scanLeft(init)((r, i) => step(r, i).localCheckpoint())
+
+  /** Bounded-round peeling shared by [[kCore]] and [[kTruss]]: the
+    * canonical edge set `und` is partitioned by `u` and materialized
+    * once, then each of `n` rounds maps it through `step` and
+    * materializes the survivors. `step` also names the set whose size
+    * decides stability (`None`: the surviving edges). Only the last
+    * two rounds count it, and `stable` says those two counts agree.
+    */
+  private def peel(und: DataFrame, n: Int)(
+      step: DataFrame => (DataFrame, Option[DataFrame])): (DataFrame, Boolean) = {
+    var e = und.repartition(col("u")).localCheckpoint()
+    val sizes = (1 to n).flatMap { i =>
+      val (next, counted) = step(e)
+      e = next.localCheckpoint()
+      if (i >= n - 1) Some(counted.getOrElse(e).count()) else None
+    }
+    (e, sizes.length == 2 && sizes(0) == sizes(1))
+  }
+
   /** Degree-order orientation of an undirected edge set — the shared
-    * first stage of [[triangleCount]] and [[clusteringCoefficient]],
-    * and a MATERIALIZABLE artifact in its own right (it is a pure
-    * function of the edge set: [[graft.ops.CoPurchase]] persists it
-    * once per scale factor so every consumer skips the degree
-    * aggregate + orientation joins). Returns `(src, dst, dd)`: each
-    * undirected edge exactly once, oriented from its (degree, id)-
-    * smaller endpoint, with `dd` = the DESTINATION's degree (the
-    * orientation guarantees dst is the larger endpoint, so
-    * `greatest(du, dv)` is exact).
+    * first stage of [[triangleCountOriented]] and
+    * [[clusteringCoefficientOriented]], and a MATERIALIZABLE artifact
+    * in its own right (it is a pure function of the edge set:
+    * [[graft.ops.CoPurchase]] persists it once per scale factor so
+    * every consumer skips the degree aggregate + orientation joins).
+    * Returns `(src, dst, dd)`: each undirected edge exactly once,
+    * oriented from its (degree, id)-smaller endpoint, with `dd` = the
+    * DESTINATION's degree (the orientation guarantees dst is the
+    * larger endpoint, so `greatest(du, dv)` is exact).
     */
   def orientEdges(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    // undirected support: dedup both directions into u < v
-    val und = edges.select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .localCheckpoint() // degree agg + both orientation joins reuse it
-    val deg = und.select(col("u").as("node"))
-      .union(und.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
+    val deg = degrees(und, "u", "v")
     // orient low → high in (degree, id) order; dd (the destination's
     // degree) stays in the persisted artifact schema — degrees
     // reconstruct from it without re-joining the degree table
-    und
-      .join(broadcast(deg.select(col("node").as("u"), col("d").as("du"))), "u")
-      .join(broadcast(deg.select(col("node").as("v"), col("d").as("dv"))), "v")
-      .select(
-        when(col("du") < col("dv") ||
-             (col("du") === col("dv") && col("u") < col("v")), col("u"))
-          .otherwise(col("v")).as("src"),
-        when(col("du") < col("dv") ||
-             (col("du") === col("dv") && col("u") < col("v")), col("v"))
-          .otherwise(col("u")).as("dst"),
+    val uFirst = col("du") < col("dv") ||
+      (col("du") === col("dv") && col("u") < col("v"))
+    withDegrees(und, deg)
+      .select(when(uFirst, col("u")).otherwise(col("v")).as("src"),
+        when(uFirst, col("v")).otherwise(col("u")).as("dst"),
         greatest(col("du"), col("dv")).as("dd"))
   }
-
-  def triangleCount(edges: DataFrame, topN: Int = 100,
-      srcCol: String = "src", dstCol: String = "dst"): DataFrame =
-    triangleCountOriented(orientEdges(edges, srcCol, dstCol)
-      .localCheckpoint(), topN)
 
   /** Per-triangle node credits shared by [[triangleCountOriented]]
     * and [[clusteringCoefficientOriented]], by EDGE-ITERATOR
@@ -132,8 +149,25 @@ object Graph {
         col("cs"))).as("node"))
   }
 
-  /** [[triangleCount]] from an already-oriented `(src, dst, dd)` edge
-    * list ([[orientEdges]] output, possibly a persisted artifact).
+  /** Per-node triangle participation counts via degree-ordered
+    * orientation (the "compact-forward" order), from an
+    * already-oriented `(src, dst, dd)` edge list ([[orientEdges]]
+    * output, possibly a persisted artifact): every undirected edge is
+    * oriented from its (degree, id)-SMALLER endpoint to the larger,
+    * and each oriented edge (u, v) finds its triangles as the
+    * intersection of the two endpoints' OUT-neighbor lists
+    * ([[triangleNodes]]). Each triangle is produced exactly once.
+    *
+    * The orientation is the scale guard: out-degree under the
+    * degree-order is O(√m) for ANY graph (a node of degree d keeps
+    * only neighbors of degree ≥ d), so the total intersection work is
+    * bounded by Σ outdeg² ≤ m^1.5 instead of the hub-quadratic
+    * Σ deg² — the difference between a social-graph power law melting
+    * a reducer and not. The adjacency fold and the probe joins
+    * shuffle on node keys only.
+    *
+    * Returns the `topN` nodes by `(triangles desc, node)` — counts
+    * per node, each triangle crediting all three vertices.
     */
   def triangleCountOriented(ord: DataFrame, topN: Int = 100): DataFrame =
     triangleNodes(ord)
@@ -141,37 +175,29 @@ object Graph {
       .orderBy(col("triangles").desc, col("node"))
       .limit(topN)
 
-  /** Local clustering coefficient per node, exact ppm:
+  /** Local clustering coefficient per node, exact ppm, from an
+    * already-oriented `(src, dst, dd)` list ([[orientEdges]] output):
     * `cc = 2·T_v·10⁶ / (d_v·(d_v−1))` — how close each node's
     * neighborhood is to a clique, THE per-node cohesion feature for
     * community/fraud pipelines. Triangles come from the same
-    * degree-oriented adjacency intersection as [[triangleCount]]
-    * (each triangle counted once per member node); degrees from one
-    * combinable aggregate; nodes with d < 2 are excluded (coefficient
+    * degree-oriented adjacency intersection as
+    * [[triangleCountOriented]] (each triangle counted once per member
+    * node); degrees reconstruct exactly from the oriented set (each
+    * undirected edge appears exactly once) in one combinable
+    * aggregate, so the persisted artifact carries everything the
+    * coefficient needs; nodes with d < 2 are excluded (coefficient
     * undefined). Integer ppm floor keeps it oracle-exact.
     *
-    * Scale shape: identical to triangleCount (the intersection is the
-    * dominant cost, bounded by the degree orientation's
-    * O(m^{3/2}) wedge bound); the final join is node-keyed.
-    */
-  def clusteringCoefficient(edges: DataFrame, topN: Int = 100,
-      srcCol: String = "src", dstCol: String = "dst"): DataFrame =
-    clusteringCoefficientOriented(orientEdges(edges, srcCol, dstCol)
-      .localCheckpoint(), topN)
-
-  /** [[clusteringCoefficient]] from an already-oriented `(src, dst,
-    * dd)` list. Degrees reconstruct exactly from the oriented set
-    * (each undirected edge appears exactly once), so the persisted
-    * artifact carries everything the coefficient needs.
+    * Scale shape: identical to triangleCountOriented (the
+    * intersection is the dominant cost, bounded by the degree
+    * orientation's O(m^{3/2}) wedge bound); the final join is
+    * node-keyed.
     */
   def clusteringCoefficientOriented(ord: DataFrame,
       topN: Int = 100): DataFrame = {
-    val deg = ord.select(col("src").as("node"))
-      .union(ord.select(col("dst").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
     val tri = triangleNodes(ord)
       .groupBy("node").agg(count(lit(1)).as("triangles"))
-    deg.where(col("d") >= 2)
+    degrees(ord, "src", "dst").where(col("d") >= 2)
       .join(tri, Seq("node"), "left")
       .select(col("node"), col("d"),
         coalesce(col("triangles"), lit(0L)).as("triangles"))
@@ -181,26 +207,6 @@ object Graph {
       .limit(topN)
   }
 
-  /** Minimum-hop BFS from a seed set, bounded depth — k-hop
-    * reachability (blast-radius / influence-neighborhood queries)
-    * as iterated relational rounds. Each round expands the frontier
-    * through `edges` (directed rows; callers union both directions
-    * for an undirected graph), then anti-joins the visited set so a
-    * node keeps the FIRST hop it was reached at — exactly
-    * `MIN(hop)` over all ≤`maxHops` walks, which is what the
-    * recursive-CTE oracle restates.
-    *
-    * Shuffle shape: the edge set shuffles ONCE (pre-partitioned by
-    * `src`, the per-round probe key) and is reused every round; the
-    * frontier and visited sets are node-sized and broadcast, so a
-    * round is broadcast-probe + distinct on the (small) frontier.
-    * For a graph whose frontier outgrows broadcast (billions of
-    * nodes), drop the hints — rounds then pay one node-keyed
-    * shuffle each against the already-partitioned edges, never an
-    * edge re-shuffle. Rounds are fixed (`maxHops`), so plan depth is
-    * static; each round materializes (localCheckpoint) to keep
-    * lineage flat.
-    */
   /** DeepWalk-style walk-corpus generation (Perozzi et al. 2014) with
     * DETERMINISTIC steps: from every node, `walksPerNode` walks of
     * `length` hops, where step `s` of walk `w` at node `n` moves to
@@ -223,10 +229,7 @@ object Graph {
       dstCol: String = "dst"): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val und = edges.select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val adj = und.select(col("u").as("node"), col("v").as("nbr"))
       .union(und.select(col("v").as("node"), col("u").as("nbr")))
       .withColumn("rnk", row_number().over(
@@ -234,26 +237,22 @@ object Graph {
       .localCheckpoint()
     val deg = adj.groupBy("node").agg(count(lit(1)).as("d"))
       .localCheckpoint()
-    val walkIds = (0 until walksPerNode).toDF("w")
-    var frontier = deg.select(col("node").as("n0"))
-      .crossJoin(broadcast(walkIds))
+    val start = deg.select(col("node").as("n0"))
+      .crossJoin(broadcast((0 until walksPerNode).toDF("w")))
       .withColumn("cur", col("n0"))
       .localCheckpoint()
-    var acc = frontier.select(col("n0"), col("w"),
-      lit(0).as("step"), col("cur").as("node"))
-    for (s <- 1 to length) {
-      frontier = frontier
+    iterate(length, start) { (frontier, s) =>
+      frontier
         .join(deg.withColumnRenamed("node", "cur"), "cur")
         .withColumn("rnk", pmod(Similarity.mix31Col(
           col("cur") * 1000003L + col("w") * 4096L + lit(s.toLong)),
           col("d")))
         .join(adj.withColumnRenamed("node", "cur"), Seq("cur", "rnk"))
         .select(col("n0"), col("w"), col("nbr").as("cur"))
-        .localCheckpoint()
-      acc = acc.union(frontier.select(col("n0"), col("w"),
-        lit(s).as("step"), col("cur").as("node")))
-    }
-    acc.orderBy("n0", "w", "step")
+    }.zipWithIndex.map { case (frontier, s) =>
+      frontier.select(col("n0"), col("w"), lit(s).as("step"),
+        col("cur").as("node"))
+    }.reduce(_ union _).orderBy("n0", "w", "step")
   }
 
   /** Skip-gram training pairs from a walk corpus
@@ -351,25 +350,43 @@ object Graph {
       .orderBy("center", "context", "j")
   }
 
+  /** Minimum-hop BFS from a seed set, bounded depth — k-hop
+    * reachability (blast-radius / influence-neighborhood queries)
+    * as iterated relational rounds. Each round expands the frontier
+    * through `edges` (directed rows; callers union both directions
+    * for an undirected graph), then anti-joins the visited set so a
+    * node keeps the FIRST hop it was reached at — exactly
+    * `MIN(hop)` over all ≤`maxHops` walks, which is what the
+    * recursive-CTE oracle restates.
+    *
+    * Shuffle shape: the edge set shuffles ONCE (pre-partitioned by
+    * `src`, the per-round probe key) and is reused every round; the
+    * frontier and visited sets are node-sized and broadcast, so a
+    * round is broadcast-probe + distinct on the (small) frontier.
+    * For a graph whose frontier outgrows broadcast (billions of
+    * nodes), drop the hints — rounds then pay one node-keyed
+    * shuffle each against the already-partitioned edges, never an
+    * edge re-shuffle. Rounds are fixed (`maxHops`), so plan depth is
+    * static; each round materializes (localCheckpoint) to keep
+    * lineage flat.
+    */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int = 3,
       srcCol: String = "src", dstCol: String = "dst",
       seedCol: String = "node"): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
+    val e = directed(edges, srcCol, dstCol)
       .distinct().repartition(col("src")).localCheckpoint()
-    var dist = seeds.select(col(seedCol).as("node")).distinct()
+    val dist0 = seeds.select(col(seedCol).as("node")).distinct()
       .withColumn("hop", lit(0)).localCheckpoint()
-    var frontier = dist.select("node")
-    for (h <- 1 to maxHops) {
+    var frontier = dist0.select("node")
+    iterate(maxHops, dist0) { (dist, h) =>
       val next = e.join(broadcast(frontier.withColumnRenamed("node", "src")),
           "src")
         .select(col("dst").as("node")).distinct()
         .join(broadcast(dist.select("node")), Seq("node"), "left_anti")
         .withColumn("hop", lit(h))
-      dist = dist.union(next).localCheckpoint()
       frontier = next.select("node")
-    }
-    dist.orderBy("node")
+      dist.union(next)
+    }.last.orderBy("node")
   }
 
   /** Bounded-hop weighted shortest paths from a seed set — the
@@ -389,45 +406,64 @@ object Graph {
   def boundedShortestPath(edges: DataFrame, seeds: DataFrame,
       maxHops: Int = 3, srcCol: String = "src", dstCol: String = "dst",
       wCol: String = "w", seedCol: String = "node"): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).cast("long").as("w"))
-      .where(col("src").isNotNull && col("dst").isNotNull &&
-        col("w").isNotNull)
+    val e = directed(edges, srcCol, dstCol, Seq(col(wCol).cast("long").as("w")))
       .repartition(col("src")).localCheckpoint()
-    var dist = seeds.select(col(seedCol).as("node")).distinct()
+    val dist0 = seeds.select(col(seedCol).as("node")).distinct()
       .withColumn("d", lit(0L)).localCheckpoint()
-    for (_ <- 1 to maxHops) {
+    iterate(maxHops, dist0) { (dist, _) =>
       val relaxed = e.join(broadcast(dist.withColumnRenamed("node", "src")),
           "src")
         .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
-      dist = dist.union(relaxed)
-        .groupBy("node").agg(min(col("d")).as("d"))
-        .localCheckpoint()
-    }
-    dist.orderBy("node")
+      dist.union(relaxed).groupBy("node").agg(min(col("d")).as("d"))
+    }.last.orderBy("node")
   }
 
-  def pageRank(edges: DataFrame, iterations: Int = 3, dampPpm: Long = 850000L,
-      scale: Long = 1000000000000L, srcCol: String = "src",
-      dstCol: String = "dst"): DataFrame = {
-    // pre-partition the edge set by dst — the inflow aggregate's key —
-    // so each round's groupBy(dst) reuses the materialized partitioning
-    // (zero per-round edge shuffles; ranks/degrees are node-sized and
-    // broadcast). The one edge shuffle happens here, once.
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
+  /** The dst-partitioned, materialized edge set of the rank operators
+    * ([[pageRank]], [[personalizedPageRank]]) with their node table.
+    * Pre-partitioning by dst — the inflow aggregate's key — lets each
+    * round's groupBy(dst) reuse the materialized partitioning (zero
+    * per-round edge shuffles; ranks/degrees are node-sized and
+    * broadcast). The one edge shuffle happens here, once.
+    */
+  private def rankGraph(edges: DataFrame, srcCol: String,
+      dstCol: String): (DataFrame, DataFrame) = {
+    val e = directed(edges, srcCol, dstCol)
       .distinct().repartition(col("dst")).localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    (e, nodes)
+  }
+
+  /** Fixed-iteration PageRank in pure integer fixed-point: ranks are
+    * parts-per-`scale` of the total mass, the damping multiply and
+    * the out-degree split are floor divisions, so every engine (and
+    * every retry) computes bit-identical ranks — the property that
+    * makes an iterative float algorithm oracle-checkable at all.
+    *
+    * Variant contract (declared, deterministic): dangling mass is NOT
+    * redistributed — a sink node's rank leaks, as in the original
+    * sum formulation. Fixed `iterations`, not convergence-tested:
+    * ranking stabilizes in a few rounds and a fixed plan depth is
+    * what a relational pipeline wants.
+    *
+    * Shuffle shape: the edge set shuffles ONCE (pre-partitioned by
+    * dst, the per-round aggregate key); rank and degree tables are
+    * node-sized and broadcast, so each round is broadcast-join +
+    * exchange-free aggregate. That explicit broadcast is the
+    * nodes ≪ edges regime (every co-occurrence/citation graph);
+    * for a graph whose node table outgrows broadcast, drop the hint
+    * and pre-partition edges by src instead — rounds then pay one
+    * node-keyed shuffle each, never an edge shuffle.
+    */
+  def pageRank(edges: DataFrame, iterations: Int = 3, dampPpm: Long = 850000L,
+      scale: Long = 1000000000000L, srcCol: String = "src",
+      dstCol: String = "dst"): DataFrame = {
+    val (e, nodes) = rankGraph(edges, srcCol, dstCol)
     val n = nodes.count()
     require(n > 0, "pageRank over an empty edge set")
-    // driver-side scalars (N is a count, not data): initial mass share
-    // and the teleport base, both floored like the in-plan divisions
-    val r0 = scale / n
-    val base = r0 * (1000000L - dampPpm) / 1000000L
-    powerIterate(e, nodes, iterations, dampPpm,
-      init = nodes.withColumn("rank", lit(r0)),
-      baseCol = lit(base))
+    // every node holds an equal share of the mass (N is a driver-side
+    // count, not data)
+    powerIterate(e, nodes, iterations, dampPpm, scale / n, lit(true))
       .orderBy(col("rank").desc, col("node"))
   }
 
@@ -435,25 +471,27 @@ object Graph {
     * [[personalizedPageRank]]: `iterations` rounds of
     * `rank'(v) = base(v) + Σ_{u→v} (rank(u)·damp ÷ 10⁶) ÷ outdeg(u)`
     * in floor fixed-point. `e` must already be dst-partitioned and
-    * materialized; `init`/`base` differ per variant (uniform mass +
-    * uniform teleport vs seed-only mass + seed-only teleport).
+    * materialized. The nodes where `holds` is true start with mass
+    * `r0` and teleport `base = r0·(1 − damp)` (floored like the
+    * in-plan divisions); every other node starts at, and teleports,
+    * zero — uniform for pageRank, seed-only for the personalized one.
     */
   private def powerIterate(e: DataFrame, nodes: DataFrame, iterations: Int,
-      dampPpm: Long, init: DataFrame, baseCol: Column): DataFrame = {
+      dampPpm: Long, r0: Long, holds: Column): DataFrame = {
+    def onHolders(v: Long): Column = when(holds, lit(v)).otherwise(lit(0L))
+    val base = r0 * (1000000L - dampPpm) / 1000000L
     val deg = e.groupBy("src").agg(count(lit(1)).as("d")).localCheckpoint()
-    var r = init
-    for (_ <- 1 to iterations) {
+    val init = nodes.select(col("node"), onHolders(r0).as("rank"))
+    iterate(iterations, init) { (r, _) =>
       val contrib = e.join(broadcast(r.withColumnRenamed("node", "src")), "src")
         .join(broadcast(deg), "src")
         .select(col("dst").as("node"),
           expr(s"((rank * ${dampPpm}L) div 1000000L) div d").as("c"))
         .groupBy("node").agg(sum(col("c")).as("inflow"))
-      r = nodes.join(contrib, Seq("node"), "left")
+      nodes.join(contrib, Seq("node"), "left")
         .select(col("node"),
-          (baseCol + coalesce(col("inflow"), lit(0L))).as("rank"))
-        .localCheckpoint()
-    }
-    r
+          (onHolders(base) + coalesce(col("inflow"), lit(0L))).as("rank"))
+    }.last
   }
 
   /** Personalized PageRank — THE graph recommendation primitive:
@@ -477,11 +515,7 @@ object Graph {
       scale: Long = 1000000000000L, topN: Int = 100,
       srcCol: String = "src", dstCol: String = "dst",
       seedCol: String = "node"): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().repartition(col("dst")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    val (e, nodes) = rankGraph(edges, srcCol, dstCol)
     // seeds restricted to nodes actually in the graph — mass on an
     // isolated seed could never flow anyway, and |S| must count only
     // rows that hold mass or the per-seed share is silently diluted
@@ -489,18 +523,11 @@ object Graph {
       .join(nodes, Seq("node"), "left_semi").localCheckpoint()
     val nSeeds = s.count()
     require(nSeeds > 0, "personalizedPageRank: no seed is a graph node")
-    val r0 = scale / nSeeds
-    val base = r0 * (1000000L - dampPpm) / 1000000L
-    val isSeed = s.withColumn("seed", lit(1))
-    val init = nodes.join(broadcast(isSeed), Seq("node"), "left")
-      .select(col("node"),
-        when(col("seed").isNotNull, lit(r0)).otherwise(lit(0L)).as("rank"))
-    val withBase = nodes.join(broadcast(isSeed), Seq("node"), "left")
-    val ranked = powerIterate(e, withBase.select("node", "seed"), iterations,
-      dampPpm, init,
-      baseCol = when(col("seed").isNotNull, lit(base)).otherwise(lit(0L)))
-    ranked.where(col("rank") > 0)
-      .select(col("node"), col("rank"))
+    val withSeed = nodes.join(broadcast(s.withColumn("seed", lit(1))),
+      Seq("node"), "left").select("node", "seed")
+    powerIterate(e, withSeed, iterations, dampPpm, scale / nSeeds,
+        col("seed").isNotNull)
+      .where(col("rank") > 0)
       .orderBy(col("rank").desc, col("node"))
       .limit(topN)
   }
@@ -530,33 +557,32 @@ object Graph {
   def hits(edges: DataFrame, iterations: Int = 2,
       scale: Long = 1000000000000L, topN: Int = 100,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
+    val e = directed(edges, srcCol, dstCol)
       .distinct().repartition(col("dst")).localCheckpoint()
     val srcs = e.select(col("src").as("node")).distinct().localCheckpoint()
     val dsts = e.select(col("dst").as("node")).distinct().localCheckpoint()
     val nSrc = srcs.count()
     require(nSrc > 0, "hits over an empty edge set")
-    // init: uniform hub mass summing to ~scale — keeps every later raw
-    // sum ≤ scale·davg, far inside long range at any graph size
-    var hub = srcs.withColumn("hub", lit(scale / nSrc)).localCheckpoint()
-    var auth = dsts.withColumn("auth", lit(0L))
     def renorm(df: DataFrame, c: String): DataFrame = {
       val total = df.agg(sum(col(c))).head.getLong(0)
       require(total > 0, s"hits: $c mass vanished")
       df.select(col("node"),
         expr(s"(cast($c as decimal(38,0)) * ${scale}L) div ${total}L").as(c))
     }
-    for (_ <- 1 to iterations) {
+    // init: uniform hub mass summing to ~scale — keeps every later raw
+    // sum ≤ scale·davg, far inside long range at any graph size
+    val hub0 = srcs.withColumn("hub", lit(scale / nSrc)).localCheckpoint()
+    var auth = dsts.withColumn("auth", lit(0L))
+    val hub = iterate(iterations, hub0) { (h, _) =>
       auth = renorm(
-        e.join(broadcast(hub.withColumnRenamed("node", "src")), "src")
+        e.join(broadcast(h.withColumnRenamed("node", "src")), "src")
           .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("auth")),
         "auth").localCheckpoint()
-      hub = renorm(
+      renorm(
         e.join(broadcast(auth.withColumnRenamed("node", "dst")), "dst")
           .groupBy(col("src").as("node")).agg(sum(col("auth")).as("hub")),
-        "hub").localCheckpoint()
-    }
+        "hub")
+    }.last
     auth.join(hub, Seq("node"), "full")
       .select(col("node"), coalesce(col("auth"), lit(0L)).as("auth"),
         coalesce(col("hub"), lit(0L)).as("hub"))
@@ -568,10 +594,10 @@ object Graph {
     * neighbors their endpoints share (the baseline link-prediction /
     * "people you may know" score), with the Jaccard overlap of the
     * two neighborhoods as ppm tie-breaker. A candidate pair is any
-    * two distinct neighbors of a shared apex; scoring walks the same
-    * wedge join as [[triangleCount]] but KEEPS the open wedges
-    * (closed ones are existing edges, anti-joined away) instead of
-    * closing them.
+    * two distinct neighbors of a shared apex; scoring walks a wedge
+    * self-join like [[kTruss]]'s support count but KEEPS the open
+    * wedges (closed ones are existing edges, anti-joined away)
+    * instead of closing them.
     *
     * The apex-degree cut is the scale guard and part of the declared
     * contract: a hub apex of degree d contributes d² wedges, so
@@ -587,13 +613,8 @@ object Graph {
   def linkPredict(edges: DataFrame, topN: Int = 50,
       maxApexDegree: Long = 64L,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val und = edges.select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct().localCheckpoint()
-    val deg = und.select(col("u").as("node"))
-      .union(und.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d")).localCheckpoint()
+    val und = undirected(edges, srcCol, dstCol).localCheckpoint()
+    val deg = degrees(und, "u", "v").localCheckpoint()
     // adjacency restricted to low-degree apexes (the guard), both
     // orientations so every neighbor pair of an apex becomes a wedge
     val lowApex = deg.where(col("d") <= maxApexDegree)
@@ -606,9 +627,7 @@ object Graph {
       .select(col("a.nb").as("u"), col("b.nb").as("v"))
       .groupBy("u", "v").agg(count(lit(1)).as("cn"))
       .join(und, Seq("u", "v"), "left_anti")
-    cand
-      .join(broadcast(deg.select(col("node").as("u"), col("d").as("du"))), "u")
-      .join(broadcast(deg.select(col("node").as("v"), col("d").as("dv"))), "v")
+    withDegrees(cand, deg)
       .select(col("u"), col("v"), col("cn"),
         expr("(cn * 1000000) div (du + dv - cn)").as("jaccard_ppm"))
       .orderBy(col("cn").desc, col("jaccard_ppm").desc, col("u"), col("v"))
@@ -636,23 +655,20 @@ object Graph {
   def labelPropagation(edges: DataFrame, rounds: Int = 2,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(rounds >= 1, s"rounds must be positive, got $rounds")
-    // shuffle the edge set once by the vote-listener key; every
+    // shuffle the edge set once by the vote-listener key (src); every
     // round's join + vote fold reuses that partitioning
-    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull)
-      .distinct().repartition(col("u")).localCheckpoint()
-    var labels = e.select(col("u").as("node")).distinct()
+    val e = directed(edges, srcCol, dstCol)
+      .distinct().repartition(col("src")).localCheckpoint()
+    val labels0 = e.select(col("src").as("node")).distinct()
       .withColumn("label", col("node")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      labels = e
-        .join(broadcast(labels.select(col("node").as("v"), col("label"))),
-          "v")
-        .groupBy("u", "label").agg(count(lit(1)).as("cnt"))
-        .groupBy("u")
+    val labels = iterate(rounds, labels0) { (labels, _) =>
+      e.join(broadcast(labels.select(col("node").as("dst"), col("label"))),
+          "dst")
+        .groupBy("src", "label").agg(count(lit(1)).as("cnt"))
+        .groupBy("src")
         .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("m"))
-        .select(col("u").as("node"), (-col("m.neg")).as("label"))
-        .localCheckpoint()
-    }
+        .select(col("src").as("node"), (-col("m.neg")).as("label"))
+    }.last
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("csize"))
     labels.join(sizes, "label")
       .select(col("node"), col("label"), col("csize"))
@@ -684,24 +700,13 @@ object Graph {
         .groupBy(col("e.u").as("u"), col("e.v").as("v"))
         .agg(count(lit(1)).as("sup"))
     }
-    val dir0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-    var e = dir0
-      .select(least(col("a"), col("b")).as("u"),
-        greatest(col("a"), col("b")).as("v"))
-      .distinct().repartition(col("u")).localCheckpoint()
-    var prev = -1L
-    var last = -2L
-    for (_ <- 1 to rounds) {
-      e = e.join(support(e).where(col("sup") >= k - 2), Seq("u", "v"),
-          "left_semi")
-        .localCheckpoint()
-      prev = last
-      last = e.count()
+    val (e, stable) = peel(undirected(edges, srcCol, dstCol), rounds) { g =>
+      (g.join(support(g).where(col("sup") >= k - 2), Seq("u", "v"),
+        "left_semi"), None)
     }
     e.join(support(e), Seq("u", "v"), "left")
       .select(col("u"), col("v"), coalesce(col("sup"), lit(0L)).as("sup"),
-        lit(prev == last).as("stable"))
+        lit(stable).as("stable"))
       .orderBy("u", "v")
   }
 
@@ -718,53 +723,32 @@ object Graph {
     * detectable by comparing the last two rounds' node counts, and
     * `stable` reports it).
     *
-    * `edges` is directed input; both orientations are derived here so
-    * degree = full undirected degree (self-loops dropped). Output:
-    * surviving nodes with their core-subgraph degree and the
-    * round-R stability flag (one global boolean, same on every row).
+    * `edges` is directed input; the CANONICAL edge set (u < v) is
+    * derived here — when the input already carries both orientations
+    * (CoPurchase.directed), materializing both would process four
+    * copies of every undirected edge to keep two. Degrees fold from
+    * the two endpoint projections instead (map-side-combinable,
+    * node-sized shuffle), so degree = full undirected degree
+    * (self-loops dropped). Output: surviving nodes with their
+    * core-subgraph degree and the round-R stability flag (one global
+    * boolean, same on every row).
     */
   def kCore(edges: DataFrame, k: Long = 3L, rounds: Int = 3,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val dir0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    // CANONICAL edge set (u < v), half the rows of the r14
-    // both-orientations form — and when the input already carries
-    // both orientations (CoPurchase.directed), the old
-    // union-the-flip + distinct processed FOUR copies of every
-    // undirected edge to materialize two. Degrees fold from the two
-    // endpoint projections instead (map-side-combinable, node-sized
-    // shuffle), so every round's peel now touches half the data for
-    // identical degree values.
-    var e = dir0
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct().repartition(col("u")).localCheckpoint()
-    def degrees(g: DataFrame): DataFrame =
-      g.select(col("u").as("n")).unionAll(g.select(col("v").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("deg"))
-    var prevNodes = -1L
-    var lastNodes = -2L
-    for (i <- 1 to rounds) {
-      val alive = degrees(e).where(col("deg") >= k)
-        .select(col("n").as("u")).localCheckpoint()
-      // the stability flag only compares the LAST TWO rounds' alive
-      // counts — earlier rounds skip the count job entirely
-      if (i >= rounds - 1) {
-        prevNodes = lastNodes
-        lastNodes = alive.count()
-      }
+    val (e, stable) = peel(undirected(edges, srcCol, dstCol), rounds) { g =>
+      val alive = degrees(g, "u", "v").where(col("d") >= k)
+        .select(col("node").as("u")).localCheckpoint()
       // alive is node-sized: broadcast both peel probes so the edge
       // set is filtered in place — a shuffled semi-join re-shuffles
       // the whole edge set by the probe key EVERY round. Billion-node
       // caveat as in pageRank: drop the hint and pre-partition both
       // directions when nodes outgrow broadcast.
-      e = e.join(broadcast(alive), Seq("u"), "left_semi")
-        .join(broadcast(alive.select(col("u").as("v"))), Seq("v"), "left_semi")
-        .localCheckpoint()
+      (g.join(broadcast(alive), Seq("u"), "left_semi")
+        .join(broadcast(alive.select(col("u").as("v"))), Seq("v"), "left_semi"),
+        Some(alive))
     }
-    val stable = prevNodes == lastNodes
-    degrees(e)
-      .select(col("n").as("node"), col("deg"), lit(stable).as("stable"))
+    degrees(e, "u", "v")
+      .select(col("node"), col("d").as("deg"), lit(stable).as("stable"))
       .orderBy("node")
   }
 
@@ -783,19 +767,44 @@ object Graph {
     */
   def avgNeighborDegree(edges: DataFrame, topN: Int = 100,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull &&
-        col("u") =!= col("v"))
+    val e = directed(edges, srcCol, dstCol, loops = false)
       .distinct().localCheckpoint() // degree count + the propagation join
-    val deg = e.groupBy("u").agg(count(lit(1)).as("deg"))
-    e.join(deg.select(col("u").as("v"), col("deg").as("dn")), "v")
-      .groupBy("u").agg(sum(col("dn")).as("s"))
-      .join(deg, "u")
-      .select(col("u").as("node"), col("deg"),
+    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+    e.join(deg.select(col("src").as("dst"), col("deg").as("dn")), "dst")
+      .groupBy("src").agg(sum(col("dn")).as("s"))
+      .join(deg, "src")
+      .select(col("src").as("node"), col("deg"),
         expr("s * 1000 div deg").as("nbr_deg_milli"))
       .withColumn("hubby", col("nbr_deg_milli") > col("deg") * 1000L)
       .orderBy(col("nbr_deg_milli").desc, col("node"))
       .limit(topN)
+  }
+
+  /** The temporal Bellman–Ford rounds shared by [[temporalReach]] and
+    * [[blastRadius]]: `hops` rounds of `at(v) = min(at(v), min{t :
+    * (u, v, t), t > at(u)})` per `keys` group, over the timestamped
+    * edges and from the `start` rows `(keys…, n)`, which carry
+    * `at = Long.MinValue` (usable from time zero). Each round is one
+    * hash join keyed on the src node + one min-fold. Returns the
+    * reached `(keys…, n, at)` rows; the start rows stay at MinValue
+    * (min with any real arrival) and are dropped.
+    */
+  private def relaxTemporal(edges: DataFrame, srcCol: String, dstCol: String,
+      tCol: String, start: DataFrame, keys: Seq[String],
+      hops: Int): DataFrame = {
+    val e = directed(edges, srcCol, dstCol, Seq(col(tCol).as("t")))
+      .localCheckpoint() // reused every round
+    val ks = keys.map(col)
+    val best0 = start.withColumn("at", lit(Long.MinValue)).localCheckpoint()
+    iterate(hops, best0) { (best, _) =>
+      val relaxed = e.join(best, e("src") === best("n"))
+        .where(col("t") > col("at"))
+        .groupBy(ks :+ e("dst").as("n2"): _*)
+        .agg(min(col("t")).as("at2"))
+        .select(ks ++ Seq(col("n2").as("n"), col("at2").as("at")): _*)
+      best.unionByName(relaxed)
+        .groupBy(ks :+ col("n"): _*).agg(min("at").as("at"))
+    }.last.where(col("at") =!= Long.MinValue)
   }
 
   /** Time-respecting reachability from seed nodes over TIMESTAMPED
@@ -816,29 +825,11 @@ object Graph {
     */
   def temporalReach(edges: DataFrame, seeds: DataFrame, hops: Int = 3,
       srcCol: String = "src", dstCol: String = "dst",
-      tCol: String = "t"): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(tCol).as("t"))
-      .where(col("src").isNotNull && col("dst").isNotNull &&
-        col("t").isNotNull)
-      .localCheckpoint() // reused every round
-    var best = seeds.select(col("n"), lit(Long.MinValue).as("at"))
-      .localCheckpoint()
-    (1 to hops).foreach { _ =>
-      val relaxed = e.join(best, e("src") === best("n"))
-        .where(col("t") > col("at"))
-        .groupBy(e("dst").as("n2"))
-        .agg(min(col("t")).as("at2"))
-        .select(col("n2").as("n"), col("at2").as("at"))
-      best = best.unionByName(relaxed)
-        .groupBy("n").agg(min("at").as("at"))
-        .localCheckpoint()
-    }
-    // seeds stay at MinValue (min with any real arrival) → excluded
-    best.where(col("at") =!= Long.MinValue)
+      tCol: String = "t"): DataFrame =
+    relaxTemporal(edges, srcCol, dstCol, tCol, seeds.select(col("n")), Nil,
+        hops)
       .select(col("n").as("node"), col("at").as("earliest_at"))
       .orderBy("node")
-  }
 
   /** Per-seed blast radius: [[temporalReach]] vectorized over MANY
     * seeds at once — the best-arrival table carries a `seed` column,
@@ -851,31 +842,14 @@ object Graph {
     */
   def blastRadius(edges: DataFrame, seeds: DataFrame, hops: Int = 3,
       srcCol: String = "src", dstCol: String = "dst",
-      tCol: String = "t"): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(tCol).as("t"))
-      .where(col("src").isNotNull && col("dst").isNotNull &&
-        col("t").isNotNull)
-      .localCheckpoint() // reused every round
-    var best = seeds.select(col("seed"), col("seed").as("n"),
-      lit(Long.MinValue).as("at")).localCheckpoint()
-    (1 to hops).foreach { _ =>
-      val relaxed = e.join(best, e("src") === best("n"))
-        .where(col("t") > col("at"))
-        .groupBy(col("seed"), e("dst").as("n2"))
-        .agg(min(col("t")).as("at2"))
-        .select(col("seed"), col("n2").as("n"), col("at2").as("at"))
-      best = best.unionByName(relaxed)
-        .groupBy("seed", "n").agg(min("at").as("at"))
-        .localCheckpoint()
-    }
-    best.where(col("at") =!= Long.MinValue)
+      tCol: String = "t"): DataFrame =
+    relaxTemporal(edges, srcCol, dstCol, tCol,
+        seeds.select(col("seed"), col("seed").as("n")), Seq("seed"), hops)
       .groupBy("seed")
       .agg(count(lit(1)).as("n_reached"),
         min(col("at")).as("first_spread_at"),
         max(col("at")).as("last_spread_at"))
       .orderBy(col("n_reached").desc, col("seed"))
-  }
 
   /** The strongly connected component containing the minimum node id
     * of a DIRECTED graph — the cycle-cluster primitive the undirected
@@ -897,8 +871,7 @@ object Graph {
   def sccFromPivot(edges: DataFrame, maxRounds: Int = 100,
       srcCol: String = "src", dstCol: String = "dst",
       hopsPerRound: Int = 4): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
+    val e = directed(edges, srcCol, dstCol)
       .distinct().localCheckpoint() // reused every round, both directions
     val pivot = e.select(least(min("src"), min("dst")).as("n"))
     // delta iteration: only the round's NEW frontier joins the edge
@@ -918,6 +891,7 @@ object Graph {
     // the deeper plan trades bounded executor work for an
     // O(hopsPerRound) cut in driver round-trips.
     def reach(forward: Boolean): DataFrame = {
+      val (from, to) = if (forward) ("src", "dst") else ("dst", "src")
       // the reach set is re-materialized once per round. r14 tried the
       // union-of-frontier-checkpoints form (skip the per-round reach
       // checkpoint; frontiers are disjoint by the anti-join) and it
@@ -932,25 +906,16 @@ object Graph {
       var round = 0
       var growing = true
       while (growing && round < maxRounds) {
-        var hop = frontier
-        var acc = frontier
-        for (_ <- 1 to hopsPerRound) {
+        val hops = (1 to hopsPerRound).scanLeft(frontier) { (hop, _) =>
           // the frontier is node-sized — broadcast it so the edge
           // table is probed in place instead of shuffled per hop
           // (bfsHops' pattern; same broadcast-vs-shuffle tradeoff for
           // billion-node frontiers)
-          hop =
-            (if (forward)
-               e.join(broadcast(hop), e("src") === hop("n"))
-                 .select(e("dst").as("n"))
-             else
-               e.join(broadcast(hop), e("dst") === hop("n"))
-                 .select(e("src").as("n")))
-              .distinct()
-          acc = acc.unionByName(hop)
+          e.join(broadcast(hop), e(from) === hop("n"))
+            .select(e(to).as("n")).distinct()
         }
-        frontier = acc.distinct().join(broadcast(r), Seq("n"), "left_anti")
-          .localCheckpoint()
+        frontier = hops.reduce(_ unionByName _).distinct()
+          .join(broadcast(r), Seq("n"), "left_anti").localCheckpoint()
         growing = frontier.limit(1).count() > 0
         if (growing) r = r.unionByName(frontier).localCheckpoint()
         round += 1

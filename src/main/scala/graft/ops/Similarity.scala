@@ -935,21 +935,18 @@ object Similarity {
     * artifact?) before committing to whitening or dimension cuts.
     * The covariance matrix never materializes as floats: with
     * milli-quantized coordinates, `A[i][j] = n·Σxᵢxⱼ − Σxᵢ·Σxⱼ`
-    * (n² times the covariance — [[graft.ops.Stats.gramTopPairs]]'s
-    * `cov_num`, here with the diagonal) is exact long arithmetic, and
+    * (n² times the covariance — [[Stats.gramCovariance]]'s `cov_num`,
+    * diagonal included) is exact long arithmetic, and
     * each iteration is an integer matvec `u = A·v` renormalized to
     * L∞ = 1000 (`v′ = u·1000 div max|u|`, trunc-toward-zero on both
     * engines). Fixed `iters` rounds from the all-ones vector keep the
     * whole trajectory deterministic and relationally restatable; the
     * sign convention is inherited from v₀, never arbitrary.
     *
-    * Shape: one map-side Gram pass (per-partition d×d accumulation,
-    * O(n·d²) work, kilobytes shuffled — gramTopPairs' kernel with the
-    * diagonal kept) folds the corpus away; every iteration after is a
-    * d²-row join, driver-free and independent of corpus size. Long
-    * sums hold to ~10¹² rows at quant=10³ (same bound as
-    * gramTopPairs); past that switch the accumulators to
-    * mean-centered decimal.
+    * Shape: one map-side Gram pass ([[Stats.gramCovariance]]:
+    * per-partition d×d accumulation, O(n·d²) work, kilobytes
+    * shuffled) folds the corpus away; every iteration after is a
+    * d²-row join, driver-free and independent of corpus size.
     */
   def powerComponent(embeddings: DataFrame, dim: Int = 64,
       quant: Long = 1000L, iters: Int = 2,
@@ -965,57 +962,8 @@ object Similarity {
     */
   private def scaledCovariance(embeddings: DataFrame, dim: Int,
       quant: Long, vecCol: String): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val d = dim
-    val q = embeddings
-      .where(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(expr(s"transform($vecCol, " +
-        s"x -> CAST(floor(CAST(x AS DOUBLE) * $quant) AS BIGINT))").as("qv"))
-      .as[Seq[Long]]
-    val raw = q.mapPartitions { it =>
-      val s = new Array[Long](d)
-      val xy = new Array[Long](d * d) // j >= i cells used (diag kept)
-      var n = 0L
-      while (it.hasNext) {
-        val arr = it.next().toArray
-        var i = 0
-        while (i < d) {
-          val xi = arr(i)
-          s(i) += xi
-          var j = i
-          while (j < d) { xy(i * d + j) += xi * arr(j); j += 1 }
-          i += 1
-        }
-        n += 1L
-      }
-      if (n == 0L) Iterator.empty
-      else {
-        val out = Array.newBuilder[(Int, Int, Long)]
-        out += ((-1, -1, n))
-        var i = 0
-        while (i < d) {
-          out += ((i + 1, -1, s(i)))
-          var j = i
-          while (j < d) { out += ((i + 1, j + 1, xy(i * d + j))); j += 1 }
-          i += 1
-        }
-        out.result().iterator
-      }
-    }.toDF("i", "j", "v")
-    val agg = raw.groupBy("i", "j").agg(sum(col("v")).as("v"))
-      .localCheckpoint() // tiny (d²/2 rows); every branch below reads it
-    val nDf = agg.where(col("i") === -1 && col("j") === -1)
-      .select(col("v").as("n"))
-    val sums = agg.where(col("j") === -1 && col("i") >= 1)
-      .select(col("i"), col("v").as("sx"))
-    val upper = agg.where(col("i") >= 1 && col("j") >= 1)
-      .crossJoin(broadcast(nDf))
-      .join(broadcast(sums.select(col("i"), col("sx").as("sx_i"))), "i")
-      .join(broadcast(sums.select(col("i").as("j"), col("sx").as("sx_j"))),
-        "j")
-      .select(col("i"), col("j"),
-        (col("n") * col("v") - col("sx_i") * col("sx_j")).as("a"))
+    val upper = Stats.gramCovariance(embeddings, dim, quant, vecCol)
+      .select(col("i"), col("j"), col("cov_num").as("a"))
     // mirror the strict upper triangle to get the full symmetric A,
     // then self-scale entries to milli of the matrix max — |A| ≤ 10³
     // caps every later matvec at d·10⁶, so `u·1000` can never leave

@@ -469,10 +469,25 @@ object Stats {
 
   /** Exact covariance numerators of the most-correlated embedding
     * dimension pairs — the whitening / redundant-dimension audit
-    * before PCA or product quantization. Values quantize to
-    * `floor(x·quant)` longs so sums are order-independent;
-    * `cov_num(i,j) = n·Σxy − Σx·Σy` is n² times the covariance,
-    * sign and ranking preserved, integer-exact.
+    * before PCA or product quantization: the off-diagonal cells of
+    * [[gramCovariance]], ranked by `|cov_num|`.
+    */
+  def gramTopPairs(embeddings: DataFrame, dim: Int = 64, quant: Long = 1000L,
+      topN: Int = 20, vecCol: String = "embedding"): DataFrame =
+    gramCovariance(embeddings, dim, quant, vecCol)
+      .where(col("i") < col("j"))
+      .select(col("i").as("dim_i"), col("j").as("dim_j"), col("n"),
+        col("v").as("sxy"), col("sx_i"), col("sx_j"), col("cov_num"))
+      .orderBy(abs(col("cov_num")).desc, col("dim_i"), col("dim_j"))
+      .limit(topN)
+
+  /** The exact covariance numerators of an embedding's dimensions, one
+    * row per cell `i ≤ j` (1-based, diagonal included) — the Gram
+    * kernel of [[gramTopPairs]] and [[Similarity.powerComponent]].
+    * Values quantize to `floor(x·quant)` longs so sums are
+    * order-independent; `cov_num(i,j) = n·Σxy − Σx·Σy` is n² times the
+    * covariance, sign and ranking preserved, integer-exact. Rows:
+    * `(i, j, n, v = Σxᵢxⱼ, sx_i, sx_j, cov_num)`.
     *
     * Shape — this is the map-side Gram accumulation, NOT a pair
     * explosion: each partition folds its rows into one d-vector of
@@ -483,8 +498,8 @@ object Stats {
     * kilobytes. Long sums hold to ~10¹² rows at quant=10³; past
     * that, switch the accumulators to mean-centered decimal.
     */
-  def gramTopPairs(embeddings: DataFrame, dim: Int = 64, quant: Long = 1000L,
-      topN: Int = 20, vecCol: String = "embedding"): DataFrame = {
+  private[ops] def gramCovariance(embeddings: DataFrame, dim: Int,
+      quant: Long, vecCol: String): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val q = embeddings
@@ -495,7 +510,7 @@ object Stats {
     val d = dim
     val raw = q.mapPartitions { it =>
       val s = new Array[Long](d)
-      val xy = new Array[Long](d * d) // i<j cells used; flat for locality
+      val xy = new Array[Long](d * d) // j >= i cells used; flat for locality
       var n = 0L
       while (it.hasNext) {
         val arr = it.next().toArray
@@ -503,7 +518,7 @@ object Stats {
         while (i < d) {
           val xi = arr(i)
           s(i) += xi
-          var j = i + 1
+          var j = i
           while (j < d) { xy(i * d + j) += xi * arr(j); j += 1 }
           i += 1
         }
@@ -516,7 +531,7 @@ object Stats {
         var i = 0
         while (i < d) {
           out += ((i + 1, -1, s(i)))
-          var j = i + 1
+          var j = i
           while (j < d) { out += ((i + 1, j + 1, xy(i * d + j))); j += 1 }
           i += 1
         }
@@ -528,15 +543,12 @@ object Stats {
     val nDf = agg.where(col("i") === -1 && col("j") === -1)
       .select(col("v").as("n"))
     val sums = agg.where(col("j") === -1 && col("i") >= 1)
-    val pairs = agg.where(col("i") >= 1 && col("j") >= 1)
-    pairs.crossJoin(broadcast(nDf))
+    agg.where(col("i") >= 1 && col("j") >= 1)
+      .crossJoin(broadcast(nDf))
       .join(broadcast(sums.select(col("i"), col("v").as("sx_i"))), "i")
       .join(broadcast(sums.select(col("i").as("j"), col("v").as("sx_j"))), "j")
-      .select(col("i").as("dim_i"), col("j").as("dim_j"), col("n"),
-        col("v").as("sxy"), col("sx_i"), col("sx_j"),
+      .select(col("i"), col("j"), col("n"), col("v"), col("sx_i"), col("sx_j"),
         (col("n") * col("v") - col("sx_i") * col("sx_j")).as("cov_num"))
-      .orderBy(abs(col("cov_num")).desc, col("dim_i"), col("dim_j"))
-      .limit(topN)
   }
 
   /** CUSUM change detection over per-group daily counts, in closed

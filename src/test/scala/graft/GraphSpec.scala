@@ -7,6 +7,32 @@ import graft.ops.Graph
 class GraphSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
+  /** Jobs `body` starts on this thread, counted by a listener: a marker
+    * job after `body` closes the count, since listener events arrive in
+    * order. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse("<none>"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription("counted")
+      body
+      sc.setJobDescription("marker")
+      spark.range(1).count()
+      Iterator.continually(seen.poll(10, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(d => d != null && d != "marker").count(_ == "counted")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("deterministicWalks: every hop follows a real edge, replayably") {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L))
       .toDF("src", "dst")
@@ -107,16 +133,19 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
     // complete graph on 4 nodes, fed as DIRECTED duplicates (both
     // directions) to prove the undirected dedup
     val und = for { a <- 0L to 3L; b <- 0L to 3L if a != b } yield (a, b)
-    val r = Graph.triangleCount(und.toDF("src", "dst")).collect()
+    val r = Graph.triangleCountOriented(Graph.orientEdges(und.toDF("src", "dst")))
+      .collect()
       .map(x => x.getAs[Long]("node") -> x.getAs[Long]("triangles")).toMap
     assert(r === Map(0L -> 3L, 1L -> 3L, 2L -> 3L, 3L -> 3L))
   }
 
   test("triangleCount: a hub star has no triangles; closing one edge makes one") {
     val star = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L), (0L, 5L))
-    assert(Graph.triangleCount(star.toDF("src", "dst")).collect().isEmpty)
+    assert(Graph.triangleCountOriented(Graph.orientEdges(star.toDF("src", "dst")))
+      .collect().isEmpty)
     val closed = star :+ ((4L, 5L))
-    val r = Graph.triangleCount(closed.toDF("src", "dst")).collect()
+    val r = Graph.triangleCountOriented(Graph.orientEdges(closed.toDF("src", "dst")))
+      .collect()
       .map(x => x.getAs[Long]("node") -> x.getAs[Long]("triangles")).toMap
     assert(r === Map(0L -> 1L, 4L -> 1L, 5L -> 1L))
   }
@@ -137,7 +166,8 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
     } yield (a, b, c)
     val expected = triangles.flatMap(t => Seq(t._1, t._2, t._3))
       .groupBy(identity).map { case (n, xs) => n -> xs.size.toLong }
-    val got = Graph.triangleCount(edges.toDF("src", "dst"), topN = 1000)
+    val got = Graph.triangleCountOriented(Graph.orientEdges(edges.toDF("src", "dst")),
+        topN = 1000)
       .collect().map(x => x.getAs[Long]("node") -> x.getAs[Long]("triangles"))
       .toMap
     assert(got === expected)
@@ -164,7 +194,7 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
     //   4: d=1 → excluded
     val e = Seq((1L, 2L), (2L, 3L), (1L, 3L), (1L, 4L), (3L, 2L))
       .toDF("src", "dst") // one duplicate reversed edge — must dedup
-    val r = Graph.clusteringCoefficient(e).collect()
+    val r = Graph.clusteringCoefficientOriented(Graph.orientEdges(e)).collect()
       .map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2), x.getLong(3)))
       .toMap
     assert(r(2L) === ((2L, 1L, 1000000L)))
@@ -386,6 +416,36 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
       (6L, 7L)).toDF("src", "dst")
     val un = Graph.kCore(chain, k = 2L, rounds = 2).collect()
     assert(un.forall(!_.getAs[Boolean]("stable")))
+  }
+
+  test("kTruss: stable flag reports fixpoint vs still-peeling") {
+    import spark.implicits._
+    // K4 (every edge in two triangles) plus a triangle strip on 10-15
+    // (edges (i, i+1) and (i, i+2)): at k=4 round 1 keeps K4 and the
+    // strip's inner path (11,12),(12,13),(13,14); round 2 drops that
+    // path, whose triangles went with round 1
+    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
+    val strip = (10L to 14L).map(i => (i, i + 1)) ++
+      (10L to 13L).map(i => (i, i + 2))
+    val e = (k4 ++ strip).toDF("src", "dst")
+    val un = Graph.kTruss(e, k = 4L, rounds = 2).collect()
+    assert(un.length === 6 && un.forall(!_.getAs[Boolean]("stable")))
+    val st = Graph.kTruss(e, k = 4L, rounds = 3).collect()
+    assert(st.map(x => (x.getAs[Long]("u"), x.getAs[Long]("v"))).toSet === k4.toSet)
+    assert(st.forall(_.getAs[Boolean]("stable")))
+  }
+
+  test("kCore and kTruss: jobs per call are pinned; kTruss counts only " +
+      "its last two rounds") {
+    import spark.implicits._
+    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
+    val e = (k4 ++ Seq((4L, 5L), (5L, 6L), (4L, 6L), (6L, 7L)))
+      .toDF("src", "dst")
+    // both count only their last two rounds (kCore its alive nodes,
+    // kTruss its edges); a count() of a third round would add two jobs
+    // under AQE, the partial-count shuffle stage and the result stage
+    assert(jobsOf(Graph.kCore(e, k = 2L, rounds = 3)) === 22)
+    assert(jobsOf(Graph.kTruss(e, k = 3L, rounds = 3)) === 25)
   }
 
   test("avgNeighborDegree: star graph — spokes read the hub, hub reads spokes") {
