@@ -10,7 +10,9 @@ the change checkout, with the same arguments, alternating which side
 runs first. Both checkouts build their own program into their own
 .bench_build/. Prints every run (its e2e metrics, loadavg, steal and
 check verdict), then per end-to-end metric of BENCHMARK.json each
-side's median and quartiles and the change's wins, ties and losses.
+side's median and quartiles and the change's wins, ties and losses;
+runs with --trace 1 carry the per-layer metrics instead, which are
+summarised the same way.
 A gain holds when the change wins at least nine tenths of the pairs
 and the medians differ by more than the parent's interquartile range.
 Per seed it also says whether both sides printed the same per-operation
@@ -74,7 +76,9 @@ def main():
     ap.add_argument("--out", help="append every run as a JSON line")
     a = ap.parse_args()
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
-        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        bench = json.load(f)
+    better = {m["name"]: m["better"]
+              for m in bench["end_to_end"] + bench["per_layer"]}
 
     pairs = []
     for i, seed in enumerate(seeds(a.seeds)):
@@ -96,11 +100,15 @@ def main():
         pairs.append(pair)
 
     print(f"\n{a.workload}: {len(pairs)} pairs, --seconds {a.seconds} --trace {a.trace}")
-    print(f"{'metric':14s} {'parent q1/med/q3':>28s} {'change q1/med/q3':>28s} "
+    names = [n for n in better
+             if all(n in p[s]["metrics"] for p in pairs for s in p)]
+    if not names:
+        print("no metric of BENCHMARK.json is in every run")
+    width = max([14] + [len(n) for n in names])
+    print(f"{'metric':{width}s} {'parent q1/med/q3':>28s} {'change q1/med/q3':>28s} "
           "wins/ties/losses  gain")
-    for name, direction in better.items():
-        if not all(name in p[s]["metrics"] for p in pairs for s in p):
-            continue
+    for name in names:
+        direction = better[name]
         par = [p["parent"]["metrics"][name] for p in pairs]
         chg = [p["change"]["metrics"][name] for p in pairs]
         sign = 1 if direction == "lower" else -1
@@ -108,7 +116,7 @@ def main():
         ties = sum(x == y for x, y in zip(par, chg))
         pq, cq = quartiles(par), quartiles(chg)
         gain = (wins >= 0.9 * len(pairs) and sign * (pq[1] - cq[1]) > pq[2] - pq[0])
-        print(f"{name:14s} {'/'.join(f'{v:.4g}' for v in pq):>28s} "
+        print(f"{name:{width}s} {'/'.join(f'{v:.4g}' for v in pq):>28s} "
               f"{'/'.join(f'{v:.4g}' for v in cq):>28s} "
               f"{wins:>4d}/{ties}/{len(pairs) - wins - ties}         {'yes' if gain else 'no'}")
     bad = [(p[s]["seed"], s) for p in pairs for s in p if not p[s]["correct"]]

@@ -60,24 +60,14 @@ private[graft] object QueriesAlert {
   private lazy val orcTmpDir: String =
     java.nio.file.Files.createTempDirectory("graft-orc").toString
 
-  /** Session-scoped RAM-backed root for drain checkpoints. A drain's
-    * checkpoint (offset log, commit log, per-partition state deltas —
-    * dozens of small fsync'd files per stateful operator per batch)
-    * is pure throwaway coordination state, but Spark's DEFAULT temp
-    * checkpoint lands in java.io.tmpdir, which is disk-backed ext4
-    * here — so every equivalence-twin drain paid real disk fsyncs for
-    * state it deletes seconds later. One tmpfs root (/dev/shm when
-    * present) hosts every drain's checkpoint; each drain gets a fresh
-    * subdir (a reused dir would RESUME and skip the data batch) and
-    * deletes it on completion. Durability is not a goal by
-    * construction: these are single-host AvailableNow drains (local /
-    * local-cluster on one machine) whose restart story is "re-run the
-    * query" — a REAL multi-node deployment needs a shared checkpoint
-    * filesystem and uses the production entry points
-    * (StreamingPipeline/AlertaStreamMain, caller-supplied checkpoint),
-    * never this harness.
+  /** Session-scoped root for drain checkpoints, on tmpfs (/dev/shm)
+    * when present: a drain's checkpoint is throwaway coordination
+    * state. Each drain gets a fresh subdir (a reused dir would RESUME
+    * and skip the data batch) and deletes it on completion. The
+    * production entry points (StreamingPipeline, AlertaStreamMain)
+    * take a caller-supplied checkpoint instead.
     */
-  private lazy val drainCheckpointRoot: String = {
+  private[graft] lazy val drainCheckpointRoot: String = {
     val shm = new java.io.File("/dev/shm")
     val base =
       if (shm.isDirectory && shm.canWrite) shm.toPath
@@ -96,38 +86,45 @@ private[graft] object QueriesAlert {
   private val drainSeq = new java.util.concurrent.atomic.AtomicInteger
 
   /** Drain a streaming DataFrame into a memory sink (AvailableNow) and
-    * return the sink table. Streaming aggs materialize one state-store
-    * instance per shuffle partition per microbatch, so the fan-out is
-    * capped at 8 — never raised above a smaller session default. The
-    * sink is a temp view of `s`; a drain that throws drops it, so no
-    * partial table outlives the failure.
+    * return the sink table. The drain's checkpoint is private to one
+    * query, local, single-writer, deleted in `finally` and never
+    * restarted from, so the query starts under three settings that
+    * drop durability it cannot use (they reach only this query:
+    * `StreamExecution` clones the session conf when it is built):
+    *  - the FileSystem-based checkpoint manager renames with plain
+    *    `FileSystem.rename`; the default FileContext manager resolves
+    *    symlinks on every rename, which Hadoop's local file system does
+    *    by forking `readlink` when native Hadoop is absent;
+    *  - no checkpoint checksums: Spark's `.crc` sidecar per checkpoint
+    *    file guards only a restart, which a drain never makes;
+    *  - one shuffle partition: each stateful operator keeps one state
+    *    store instead of one per partition; drains replay test tables
+    *    of at most sf0.1.
+    * The sink is a temp view of `s`; a drain that throws drops it, so
+    * no partial table outlives the failure.
     */
   private[graft] def drainToMemory(s: SparkSession, df: DataFrame, sink: String,
       mode: org.apache.spark.sql.streaming.OutputMode): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     s.catalog.dropTempView(sink)
-    val sp = "spark.sql.shuffle.partitions"
-    // cap the drain's state-store fan-out; if the conf isn't a plain
-    // int (e.g. a resolver value) leave it untouched rather than
-    // throw. The set/restore brackets this call — drains run
-    // driver-sequentially in Verify/Bench, never while other work
-    // shares the session.
-    val sp0 = scala.util.Try(s.conf.get(sp).toInt).toOption
-    sp0.foreach(v => s.conf.set(sp, math.min(v, 8).toString))
     val cp = new java.io.File(drainCheckpointRoot,
       s"${sink}_${drainSeq.incrementAndGet()}")
     try {
-      val q = df.writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", cp.getAbsolutePath)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      val q = graft.streaming.StreamingAlertsTws.withConf(s,
+          "spark.sql.streaming.checkpointFileManagerClass" ->
+            ("org.apache.spark.sql.execution.streaming.checkpointing." +
+              "FileSystemBasedCheckpointFileManager"),
+          "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "1") {
+        df.writeStream.format("memory").queryName(sink)
+          .option("checkpointLocation", cp.getAbsolutePath)
+          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      }
       q.awaitTermination()
     } catch { case e: Throwable =>
       s.catalog.dropTempView(sink)
       throw e
-    } finally {
-      sp0.foreach(v => s.conf.set(sp, v.toString))
-      deleteRec(cp)
-    }
+    } finally deleteRec(cp)
     s.table(sink)
   }
 

@@ -368,7 +368,7 @@ object Graph {
     * shuffle each against the already-partitioned edges, never an
     * edge re-shuffle. Rounds are fixed (`maxHops`), so plan depth is
     * static; each round materializes (localCheckpoint) to keep
-    * lineage flat.
+    * lineage flat, and the next round reads its frontier from it.
     */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int = 3,
       srcCol: String = "src", dstCol: String = "dst",
@@ -377,14 +377,13 @@ object Graph {
       .distinct().repartition(col("src")).localCheckpoint()
     val dist0 = seeds.select(col(seedCol).as("node")).distinct()
       .withColumn("hop", lit(0)).localCheckpoint()
-    var frontier = dist0.select("node")
     iterate(maxHops, dist0) { (dist, h) =>
-      val next = e.join(broadcast(frontier.withColumnRenamed("node", "src")),
-          "src")
+      val frontier = dist.where(col("hop") === h - 1)
+        .select(col("node").as("src"))
+      val next = e.join(broadcast(frontier), "src")
         .select(col("dst").as("node")).distinct()
         .join(broadcast(dist.select("node")), Seq("node"), "left_anti")
         .withColumn("hop", lit(h))
-      frontier = next.select("node")
       dist.union(next)
     }.last.orderBy("node")
   }

@@ -284,25 +284,26 @@ class NSeqTwsProcessor(name: String, slotSpecs: Seq[NSeqSlot],
   */
 object StreamingAlertsTws {
 
-  /** Runs `body` with the session's state store provider set to
-    * RocksDB (transformWithState requires it) and restores the previous
-    * value afterwards. A streaming query keeps the provider it was
-    * started with — `StreamExecution` clones the session conf when it
-    * is constructed — so wrapping a query's `start()` (or a drain that
-    * starts and finishes one) leaves queries started outside on the
-    * session default.
+  /** Runs `body` with `settings` on the session's conf, then restores
+    * the previous values. A streaming query keeps the conf it started
+    * with (`StreamExecution` clones it when constructed), so wrapping
+    * a query's `start()` leaves queries started outside untouched.
     */
-  def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  private[graft] def withConf[T](s: SparkSession, settings: (String, String)*)(
+      body: => T): T = {
+    val saved = settings.map { case (k, _) => k -> s.conf.getOption(k) }
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
     try body
-    finally saved match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
+    finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
     }
   }
+
+  /** [[withConf]] with the RocksDB state store transformWithState needs. */
+  def withRocksDb[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   /** Split a criteria string on top-level ANDs (outside parens and
     * single-quoted strings) — the corpus's criteria are conjunctions,

@@ -24,7 +24,7 @@ class BuiltinShadowSpec extends AnyFunSuite with SparkSuite {
 
   test("after Functions.register, Spark builtins keep their semantics " +
       "and a lake roundtrip still writes real hour partitions") {
-    Functions.register(spark)
+    Functions.ensureRegistered(spark)
 
     // ① builtin canaries THROUGH the registry (both SQL and DSL hit it)
     val r = spark.sql(
@@ -82,7 +82,7 @@ class BuiltinShadowSpec extends AnyFunSuite with SparkSuite {
     // pointless; and their presto_ twins must not be)
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-    Functions.register(spark)
+    Functions.ensureRegistered(spark)
     val reg = spark.sessionState.functionRegistry
     for (n <- Seq("split", "date_format", "from_unixtime", "contains",
         "element_at", "array_agg", "map_concat")) {

@@ -73,7 +73,7 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
     // these four are native Spark functions whose names AND argument
     // orders already match Presto, so a wild criteria using them needs
     // no rewrite and no registry shim — pin that contract per function
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql(
       """SELECT 'a-b-c' AS s, map('x', 1, 'y', 2) AS m,
         |       array('p', 'q') AS arr,
@@ -155,7 +155,7 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
 
   test("Presto 6th tranche: mixed-case TRY_CAST, array_sort comparator " +
       "lambda, json_array_length, regexp_like — through criteria text") {
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     val r = spark.sql(Criteria.rewrite(
       """SELECT Try_Cast('7' AS INTEGER) AS ok,
         |  TRY_CAST('x' AS INTEGER) AS bad,
@@ -209,7 +209,7 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
 
   test("seventh tranche: json_parse/json_format canonicalize, " +
       "at_timezone shifts fields, MAP(ARRAY, ARRAY) constructs") {
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql("SELECT TIMESTAMP '2024-03-15 22:45:12' AS ts")
     // canonical compact text: whitespace dropped, field order kept
     assert(row.where(Criteria.toColumn(
@@ -238,7 +238,7 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
 
   test("eighth tranche: Presto regex defaults (group 0, NULL on miss, " +
       "2-arg replace deletes), array repeat, last_day_of_month") {
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql(
       "SELECT 'click' AS s, TIMESTAMP '2024-02-10 09:00:00' AS ts")
     // 2-arg regexp_extract: WHOLE match (Spark's bare builtin would
@@ -268,7 +268,7 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
 
   test("ninth tranche: split_part NULL past the field count, format, " +
       "regexp_split, strrpos, from_base/to_base, IEEE predicates") {
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql("SELECT 'purchase' AS s, 255L AS n")
     // 1-based literal-delimiter split; index past the fields is NULL
     // (Spark's bare builtin would return '')
@@ -307,7 +307,7 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
   test("seventh-tranche parity set needs no shim: map_filter / " +
       "map_zip_with / array_position / negative-start slice / " +
       "ISO date_trunc('week')") {
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql("SELECT TIMESTAMP '2024-03-15 13:45:12' AS ts")
     assert(row.where(Criteria.toColumn(
       "cardinality(map_filter(MAP(ARRAY['a','b','c'], ARRAY[1, 2, 3]), " +
@@ -339,7 +339,7 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
   test("tenth tranche: width_bucket 4-arg + Presto array-bins form, " +
       "json_array_get with negative indexes, zip, and the parity set " +
       "(zip_with, 3-arg array_join, try)") {
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql("SELECT 'purchase' AS s")
     // 4-arg equi-width form delegates to the builtin expression
     assert(row.where(Criteria.toColumn(
@@ -385,7 +385,7 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
 
   test("eleventh tranche: levenshtein_distance, to_hex/from_hex, " +
       "codepoint, truncate toward zero, infinity()/nan(), ngrams") {
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql("SELECT 'purchase' AS s")
     assert(row.where(Criteria.toColumn(
       "levenshtein_distance('kitten', 'sitting') = 3 AND " +
@@ -412,7 +412,7 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
 
   test("twelfth tranche: url_extract_* family — host without port, " +
       "NULL absent components, per-name parameter, numeric port") {
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql(
       "SELECT 'https://u@Ex.com:8443/a/b?x=1&y=2#frag' AS u")
     assert(row.where(Criteria.toColumn(
@@ -434,7 +434,7 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
   test("thirteenth tranche: from_iso8601_date, cosine_similarity " +
       "(sparse maps), geometric_mean / histogram / multimap_agg " +
       "aggregates, and transform_keys/values parity") {
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql("SELECT 1 AS one")
     // Trino find_first composes from registered names instead of a
     // shim (lambda parents must be HOFs — see the tranche comment)
@@ -479,7 +479,7 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
   test("histogram / multimap_agg one-pass aggregates: shim-parity " +
       "entry order (keys ascending, values ascending nulls-first), " +
       "null-input skip vs null-key rejection, distributed merge") {
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     // distributed: 200 rows over 8 partitions force partial buffers
     // to serialize, shuffle, and merge — the TypedImperativeAggregate
     // round-trip the old regroup shim never exercised
@@ -537,7 +537,7 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
   test("reduce_agg: Presto fold contracts — null inputs skipped, " +
       "struct state survives the distributed serialize/merge " +
       "round-trip, and contract violations fail TYPED at analysis") {
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     // 8 partitions force partial-state serialization and combineFn
     // merges — the path a single-partition test never exercises
     spark.range(200).repartition(8)
@@ -588,7 +588,7 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
   test("histogram / multimap_agg float keys use SQL equality: -0.0 " +
       "and 0.0 land in ONE bucket (boxed JVM equality would split " +
       "them), top-level and nested, single-partition and merged") {
-    graft.functions.Functions.register(spark)
+    graft.functions.Functions.ensureRegistered(spark)
     // coalesce(1): the single-partition path never serializes the
     // buffer, so a missed normalization in update() shows up HERE
     // (the UnsafeProjection round-trip can mask it on shuffled paths)

@@ -211,6 +211,16 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
     assert(r === Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3)) // 5 is hop 4: cut
   }
 
+  test("bfsHops: each extra hop costs the same jobs (the frontier is " +
+      "read from the checkpointed state)") {
+    val e = (0L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
+    val seeds = Seq(0L).toDF("node")
+    val jobs = Seq(2, 4, 6, 8).map(h => jobsOf(Graph.bfsHops(e, seeds, h)))
+    // a frontier re-derived from every earlier round made this
+    // quadratic: 15 / 38 / 73 / 120 jobs
+    assert(jobs.sliding(2).map(p => p(1) - p(0)).toSet.size === 1, jobs)
+  }
+
   test("bfsHops keeps the MINIMUM hop on multi-path reachability") {
     // diamond with a shortcut: 1→2→4 and 1→4 — node 4 is hop 1, and
     // the 2-cycle 1↔2 must not re-enqueue visited nodes

@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -100,5 +104,65 @@ class StreamFamiliesSpec extends AnyFunSuite with SparkSuite {
     assert(member("ids", fail = false).count() === want)
     assert(member("types", fail = false).count() === want)
     assert(starts.n.get === 2)
+  }
+
+  test("a drain's checkpoint forks no readlink and writes no Spark " +
+      "checksum sidecar") {
+    val s = spark.newSession()
+    val root = java.nio.file.Paths.get(QueriesAlert.drainCheckpointRoot)
+    // the checkpoint is deleted when the drain returns, so a poller
+    // records what exists while it runs
+    val seen = ConcurrentHashMap.newKeySet[String]()
+    @volatile var polling = true
+    val poller = new Thread(() => while (polling) {
+      try Files.walk(root).iterator().asScala
+        .foreach(p => seen.add(root.relativize(p).toString))
+      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+      Thread.sleep(5)
+    })
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    poller.start()
+    val out = try rows(s, "q53_stream_threshold") finally {
+      polling = false
+      poller.join()
+      rec.stop()
+    }
+    val jfr = Files.createTempFile("drain", ".jfr")
+    val commands = try {
+      rec.dump(jfr)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+        .map(_.getString("command")).toSeq
+    } finally { rec.close(); Files.delete(jfr) }
+    val state = seen.asScala.filter(_.contains("/state/"))
+    assert(out.nonEmpty && state.exists(_.endsWith(".delta")))
+    val readlinks = commands.filter(_.startsWith("readlink"))
+    // Hadoop's own local-FS checksums are hidden (`.1.delta.crc`)
+    val sidecars = state.filter { p =>
+      val name = p.split('/').last
+      !name.startsWith(".") && name.endsWith(".delta.crc")
+    }
+    assert((readlinks.size, sidecars.size) === ((0, 0)),
+      (readlinks.take(2), sidecars.take(2)))
+  }
+
+  test("a drain's stateful operators run on one shuffle partition, and " +
+      "the session keeps its own setting") {
+    val parts = new ConcurrentLinkedQueue[Long]()
+    val done = new CountDownLatch(1)
+    val s = spark.newSession()
+    s.streams.addListener(new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(o => parts.add(o.numShufflePartitions))
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = done.countDown()
+    })
+    val sp = s.conf.get("spark.sql.shuffle.partitions")
+    assert(rows(s, "q53_stream_threshold").nonEmpty)
+    // listener events arrive in order: progress before termination
+    assert(done.await(30, TimeUnit.SECONDS))
+    assert(!parts.isEmpty && parts.asScala.forall(_ == 1L), parts)
+    assert(s.conf.get("spark.sql.shuffle.partitions") === sp)
   }
 }
