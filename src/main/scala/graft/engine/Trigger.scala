@@ -113,33 +113,27 @@ object Trigger {
 
   /** G3: fire on count <= threshold; absent events/groups synthesize
     * the deadman meta-event and a zero count (alerta.py:366-386).
+    *
+    * One plan: the groups are gathered into one list, and an empty list
+    * becomes the (key, 0) meta-group (alerta.py:384-386). Its attached
+    * events are empty by construction — no event can have key-value ==
+    * the key string when no event produced any key value at all (the
+    * reference's meta-event never matches either, alerta.py:399-403).
+    * One `__count <= threshold` filter then serves both cases, and the
+    * aggregation runs once. The gathered list is alert-scale: the
+    * runner caps the events of one evaluation (`limit`).
     */
   def deadman(events: DataFrame, spec: Doc, now: Instant = Dates.utcnow()): DataFrame = {
     val th = AlertDoc.int(spec, "threshold", 0)
     val key = aggKey(spec)
-    // materialized once: the emptiness probe is semantically required
-    // (a deadman's whole point is noticing absence), and without the
-    // checkpoint the aggregation would run twice — once for isEmpty,
-    // once for the real evaluation. The materialized relation is
-    // alert-scale (one row per group).
-    val g = grouped(events, key).localCheckpoint()
-    if (g.isEmpty) {
-      // No group has the aggregation key: fabricate a (key, 0) count
-      // (alerta.py:384-386). Its attached events are empty by
-      // construction — no event can have key-value == the key string
-      // when no event produced any key value at all (the reference's
-      // meta-event never matches either, alerta.py:399-403).
-      val spark = events.sparkSession
-      val evType = ArrayType(events.schema)
-      val fabricated = spark.range(1).select(
-        lit(key).as("__value"),
-        lit(0L).as("__count"),
-        from_json(lit("[]"), evType).as("__events"))
-      if (0 <= th) alertify(fabricated, spec, now, events.schema)
-      else alertify(fabricated.limit(0), spec, now, events.schema)
-    } else {
-      alertify(g.where(col("__count") <= th), spec, now, events.schema)
-    }
+    val g = grouped(events, key)
+    val meta = array(struct(lit(key).as("__value"), lit(0L).as("__count"),
+      from_json(lit("[]"), ArrayType(events.schema)).as("__events")))
+    val groups = g.agg(collect_list(struct(g.columns.map(col): _*)).as("__gs"))
+      .select(explode(when(size(col("__gs")) === 0, meta)
+        .otherwise(col("__gs"))).as("__g"))
+      .select("__g.*")
+    alertify(groups.where(col("__count") <= th), spec, now, events.schema)
   }
 
   private def aggKey(spec: Doc): String = AlertDoc.str(spec, "aggregation_key")

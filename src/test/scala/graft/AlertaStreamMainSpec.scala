@@ -184,4 +184,30 @@ class AlertaStreamMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(provider("spikes").endsWith("HDFSBackedStateStoreProvider"))
     assert(provider("heartbeat").endsWith("HDFSBackedStateStoreProvider"))
   }
+
+  test("a query that fails while running: the other sinks are written, " +
+      "no query is left active, and main rethrows") {
+    val root = Files.createTempDirectory("stream-main")
+    val specs = root.resolve("specs")
+    // ANSI casts throw on 'purchase' once the first batch runs
+    writeSpec(specs, "a_broken.yml",
+      """alert_name: broken
+        |alert_type: threshold
+        |criteria: CAST(event_type AS INT) > 0
+        |aggregation_key: user_id
+        |""")
+    writeSpec(specs, "b_threshold.yml", thresholdSpec)
+    writeSpec(specs, "c_deadman.yml", deadmanSpec)
+    addEvents(root.resolve("in"), "day1-0.parquet",
+      (at(10, 1), 1, "purchase", 1), (at(10, 2), 1, "purchase", 2),
+      (at(10, 0), 5, "heartbeat", 3), (at(12, 0), 9, "view", 4))
+    val streams = session().streams
+    val out = new java.io.ByteArrayOutputStream
+    intercept[Exception](Console.withOut(out)(run(root)))
+    assert(streams.active.isEmpty)
+    assert(out.toString.linesIterator
+      .exists(_.startsWith("""{"stream":"broken","failed":"""")), out)
+    assert(sink(root, "spikes") === Some(Seq(("1", "spikes: 1 x2"))))
+    assert(sink(root, "heartbeat").map(_.map(_._1)) === Some(Seq("5")))
+  }
 }

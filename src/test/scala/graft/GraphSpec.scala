@@ -7,32 +7,6 @@ import graft.ops.Graph
 class GraphSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
-  /** Jobs `body` starts on this thread, counted by a listener: a marker
-    * job after `body` closes the count, since listener events arrive in
-    * order. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse("<none>"))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobDescription("counted")
-      body
-      sc.setJobDescription("marker")
-      spark.range(1).count()
-      Iterator.continually(seen.poll(10, java.util.concurrent.TimeUnit.SECONDS))
-        .takeWhile(d => d != null && d != "marker").count(_ == "counted")
-    } finally {
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("deterministicWalks: every hop follows a real edge, replayably") {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L))
       .toDF("src", "dst")

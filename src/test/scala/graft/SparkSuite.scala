@@ -30,6 +30,32 @@ trait SparkSuite extends BeforeAndAfterAll { self: AnyFunSuite =>
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
+  /** Jobs `body` starts on this thread, counted by a listener: a marker
+    * job after `body` closes the count, since listener events arrive in
+    * order. */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse("<none>"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription("counted")
+      body
+      sc.setJobDescription("marker")
+      spark.range(1).count()
+      Iterator.continually(seen.poll(10, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(d => d != null && d != "marker").count(_ == "counted")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** What `body` logs under the named loggers, with its result. */
   def logged[A](loggers: String*)(body: => A): (A, Seq[String]) = {
     import org.apache.logging.log4j.LogManager

@@ -1,8 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, Semaphore, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -12,20 +12,34 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Drain honesty and session scope: a query that is alone in its
-  * stream drains on every run, a family shares one drain per session,
-  * and a drain that fails leaves nothing to reuse.
+/** Drain honesty: every call of a streaming query starts a streaming
+  * query of its own over the whole replay, and a drain that fails
+  * leaves nothing to reuse.
   */
 class StreamFamiliesSpec extends AnyFunSuite with SparkSuite {
 
-  /** Counts streaming queries started in the sessions it is added to
-    * (QueryStartedEvent reaches listeners on the starting thread).
+  /** Records the streaming queries started in the sessions it is added
+    * to (QueryStartedEvent reaches listeners on the starting thread)
+    * and the input rows each one processed.
     */
   class Starts extends StreamingQueryListener {
-    val n = new AtomicInteger
-    def onQueryStarted(e: QueryStartedEvent): Unit = n.incrementAndGet(): Unit
-    def onQueryProgress(e: QueryProgressEvent): Unit = ()
-    def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    val runs = new ConcurrentLinkedQueue[UUID]()
+    val input = new ConcurrentHashMap[UUID, java.lang.Long]()
+    val ended = new Semaphore(0)
+    def n: Int = runs.size
+    def onQueryStarted(e: QueryStartedEvent): Unit = runs.add(e.runId): Unit
+    def onQueryProgress(e: QueryProgressEvent): Unit =
+      input.merge(e.progress.runId, e.progress.numInputRows, (a, b) => a + b): Unit
+    def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.release()
+
+    /** Input rows of each started query, in start order, once all have
+      * terminated (listener events arrive in order: progress before
+      * termination).
+      */
+    def inputRows(): Seq[Long] = {
+      assert(ended.tryAcquire(n, 30, TimeUnit.SECONDS))
+      runs.asScala.toSeq.map(r => Option(input.get(r)).fold(0L)(_.longValue))
+    }
   }
 
   def session(starts: Starts): SparkSession = {
@@ -43,67 +57,66 @@ class StreamFamiliesSpec extends AnyFunSuite with SparkSuite {
       val s = session(starts)
       val first = rows(s, q)
       val second = rows(s, q)
-      assert(starts.n.get === 2, q)
+      assert(starts.n === 2, q)
       assert(first.nonEmpty, q)
       assert(second === first, q)
     }
   }
 
-  test("crawl family members share one drain per session, never across " +
-      "sessions") {
-    for ((q1, q2) <- Seq(
-        ("q104_stream_stream_join", "q394_stream_robots_gate"),
-        ("q350_stream_sequence", "q352_stream_sequence3"))) {
-      val starts = new Starts
-      val a = session(starts)
-      val a1 = rows(a, q1)
-      val a2 = rows(a, q2)
-      assert(starts.n.get === 1, q1)
-      val b = session(starts)
-      val b1 = rows(b, q1)
-      val b2 = rows(b, q2)
-      assert(starts.n.get === 2, q1)
-      assert(a1.nonEmpty && a2.nonEmpty, q1)
-      assert(b1 === a1, q1)
-      assert(b2 === a2, q2)
-    }
-  }
-
-  test("with the family sinks dropped before each call, every call of a " +
-      "member drains") {
+  test("each call of q104, q394, q350 and q352 starts one streaming query " +
+      "of its own over the whole replay") {
     val starts = new Starts
     val s = session(starts)
-    val runs = (1 to 3).map { _ =>
-      StreamFamilies.sinks(sf()).foreach(s.catalog.dropTempView)
-      rows(s, "q104_stream_stream_join")
-    }
-    assert(starts.n.get === 3)
-    assert(runs.head.nonEmpty && runs.forall(_ == runs.head))
+    val calls = Seq("q104_stream_stream_join", "q394_stream_robots_gate",
+      "q350_stream_sequence", "q352_stream_sequence3")
+    assert(calls.forall(rows(s, _).nonEmpty))
+    assert(starts.n === calls.size)
+    val input = starts.inputRows()
+    assert(input.forall(_ > 0), calls.zip(input))
   }
 
-  test("a family member whose drain fails leaves no view, and the next " +
-      "run re-drains") {
+  test("q384, q358 and q361 drain their own stream on every call") {
+    val starts = new Starts
+    val s = session(starts)
+    val calls = Seq("q384_crawl_batch_stream_equiv",
+      "q358_stream_sequence_middm", "q361_seq_batch_stream_equiv")
+    val runs = (1 to 2).map(_ => calls.map(rows(s, _)))
+    assert(starts.n === 2 * calls.size)
+    val input = starts.inputRows()
+    assert(input.forall(_ > 0), input)
+    assert(runs(1) === runs(0))
+  }
+
+  test("q120 upserts into a fresh checkpoint and table on every call") {
+    val starts = new Starts
+    val s = session(starts)
+    val first = rows(s, "q120_stream_upsert")
+    val second = rows(s, "q120_stream_upsert")
+    assert(starts.n === 2)
+    val input = starts.inputRows()
+    assert(input.forall(_ > 0), input)
+    assert(first.nonEmpty && second === first)
+  }
+
+  test("a drain that fails leaves no view, and the next drain into the " +
+      "same sink runs") {
     val starts = new Starts
     val s = session(starts)
     val dir = sf()
-    // `fail` is baked into the plan, and branches are rebuilt on every
-    // call, so the second call drains a healthy plan
-    def member(name: String, fail: Boolean) = {
-      val ev = QueriesAlert.tableStream(s, dir, "events")
+    // `fail` is baked into the plan, so the second drain runs a healthy one
+    def drain(fail: Boolean) = QueriesAlert.drainToMemory(s,
+      QueriesAlert.tableStream(s, dir, "events")
         .where(col("event_id").isNotNull)
-      StreamFamilies.slice(s, dir, "failfam", OutputMode.Append(), Seq(
-        "ids" -> ev.select(when(lit(fail), raise_error(lit("boom")))
+        .select(when(lit(fail), raise_error(lit("boom")))
           .otherwise(col("event_id")).cast("long").as("id")),
-        "types" -> ev.select(col("event_type"))), name)
-    }
-    intercept[Exception](member("ids", fail = true))
-    assert(starts.n.get === 1)
-    assert(!s.catalog.listTables().collect().exists(_.name.startsWith("failfam")))
+      "failing_sink", OutputMode.Append())
+    intercept[Exception](drain(fail = true))
+    assert(starts.n === 1)
+    assert(!s.catalog.tableExists("failing_sink"))
     val want = Tables(s, dir, "events").where(col("event_id").isNotNull)
       .count()
-    assert(member("ids", fail = false).count() === want)
-    assert(member("types", fail = false).count() === want)
-    assert(starts.n.get === 2)
+    assert(drain(fail = false).count() === want)
+    assert(starts.n === 2)
   }
 
   test("a drain's checkpoint forks no readlink and writes no Spark " +

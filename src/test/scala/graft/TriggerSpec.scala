@@ -95,6 +95,23 @@ class TriggerSpec extends AnyFunSuite with SparkSuite {
     assert(alerts.head.getAs[String]("summary") === "only 1 events from us-east-1")
   }
 
+  test("deadman is one plan: one aggregation exchange, and no more jobs " +
+      "than the checkpoint-then-probe evaluation it replaced") {
+    val spec = Shells.deadman(Map("aggregation_key" -> "region",
+      "summary" -> "Expected events are missing"))
+    // (events, jobs of the replaced evaluation, alerts): the key
+    // present (no alert) and absent (the fabricated (key, 0) alert)
+    for ((events, bound, fired) <- Seq((oneloginEvent, 5, 0),
+        (oneloginEvent.limit(0), 2, 1))) {
+      val df = Trigger.deadman(events, spec)
+      val plan = df.queryExecution.executedPlan.toString
+      assert("Exchange hashpartitioning".r.findAllMatchIn(plan).size <= 1, plan)
+      var alerts = -1
+      assert(jobsOf { alerts = df.collect().length } <= bound)
+      assert(alerts === fired)
+    }
+  }
+
   test("aggregation key across a JSON-string details column") {
     val events = spark.read.json(Seq(
       """{"source":"cloudtrail","eventid":"e1","details":"{\"useridentity\":{\"arn\":\"arn:x\"},\"sourceipaddress\":\"9.9.9.9\"}"}""",
