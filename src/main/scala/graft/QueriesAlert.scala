@@ -50,46 +50,13 @@ private[graft] object QueriesAlert {
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin
 
-  // one CSV scratch dir per JVM (overwritten per run) — a fresh temp
-  // dir per q39 invocation would leak a full table copy every bench/
-  // verify round
-  private lazy val csvTmpDir: String =
-    java.nio.file.Files.createTempDirectory("graft-csv").toString
-  private lazy val jsonlTmpDir: String =
-    java.nio.file.Files.createTempDirectory("graft-jsonl").toString
-  private lazy val orcTmpDir: String =
-    java.nio.file.Files.createTempDirectory("graft-orc").toString
-
-  /** Session-scoped root for drain checkpoints, on tmpfs (/dev/shm)
-    * when present: a drain's checkpoint is throwaway coordination
-    * state. Each drain gets a fresh subdir (a reused dir would RESUME
-    * and skip the data batch) and deletes it on completion. The
-    * production entry points (StreamingPipeline, AlertaStreamMain)
-    * take a caller-supplied checkpoint instead.
-    */
-  private[graft] lazy val drainCheckpointRoot: String = {
-    val shm = new java.io.File("/dev/shm")
-    val base =
-      if (shm.isDirectory && shm.canWrite) shm.toPath
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val root = java.nio.file.Files
-      .createTempDirectory(base, "graft_drains_").toFile
-    sys.addShutdownHook { deleteRec(root) }
-    root.getAbsolutePath
-  }
-
-  private[graft] def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(deleteRec))
-    f.delete(): Unit
-  }
-
-  private val drainSeq = new java.util.concurrent.atomic.AtomicInteger
-
   /** Drain a streaming DataFrame into a memory sink (AvailableNow) and
-    * return the sink table. The drain's checkpoint is private to one
-    * query, local, single-writer, deleted in `finally` and never
-    * restarted from, so the query starts under three settings that
-    * drop durability it cannot use (they reach only this query:
+    * return the sink table. The drain's checkpoint is a fresh
+    * [[Scratch]] directory (a reused one would RESUME and skip the
+    * data batch): private to one query, local, single-writer, deleted
+    * when the drain returns and never restarted from, so the query
+    * starts under three settings that drop durability it cannot use
+    * (they reach only this query:
     * `StreamExecution` clones the session conf when it is built):
     *  - the FileSystem-based checkpoint manager renames with plain
     *    `FileSystem.rename`; the default FileContext manager resolves
@@ -107,9 +74,7 @@ private[graft] object QueriesAlert {
       mode: org.apache.spark.sql.streaming.OutputMode): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     s.catalog.dropTempView(sink)
-    val cp = new java.io.File(drainCheckpointRoot,
-      s"${sink}_${drainSeq.incrementAndGet()}")
-    try {
+    try Scratch.withDir(sink) { cp =>
       val q = graft.streaming.StreamingAlertsTws.withConf(s,
           "spark.sql.streaming.checkpointFileManagerClass" ->
             ("org.apache.spark.sql.execution.streaming.checkpointing." +
@@ -124,7 +89,7 @@ private[graft] object QueriesAlert {
     } catch { case e: Throwable =>
       s.catalog.dropTempView(sink)
       throw e
-    } finally deleteRec(cp)
+    }
     s.table(sink)
   }
 
@@ -529,17 +494,18 @@ private[graft] object QueriesAlert {
     // covers the aggregated columns plus min/max of the id column, so
     // inference drift on the round-tripped ids fails the gate too.
     Q("q39_csv_roundtrip",
-      (s, dir) => {
+      (s, dir) => Scratch.withDir("q39") { tmp =>
+        val out = s"$tmp/csv"
         Tables(s, dir, "events").where(col("event_type") === "signup")
           .select("event_id", "user_id", "value")
-          .write.mode("overwrite").option("header", "true").csv(csvTmpDir)
-        s.read.option("header", "true").option("inferSchema", "true").csv(csvTmpDir)
+          .write.option("header", "true").csv(out)
+        s.read.option("header", "true").option("inferSchema", "true").csv(out)
           .groupBy("user_id")
           .agg(count(lit(1)).as("cnt"),
             sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"),
             min(col("event_id")).as("min_eid"), max(col("event_id")).as("max_eid"))
-          .orderBy("user_id")
-      },
+          .localCheckpoint()
+      }.orderBy("user_id"),
       Some("""SELECT user_id, COUNT(*) AS cnt,
              |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
              |  MIN(event_id) AS min_eid, MAX(event_id) AS max_eid
@@ -567,17 +533,18 @@ private[graft] object QueriesAlert {
     // re-derives the aggregate the oracle computes from the parquet
     // original — identity through the sink proves lossless transport.
     Q("q75_jsonl_roundtrip",
-      (s, dir) => {
+      (s, dir) => Scratch.withDir("q75") { tmp =>
+        val out = s"$tmp/jsonl"
         Tables(s, dir, "events").where(col("event_type") === "error")
           .select("event_id", "user_id", "props")
-          .write.mode("overwrite").json(jsonlTmpDir)
-        s.read.json(jsonlTmpDir)
+          .write.json(out)
+        s.read.json(out)
           .groupBy("user_id")
           .agg(count(lit(1)).as("cnt"),
             min(col("event_id")).as("min_eid"),
             countDistinct(get_json_object(col("props"), "$.k")).as("n_keys"))
-          .orderBy("user_id")
-      },
+          .localCheckpoint()
+      }.orderBy("user_id"),
       Some("""SELECT user_id, COUNT(*) AS cnt, MIN(event_id) AS min_eid,
              |  COUNT(DISTINCT json_extract_string(props, '$.k')) AS n_keys
              |FROM events WHERE event_type = 'error'
@@ -588,17 +555,18 @@ private[graft] object QueriesAlert {
     // survive natively — the read-back aggregate matches the oracle
     // computed from the parquet original.
     Q("q76_orc_roundtrip",
-      (s, dir) => {
+      (s, dir) => Scratch.withDir("q76") { tmp =>
+        val out = s"$tmp/orc"
         Tables(s, dir, "events").where(col("event_type") === "purchase")
           .select("event_id", "user_id", "ts", "value")
-          .write.mode("overwrite").orc(orcTmpDir)
-        s.read.orc(orcTmpDir)
+          .write.orc(out)
+        s.read.orc(out)
           .groupBy("user_id")
           .agg(count(lit(1)).as("cnt"),
             sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"),
             min(unix_timestamp(col("ts"))).as("min_epoch"))
-          .orderBy("user_id")
-      },
+          .localCheckpoint()
+      }.orderBy("user_id"),
       Some("""SELECT user_id, COUNT(*) AS cnt,
              |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
              |  CAST(floor(epoch(MIN(ts))) AS BIGINT) AS min_epoch
@@ -697,21 +665,25 @@ private[graft] object QueriesAlert {
     // the plain join (bucketing must not change a single row); cents
     // are per-row floors so the SUM is exact integer math.
     Q("q67_bucketed_join",
-      (s, dir) => {
-        graft.sources.Bucketing.writeBucketed(
-          Tables(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
-          "g_orders_b", "o_orderkey", 8)
-        graft.sources.Bucketing.writeBucketed(
-          Tables(s, dir, "lineitem").select("l_orderkey", "l_extendedprice"),
-          "g_lineitem_b", "l_orderkey", 8)
-        graft.sources.Bucketing.colocatedJoin(
-            s.table("g_orders_b"), s.table("g_lineitem_b"),
-            "o_orderkey", "l_orderkey")
-          .groupBy("o_orderpriority")
-          .agg(count(lit(1)).as("n_items"),
-            sum(floor(col("l_extendedprice") * 100).cast("long")).as("cents"))
-          .orderBy("o_orderpriority")
-      },
+      (s, dir) => Scratch.withDir("q67") { tmp =>
+        import graft.sources.Bucketing
+        try {
+          Bucketing.writeBucketed(
+            Tables(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
+            "g_orders_b", "o_orderkey", 8, s"$tmp/orders")
+          Bucketing.writeBucketed(
+            Tables(s, dir, "lineitem").select("l_orderkey", "l_extendedprice"),
+            "g_lineitem_b", "l_orderkey", 8, s"$tmp/lineitem")
+          Bucketing.colocatedJoin(
+              s.table("g_orders_b"), s.table("g_lineitem_b"),
+              "o_orderkey", "l_orderkey")
+            .groupBy("o_orderpriority")
+            .agg(count(lit(1)).as("n_items"),
+              sum(floor(col("l_extendedprice") * 100).cast("long")).as("cents"))
+            .localCheckpoint()
+        } finally Seq("g_orders_b", "g_lineitem_b")
+          .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+      }.orderBy("o_orderpriority"),
       Some("""SELECT o_orderpriority, COUNT(*) AS n_items,
              |  CAST(SUM(CAST(floor(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS cents
              |FROM orders JOIN lineitem ON o_orderkey = l_orderkey

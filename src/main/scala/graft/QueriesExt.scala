@@ -713,37 +713,6 @@ private[graft] object QueriesExt {
       },
       Some(RfmOracle)))
 
-  /** Per-JVM scratch root for source round-trips (same discipline as
-    * QueriesPipeline.lakeRoot: no cross-process overwrite races).
-    */
-  private lazy val extScratch: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ext_").toFile
-    sys.addShutdownHook {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-      }
-      del(dir)
-    }
-    dir.getAbsolutePath
-  }
-
-  /** Scratch subdir for a fixture whose FILE NAMES are data-derived
-    * (per-doc WARC members): keyed by the sf dir's path digest AND
-    * wiped before each write, because a directory-scan `load(out)`
-    * would otherwise read back stale per-doc files from a previous
-    * sf's doc-id set in the same JVM — extra rows the oracle doesn't
-    * have (ADVICE r12). The wipe is a handful of local files, noise
-    * against the query itself.
-    */
-  private def fixtureDir(prefix: String, sfDir: String): String = {
-    val out = new java.io.File(s"$extScratch/${prefix}_${Tables.sfTag(sfDir)}")
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-    }
-    del(out)
-    out.getAbsolutePath
-  }
-
   /** The sequence twins' specs: q350's 2-slot threshold→deadman and
     * the q352/q358/q361 longer chains, all on the one N-slot streaming
     * chain. Each query drains its own spec's chain in an AvailableNow
@@ -880,15 +849,15 @@ private[graft] object QueriesExt {
     // row per OBJECT, tokenized inside the PartitionReader), parsed
     // and aggregated — q16's oracle, through the connector.
     Q("q325_jsonblocks_v2_source",
-      (s, dir) => {
-        val out = s"$extScratch/q325_blocks"
+      (s, dir) => Scratch.withDir("q325") { tmp =>
+        val out = s"$tmp/blocks"
         Tables(s, dir, "documents")
           .groupBy("source")
           .agg(concat_ws("", collect_list(
             format_string("""{"doc_id":%d,"source":"%s"}""",
               col("doc_id"), col("source")))).as("value"))
           .select("value")
-          .write.mode("overwrite").text(out)
+          .write.text(out)
         s.read.format("graft.sources.JsonBlocksSource").load(out)
           .select(
             expr("cast(get_json_object(block, '$.doc_id') as bigint)")
@@ -897,8 +866,8 @@ private[graft] object QueriesExt {
           .groupBy("source")
           .agg(count(lit(1)).as("cnt"), min("doc_id").as("min_id"),
             max("doc_id").as("max_id"))
-          .orderBy("source")
-      },
+          .localCheckpoint()
+      }.orderBy("source"),
       Some("""SELECT source, COUNT(*) AS cnt, min(doc_id) AS min_id,
              |  max(doc_id) AS max_id
              |FROM documents GROUP BY source ORDER BY source"""
@@ -4566,8 +4535,8 @@ private[graft] object QueriesExt {
     // payload byte count (the text profile carried a declared 10
     // through), and the request record must declare its length too.
     Q("q412_warc_binary_source",
-      (s, dir) => {
-        val out = fixtureDir("q412_warc", dir)
+      (s, dir) => Scratch.withDir("q412") { tmp =>
+        val out = tmp.getPath
         val recs = Tables(s, dir, "events")
           .where(col("event_type").isNotNull && col("event_id").isNotNull)
           .groupBy(col("event_type"))
@@ -4608,8 +4577,8 @@ private[graft] object QueriesExt {
           .select(col("doc_id"), col("rec_idx"), col("warc_type"),
             col("target_uri"), col("content_length"),
             col("payload").cast("string").as("payload"))
-          .orderBy("doc_id", "rec_idx")
-      },
+          .localCheckpoint()
+      }.orderBy("doc_id", "rec_idx"),
       Some("""WITH e AS (SELECT event_type,
              |    CAST(MIN(event_id) AS BIGINT) AS doc_id
              |  FROM events
@@ -4698,8 +4667,8 @@ private[graft] object QueriesExt {
     // GIF 14+12·frames B) — so a silent stub fallback (wrong dims)
     // or a misframed record (wrong bytes) both hash-mismatch.
     Q("q414_warc_image_chain",
-      (s, dir) => {
-        val out = fixtureDir("q414_warc_img", dir)
+      (s, dir) => Scratch.withDir("q414") { tmp =>
+        val out = tmp.getPath
         val recs = Tables(s, dir, "events")
           .where(col("event_type").isNotNull && col("event_id").isNotNull)
           .groupBy(col("event_type"))
@@ -4743,8 +4712,8 @@ private[graft] object QueriesExt {
             pmod(col("doc_id"), lit(10L)).cast("int").as("rec_idx"),
             col("byte_len"), col("width"), col("height"),
             col("n_frames"), col("total_px"))
-          .orderBy("doc_id", "rec_idx")
-      },
+          .localCheckpoint()
+      }.orderBy("doc_id", "rec_idx"),
       Some("""WITH e AS (SELECT event_type,
              |    CAST(MIN(event_id) AS BIGINT) AS doc_id
              |  FROM events
@@ -4936,8 +4905,8 @@ private[graft] object QueriesExt {
     // and hash-mismatches — then recomputes the quality metrics over
     // that reconstruction (q366's restatement, over synthesized text).
     Q("q417_warc_html_text_chain",
-      (s, dir) => {
-        val out = fixtureDir("q417_warc_html", dir)
+      (s, dir) => Scratch.withDir("q417") { tmp =>
+        val out = tmp.getPath
         val recs = Tables(s, dir, "events")
           .where(col("event_type").isNotNull && col("event_id").isNotNull)
           .groupBy(col("event_type"))
@@ -4981,8 +4950,8 @@ private[graft] object QueriesExt {
         dt.join(g, Seq("doc_id"))
           .select("doc_id", "text", "n_blocks", "n_words", "mwl_ppm",
             "sym_ppm", "alpha_ppm", "stop_hits", "fail_mask", "keep")
-          .orderBy("doc_id")
-      },
+          .localCheckpoint()
+      }.orderBy("doc_id"),
       Some("""WITH e AS (SELECT event_type,
              |    CAST(MIN(event_id) AS BIGINT) AS doc_id
              |  FROM events

@@ -18,30 +18,6 @@ import graft.sources.{BloomSkipping, KeyedTable, Lake, Skipping, ZOrder}
 private[graft] object QueriesPipeline {
   import SparkEntryRegistry.Q
 
-  /** Per-JVM lake scratch root: two concurrent drivers (e.g. Bench and
-    * selfcheck on the same sf dir) must not race on a shared
-    * SaveMode.Overwrite path, so each process writes under its own
-    * temp dir; removed on JVM exit so /tmp doesn't accumulate lakes.
-    */
-  private lazy val lakeRoot: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lake_").toFile
-    sys.addShutdownHook {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-      }
-      del(dir)
-    }
-    dir.getAbsolutePath
-  }
-
-  // per-JVM guard for the q109 DPP lake fixture (see the in-query
-  // comment): lakeDir is keyed by Tables.sfTag (absolute-path digest),
-  // so two scale factors never alias even on equal basenames; content
-  // is a pure function of the events table, and a dir enters the set
-  // only after its write succeeded
-  private val dppLakes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   // the q231/q290 melted (column id, value) block — one source of
   // truth for the joinable-column candidate set in both oracles
   private val duckColumnsMelted: String =
@@ -791,18 +767,17 @@ private[graft] object QueriesPipeline {
     // directory at plan time (LakeSpec asserts the scan's partition
     // count). The oracle restates the hour slice as a ts range.
     Q("q51_lake_roundtrip",
-      (s, dir) => {
-        val lakeDir = s"$lakeRoot/${new java.io.File(dir).getName}"
+      (s, dir) => Scratch.withDir("q51") { lakeDir =>
         val day1 = Tables(s, dir, "events")
           .where(col("ts") < lit("2024-01-02").cast("timestamp"))
-        Lake.write(day1, lakeDir)
+        Lake.write(day1, lakeDir.getPath)
           .where(col("year") === "2024" && col("month") === "01" &&
             col("day") === "01" && col("hour") === "05")
           .groupBy("event_type")
           .agg(count(lit(1)).as("cnt"),
             sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-          .orderBy("event_type")
-      },
+          .localCheckpoint()
+      }.orderBy("event_type"),
       Some("""SELECT event_type, COUNT(*) AS cnt,
              |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
              |FROM events
@@ -971,13 +946,14 @@ private[graft] object QueriesPipeline {
     // also q47's DATA-COUPLED caveat above: the near stage relies on
     // band recall being complete on this corpus.
     Q("q57_incremental_dedup_served",
-      (s, dir) => {
+      (s, dir) => Scratch.withDir("q57") { tmp =>
         val docs = Tables(s, dir, "documents")
-        val sigDir = s"$lakeRoot/sigs_${new java.io.File(dir).getName}"
+        val sigDir = s"$tmp/sigs"
         DocDedup.signatures(docs.where(col("doc_id") % 5 =!= 0))
-          .write.mode("overwrite").parquet(sigDir)
+          .write.parquet(sigDir)
         DocDedup.incrementalFromSignatures(
           s.read.parquet(sigDir), docs.where(col("doc_id") % 5 === 0))
+          .localCheckpoint()
       },
       Some(duckIncrementalOracle)),
 
@@ -2255,9 +2231,6 @@ private[graft] object QueriesPipeline {
     // float algorithm made hash-checkable.
     Q("q86_pagerank_copurchase",
       (s, dir) => {
-        // shared materialized graph (CoPurchase): the co-purchase
-        // edge derivation is one lake asset reused by the whole graph
-        // family, not a per-query fact-table self-join
         val e = graft.ops.CoPurchase.directed(s, dir)
         graft.ops.Graph.pageRank(e)
           .withColumnRenamed("node", "part_id")
@@ -2832,19 +2805,16 @@ private[graft] object QueriesPipeline {
     // LakeSpec pins the file-count mechanics; here the gate checks
     // the data contract.
     Q("q108_lake_compact",
-      (s, dir) => {
-        val tag = new java.io.File(dir).getName
-        val srcDir = s"$lakeRoot/compact_src_$tag"
-        val outDir = s"$lakeRoot/compact_out_$tag"
+      (s, dir) => Scratch.withDir("q108") { tmp =>
         val day1 = Tables(s, dir, "events")
           .where(col("ts") < lit("2024-01-02").cast("timestamp"))
-        Lake.write(day1, srcDir, filesPerHour = 4)
-        Lake.compact(s, srcDir, outDir)
+        Lake.write(day1, s"$tmp/src", filesPerHour = 4)
+        Lake.compact(s, s"$tmp/src", s"$tmp/out")
           .groupBy("hour")
           .agg(count(lit(1)).as("cnt"),
             sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-          .orderBy("hour")
-      },
+          .localCheckpoint()
+      }.orderBy("hour"),
       Some("""SELECT lpad(CAST(EXTRACT(hour FROM ts) AS VARCHAR), 2, '0')
              |    AS hour,
              |  COUNT(*) AS cnt,
@@ -2861,26 +2831,9 @@ private[graft] object QueriesPipeline {
     // dynamicpruning expression in the scan). At 100 TB this is the
     // difference between scanning 11/24ths of the lake and all of it.
     Q("q109_dpp_join",
-      (s, dir) => {
-        // keyed by Tables.sfTag (path digest, not basename — equal
-        // basenames under different parents must not alias the
-        // write-once lake), and the guard is claimed only AFTER the
-        // write succeeds: a mid-write throw must not leave later
-        // runs reading a partial lake (ADVICE r12)
-        val lakeDir = s"$lakeRoot/dpp_${Tables.sfTag(dir)}"
+      (s, dir) => Scratch.withDir("q109") { lakeDir =>
         val ev = Tables(s, dir, "events").where(col("ts").isNotNull)
-        // the hour-partitioned lake is a PURE function of the events
-        // table — materialize once per sf dir (the CoPurchase-artifact
-        // discipline): the operator under test is the runtime-pruned
-        // READ, and re-paying the full-table write on every
-        // best-of-3 rep measured the fixture, not the pruning
-        val fact =
-          if (dppLakes.contains(lakeDir)) Lake.read(s, lakeDir)
-          else {
-            val f = Lake.write(ev, lakeDir)
-            dppLakes.add(lakeDir)
-            f
-          }
+        val fact = Lake.write(ev, lakeDir.getPath)
         val byHour = ev.groupBy(date_format(col("ts"), "HH").as("hour"))
           .agg(count(lit(1)).as("hcnt"))
         // the total via an empty-frame window, NOT a crossJoin with a
@@ -2904,8 +2857,8 @@ private[graft] object QueriesPipeline {
           .groupBy("hour")
           .agg(count(lit(1)).as("cnt"),
             sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-          .orderBy("hour")
-      },
+          .localCheckpoint()
+      }.orderBy("hour"),
       Some("""WITH e AS (SELECT * FROM events WHERE ts IS NOT NULL),
              |h AS (SELECT lpad(CAST(EXTRACT(hour FROM ts) AS VARCHAR),
              |          2, '0') AS hour, COUNT(*) AS hcnt
@@ -3023,16 +2976,15 @@ private[graft] object QueriesPipeline {
     // q42's transient estimate can't give. exact_users/sketch_days
     // hash-check; the estimate is a 5% accuracy contract like q42's.
     Q("q114_hll_persist_union",
-      (s, dir) => {
-        val tag = new java.io.File(dir).getName
-        val skDir = s"$lakeRoot/hll_$tag"
+      (s, dir) => Scratch.withDir("q114") { tmp =>
+        val skDir = s"$tmp/sketches"
         val ev = Tables(s, dir, "events")
           .where(col("user_id").isNotNull && col("ts").isNotNull)
           .select(col("event_type"),
             expr("unix_micros(ts) div 86400000000").as("day"), col("user_id"))
         ev.groupBy("event_type", "day")
           .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
-          .write.mode("overwrite").parquet(skDir)
+          .write.parquet(skDir)
         val merged = s.read.parquet(skDir)
           .groupBy("event_type")
           .agg(count(lit(1)).as("sketch_days"),
@@ -3043,8 +2995,8 @@ private[graft] object QueriesPipeline {
           .select(col("event_type"), col("exact_users"), col("sketch_days"),
             (abs(col("est") - col("exact_users")) <=
               col("exact_users") * 0.05).as("est_ok"))
-          .orderBy("event_type")
-      },
+          .localCheckpoint()
+      }.orderBy("event_type"),
       Some("""WITH e AS (SELECT event_type,
              |            epoch_us(ts) // 86400000000 AS day, user_id
              |          FROM events
@@ -3166,9 +3118,8 @@ private[graft] object QueriesPipeline {
     // final state equal ONE global latest-row-per-key statement —
     // which is the oracle.
     Q("q119_keyed_merge",
-      (s, dir) => {
-        val tag = new java.io.File(dir).getName
-        val tdir = s"$lakeRoot/keyed_$tag"
+      (s, dir) => Scratch.withDir("q119") { tmp =>
+        val tdir = s"$tmp/table"
         val ev = Tables(s, dir, "events")
           .where(col("user_id").isNotNull && col("ts").isNotNull)
           .select(col("user_id"), col("event_id"), col("ts"),
@@ -3180,8 +3131,8 @@ private[graft] object QueriesPipeline {
         KeyedTable.merge(s, tdir, ev.where(col("day") >= 19743).drop("day"),
           "user_id")
           .select("user_id", "event_id", "event_type", "vm")
-          .orderBy("user_id")
-      },
+          .localCheckpoint()
+      }.orderBy("user_id"),
       Some("""WITH e AS (SELECT user_id, event_id, event_type,
              |        CAST(floor(value*1000000) AS BIGINT) AS vm,
              |        epoch_us(ts) AS us,
@@ -3198,31 +3149,27 @@ private[graft] object QueriesPipeline {
     // whole point — ANY batching of the stream converges to the same
     // table, so the single global-latest oracle stays valid no matter
     // how the drain splits. Every call drains into a fresh checkpoint
-    // and table, materializes the result and deletes both.
+    // and table in one scratch directory.
     Q("q120_stream_upsert",
-      (s, dir) => {
+      (s, dir) => Scratch.withDir("q120") { work =>
         import org.apache.spark.sql.streaming.Trigger
-        val work = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(lakeRoot), "upsert_").toFile
         val tdir = s"$work/table"
-        try {
-          val src = QueriesAlert.eventStream(s, dir)
-            .where(col("user_id").isNotNull && col("ts").isNotNull)
-            .select(col("user_id"), col("event_id"), col("ts"),
-              col("event_type"), floor(col("value") * 1e6).cast("long").as("vm"))
-            .withColumn("deleted", col("event_type") === "click")
-          val upsert: (org.apache.spark.sql.DataFrame, Long) => Unit =
-            (b, _) => { KeyedTable.merge(s, tdir, b, "user_id"); () }
-          val q = src.writeStream
-            .option("checkpointLocation", s"$work/ckpt")
-            .foreachBatch(upsert)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          KeyedTable.read(s, tdir)
-            .select("user_id", "event_id", "event_type", "vm")
-            .localCheckpoint().orderBy("user_id")
-        } finally QueriesAlert.deleteRec(work)
-      },
+        val src = QueriesAlert.eventStream(s, dir)
+          .where(col("user_id").isNotNull && col("ts").isNotNull)
+          .select(col("user_id"), col("event_id"), col("ts"),
+            col("event_type"), floor(col("value") * 1e6).cast("long").as("vm"))
+          .withColumn("deleted", col("event_type") === "click")
+        val upsert: (org.apache.spark.sql.DataFrame, Long) => Unit =
+          (b, _) => { KeyedTable.merge(s, tdir, b, "user_id"); () }
+        val q = src.writeStream
+          .option("checkpointLocation", s"$work/ckpt")
+          .foreachBatch(upsert)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        KeyedTable.read(s, tdir)
+          .select("user_id", "event_id", "event_type", "vm")
+          .localCheckpoint()
+      }.orderBy("user_id"),
       Some("""WITH e AS (SELECT user_id, event_id, event_type,
              |        CAST(floor(value*1000000) AS BIGINT) AS vm,
              |        epoch_us(ts) AS us,
@@ -3259,9 +3206,8 @@ private[graft] object QueriesPipeline {
     // exact — so the oracle is the plain full-scan filter.
     // SkippingSpec pins that the prune actually drops files.
     Q("q122_file_skipping",
-      (s, dir) => {
-        val tag = new java.io.File(dir).getName
-        val zdir = s"$lakeRoot/skip_$tag"
+      (s, dir) => Scratch.withDir("q122") { tmp =>
+        val zdir = s"$tmp/z"
         val ev = Tables(s, dir, "events")
           .where(col("user_id").isNotNull && col("value").isNotNull)
           .select(col("event_id"), col("event_type"), col("user_id"),
@@ -3271,8 +3217,8 @@ private[graft] object QueriesPipeline {
         Skipping.readRange(s, zdir, "user_id", 100L, 300L)
           .groupBy("event_type")
           .agg(count(lit(1)).as("cnt"), sum(col("vm")).as("sum_micro"))
-          .orderBy("event_type")
-      },
+          .localCheckpoint()
+      }.orderBy("event_type"),
       Some("""SELECT event_type, COUNT(*) AS cnt,
              |  CAST(SUM(CAST(floor(value*1000000) AS BIGINT)) AS BIGINT)
              |    AS sum_micro
@@ -3361,15 +3307,14 @@ private[graft] object QueriesPipeline {
     // job or silently vanishing. The oracle re-derives both sides
     // from the documents table and the same % 50 rule.
     Q("q126_corrupt_quarantine",
-      (s, dir) => {
-        val tag = new java.io.File(dir).getName
-        val jdir = s"$lakeRoot/jsonl_corrupt_$tag"
+      (s, dir) => Scratch.withDir("q126") { tmp =>
+        val jdir = s"$tmp/jsonl"
         Tables(s, dir, "documents")
           .select(when(col("doc_id") % 50 === 0,
               concat(lit("{\"doc_id\":"), col("doc_id"), lit(",\"source\":\"")))
             .otherwise(to_json(struct(col("doc_id"), col("source"),
               col("text")))).as("value"))
-          .coalesce(1).write.mode("overwrite").text(jdir)
+          .coalesce(1).write.text(jdir)
         val read = s.read
           .schema("doc_id LONG, source STRING, text STRING, _corrupt_record STRING")
           .option("mode", "PERMISSIVE")
@@ -3384,8 +3329,8 @@ private[graft] object QueriesPipeline {
             .otherwise(col("source")).as("source"))
           .agg(count(lit(1)).as("cnt"),
             sum(length(col("text"))).as("sum_chars"))
-          .orderBy("source")
-      },
+          .localCheckpoint()
+      }.orderBy("source"),
       Some("""SELECT source, COUNT(*) AS cnt,
              |  CAST(SUM(length(text)) AS BIGINT) AS sum_chars
              |FROM documents WHERE doc_id % 50 <> 0
@@ -3526,26 +3471,25 @@ private[graft] object QueriesPipeline {
     // adding a column must never mean rewriting 100 TB of history.
     // The oracle re-derives both epochs from the same split rule.
     Q("q134_schema_evolution",
-      (s, dir) => {
-        val tag = new java.io.File(dir).getName
-        val root = s"$lakeRoot/evo_$tag"
+      (s, dir) => Scratch.withDir("q134") { tmp =>
+        val root = tmp.getPath
         val ev = Tables(s, dir, "events")
           .where(col("event_id").isNotNull && col("value").isNotNull)
           .select(col("event_id"), col("event_type"),
             floor(col("value") * 1e6).cast("long").as("vm"))
         ev.where(col("event_id") % 2 === 0)
           .select("event_id", "event_type")
-          .write.mode("overwrite").parquet(s"$root/epoch=1")
+          .write.parquet(s"$root/epoch=1")
         ev.where(col("event_id") % 2 === 1)
-          .write.mode("overwrite").parquet(s"$root/epoch=2")
+          .write.parquet(s"$root/epoch=2")
         s.read.option("mergeSchema", "true")
           .option("basePath", root).parquet(root)
           .groupBy("event_type", "epoch")
           .agg(count(lit(1)).as("cnt"),
             count(col("vm")).as("vm_present"),
             coalesce(sum(col("vm")), lit(0L)).as("sum_micro"))
-          .orderBy("event_type", "epoch")
-      },
+          .localCheckpoint()
+      }.orderBy("event_type", "epoch"),
       Some("""WITH e AS (SELECT event_id, event_type,
              |        CAST(floor(value*1000000) AS BIGINT) AS vm
              |      FROM events
@@ -3566,12 +3510,8 @@ private[graft] object QueriesPipeline {
     // the oracle; VersionedTableSpec pins the manifest mechanics
     // (untouched buckets share files across versions).
     Q("q135_time_travel",
-      (s, dir) => {
-        // versions are append-only, so reruns in one JVM must not
-        // stack onto an existing table — fresh dir per invocation
-        val tdir = java.nio.file.Files
-          .createTempDirectory(java.nio.file.Paths.get(lakeRoot), "vt_")
-          .toString + "/t"
+      (s, dir) => Scratch.withDir("q135") { tmp =>
+        val tdir = s"$tmp/t"
         val ev = Tables(s, dir, "events")
           .where(col("user_id").isNotNull && col("ts").isNotNull)
           .select(col("user_id"), col("event_id"), col("ts"),
@@ -3587,8 +3527,8 @@ private[graft] object QueriesPipeline {
           ev.where(col("day") >= 19743).drop("day"), "user_id")
         graft.sources.VersionedTable.read(s, tdir, version = 2)
           .select("user_id", "event_id", "event_type", "vm")
-          .orderBy("user_id")
-      },
+          .localCheckpoint()
+      }.orderBy("user_id"),
       Some("""WITH e AS (SELECT user_id, event_id, event_type,
              |        CAST(floor(value*1000000) AS BIGINT) AS vm,
              |        epoch_us(ts) AS us,
@@ -3606,10 +3546,8 @@ private[graft] object QueriesPipeline {
     // changed keys) — time travel making change capture a plain
     // full-outer join instead of a log subscription.
     Q("q136_version_diff",
-      (s, dir) => {
-        val tdir = java.nio.file.Files
-          .createTempDirectory(java.nio.file.Paths.get(lakeRoot), "vd_")
-          .toString + "/t"
+      (s, dir) => Scratch.withDir("q136") { tmp =>
+        val tdir = s"$tmp/t"
         val ev = Tables(s, dir, "events")
           .where(col("user_id").isNotNull && col("ts").isNotNull)
           .select(col("user_id"), col("event_id"), col("ts"),
@@ -3631,8 +3569,8 @@ private[graft] object QueriesPipeline {
               .when(col("old_id") =!= col("new_id"), "changed"))
           .where(col("status").isNotNull)
           .select("user_id", "status")
-          .orderBy("user_id")
-      },
+          .localCheckpoint()
+      }.orderBy("user_id"),
       Some("""WITH e AS (SELECT user_id, event_id,
              |        epoch_us(ts) AS us,
              |        epoch_us(ts) // 86400000000 AS day,
@@ -3661,10 +3599,8 @@ private[graft] object QueriesPipeline {
     // rewriting only the buckets they hash to. The read view then
     // equals "global latest, not deleted, key not purged".
     Q("q137_keyed_purge",
-      (s, dir) => {
-        val tdir = java.nio.file.Files
-          .createTempDirectory(java.nio.file.Paths.get(lakeRoot), "purge_")
-          .toString + "/t"
+      (s, dir) => Scratch.withDir("q137") { tmp =>
+        val tdir = s"$tmp/t"
         val ev = Tables(s, dir, "events")
           .where(col("user_id").isNotNull && col("ts").isNotNull)
           .select(col("user_id"), col("event_id"), col("ts"),
@@ -3675,8 +3611,8 @@ private[graft] object QueriesPipeline {
         KeyedTable.purge(s, tdir,
           (0L until 50L).toDF("user_id"), "user_id")
           .select("user_id", "event_id", "event_type", "vm")
-          .orderBy("user_id")
-      },
+          .localCheckpoint()
+      }.orderBy("user_id"),
       Some("""WITH e AS (SELECT user_id, event_id, event_type,
              |        CAST(floor(value*1000000) AS BIGINT) AS vm,
              |        epoch_us(ts) AS us,
@@ -3909,9 +3845,8 @@ private[graft] object QueriesPipeline {
     // full-scan filter with zero bloom restatement; BloomSkippingSpec
     // pins the pruning itself on a clustered fixture.
     Q("q143_bloom_point_lookup",
-      (s, dir) => {
-        val tag = new java.io.File(dir).getName
-        val bdir = s"$lakeRoot/bloomskip_$tag"
+      (s, dir) => Scratch.withDir("q143") { tmp =>
+        val bdir = s"$tmp/t"
         val ev = Tables(s, dir, "events")
           .where(col("user_id").isNotNull && col("value").isNotNull &&
             col("ts").isNotNull)
@@ -3920,7 +3855,7 @@ private[graft] object QueriesPipeline {
         // time-layout write: range-partition by ts, the layout a log
         // naturally arrives in — user_id is scattered across files
         ev.repartitionByRange(16, col("ts"))
-          .write.mode("overwrite").parquet(bdir)
+          .write.parquet(bdir)
         BloomSkipping.buildIndex(s, bdir, "user_id")
         // deterministic lookup set: the three smallest active users
         val keys = ev.select(col("user_id")).distinct()
@@ -3931,8 +3866,8 @@ private[graft] object QueriesPipeline {
           .agg(count(lit(1)).as("cnt"),
             sum(col("vm")).as("sum_micro"),
             countDistinct(col("event_type")).as("n_types"))
-          .orderBy("user_id")
-      },
+          .localCheckpoint()
+      }.orderBy("user_id"),
       Some("""WITH b AS (SELECT event_id, user_id, event_type,
              |        CAST(floor(value*1000000) AS BIGINT) AS vm
              |      FROM events
@@ -8306,10 +8241,9 @@ private[graft] object QueriesPipeline {
     // milli): the assortativity / hub-attachment diagnostic, one
     // degree join — no iteration.
     Q("q288_avg_neighbor_degree",
-      // shared materialized graph (CoPurchase): avgNeighborDegree
-      // dedupes its edge input internally, so the pre-distincted
-      // both-orientations view is result-identical to the inline
-      // a.p =!= b.p self-join this query used to pay per run
+      // avgNeighborDegree dedupes its edge input internally, so the
+      // distinct both-orientations view (CoPurchase) is
+      // result-identical to the oracle's a.p <> b.p self-join
       (s, dir) => Graph.avgNeighborDegree(
         graft.ops.CoPurchase.directed(s, dir)),
       Some("""WITH li AS (SELECT l_orderkey AS o, l_partkey AS p

@@ -45,9 +45,8 @@ object Tables {
     * WRITE-ONCE INVARIANT (ADVICE r14): the cache is per-path and
     * never invalidated, so it may only be used for paths whose
     * schema cannot change within a JVM — the driver-generated
-    * testdata tables and the write-once per-(JVM, sf) artifacts
-    * (CoPurchase). Paths that are REWRITTEN in-process (lake/merge
-    * dirs, scratch fixtures) must keep raw `spark.read.parquet`.
+    * testdata tables. Paths the program writes ([[Scratch]]
+    * directories, lake/merge dirs) must keep raw `spark.read.parquet`.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String,
@@ -57,20 +56,6 @@ object Tables {
     val sch = schemaCache.computeIfAbsent(path,
       p => spark.read.parquet(p).schema)
     spark.read.schema(sch).parquet(path)
-  }
-
-  /** Collision-proof tag for a scale-factor dir, for keying per-sf
-    * fixture/lake paths: the basename for readability plus a digest
-    * of the ABSOLUTE path — two sf dirs with equal basenames under
-    * different parents must never alias a keyed fixture (a write-once
-    * guard like q109's lake would silently serve the first sf's data
-    * to the second).
-    */
-  def sfTag(sfDir: String): String = {
-    val f = new java.io.File(sfDir)
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(f.getAbsolutePath.getBytes("UTF-8"))
-    f.getName + "_" + md.take(4).map("%02x".format(_)).mkString
   }
 
   /** ns→µs coercion for nanosAsLong-read timestamp columns; shared by

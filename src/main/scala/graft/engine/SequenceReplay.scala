@@ -145,95 +145,96 @@ object SequenceReplay {
       Some(lake.where(Criteria.toColumn(criteria) &&
         col(tsField) <= lit(java.sql.Timestamp.from(now))))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-replay").toString
-    val alerts = new AlertStore(dir)
-    val inflight = new InflightStore(dir)
-    val engine = new SequenceEngine(spark, alerts, inflight, fetch, idField)
+    graft.Scratch.withDir("replay") { dir =>
+      val alerts = new AlertStore(dir.getPath)
+      val inflight = new InflightStore(dir.getPath)
+      val engine = new SequenceEngine(spark, alerts, inflight, fetch, idField)
 
-    def firstUnfilled(doc: Doc): Int =
-      AlertDoc.docs(doc, "slots").indexWhere(s => !s.contains("triggered"))
-    def keyOf(doc: Doc): String =
-      AlertDoc.str(meta(AlertDoc.docs(doc, "slots").head), "value")
-    def deadmanDeadline(doc: Doc, idx: Int): Instant = {
-      val ss = AlertDoc.docs(doc, "slots")
-      val prev = Dates.toUTC(AlertDoc.str(ss(idx - 1), "utctimestamp"))
-      val exp = Dates.toUTC(AlertDoc.str(doc, "expiration"))
-      val ownStr = AlertDoc.str(ss(idx), "lifespan", "")
-      if (ownStr.isEmpty) exp
-      else Seq(prev.plus(Dates.interval(ownStr)), exp).min
-    }
-
-    val ticks = scala.collection.mutable.TreeSet.empty[Instant]
-    // a threshold-T slot cannot trip before its T-th candidate event
-    // exists, so the earlier ticks are provably no-op engine runs —
-    // schedule from the T-th candidate onward only
-    val thr0 = math.max(AlertDoc.int(slots.head, "threshold", 1), 1)
-    famTs.head.values.foreach(_.drop(thr0 - 1).foreach(ticks += _))
-    val tripped = scala.collection.mutable.Set.empty[String]
-
-    // only strictly-FUTURE ticks may be (re-)scheduled — consumed tick
-    // times would otherwise re-enter the set every loop iteration and
-    // the replay would spin on an unadvanceable doc forever
-    def schedule(doc: Doc): Unit = {
-      val idx = firstUnfilled(doc)
-      if (idx > 0) {
+      def firstUnfilled(doc: Doc): Int =
+        AlertDoc.docs(doc, "slots").indexWhere(s => !s.contains("triggered"))
+      def keyOf(doc: Doc): String =
+        AlertDoc.str(meta(AlertDoc.docs(doc, "slots").head), "value")
+      def deadmanDeadline(doc: Doc, idx: Int): Instant = {
         val ss = AlertDoc.docs(doc, "slots")
-        if (AlertDoc.str(ss(idx), "alert_type") == "deadman") {
-          val dl = deadmanDeadline(doc, idx)
-          if (dl.isAfter(now)) ticks += dl
-        } else {
-          val prev = Dates.toUTC(AlertDoc.str(ss(idx - 1), "utctimestamp"))
-          val exp = Dates.toUTC(AlertDoc.str(doc, "expiration"))
-          val thr = math.max(AlertDoc.int(ss(idx), "threshold", 1), 1)
-          famTs(idx).getOrElse(keyOf(doc), Vector.empty)
-            .filter(t => t.isAfter(prev) && !t.isAfter(exp))
-            .drop(thr - 1) // can't trip before the T-th in-window candidate
-            .filter(_.isAfter(now))
-            .foreach(ticks += _)
-        }
+        val prev = Dates.toUTC(AlertDoc.str(ss(idx - 1), "utctimestamp"))
+        val exp = Dates.toUTC(AlertDoc.str(doc, "expiration"))
+        val ownStr = AlertDoc.str(ss(idx), "lifespan", "")
+        if (ownStr.isEmpty) exp
+        else Seq(prev.plus(Dates.interval(ownStr)), exp).min
       }
-    }
 
-    while (ticks.nonEmpty) {
-      now = ticks.head
-      ticks -= now
-      // the reference's phase order (Q4): expiry, inflight, definitions
-      engine.expireSequenceAlerts(now)
-      inflight.all().foreach { doc =>
+      val ticks = scala.collection.mutable.TreeSet.empty[Instant]
+      // a threshold-T slot cannot trip before its T-th candidate event
+      // exists, so the earlier ticks are provably no-op engine runs —
+      // schedule from the T-th candidate onward only
+      val thr0 = math.max(AlertDoc.int(slots.head, "threshold", 1), 1)
+      famTs.head.values.foreach(_.drop(thr0 - 1).foreach(ticks += _))
+      val tripped = scala.collection.mutable.Set.empty[String]
+
+      // only strictly-FUTURE ticks may be (re-)scheduled — consumed tick
+      // times would otherwise re-enter the set every loop iteration and
+      // the replay would spin on an unadvanceable doc forever
+      def schedule(doc: Doc): Unit = {
         val idx = firstUnfilled(doc)
         if (idx > 0) {
           val ss = AlertDoc.docs(doc, "slots")
-          val due =
-            if (AlertDoc.str(ss(idx), "alert_type") == "deadman")
-              deadmanDeadline(doc, idx) == now
-            else famTs(idx).getOrElse(keyOf(doc), Vector.empty).contains(now)
-          if (due) engine.processSequenceAlert(doc, now)
+          if (AlertDoc.str(ss(idx), "alert_type") == "deadman") {
+            val dl = deadmanDeadline(doc, idx)
+            if (dl.isAfter(now)) ticks += dl
+          } else {
+            val prev = Dates.toUTC(AlertDoc.str(ss(idx - 1), "utctimestamp"))
+            val exp = Dates.toUTC(AlertDoc.str(doc, "expiration"))
+            val thr = math.max(AlertDoc.int(ss(idx), "threshold", 1), 1)
+            famTs(idx).getOrElse(keyOf(doc), Vector.empty)
+              .filter(t => t.isAfter(prev) && !t.isAfter(exp))
+              .drop(thr - 1) // can't trip before the T-th in-window candidate
+              .filter(_.isAfter(now))
+              .foreach(ticks += _)
+          }
         }
       }
-      val defDue = famTs.head.exists { case (k, v) =>
-        !tripped(k) && v.contains(now) }
-      if (defDue) {
-        engine.processSequenceAlert(spec, now)
-        inflight.all().foreach(d => tripped += keyOf(d))
-      }
-      engine.createSequenceAlerts()
-      inflight.all().foreach(schedule)
-    }
 
-    val lastThr = slots.lastIndexWhere(sl =>
-      AlertDoc.str(sl, "alert_type", "threshold") == "threshold")
-    alerts.all()
-      .filter(d => AlertDoc.str(d, "alert_name") == name)
-      .map { d =>
-        val ss = AlertDoc.docs(d, "slots")
-        val dm =
-          if (AlertDoc.str(ss.last, "alert_type") == "deadman")
-            AlertDoc.long(meta(ss.last), "count", 0L)
-          else 0L
-        Fired(keyOf(d),
-          us(Dates.toUTC(AlertDoc.str(ss.head, "utctimestamp"))),
-          us(Dates.toUTC(AlertDoc.str(ss(lastThr), "utctimestamp"))),
-          dm)
+      while (ticks.nonEmpty) {
+        now = ticks.head
+        ticks -= now
+        // the reference's phase order (Q4): expiry, inflight, definitions
+        engine.expireSequenceAlerts(now)
+        inflight.all().foreach { doc =>
+          val idx = firstUnfilled(doc)
+          if (idx > 0) {
+            val ss = AlertDoc.docs(doc, "slots")
+            val due =
+              if (AlertDoc.str(ss(idx), "alert_type") == "deadman")
+                deadmanDeadline(doc, idx) == now
+              else famTs(idx).getOrElse(keyOf(doc), Vector.empty).contains(now)
+            if (due) engine.processSequenceAlert(doc, now)
+          }
+        }
+        val defDue = famTs.head.exists { case (k, v) =>
+          !tripped(k) && v.contains(now) }
+        if (defDue) {
+          engine.processSequenceAlert(spec, now)
+          inflight.all().foreach(d => tripped += keyOf(d))
+        }
+        engine.createSequenceAlerts()
+        inflight.all().foreach(schedule)
       }
+
+      val lastThr = slots.lastIndexWhere(sl =>
+        AlertDoc.str(sl, "alert_type", "threshold") == "threshold")
+      alerts.all()
+        .filter(d => AlertDoc.str(d, "alert_name") == name)
+        .map { d =>
+          val ss = AlertDoc.docs(d, "slots")
+          val dm =
+            if (AlertDoc.str(ss.last, "alert_type") == "deadman")
+              AlertDoc.long(meta(ss.last), "count", 0L)
+            else 0L
+          Fired(keyOf(d),
+            us(Dates.toUTC(AlertDoc.str(ss.head, "utctimestamp"))),
+            us(Dates.toUTC(AlertDoc.str(ss(lastThr), "utctimestamp"))),
+            dm)
+        }
+    }
   }
 }

@@ -3,85 +3,38 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared, materialized-once co-purchase graph.
+/** The co-purchase graph the Graph queries share (PageRank,
+  * triangles, clustering coefficient, label propagation, k-core,
+  * k-truss, link prediction, PPR, the DeepWalk corpus): parts are
+  * nodes, an edge joins two parts that share a lineitem order.
   *
-  * Nine registered graph queries (PageRank, triangles, clustering
-  * coefficient, label propagation, k-core, k-truss, link prediction,
-  * PPR) analyze the same derived graph: parts are nodes, an edge
-  * joins two parts that share a lineitem order. Re-deriving the ~1M
-  * edge self-join from the fact table per query is correct but pays
-  * the derivation N times per run — at 100 TB the derived graph is a
-  * lake asset you materialize ONCE (one shuffle over the fact table)
-  * and every downstream algorithm scans the compact edge parquet
-  * instead of the fact table (the same persisted-artifact story as
-  * [[Ivf.buildIndex]]'s q36 index).
-  *
-  * Only the canonical u<v distinct edge set is persisted — the
-  * both-orientations view is a cheap union-flip on read, never a
-  * second derivation. Keyed by the sf-dir tag; computeIfAbsent makes
-  * concurrent first callers of one tag build exactly once.
+  * Each builder returns the plain derivation from the fact table; the
+  * [[Graph]] operator that consumes it materializes its edge input
+  * (localCheckpoint) once per call, so every call derives the graph
+  * itself and no call reads another call's data.
   *
   * Semantics: every consumer ([[Graph]] ops) dedupes its input edge
-  * set internally, so handing it the pre-distincted shared set is
+  * set internally, so handing it the distinct canonical set is
   * result-identical to each query's inline derivation — the oracles
   * (all of which restate `DISTINCT` edges) are unchanged.
   */
 object CoPurchase {
 
-  /** Per-JVM scratch root (same contract as the query registry's
-    * lakeRoot: two concurrent processes must not race on one
-    * overwrite path; removed on JVM exit).
-    */
-  private lazy val root: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_graph_").toFile
-    sys.addShutdownHook {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-      }
-      del(dir)
-    }
-    dir.getAbsolutePath
-  }
-
-  private val paths = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def materialize(key: String)(build: => DataFrame): String =
-    paths.computeIfAbsent(key, _ => {
-      val p = s"$root/$key"
-      build.write.mode("overwrite").parquet(p)
-      p
-    })
-
-  /** Cache tag: basename + a hash of the CANONICAL path, so two sf
-    * dirs that share a basename (/a/sf1 vs /b/sf1) never alias to one
-    * cached graph in the same JVM. Basename kept for debuggability.
-    */
-  private def tag(dir: String): String = {
-    val f = new java.io.File(dir)
-    val canon = scala.util.Try(f.getCanonicalPath)
-      .getOrElse(f.getAbsolutePath)
-    f"${f.getName}_${canon.hashCode & 0x7fffffff}%08x"
-  }
-
   /** Canonical undirected co-purchase edges (src < dst, distinct)
-    * over the whole part catalog — derived once per sf dir, then a
-    * parquet scan.
+    * over the whole part catalog.
     */
   def undirected(s: SparkSession, dir: String): DataFrame = {
-    val p = materialize(s"und_${tag(dir)}") {
-      val li = graft.Tables(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      li.as("a").join(li.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("src"), col("b.p").as("dst"))
-        .distinct()
-    }
-    graft.Tables.readCachedSchema(s, p)
+    val li = graft.Tables(s, dir, "lineitem")
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+      .distinct()
+    li.as("a").join(li.as("b"),
+        col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+      .select(col("a.p").as("src"), col("b.p").as("dst"))
+      .distinct()
   }
 
-  /** Both-orientations view (src <> dst, distinct): the persisted
-    * canonical set plus its flip — no second fact-table pass.
+  /** Both-orientations view (src <> dst, distinct): the canonical set
+    * plus its flip.
     */
   def directed(s: SparkSession, dir: String): DataFrame = {
     val und = undirected(s, dir)
@@ -89,52 +42,34 @@ object CoPurchase {
   }
 
   /** Degree-order ORIENTED edges ([[Graph.orientEdges]] output,
-    * `(src, dst, dd)`) — a pure function of the undirected set, so
-    * it persists once per sf dir like the set itself. The triangle
-    * and clustering-coefficient queries consume this directly and
-    * skip the degree aggregate + orientation joins per run; at
-    * 100 TB the oriented list is the second lake artifact of the
-    * graph family (degrees reconstruct from it exactly).
+    * `(src, dst, dd)`), which the triangle and clustering-coefficient
+    * queries consume.
     */
-  def oriented(s: SparkSession, dir: String): DataFrame = {
-    val p = materialize(s"ord_${tag(dir)}") {
-      Graph.orientEdges(undirected(s, dir))
-    }
-    graft.Tables.readCachedSchema(s, p)
-  }
+  def oriented(s: SparkSession, dir: String): DataFrame =
+    Graph.orientEdges(undirected(s, dir))
 
   /** Deterministic DeepWalk corpus over the co-purchase graph
-    * ([[Graph.deterministicWalks]] at the registered defaults) —
-    * itself a lake asset three queries consume (q359 walk dump, q360
-    * skip-gram pairs, q363 SGNS shards): the hash-derived steps make
-    * it bit-stable, so materializing once per sf dir is
-    * result-identical to inline derivation, and downstream consumers
-    * scan a compact parquet instead of replaying the per-hop joins.
+    * ([[Graph.deterministicWalks]] at the registered defaults), which
+    * q359 (walk dump), q360 (skip-gram pairs) and q363 (SGNS shards)
+    * consume: the hash-derived steps make it bit-stable.
     */
-  def walks(s: SparkSession, dir: String): DataFrame = {
-    val p = materialize(s"walks_${tag(dir)}") {
-      Graph.deterministicWalks(undirected(s, dir))
-    }
-    graft.Tables.readCachedSchema(s, p)
-  }
+  def walks(s: SparkSession, dir: String): DataFrame =
+    Graph.deterministicWalks(undirected(s, dir))
 
   /** Canonical undirected edges over the small-parts subgraph
     * (p_size <= 5) — the q239/q244/q245 slice.
     */
   def undirectedSmall(s: SparkSession, dir: String): DataFrame = {
-    val p = materialize(s"undsmall_${tag(dir)}") {
-      val pk = graft.Tables(s, dir, "part").where(col("p_size") <= 5)
-        .select(col("p_partkey").as("l_partkey"))
-      val li = graft.Tables(s, dir, "lineitem")
-        .join(broadcast(pk), "l_partkey")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      li.as("a").join(li.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("src"), col("b.p").as("dst"))
-        .distinct()
-    }
-    graft.Tables.readCachedSchema(s, p)
+    val pk = graft.Tables(s, dir, "part").where(col("p_size") <= 5)
+      .select(col("p_partkey").as("l_partkey"))
+    val li = graft.Tables(s, dir, "lineitem")
+      .join(broadcast(pk), "l_partkey")
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+      .distinct()
+    li.as("a").join(li.as("b"),
+        col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+      .select(col("a.p").as("src"), col("b.p").as("dst"))
+      .distinct()
   }
 
   /** Both-orientations view of the small-parts subgraph. */

@@ -88,11 +88,7 @@ object Graph {
 
   /** Degree-order orientation of an undirected edge set — the shared
     * first stage of [[triangleCountOriented]] and
-    * [[clusteringCoefficientOriented]], and a MATERIALIZABLE artifact
-    * in its own right (it is a pure function of the edge set:
-    * [[graft.ops.CoPurchase]] persists it once per scale factor so
-    * every consumer skips the degree aggregate + orientation joins).
-    * Returns `(src, dst, dd)`: each undirected edge exactly once,
+    * [[clusteringCoefficientOriented]]. Returns `(src, dst, dd)`: each undirected edge exactly once,
     * oriented from its (degree, id)-smaller endpoint, with `dd` = the
     * DESTINATION's degree (the orientation guarantees dst is the
     * larger endpoint, so `greatest(du, dv)` is exact).
@@ -103,8 +99,8 @@ object Graph {
       .localCheckpoint() // degree agg + both orientation joins reuse it
     val deg = degrees(und, "u", "v")
     // orient low → high in (degree, id) order; dd (the destination's
-    // degree) stays in the persisted artifact schema — degrees
-    // reconstruct from it without re-joining the degree table
+    // degree) stays in the output — degrees reconstruct from it
+    // without re-joining the degree table
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
     withDegrees(und, deg)

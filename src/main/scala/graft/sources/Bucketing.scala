@@ -17,39 +17,21 @@ import org.apache.spark.sql.functions._
   */
 object Bucketing {
 
-  /** Per-JVM scratch root for bucketed table data: concurrent drivers
-    * (Bench + selfcheck) must not race on one path; removed on exit.
-    */
-  private def del(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-  }
-
-  private lazy val root: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_buckets_").toFile
-    sys.addShutdownHook { del(dir) }
-    dir.getAbsolutePath
-  }
-
   /** Write `df` as a bucketed, per-bucket-sorted external parquet
-    * table. The pre-write `repartition(buckets, key)` uses the SAME
-    * Murmur3 hash as the bucketing spec, so each write task holds
-    * exactly one bucket → one file per bucket (no small-file fan-out,
-    * and per-bucket sort order survives in a single run).
+    * table at `path`. The pre-write `repartition(buckets, key)` uses
+    * the SAME Murmur3 hash as the bucketing spec, so each write task
+    * holds exactly one bucket → one file per bucket (no small-file
+    * fan-out, and per-bucket sort order survives in a single run).
+    * Overwrite mode replaces an existing table of that name and the
+    * files at `path` (dropping an EXTERNAL table alone leaves them).
     */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      buckets: Int): Unit = {
-    val spark = df.sparkSession
-    // dropping an EXTERNAL table leaves its files; wipe the data dir
-    // too or the re-create hits the non-empty-location CTAS guard
-    // (bench runs every query three times)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    del(new java.io.File(s"$root/$table"))
+      buckets: Int, path: String): Unit =
     df.repartition(buckets, col(bucketCol))
-      .write.format("parquet")
+      .write.format("parquet").mode("overwrite")
       .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .option("path", s"$root/$table")
+      .option("path", path)
       .saveAsTable(table)
-  }
 
   /** Shuffle-free equi-join of two tables bucketed on the join keys
     * with equal bucket counts. The `merge` hint pins sort-merge (a

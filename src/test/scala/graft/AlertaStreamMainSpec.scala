@@ -6,7 +6,6 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `AlertaStreamMain.main` end to end: parquet events and YAML specs
@@ -17,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sinks, lets `main` take it over, and stops what is left at the end
   * so later suites start a fresh one.
   */
-class AlertaStreamMainSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AlertaStreamMainSpec extends AnyFunSuite with TempDirs {
 
   private def session(): SparkSession =
     Tables.configure(SparkSession.builder()
@@ -41,7 +40,7 @@ class AlertaStreamMainSpec extends AnyFunSuite with BeforeAndAfterAll {
       rows: (Timestamp, Long, String, Long)*): Unit = {
     val s = session()
     import s.implicits._
-    val staging = Files.createTempDirectory("stream-main-staging")
+    val staging = tempDir("stream-main-staging")
     rows.toDF("ts", "user_id", "event_type", "event_id").coalesce(1)
       .write.mode("overwrite").parquet(staging.toString)
     val part = Files.list(staging).iterator.asScala
@@ -99,7 +98,7 @@ class AlertaStreamMainSpec extends AnyFunSuite with BeforeAndAfterAll {
       |"""
 
   test("threshold, deadman and 2-slot sequence sinks; a re-run appends only new alerts") {
-    val root = Files.createTempDirectory("stream-main")
+    val root = tempDir("stream-main")
     val (in, specs) = (root.resolve("in"), root.resolve("specs"))
     writeSpec(specs, "a_sequence.yml", sequenceSpec)
     writeSpec(specs, "b_threshold.yml", thresholdSpec)
@@ -137,7 +136,7 @@ class AlertaStreamMainSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a spec whose stream cannot be built is skipped; queries started " +
       "after a sequence keep the session's default state store") {
-    val root = Files.createTempDirectory("stream-main")
+    val root = tempDir("stream-main")
     val specs = root.resolve("specs")
     val badSlots = Seq(
       "a_one_slot" -> """  - alert_type: threshold
@@ -187,7 +186,7 @@ class AlertaStreamMainSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a query that fails while running: the other sinks are written, " +
       "no query is left active, and main rethrows") {
-    val root = Files.createTempDirectory("stream-main")
+    val root = tempDir("stream-main")
     val specs = root.resolve("specs")
     // ANSI casts throw on 'purchase' once the first batch runs
     writeSpec(specs, "a_broken.yml",

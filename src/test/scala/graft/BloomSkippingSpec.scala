@@ -28,7 +28,7 @@ class BloomSkippingSpec extends AnyFunSuite with SparkSuite {
     // 8 files, keys range-clustered so each key lives in exactly one
     // file — the layout the index should rediscover from bits alone
     val rows = (0L until 512L).map(k => (k, s"v$k"))
-    val dir = java.nio.file.Files.createTempDirectory("bloomidx_").toString + "/t"
+    val dir = tempDir("bloomidx_").toString + "/t"
     rows.toDF("k", "v").repartitionByRange(8, col("k"))
       .write.parquet(dir)
     BloomSkipping.buildIndex(spark, dir, "k", mBits = 1 << 13)
@@ -46,7 +46,7 @@ class BloomSkippingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("absent keys read empty; nulls in the key column are harmless") {
-    val dir = java.nio.file.Files.createTempDirectory("bloomidx2_").toString + "/t"
+    val dir = tempDir("bloomidx2_").toString + "/t"
     Seq(Some(1L), Some(2L), None, Some(3L)).toDF("k")
       .withColumn("v", col("k") * 10).repartition(2)
       .write.parquet(dir)

@@ -12,11 +12,13 @@ import graft.sources.Bucketing
   */
 class BucketingSpec extends AnyFunSuite with SparkSuite {
 
+  private def at(table: String): String = s"${tempDir("buckets_")}/$table"
+
   test("bucketed join is exchange-free and row-identical to the plain join") {
     val o = Tables(spark, sf(), "orders").select("o_orderkey", "o_orderpriority")
     val l = Tables(spark, sf(), "lineitem").select("l_orderkey", "l_extendedprice")
-    Bucketing.writeBucketed(o, "t_orders_b", "o_orderkey", 4)
-    Bucketing.writeBucketed(l, "t_lineitem_b", "l_orderkey", 4)
+    Bucketing.writeBucketed(o, "t_orders_b", "o_orderkey", 4, at("t_orders_b"))
+    Bucketing.writeBucketed(l, "t_lineitem_b", "l_orderkey", 4, at("t_lineitem_b"))
 
     val joined = Bucketing.colocatedJoin(
       spark.table("t_orders_b"), spark.table("t_lineitem_b"),
@@ -40,16 +42,18 @@ class BucketingSpec extends AnyFunSuite with SparkSuite {
 
   test("writeBucketed is re-runnable: same table name overwrites cleanly") {
     val o = Tables(spark, sf(), "orders").select("o_orderkey", "o_orderpriority")
-    Bucketing.writeBucketed(o, "t_orders_rw", "o_orderkey", 2)
-    // the bench path: external-table drop leaves files; a second write
-    // must not trip the non-empty-location CTAS guard
-    Bucketing.writeBucketed(o, "t_orders_rw", "o_orderkey", 2)
+    val path = at("t_orders_rw")
+    Bucketing.writeBucketed(o, "t_orders_rw", "o_orderkey", 2, path)
+    // external-table drop leaves files; a second write must not trip
+    // the non-empty-location CTAS guard
+    Bucketing.writeBucketed(o, "t_orders_rw", "o_orderkey", 2, path)
     assert(spark.table("t_orders_rw").count() === o.count())
   }
 
   test("writeBucketed lands one file per bucket (no small-file fan-out)") {
     val o = Tables(spark, sf(), "orders").select("o_orderkey", "o_orderpriority")
-    Bucketing.writeBucketed(o, "t_orders_files", "o_orderkey", 4)
+    Bucketing.writeBucketed(o, "t_orders_files", "o_orderkey", 4,
+      at("t_orders_files"))
     val loc = spark.sql("DESCRIBE TABLE EXTENDED t_orders_files").collect()
       .find(_.getString(0) == "Location").map(_.getString(1)).get
     val files = new java.io.File(new java.net.URI(loc))

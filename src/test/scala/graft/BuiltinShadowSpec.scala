@@ -63,8 +63,7 @@ class BuiltinShadowSpec extends AnyFunSuite with SparkSuite {
       ("e2", java.sql.Timestamp.valueOf("2024-01-02 04:20:00")),
       ("e3", java.sql.Timestamp.valueOf("2024-01-02 04:40:00")))
       .toDF("event_id", "ts")
-    val dir = java.nio.file.Files
-      .createTempDirectory("builtin_shadow_lake").toString
+    val dir = tempDir("builtin_shadow_lake").toString
     val lake = Lake.write(events, dir)
     val parts = lake.select("year", "month", "day", "hour").distinct()
       .collect().map(x => (x.getString(0), x.getString(1),

@@ -12,11 +12,12 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Drain honesty: every call of a streaming query starts a streaming
-  * query of its own over the whole replay, and a drain that fails
-  * leaves nothing to reuse.
+/** Pins [[QueriesAlert.drainToMemory]]: every call of a streaming
+  * query starts a streaming query of its own over the whole replay,
+  * in a fresh checkpoint, and a drain that fails leaves nothing to
+  * reuse.
   */
-class StreamFamiliesSpec extends AnyFunSuite with SparkSuite {
+class DrainSpec extends AnyFunSuite with SparkSuite {
 
   /** Records the streaming queries started in the sessions it is added
     * to (QueryStartedEvent reaches listeners on the starting thread)
@@ -122,7 +123,7 @@ class StreamFamiliesSpec extends AnyFunSuite with SparkSuite {
   test("a drain's checkpoint forks no readlink and writes no Spark " +
       "checksum sidecar") {
     val s = spark.newSession()
-    val root = java.nio.file.Paths.get(QueriesAlert.drainCheckpointRoot)
+    val root = Scratch.root.toPath
     // the checkpoint is deleted when the drain returns, so a poller
     // records what exists while it runs
     val seen = ConcurrentHashMap.newKeySet[String]()

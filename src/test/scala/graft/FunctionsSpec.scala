@@ -393,7 +393,7 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
 
   test("isCloudtrailFile matches <digits>_cloudtrail_*.json.gz " +
       "case-insensitively (utils/helpers.py:39-41)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ct")
+    val dir = tempDir("graft-ct")
     def write(name: String, gz: Boolean): Unit = {
       val f = new java.io.FileOutputStream(dir.resolve(name).toFile)
       val out =

@@ -11,7 +11,7 @@ class JsonBlocksV2Spec extends AnyFunSuite with SparkSuite {
   }
 
   test("V2 connector: one row per object, braces in strings survive, provenance per file") {
-    val dir = java.nio.file.Files.createTempDirectory("jb_v2_").toFile
+    val dir = tempDir("jb_v2_").toFile
     // file a: two objects back to back, one spanning lines, with a
     // brace INSIDE a string value (the classic tokenizer trap)
     writeFile(dir, "a.json",
@@ -44,7 +44,7 @@ class JsonBlocksV2Spec extends AnyFunSuite with SparkSuite {
 
   test("V2 connector write → read round-trips the block set") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("jb_v2_w_").toFile
+    val dir = tempDir("jb_v2_w_").toFile
     val blocks = (1 to 7).map(i => s"""{"id":$i,"v":"x{$i"}""")
     blocks.toDF("block")
       // the write schema is the table schema; src_file is ignored
@@ -63,7 +63,7 @@ class JsonBlocksV2Spec extends AnyFunSuite with SparkSuite {
 
   test("V2 connector write binds the block column BY NAME, not position") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("jb_v2_n_").toFile
+    val dir = tempDir("jb_v2_n_").toFile
     // provenance-style string column FIRST: positional binding would
     // write the wrong column as the delivery file
     Seq(("ignored.json", """{"id":9}"""))
@@ -78,7 +78,7 @@ class JsonBlocksV2Spec extends AnyFunSuite with SparkSuite {
 
   test("V2 connector write fails loudly on an ambiguous schema") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("jb_v2_a_").toFile
+    val dir = tempDir("jb_v2_a_").toFile
     val e = intercept[Exception] {
       Seq(("a", "b")).toDF("x", "y")
         .write.format("graft.sources.JsonBlocksSource")
@@ -92,7 +92,7 @@ class JsonBlocksV2Spec extends AnyFunSuite with SparkSuite {
 
   test("V2 connector rejects overwrite (no TRUNCATE capability) up front") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("jb_v2_o_").toFile
+    val dir = tempDir("jb_v2_o_").toFile
     intercept[Exception] {
       Seq("""{"id":1}""").toDF("block")
         .write.format("graft.sources.JsonBlocksSource")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +13,7 @@ import graft.sources.Lake
   */
 class LakeSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val tmp = Files.createTempDirectory("graft-lake-spec").toString
+  private lazy val tmp = tempDir("graft-lake-spec").toString
 
   test("round-trip preserves rows; null timestamps are dropped") {
     import spark.implicits._

@@ -260,7 +260,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
   test("ivf persisted index round-trips: topKIndexed == inline topK") {
     val e = Tables(spark, sf("sf0.01"), "embeddings")
     val queries = e.where(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_").toString
+    val dir = tempDir("graft_ivf_").toString
     graft.ops.Ivf.buildIndex(e, dir, cells = 16)
     val inline = graft.ops.Ivf.topK(e, queries, k = 3, cells = 16, nprobe = 4)
       .collect().map(_.toSeq).toSeq
@@ -600,27 +600,20 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
     val docs = Tables(spark, sf("sf0.01"), "documents")
     val corpus = docs.where(col("doc_id") % 5 =!= 0)
     val fresh = docs.where(col("doc_id") % 5 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigs_").toString
-    try {
-      // snapshot the corpus signatures to parquet and serve from there —
-      // the nightly pattern where historical text is never re-read
-      graft.ops.DocDedup.signatures(corpus).write.mode("overwrite").parquet(dir)
-      val served = graft.ops.DocDedup.incrementalFromSignatures(
-        spark.read.parquet(dir), fresh).collect().map(_.toSeq).toSeq
-      val direct = graft.ops.DocDedup.incremental(corpus, fresh)
-        .collect().map(_.toSeq).toSeq
-      assert(served === direct)
-      // a snapshot built with a different permutation count is refused
-      // rather than silently served against
-      intercept[IllegalArgumentException] {
-        graft.ops.DocDedup.incrementalFromSignatures(
-          spark.read.parquet(dir), fresh, numHashes = 32)
-      }
-    } finally {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-      }
-      del(new java.io.File(dir))
+    val dir = tempDir("graft_sigs_").toString
+    // snapshot the corpus signatures to parquet and serve from there —
+    // the nightly pattern where historical text is never re-read
+    graft.ops.DocDedup.signatures(corpus).write.mode("overwrite").parquet(dir)
+    val served = graft.ops.DocDedup.incrementalFromSignatures(
+      spark.read.parquet(dir), fresh).collect().map(_.toSeq).toSeq
+    val direct = graft.ops.DocDedup.incremental(corpus, fresh)
+      .collect().map(_.toSeq).toSeq
+    assert(served === direct)
+    // a snapshot built with a different permutation count is refused
+    // rather than silently served against
+    intercept[IllegalArgumentException] {
+      graft.ops.DocDedup.incrementalFromSignatures(
+        spark.read.parquet(dir), fresh, numHashes = 32)
     }
   }
 
@@ -665,24 +658,18 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("multimodal binaryFile source feeds the same decode pipeline") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-media")
-    try {
-      java.nio.file.Files.write(dir.resolve("a.img"), Array.fill[Byte](100)(1))
-      java.nio.file.Files.write(dir.resolve("b.img"), Array.fill[Byte](321)(2))
-      java.nio.file.Files.write(dir.resolve("skip.txt"), Array.fill[Byte](9)(3))
-      val blobs = Multimodal.readBinaryDir(spark, dir.toString, glob = "*.img")
-      val metas = Multimodal.extractMetadata(blobs).collect()
-      assert(metas.length === 2) // glob filtered the .txt out
-      assert(metas.map(_.byte_len).sorted.toSeq === Seq(100L, 321L))
-      // ids are deterministic across re-reads (derived from the path)
-      val again = Multimodal.readBinaryDir(spark, dir.toString, glob = "*.img")
-        .collect().map(_.doc_id).sorted.toSeq
-      assert(again === blobs.collect().map(_.doc_id).sorted.toSeq)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    val dir = tempDir("graft-media")
+    java.nio.file.Files.write(dir.resolve("a.img"), Array.fill[Byte](100)(1))
+    java.nio.file.Files.write(dir.resolve("b.img"), Array.fill[Byte](321)(2))
+    java.nio.file.Files.write(dir.resolve("skip.txt"), Array.fill[Byte](9)(3))
+    val blobs = Multimodal.readBinaryDir(spark, dir.toString, glob = "*.img")
+    val metas = Multimodal.extractMetadata(blobs).collect()
+    assert(metas.length === 2) // glob filtered the .txt out
+    assert(metas.map(_.byte_len).sorted.toSeq === Seq(100L, 321L))
+    // ids are deterministic across re-reads (derived from the path)
+    val again = Multimodal.readBinaryDir(spark, dir.toString, glob = "*.img")
+      .collect().map(_.doc_id).sorted.toSeq
+    assert(again === blobs.collect().map(_.doc_id).sorted.toSeq)
   }
 
   test("qualityScore: integer linear head, exact score and keep decision") {

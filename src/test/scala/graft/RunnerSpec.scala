@@ -19,7 +19,7 @@ class RunnerSpec extends AnyFunSuite with SparkSuite {
   val now: Instant = Instant.parse("2024-01-30T23:30:00Z")
 
   def mkRunner(): Runner = {
-    val dir = Files.createTempDirectory("graft-runner").toString
+    val dir = tempDir("graft-runner").toString
     new Runner(spark, new AlertStore(dir), new InflightStore(dir))
   }
 
@@ -127,7 +127,7 @@ class RunnerSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("yaml specs load and dispatch (S6)") {
-    val dir = Files.createTempDirectory("graft-specs")
+    val dir = tempDir("graft-specs")
     Files.writeString(dir.resolve("a.yml"),
       """alert_name: "purchases"
         |alert_type: "threshold"

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.DataFrame
@@ -21,7 +20,7 @@ class SequenceSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   def mkStores(): (AlertStore, InflightStore) = {
-    val dir = Files.createTempDirectory("graft-seq").toString
+    val dir = tempDir("graft-seq").toString
     (new AlertStore(dir), new InflightStore(dir))
   }
 

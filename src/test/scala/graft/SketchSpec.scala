@@ -74,7 +74,7 @@ class SketchSpec extends AnyFunSuite with SparkSuite {
     // sketch built in one pass over everything — merge associativity
     // is what makes yesterday's sketch reusable tomorrow
     val d = (1L to 3000L).map(i => (i % 2, i % 701)).toDF("half", "v")
-    val dir = java.nio.file.Files.createTempDirectory("hll_rt_").toString
+    val dir = tempDir("hll_rt_").toString
     d.groupBy("half").agg(hll_sketch_agg(col("v"), lit(12)).as("sk"))
       .write.mode("overwrite").parquet(dir)
     val merged = spark.read.parquet(dir)

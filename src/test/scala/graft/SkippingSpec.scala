@@ -11,7 +11,7 @@ class SkippingSpec extends AnyFunSuite with SparkSuite {
   test("manifest prunes files on BOTH z-ordered dimensions") {
     val grid = for { x <- 0 until 64; y <- 0 until 64 }
       yield (x.toLong * 64 + y, x.toLong, y.toLong)
-    val dir = java.nio.file.Files.createTempDirectory("skip_").toString + "/z"
+    val dir = tempDir("skip_").toString + "/z"
     ZOrder.write(grid.toDF("id", "x", "y"), dir, "x", "y", files = 16)
     Skipping.buildManifest(spark, dir, Seq("x", "y"))
     val total = new java.io.File(dir).listFiles()
@@ -31,7 +31,7 @@ class SkippingSpec extends AnyFunSuite with SparkSuite {
 
   test("empty range reads empty; full range reads everything") {
     val d = (0L until 100L).map(i => (i, i % 10, i / 10)).toDF("id", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("skip2_").toString + "/z"
+    val dir = tempDir("skip2_").toString + "/z"
     ZOrder.write(d, dir, "x", "y", files = 4)
     Skipping.buildManifest(spark, dir, Seq("x", "y"))
     assert(Skipping.readRange(spark, dir, "x", 1000, 2000).count() === 0)

@@ -1,8 +1,29 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Temp directories a suite makes through [[tempDir]], deleted in
+  * `afterAll`, so a test run leaves nothing behind in java.io.tmpdir.
+  */
+trait TempDirs extends BeforeAndAfterAll { self: Suite =>
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    made.add(dir.toFile)
+    dir
+  }
+
+  private def delete(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(delete))
+    f.delete(): Unit
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll() finally made.forEach(delete(_))
+}
 
 /** Shared local session for suites (one per suite via lazy val).
   *
@@ -15,7 +36,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * line of defense — it fails LOUDLY in whichever suite broke the
   * invariant, instead of some unrelated suite failing later.
   */
-trait SparkSuite extends BeforeAndAfterAll { self: AnyFunSuite =>
+trait SparkSuite extends TempDirs { self: AnyFunSuite =>
   @volatile private var sparkStarted = false
 
   lazy val spark: SparkSession = {
@@ -54,6 +75,29 @@ trait SparkSuite extends BeforeAndAfterAll { self: AnyFunSuite =>
       sc.setJobDescription(null)
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** The query executions `body` runs in `s`, in order, seen by a
+    * QueryExecutionListener: a marker query after `body` closes the
+    * list, since listener events arrive in order. */
+  def executionsOf(s: SparkSession)(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe): Unit
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def isMarker(qe: QueryExecution) =
+      qe.analyzed.output.map(_.name) == Seq("executions_of_marker")
+    s.listenerManager.register(listener)
+    try {
+      body
+      s.range(1).toDF("executions_of_marker").collect()
+      Iterator.continually(seen.poll(10, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(qe => qe != null && !isMarker(qe)).toSeq
+    } finally s.listenerManager.unregister(listener)
   }
 
   /** What `body` logs under the named loggers, with its result. */

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Dedup
@@ -14,7 +12,7 @@ import graft.store.{AlertStore, InflightStore}
 class StoreSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
-  def tmp(): String = Files.createTempDirectory("graft-store").toString
+  def tmp(): String = tempDir("graft-store").toString
 
   val sampleEvents = Seq(
     Map("eventid" -> "aaa-1", "source" -> "cloudtrail"),

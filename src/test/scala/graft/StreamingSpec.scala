@@ -1539,14 +1539,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   // run but cannot DEserialize what the previous binary wrote fails
   // here instead of shipping silently.
 
-  private def withCheckpoint[T](f: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles().foreach(rm)
-      p.delete()
-    }
-    try f(dir.toString) finally rm(dir.toFile)
-  }
+  private def withCheckpoint[T](f: String => T): T =
+    f(tempDir("graft_ckpt").toString)
 
   /** Start `df` against `ckpt` draining every micro-batch into a
     * buffer (the memory sink cannot RECOVER from a checkpoint; a

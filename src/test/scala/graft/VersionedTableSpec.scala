@@ -12,7 +12,7 @@ class VersionedTableSpec extends AnyFunSuite with SparkSuite {
 
   def ts(m: Int): Timestamp = Timestamp.valueOf(f"2026-01-01 10:$m%02d:00")
   def tmp(): String =
-    java.nio.file.Files.createTempDirectory("vt_").toString + "/t"
+    tempDir("vt_").toString + "/t"
   def row(k: Long, id: Long, m: Int, v: String, del: Boolean = false) =
     (k, id, ts(m), v, del)
   def toDf(rows: Seq[(Long, Long, Timestamp, String, Boolean)]): DataFrame =

@@ -7,7 +7,7 @@ import graft.sources.Warc
 class WarcSourceSpec extends AnyFunSuite with SparkSuite {
 
   private def tmpDir() =
-    java.nio.file.Files.createTempDirectory("warc_v2_").toFile
+    tempDir("warc_v2_").toFile
 
   private def read(dir: java.io.File) =
     spark.read.format("graft.sources.WarcSource")

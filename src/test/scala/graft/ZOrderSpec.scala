@@ -27,8 +27,8 @@ class ZOrderSpec extends AnyFunSuite with SparkSuite {
     val grid = for { x <- 0 until 64; y <- 0 until 64 }
       yield (x.toLong * 64 + y, x.toLong, y.toLong)
     val d = grid.toDF("id", "x", "y")
-    val zdir = java.nio.file.Files.createTempDirectory("zorder_").toString
-    val sdir = java.nio.file.Files.createTempDirectory("xsort_").toString
+    val zdir = tempDir("zorder_").toString
+    val sdir = tempDir("xsort_").toString
     ZOrder.write(d, zdir, "x", "y", files = 16)
     d.repartitionByRange(16, col("x")).sortWithinPartitions("x")
       .write.mode("overwrite").parquet(sdir)
@@ -60,7 +60,7 @@ class ZOrderSpec extends AnyFunSuite with SparkSuite {
   test("z-written files hold exactly the input rows") {
     val d = (0 until 500).map(i => (i.toLong, (i * 7 % 100).toLong,
       (i * 13 % 100).toLong)).toDF("id", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("zorder_rt_").toString
+    val dir = tempDir("zorder_rt_").toString
     ZOrder.write(d, dir, "x", "y", files = 4)
     val back = spark.read.parquet(dir)
     assert(back.columns.sorted.toSeq === Seq("id", "x", "y"))
