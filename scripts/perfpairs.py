@@ -16,7 +16,9 @@ summarised the same way.
 A gain holds when the change wins at least nine tenths of the pairs
 and the medians differ by more than the parent's interquartile range.
 Per seed it also says whether both sides printed the same per-operation
-summary lines (the program's own output, e.g. a cron tick's counts).
+summary lines (the program's own output, e.g. a cron tick's counts),
+compared over the operations both sides ran: a timed window may fit a
+different number of ticks on each side.
 """
 import argparse
 import json
@@ -95,8 +97,14 @@ def main():
             if a.out:
                 with open(a.out, "a") as f:
                     f.write(json.dumps(dict(r, side=side, workload=a.workload)) + "\n")
-        same = pair["parent"]["outputs"] == pair["change"]["outputs"]
-        print(f"seed={seed} outputs {'identical' if same else 'DIFFER'}", flush=True)
+        par, chg = pair["parent"]["outputs"], pair["change"]["outputs"]
+        shared = min(len(par), len(chg))
+        differ = [i for i in range(shared) if par[i] != chg[i]]
+        counts = f"{shared} shared ops (parent {len(par)}, change {len(chg)})"
+        verdict = (f"DIFFER at op {differ[0] + 1} of {counts}" if differ
+                   else f"identical over {counts}" if shared
+                   else f"not compared: {counts}")
+        print(f"seed={seed} outputs {verdict}", flush=True)
         pairs.append(pair)
 
     print(f"\n{a.workload}: {len(pairs)} pairs, --seconds {a.seconds} --trace {a.trace}")

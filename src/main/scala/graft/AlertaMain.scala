@@ -41,10 +41,6 @@ object AlertaMain {
 
   private def run(spark: SparkSession, eventsPath: String, specsMask: String,
       storeDir: String, now: java.time.Instant): Unit = {
-    // dialect functions the textual rewrite doesn't cover (element_at,
-    // cardinality, strpos, …) resolve natively in criteria text
-    graft.functions.Functions.ensureRegistered(spark)
-
     val lakeNorm = Tables.normalizeTs(spark.read.parquet(eventsPath))
     val specs = AlertSpecs.loadAll(specsMask)
     val runner = new Runner(spark, new AlertStore(storeDir), new InflightStore(storeDir))

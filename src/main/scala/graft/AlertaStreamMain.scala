@@ -57,9 +57,6 @@ object AlertaStreamMain {
 
   private def run(spark: SparkSession, eventsDir: String, specsMask: String,
       outDir: String, availableNow: Boolean): Unit = {
-    // dialect functions beyond the textual rewrite resolve in criteria
-    graft.functions.Functions.ensureRegistered(spark)
-
     val schema = spark.read.parquet(eventsDir).schema
     val events = Tables.normalizeTs(
       spark.readStream.schema(schema).parquet(eventsDir))

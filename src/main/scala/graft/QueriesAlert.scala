@@ -355,10 +355,10 @@ private[graft] object QueriesAlert {
     // criteria passthrough contract.
     // the registered Presto dialect end-to-end through spark.sql: a
     // criteria author's json_extract_scalar / strpos / array contains
-    // run natively (Functions.register), no textual rewrite involved.
+    // run natively (the session's injected dialect), no textual rewrite
+    // involved.
     Q("q50_presto_dialect",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         // element_at exercises Presto's NULL-out-of-bounds contract
         // (ANSI Spark would throw); the lambda inside cardinality
@@ -697,7 +697,6 @@ private[graft] object QueriesAlert {
     // with DuckDB's list_* equivalents.
     Q("q68_presto_lambdas",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         // chars(x): Spark's split('', -1) appends a trailing empty
         // string DuckDB's string_split does not — filter it out so the

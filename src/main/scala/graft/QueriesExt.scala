@@ -2027,7 +2027,6 @@ private[graft] object QueriesExt {
     // the MIN event_id among clicks, restated with a FILTERed MIN.
     Q("q351_presto_dialect2",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -2185,7 +2184,6 @@ private[graft] object QueriesExt {
     // 1e6 in IEEE double on both sides).
     Q("q362_presto_dialect3",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -2219,7 +2217,6 @@ private[graft] object QueriesExt {
     // per user and restated exactly in DuckDB.
     Q("q364_presto_dialect4",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -2450,7 +2447,6 @@ private[graft] object QueriesExt {
     // strftime/strptime's C tokens (%i minute ↔ %M, %s second ↔ %S).
     Q("q368_presto_dialect5",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -2901,7 +2897,6 @@ private[graft] object QueriesExt {
     // date_format.
     Q("q378_presto_dialect6",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -3102,7 +3097,6 @@ private[graft] object QueriesExt {
     // the oracle states what the lambda computes, not how).
     Q("q383_presto_dialect7",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -3404,7 +3398,6 @@ private[graft] object QueriesExt {
     // the 'g' flag — DuckDB defaults to first-match-only).
     Q("q390_presto_dialect8",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -3703,7 +3696,6 @@ private[graft] object QueriesExt {
     // is C-style, to_hex is minimal-width).
     Q("q395_presto_dialect9",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -4210,7 +4202,6 @@ private[graft] object QueriesExt {
     // of these spellings).
     Q("q404_presto_dialect10",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -4359,7 +4350,6 @@ private[graft] object QueriesExt {
     // oracle-gated pins here.
     Q("q407_presto_dialect11",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -4397,7 +4387,6 @@ private[graft] object QueriesExt {
     // restates each component from the URL's construction.
     Q("q409_presto_dialect12",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id,
@@ -4611,7 +4600,6 @@ private[graft] object QueriesExt {
     // thirteenth-tranche rows.
     Q("q413_presto_dialect13",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT user_id % 10 AS g,
@@ -5019,7 +5007,6 @@ private[graft] object QueriesExt {
     // restates each fold with the equivalent classical aggregate.
     Q("q418_presto_reduce_agg",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT g, fold_sum, fold_max, fold_view_sum,

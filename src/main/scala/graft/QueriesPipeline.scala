@@ -3086,7 +3086,6 @@ private[graft] object QueriesPipeline {
     // parts without needing URL functions of its own.
     Q("q118_presto_url_time",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """WITH t AS (SELECT event_id, event_type, user_id, ts,
@@ -3258,7 +3257,6 @@ private[graft] object QueriesPipeline {
     // re-derives everything natively.
     Q("q124_presto_datetime",
       (s, dir) => {
-        graft.functions.Functions.ensureRegistered(s)
         Tables(s, dir, "events").createOrReplaceTempView("events")
         s.sql(graft.criteria.Criteria.rewrite(
           """SELECT event_id,

@@ -14,7 +14,8 @@ import java.nio.file.{Files, Paths}
   * The directories sit under one root per JVM, on tmpfs (/dev/shm)
   * when writable; the shutdown hook removes what an interrupted body
   * left. Entry points whose files must outlive a call
-  * (AlertaStreamMain, StreamingPipeline) take caller-supplied paths.
+  * (AlertaStreamMain's sinks and checkpoints) take caller-supplied
+  * paths.
   */
 object Scratch {
 

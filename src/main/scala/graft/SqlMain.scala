@@ -21,7 +21,6 @@ object SqlMain {
       } else q
     val spark = Tables.session()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.Functions.ensureRegistered(spark)
     Tables.names.foreach { t =>
       Tables(spark, sfDir, t).createOrReplaceTempView(t)
     }

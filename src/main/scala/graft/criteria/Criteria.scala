@@ -355,20 +355,14 @@ object Criteria {
     * instead of an expr("") ParseException that would silently skip
     * the spec in batch.
     *
-    * Register precondition: [[rewrite]] maps divergent dialect tokens
-    * to `presto_<name>` functions that exist only after
-    * [[graft.functions.Functions.register]] ran on the session. The
-    * engine entry points all register up front; for ad-hoc callers
-    * compiling criteria on a bare session, toColumn registers on the
-    * active session when that session's registry lacks the dialect.
+    * A pure function of the text: [[rewrite]] maps divergent dialect
+    * tokens to `presto_<name>` functions, which every session built
+    * through `Tables.configure` already holds
+    * ([[graft.functions.Functions.dialect]], injected by
+    * `GraftExtensions`).
     */
   def toColumn(presto: String): Column =
-    if (presto.trim.isEmpty) lit(true)
-    else {
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .foreach(graft.functions.Functions.ensureRegistered)
-      expr(rewrite(presto))
-    }
+    if (presto.trim.isEmpty) lit(true) else expr(rewrite(presto))
 
   def apply(df: DataFrame, presto: String): DataFrame = df.where(toColumn(presto))
 
@@ -418,7 +412,7 @@ object Criteria {
     * Spark 4 the DataFrame DSL resolves through the registry — the r7
     * `hour='HH'` lake-poisoning class) still writes the reference
     * layout. Defense in depth on top of the no-shadow invariant in
-    * [[graft.functions.Functions.register]].
+    * [[graft.functions.Functions.dialect]].
     */
   def withPartitionColumns(df: DataFrame, tsCol: Column): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{DateFormatClass, Literal}

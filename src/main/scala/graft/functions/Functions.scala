@@ -1,13 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry => SparkFunctionRegistry}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject, StringLocate, TryEval}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GetJsonObject, ScalaUDF, StringLocate, TryEval}
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.graft.ColumnBridge
 
-/** Session-level function surface (SURVEY.md §4 custom work).
+/** Session-level function surface (SURVEY.md §4 custom work): the
+  * Presto dialect, injected into every session by [[GraftExtensions]]
+  * at session build, next to the native kernels.
   *
-  * `json_extract_scalar` is registered as a native Catalyst alias for
+  * `json_extract_scalar` is a native Catalyst alias for
   * `GetJsonObject` — Presto-dialect criteria then parse *without* the
   * textual rewrite, staying fully codegen'd (no UDF in the hot path).
   * The textual rewrite in [[graft.criteria.Criteria]] remains the
@@ -20,17 +24,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject, Str
   *
   * ── The no-shadow invariant ─────────────────────────────────────────
   * On Spark 4 the Scala DataFrame DSL resolves function NAMES through
-  * the session `FunctionRegistry` (`Column.fn`), so a temp function
+  * the session `FunctionRegistry` (`Column.fn`), so a function
   * registered over a builtin name hijacks ENGINE-INTERNAL code too:
   * the r7 regression had the Presto `date_format` shim (MySQL
   * %-tokens) turn `Criteria.withPartitionColumns`' `date_format(ts,
   * 'HH')` into the literal string "HH" and poison every lake write in
-  * the session. Therefore [[register]] NEVER overrides a builtin name:
+  * the session. Therefore [[dialect]] NEVER claims a builtin name:
   *   - a dialect shim whose semantics DIFFER from the Spark builtin of
-  *     the same name is registered as `presto_<name>`
+  *     the same name is named `presto_<name>`
   *     ([[prefixedNames]]), and [[graft.criteria.Criteria.rewrite]]
   *     maps the bare token so criteria text stays verbatim Presto;
-  *   - a shim whose semantics MATCH the builtin is not registered at
+  *   - a shim whose semantics MATCH the builtin is not defined at
   *     all (the builtin already is the Presto behavior) — that set is
   *     `regexp_like`, `approx_percentile`, `cardinality`,
   *     `url_encode`, `url_decode`, `array_sort`, `json_array_length`,
@@ -39,14 +43,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject, Str
   *     when absent), `slice` (negative start counts from the end on
   *     both engines), `date_trunc` (`'week'` truncates to the ISO
   *     Monday on both engines);
-  *   - every registration funnels through a guard that throws at
-  *     register time if a future tranche tries to claim a builtin
-  *     name, so the class can never ship silently again.
+  *   - every name funnels through a guard that throws when the session
+  *     is built if a future tranche tries to claim a builtin name, so
+  *     the class can never ship silently again.
   */
 object Functions {
 
   /** Dialect shims whose Presto semantics DIVERGE from the Spark
-    * builtin of the same name. Registered as `presto_<name>`;
+    * builtin of the same name. Named `presto_<name>`;
     * [[graft.criteria.Criteria.rewrite]] rewrites the bare tokens in
     * criteria text. Divergences, name by name:
     *   - `split`: literal delimiter (Spark: Java regex)
@@ -84,10 +88,10 @@ object Functions {
   private def isBuiltin(name: String): Boolean =
     SparkFunctionRegistry.builtin.functionExists(FunctionIdentifier(name))
 
-  /** Guard shared by every registration path: a dialect name may
-    * never claim a Spark builtin (the r7 `hour='HH'` lake-poisoning
-    * class). Loud at register time — the very first spec that calls
-    * [[register]] fails if a new tranche breaks the invariant.
+  /** Guard on every dialect name: it may never claim a Spark builtin
+    * (the r7 `hour='HH'` lake-poisoning class). Loud at session build —
+    * the very first session fails if a new tranche breaks the
+    * invariant.
     */
   private def guarded(name: String): String = {
     require(!isBuiltin(name),
@@ -98,16 +102,30 @@ object Functions {
     name
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
+  /** The dialect's 86 functions (68 expression shims, 18 Scala UDFs)
+    * as extension descriptions; [[GraftExtensions]] injects them into
+    * every session it builds, so no query depends on an earlier one
+    * having registered anything.
+    */
+  private[graft] lazy val dialect: Seq[GraftExtensions.FunctionDescription] = {
+    val out = Seq.newBuilder[GraftExtensions.FunctionDescription]
 
-    /** Register a dialect shim under its no-shadow name: bare when the
-      * name is free, `presto_<name>` when it is in [[prefixedNames]].
+    /** A dialect shim under its no-shadow name: bare when the name is
+      * free, `presto_<name>` when it is in [[prefixedNames]].
       */
     def shim(name: String)(builder: Seq[Expression] => Expression): Unit = {
-      val target = if (prefixedNames(name)) s"presto_$name" else name
-      reg.createOrReplaceTempFunction(guarded(target), builder, "built-in")
+      val target = guarded(if (prefixedNames(name)) s"presto_$name" else name)
+      out += ((FunctionIdentifier(target),
+        new ExpressionInfo(getClass.getName, target), builder))
     }
+
+    /** A Scala UDF, built as Spark's own UDF registration builds it:
+      * the named `udf(f)` applied to the call's arguments.
+      */
+    def scalaUdf(name: String, f: UserDefinedFunction): Unit =
+      out += ((FunctionIdentifier(guarded(name)),
+        new ExpressionInfo(classOf[ScalaUDF].getName, name),
+        (exprs: Seq[Expression]) => ColumnBridge.scalaUdf(name, f, exprs)))
 
     shim("json_extract_scalar")(exprs => GetJsonObject(exprs.head, exprs(1)))
 
@@ -153,12 +171,12 @@ object Functions {
     val toUtcUdf = (s: String) =>
       if (s == null) null
       else java.sql.Timestamp.from(Dates.toUTC(s))
-    spark.udf.register(guarded("to_utc"), toUtcUdf)
-    spark.udf.register(guarded("from_iso8601_timestamp"), toUtcUdf)
+    scalaUdf("to_utc", udf(toUtcUdf))
+    scalaUdf("from_iso8601_timestamp", udf(toUtcUdf))
 
-    spark.udf.register(guarded("is_ipv4"), (s: String) => s != null && isIPv4(s))
-    spark.udf.register(guarded("is_ipv6"), (s: String) => s != null && isIPv6(s))
-    spark.udf.register(guarded("is_ip"), (s: String) => s != null && isIp(s))
+    scalaUdf("is_ipv4", udf((s: String) => s != null && isIPv4(s)))
+    scalaUdf("is_ipv6", udf((s: String) => s != null && isIPv6(s)))
+    scalaUdf("is_ip", udf((s: String) => s != null && isIp(s)))
 
     // Presto split_to_map(s, entryDelim, kvDelim) = Catalyst
     // StringToMap with the same argument order
@@ -191,14 +209,14 @@ object Functions {
     // application/x-www-form-urlencoded UTF-8 coder.)
     def uri(s: String): Option[java.net.URI] =
       if (s == null) None else scala.util.Try(new java.net.URI(s)).toOption
-    spark.udf.register(guarded("url_extract_host"),
-      (s: String) => uri(s).map(_.getHost).orNull)
-    spark.udf.register(guarded("url_extract_path"),
-      (s: String) => uri(s).map(_.getRawPath).orNull)
-    spark.udf.register(guarded("url_extract_parameter"), (s: String, p: String) =>
+    scalaUdf("url_extract_host", udf(
+      (s: String) => uri(s).map(_.getHost).orNull))
+    scalaUdf("url_extract_path", udf(
+      (s: String) => uri(s).map(_.getRawPath).orNull))
+    scalaUdf("url_extract_parameter", udf((s: String, p: String) =>
       uri(s).flatMap(u => Option(u.getRawQuery)).flatMap(q =>
         q.split("&").iterator.map(_.split("=", 2))
-          .collectFirst { case Array(k, v) if k == p => v }).orNull)
+          .collectFirst { case Array(k, v) if k == p => v }).orNull))
 
     // Presto datetime breadth. day_of_week is ISO (1 = Monday);
     // Spark's DayOfWeek is 1 = Sunday, so shift: ((dow + 5) % 7) + 1.
@@ -605,32 +623,32 @@ object Functions {
       def uri(s: String): Option[java.net.URI] =
         if (s == null) None
         else scala.util.Try(new java.net.URI(s)).toOption
-      spark.udf.register(guarded("url_extract_protocol"),
-        (s: String) => uri(s).map(_.getScheme).orNull)
-      spark.udf.register(guarded("url_extract_query"),
-        (s: String) => uri(s).flatMap(u => Option(u.getRawQuery)).orNull)
-      spark.udf.register(guarded("url_extract_fragment"),
-        (s: String) => uri(s).flatMap(u => Option(u.getRawFragment)).orNull)
-      spark.udf.register(guarded("url_extract_port"),
+      scalaUdf("url_extract_protocol", udf(
+        (s: String) => uri(s).map(_.getScheme).orNull))
+      scalaUdf("url_extract_query", udf(
+        (s: String) => uri(s).flatMap(u => Option(u.getRawQuery)).orNull))
+      scalaUdf("url_extract_fragment", udf(
+        (s: String) => uri(s).flatMap(u => Option(u.getRawFragment)).orNull))
+      scalaUdf("url_extract_port", udf(
         (s: String) => uri(s).map(_.getPort).filter(_ >= 0)
-          .map(_.toLong).map(java.lang.Long.valueOf).orNull)
+          .map(_.toLong).map(java.lang.Long.valueOf).orNull))
     }
-    spark.udf.register(guarded("json_parse"),
-      (s: String) => JsonParseFn.parse(s))
+    scalaUdf("json_parse", udf(
+      (s: String) => JsonParseFn.parse(s)))
 
     // Presto normalize(s) — Unicode NFC via the JDK (identical
     // tables). Presto's 2-arg form takes the FORM as an unquoted SQL
     // keyword (normalize(s, NFKC)) which Spark's parser reads as a
     // column reference before any registry lookup, so only the
     // default-NFC 1-arg form is registrable — documented limit.
-    spark.udf.register(guarded("normalize"), (s: String) =>
+    scalaUdf("normalize", udf((s: String) =>
       if (s == null) null
       else java.text.Normalizer.normalize(s,
-        java.text.Normalizer.Form.NFC))
+        java.text.Normalizer.Form.NFC)))
 
     // Presto hamming_distance(s1, s2) — equal-length inputs by
     // contract (Presto throws otherwise; so do we, loudly).
-    spark.udf.register(guarded("hamming_distance"), (a: String, b: String) =>
+    scalaUdf("hamming_distance", udf((a: String, b: String) =>
       if (a == null || b == null) null
       else {
         require(a.length == b.length,
@@ -638,7 +656,7 @@ object Functions {
         var i = 0; var d = 0L
         while (i < a.length) { if (a(i) != b(i)) d += 1; i += 1 }
         java.lang.Long.valueOf(d)
-      })
+      }))
 
     // ── thirteenth tranche: the residual genuinely-new names ────────
     // (json_format/json_parse/from_iso8601_timestamp/map_agg and the
@@ -703,16 +721,16 @@ object Functions {
     // local-date parse; malformed input → NULL (the url_extract_*
     // laxness contract — Presto throws, this engine's criteria
     // surface prefers null-and-filter).
-    spark.udf.register(guarded("from_iso8601_date"), (s: String) =>
+    scalaUdf("from_iso8601_date", udf((s: String) =>
       if (s == null) null
       else scala.util.Try(java.sql.Date.valueOf(
-        java.time.LocalDate.parse(s))).getOrElse(null))
+        java.time.LocalDate.parse(s))).getOrElse(null)))
 
     // Presto cosine_similarity(map<varchar,double>, map<varchar,
     // double>): sparse-vector cosine over shared keys — the dialect
     // twin of the dense embedding kernels in ops.Similarity. Zero
     // norm → NaN (IEEE division), null map → NULL, like Presto.
-    spark.udf.register(guarded("cosine_similarity"),
+    scalaUdf("cosine_similarity", udf(
       (a: Map[String, Double], b: Map[String, Double]) =>
         if (a == null || b == null) null
         else {
@@ -721,7 +739,7 @@ object Functions {
           val na = math.sqrt(a.valuesIterator.map(v => v * v).sum)
           val nb = math.sqrt(b.valuesIterator.map(v => v * v).sum)
           java.lang.Double.valueOf(dot / (na * nb))
-        })
+        }))
 
     // Presto json_size(json, path): children count of the element at
     // path — object → #keys, array → #elements, scalar → 0, missing/
@@ -731,21 +749,11 @@ object Functions {
     // top-level [[JsonSizeFn]] so the registered closure stays free of
     // `Functions$` (which is not Serializable — capturing it made the
     // UDF throw Task-not-serializable on any executor-side eval).
-    // keep last: ensureRegistered reads its presence as "all registered"
-    spark.udf.register(guarded(lastRegistered),
-      (json: String, path: String) => JsonSizeFn.size(json, path))
+    scalaUdf("json_size", udf(
+      (json: String, path: String) => JsonSizeFn.size(json, path)))
+
+    out.result()
   }
-
-  private val lastRegistered = "json_size"
-
-  /** [[register]] unless this session's own registry already holds
-    * the dialect — the check lives in the session, so a new session
-    * registers afresh and nothing is cached process-wide.
-    */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier(lastRegistered)))
-      register(spark)
 
   /** MySQL %-token datetime format (Presto's date_format/date_parse
     * dialect) → Java DateTimeFormatter pattern. Literal runs are
@@ -843,8 +851,8 @@ private[graft] object JsonParseFn extends Serializable {
 
 /** Executor-side implementation of Presto `json_size`.
   *
-  * Top-level and Serializable so the UDF closure registered in
-  * [[Functions.register]] captures only this module (never the
+  * Top-level and Serializable so the UDF closure in
+  * [[Functions.dialect]] captures only this module (never the
   * non-serializable `Functions$`). Malformed inputs — bad JSON, a
   * path not starting with `$`, or a non-numeric array index like
   * `$.a[x]` — all return NULL per the Presto contract; nothing here

@@ -589,13 +589,14 @@ case class NearestCell(left: Expression, right: Expression) extends BinaryExpres
 }
 
 /** `spark.sql.extensions` entry point: injects the native functions
-  * into every session built through `Tables.configure`, making them
-  * resolvable by name from both the Column API (`call_function`) and
-  * raw SQL/criteria text.
+  * and the Presto dialect ([[Functions.dialect]]) into every session
+  * built through `Tables.configure`, making them resolvable by name
+  * from both the Column API (`call_function`) and raw SQL/criteria
+  * text. This is the only place functions are registered.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach(ext.injectFunction)
+    (GraftExtensions.functions ++ Functions.dialect).foreach(ext.injectFunction)
     // ladder step (c): the top-k window → bounded-heap aggregate
     // rewrite (graft.plans.WindowTopKRewrite) joins the operator-
     // optimization batch

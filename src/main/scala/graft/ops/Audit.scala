@@ -33,15 +33,6 @@ object Audit {
       .orderBy("rule")
   }
 
-  /** Referential-integrity count: child rows whose `childKey` has no
-    * match in `parent.parentKey` (a left_anti fold — the orphan
-    * count a foreign-key contract asserts is zero).
-    */
-  def orphanCount(child: DataFrame, childKey: String, parent: DataFrame,
-      parentKey: String): Long =
-    child.join(parent.select(col(parentKey).as(childKey)).distinct(),
-      Seq(childKey), "left_anti").count()
-
   /** Snapshot diff by content hash: full outer join of two corpus
     * versions on the id, rows classified added / removed / changed
     * (same id, different content). Unchanged rows drop — the diff is
@@ -319,7 +310,7 @@ object Audit {
   /** Referential-integrity sweep: one report row per declared FK
     * relationship — child row count, distinct child keys, and orphan
     * rows (child keys absent from the parent) — the whole-schema
-    * version of [[orphanCount]] a warehouse runs after every load.
+    * orphan count a warehouse runs after every load.
     * Each check is one anti-join (parent side broadcast when small)
     * + combinable counts; checks are independent and union at the
     * end, so the sweep parallelizes across relationships.

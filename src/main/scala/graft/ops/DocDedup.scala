@@ -415,9 +415,7 @@ object DocDedup {
     * with band collisions between the two sets, not corpus²) and are
     * verified with exact Jaccard over the hashed shingle sets.
     *
-    * At scale the corpus side is the precomputed signature table the
-    * streaming path already persists
-    * ([[graft.streaming.StreamingPipeline.fingerprintStream]]) — text
+    * At scale the corpus side is a precomputed signature table — text
     * never re-reads; locally it's derived here from the raw corpus.
     *
     * Returns one row per fresh doc: `(doc_id, dup_of, match_kind)`
@@ -752,7 +750,7 @@ object DocDedup {
     * tie to the lower cell, exactly [[Ivf.cellOf]]'s contract), so the
     * WHOLE algorithm is hash-verified, recall contract included. At
     * deployment the anchor table swaps for [[Ivf.trainCentroids]]
-    * output (or a persisted [[Ivf.buildIndex]]) with the identical
+    * output with the identical
     * plan shape: cell count bounds block width at corpus/k, the cell
     * id is the one shuffle key, and the pair stage never sees two
     * cells' vectors in one task.

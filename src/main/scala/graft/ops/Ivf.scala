@@ -73,35 +73,20 @@ object Ivf {
 
   /** ANN top-k: assign corpus and queries to cells, probe each query's
     * `nprobe` best cells, exact cosine rank within the candidates.
-    * Trains the quantizer inline — convenient for one-shot queries;
-    * repeated search over a stable corpus should [[buildIndex]] once
-    * and use [[topKIndexed]] instead of retraining per call.
+    * Trains the quantizer inline, per call.
     */
   def topK(corpus: DataFrame, queries: DataFrame, k: Int, cells: Int = 16,
       nprobe: Int = 4, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val centroids = trainCentroids(corpus, cells, iterations = 2, idCol, vecCol)
-    probeRank(assignCorpus(corpus, centroids, idCol, vecCol),
-      queries, centroids, k, nprobe, idCol, vecCol)
-  }
-
-  /** Corpus side of the probe join: vector + norm + cell, computed
-    * map-only against driver-held centroids.
-    */
-  private def assignCorpus(corpus: DataFrame, centroids: Array[Array[Double]],
-      idCol: String, vecCol: String): DataFrame =
-    Par.spread(corpus.select(col(idCol).as("vec_id"),
+    // corpus side of the probe join: vector + norm + cell, computed
+    // map-only against driver-held centroids
+    val c = Par.spread(corpus.select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("c_vec"),
       sqrt(Similarity.dot(col(vecCol), col(vecCol))).as("c_norm"),
       cellOf(col(vecCol), centroids).as("cell")))
-
-  /** Shared probe + rank tail: queries fan out to their `nprobe` best
-    * cells, the corpus side joins on the cell key, exact cosine ranks
-    * within candidates.
-    */
-  private def probeRank(c: DataFrame, queries: DataFrame,
-      centroids: Array[Array[Double]], k: Int, nprobe: Int,
-      idCol: String, vecCol: String): DataFrame = {
+    // queries fan out to their `nprobe` best cells, the corpus side
+    // joins on the cell key, exact cosine ranks within candidates
     val probeCells = explode(slice(sortArrayDesc(col(vecCol), centroids), 1, nprobe))
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
       sqrt(Similarity.dot(col(vecCol), col(vecCol))).as("q_norm"),
@@ -115,52 +100,6 @@ object Ivf {
       .where(col("rank") <= k)
       .select("q_id", "rank", "vec_id", "cos_e6")
       .orderBy("q_id", "rank")
-  }
-
-  /** Build the IVF index ONCE and persist it: centroids as a tiny
-    * parquet table and the cell-assigned corpus (vec_id, c_vec,
-    * c_norm) written `partitionBy(cell)` — the cell id is the
-    * physical storage-partition key, so at scale a probe touches only
-    * `nprobe / cells` of the corpus files (the broadcast probe join
-    * on the partition column lets dynamic partition pruning skip the
-    * rest at runtime). This replaces the per-call Lloyd retrain +
-    * driver collect of [[topK]] for the stable-corpus serving path.
-    */
-  def buildIndex(corpus: DataFrame, dir: String, cells: Int = 16,
-      iterations: Int = 2, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    val centroids = trainCentroids(corpus, cells, iterations, idCol, vecCol)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    // one file per cell (repartition by the partition column before
-    // partitionBy) — the small-file discipline the lake sink uses
-    assignCorpus(corpus, centroids, idCol, vecCol)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/corpus")
-  }
-
-  /** Load the persisted quantizer (k × dim doubles — driver-tiny). */
-  def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Array[Array[Double]] =
-    spark.read.parquet(s"$dir/centroids").orderBy("cell")
-      .select("centroid").collect().map(_.getSeq[Double](0).toArray)
-
-  /** ANN top-k against a persisted [[buildIndex]] directory: no
-    * training, no corpus re-hash — the cell-partitioned files are
-    * read with the probe cells as the (prunable) partition predicate.
-    */
-  def topKIndexed(spark: org.apache.spark.sql.SparkSession, dir: String,
-      queries: DataFrame, k: Int, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val centroids = loadCentroids(spark, dir)
-    // partition-column type inference is disabled session-wide (lake
-    // parity), so `cell` reads back as string — restore the int key
-    val c = spark.read.parquet(s"$dir/corpus")
-      .withColumn("cell", col("cell").cast("int"))
-    probeRank(c, queries, centroids, k, nprobe, idCol, vecCol)
   }
 
   /** Cell ids sorted by descending affinity to `vec`. */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: media as opaque `binary` columns with
@@ -204,9 +204,7 @@ object Multimodal {
   }
 
   /** Binary ingestion: any table with an id + string payload becomes a
-    * blob table (stand-in for reading image/audio bytes); real media
-    * would arrive via [[readBinaryDir]] with identical downstream
-    * shape.
+    * blob table (stand-in for reading image/audio bytes).
     */
   def toBlobs(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): Dataset[Blob] = {
@@ -214,23 +212,6 @@ object Multimodal {
     import spark.implicits._
     Par.spread(docs.select(col(idCol).cast("long").as("doc_id"),
       encode(col(textCol), "UTF-8").as("payload"))).as[Blob]
-  }
-
-  /** The production media source: a directory of files via Spark's
-    * `binaryFile` format (path, modificationTime, length, content).
-    * Ids derive deterministically from the file path (xxhash64), so
-    * re-ingest is stable; `pathGlobFilter` limits to the media
-    * extension. Downstream shape is identical to [[toBlobs]] — the
-    * decode pipeline never knows which source fed it.
-    */
-  def readBinaryDir(spark: SparkSession, dir: String,
-      glob: String = "*"): Dataset[Blob] = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(dir)
-      .select(xxhash64(col("path")).as("doc_id"), col("content").as("payload"))
-      .as[Blob]
   }
 
   /** The decode pipeline: mapPartitions so a real decoder initializes
@@ -244,10 +225,6 @@ object Multimodal {
       it.map(decode)
     }
   }
-
-  /** End-to-end: documents → blobs → metadata, ordered for the oracle. */
-  def pipeline(docs: DataFrame): DataFrame =
-    extractMetadata(toBlobs(docs)).toDF().orderBy("doc_id")
 
   /** Deterministic REAL-image fixture: each doc becomes an actual
     * PNG / JPEG / GIF byte payload (round-robin on doc_id) whose

@@ -616,8 +616,9 @@ object Similarity {
     * is the deterministic anchor-cell table
     * ([[Ivf.trainCentroids]] at 0 iterations = the first `cells`
     * corpus vectors, the same restatable choice q79's SemDeDup uses);
-    * a production build swaps in trained centroids via
-    * [[Ivf.buildIndex]] without touching the shape.
+    * a production build swaps in trained centroids
+    * ([[Ivf.trainCentroids]] with iterations) without touching the
+    * shape.
     *
     * Scale shape: the corpus never holds floats at scan time — codes
     * (m bytes/vector) + one cell int; the probe set and the

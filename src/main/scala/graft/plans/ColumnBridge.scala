@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+import org.apache.spark.sql.classic.{ExpressionUtils, UserDefinedFunctionUtils}
+import org.apache.spark.sql.errors.QueryCompilationErrors
+import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedFunction}
 
 /** Column ↔ Catalyst `Expression` bridge.
   *
@@ -18,4 +20,16 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A call of the `functions.udf` UDF `f` under `name`: the arity
+    * check and `ScalaUDF` node Spark's own UDF registration builds.
+    */
+  def scalaUdf(name: String, f: UserDefinedFunction,
+      args: Seq[Expression]): ScalaUDF = {
+    val u = f.asInstanceOf[SparkUserDefinedFunction].withName(name)
+    if (args.length != u.inputEncoders.length)
+      throw QueryCompilationErrors.wrongNumArgsError(
+        name, Seq(u.inputEncoders.length), args.length)
+    UserDefinedFunctionUtils.toScalaUDF(u, args)
+  }
 }

@@ -29,12 +29,9 @@ object Lake {
   /** The four hive partition columns of the lake layout. */
   val partitionCols: Seq[String] = Seq("year", "month", "day", "hour")
 
-  /** The ONE definition of the layout prep both the batch writer and
-    * the streaming sink ([[graft.streaming.StreamingPipeline.toLake]])
-    * share: derive the UTC-hour partition columns and drop rows with a
-    * null timestamp (no home partition; the reference's firehose path
-    * would dead-letter them). Keeping this in one place is what makes
-    * batch and streamed directories byte-identical for the pruner.
+  /** The layout prep of [[write]]: derive the UTC-hour partition
+    * columns and drop rows with a null timestamp (no home partition;
+    * the reference's firehose path would dead-letter them).
     */
   def partitionedByHour(df: DataFrame, tsCol: String = "ts"): DataFrame =
     Criteria.withPartitionColumns(df.where(col(tsCol).isNotNull), col(tsCol))

@@ -23,9 +23,6 @@ import graft.ops.Temporal
   * size); the rewrite quantum is the bucket, as in [[KeyedTable]].
   * Tombstones ride in history like any row — so "key k at version v"
   * answers exactly what the table said then, deletes included.
-  * [[vacuum]] applies retention: manifests outside the kept window
-  * drop, and bucket directories no retained manifest references are
-  * physically deleted.
   */
 object VersionedTable {
 
@@ -117,38 +114,5 @@ object VersionedTable {
     val fin = new java.io.File(logDir(dir), f"v${v + 1}%05d.json")
     require(tmp.renameTo(fin), s"commit race: ${fin.getName} exists")
     read(spark, dir)
-  }
-
-  /** Retention: drop manifests older than the last `keepLast`
-    * versions and delete every transaction bucket directory no
-    * retained manifest references. Time travel shortens to the
-    * retained window; the latest version is untouched by
-    * construction (its manifest is always retained). Returns the
-    * number of bucket directories deleted.
-    */
-  def vacuum(dir: String, keepLast: Int = 1): Int = {
-    require(keepLast >= 1, "must retain at least the latest version")
-    val v = currentVersion(dir)
-    val keepFrom = math.max(1, v - keepLast + 1)
-    val retained = (keepFrom to v).flatMap(liveMap(dir, _).values).toSet
-    (1 until keepFrom).foreach { old =>
-      new java.io.File(logDir(dir), f"v$old%05d.json").delete(): Unit
-    }
-    val dataDir = new java.io.File(dir, "data")
-    val txns = Option(dataDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("t"))
-    var deleted = 0
-    txns.foreach { txn =>
-      Option(txn.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("bucket=")).foreach { b =>
-          val rel = s"data/${txn.getName}/${b.getName}"
-          if (!retained.contains(rel)) {
-            Option(b.listFiles()).foreach(_.foreach(f => f.delete(): Unit))
-            if (b.delete()) deleted += 1
-          }
-        }
-      if (Option(txn.listFiles()).exists(_.isEmpty)) txn.delete(): Unit
-    }
-    deleted
   }
 }

@@ -12,28 +12,11 @@ import org.apache.spark.sql.functions._
   *   - exact dedup keys state by a 16-byte content hash, never the
   *     document, and `dropDuplicatesWithinWatermark` evicts state as
   *     the watermark passes — state is O(unique docs per watermark
-  *     window), not O(stream).
-  *   - fingerprint tagging (simhash / minhash signature) is stateless
-  *     map-only via the native codegen'd kernels, so it runs at full
-  *     ingest parallelism with zero shuffle; downstream batch LSH
-  *     banding consumes the persisted signatures without re-reading
-  *     text.
+    *     window), not O(stream).
+  *   - every keyed `flatMapGroupsWithState` stream runs with
+  *     `NoTimeout`: its state lives as long as the query.
   */
 object StreamingPipeline {
-
-  /** The uniform bounded-state knob of every keyed stream here:
-    * `None` → `NoTimeout` (state lives forever — honest when the
-    * semantics are "ever seen" / "all history"), `Some(duration)` →
-    * `ProcessingTimeTimeout`, re-armed per key after each update, so
-    * a key idle past the TTL drops its state (eviction as a retention
-    * policy). Each op's kernel handles `state.hasTimedOut` by
-    * removing and emitting nothing.
-    */
-  private def ttlTimeout(stateTtl: Option[String])
-      : org.apache.spark.sql.streaming.GroupStateTimeout =
-    if (stateTtl.isDefined)
-      org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout
-    else org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout
 
   /** Exact-dup suppression on a document stream: first arrival of each
     * content hash within the watermark horizon passes through,
@@ -162,38 +145,6 @@ object StreamingPipeline {
       .groupBy("template", "depth")
       .agg(count(lit(1)).as("n_urls"))
       .withColumn("is_trap", col("n_urls") >= minUrls)
-  }
-
-  /** Stream → lake: land events hive-partitioned by UTC hour, the
-    * write side of the reference's firehose→Athena layout
-    * (startup.sh) on the live path. The layout prep is
-    * [[graft.sources.Lake.partitionedByHour]] — the SAME code the
-    * batch writer uses — so the batch alert engine's 2-hour window
-    * prunes streamed data identically and null-ts rows drop the same
-    * way (dead-letter parity).
-    *
-    * Small-file note: each microbatch writes one file per in-batch
-    * hour per writing task, so micro-batch cadence is the file-count
-    * knob — pass a `Trigger.ProcessingTime` sized so one batch holds
-    * minutes of data (or `Trigger.AvailableNow` for a drain). Do NOT
-    * rewrite this directory with batch `Lake.write`: the streaming
-    * sink's `_spark_metadata` log is the source of truth for readers,
-    * and out-of-band rewrites orphan or hide files; compaction of a
-    * streamed lake means draining it into a NEW directory.
-    *
-    * Returns the started query; callers own its lifecycle.
-    */
-  def toLake(events: DataFrame, dir: String, checkpointDir: String,
-      tsCol: String = "ts",
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = graft.sources.Lake.partitionedByHour(events, tsCol)
-      .writeStream
-      .format("parquet")
-      .option("path", dir)
-      .option("checkpointLocation", checkpointDir)
-      .partitionBy(graft.sources.Lake.partitionCols: _*)
-    trigger.fold(writer)(writer.trigger).start()
   }
 
   /** Stream-static corpus filter (exact): drop stream documents whose
@@ -374,8 +325,8 @@ object StreamingPipeline {
     * Scale shape: the stream side is map-only (one `minhash_state`
     * kernel call per row) up to ONE stream-static equi-join keyed by
     * `(band, bandhash)`; short docs (empty shingle set) drop on both
-    * sides — the stored-sentinel cross-join hazard
-    * [[fingerprintStream]] documents. Banding layout is
+    * sides — a stored empty-set sentinel would band-match every
+    * other short doc. Banding layout is
     * [[graft.ops.DocDedup.bandKeys]], the same definition the batch
     * LSH uses — snapshot and stream MUST share `n`/`numHashes`/`bands`
     * (the [[graft.ops.DocDedup.incrementalFromSignatures]] contract).
@@ -450,13 +401,9 @@ object StreamingPipeline {
     * keyed by (band, bandhash); state is ONE `(id, sorted
     * shingle-hash array)` per occupied bucket — proportional to the
     * corpus' bucket count, the same size class as the batch LSH's
-    * band table. Eviction contract: with the default `stateTtl =
-    * None` the representative lives forever (self-dedup against
-    * unbounded history — the honest price of "ever seen before");
-    * passing a TTL (e.g. `"6 hours"`) arms a processing-time timeout
-    * per bucket so the dedup horizon becomes a retention policy: a
-    * bucket idle past the TTL drops its representative and the next
-    * arrival becomes the new first occupant. State growth is spec-
+    * band table. The representative lives forever (self-dedup
+    * against unbounded history — the honest price of "ever seen
+    * before"). State growth is spec-
     * pinned (StreamingSpec "selfDedupStream state is one row per
     * occupied bucket"): re-sending the same corpus adds ZERO rows.
     *
@@ -468,7 +415,7 @@ object StreamingPipeline {
     */
   def selfDedupStream(docs: DataFrame, n: Int = 3, numHashes: Int = 16,
       bands: Int = 4, threshold: Double = 0.5, textCol: String = "text",
-      idCol: String = "doc_id", stateTtl: Option[String] = None)
+      idCol: String = "doc_id")
       : org.apache.spark.sql.Dataset[SelfDupRow] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val rows = numHashes / bands
@@ -477,7 +424,6 @@ object StreamingPipeline {
     import spark.implicits._
     val mh = call_function("minhash_state",
       split(col(textCol), " "), lit(n), lit(numHashes))
-    val timeoutConf = ttlTimeout(stateTtl)
     docs
       .select(col(idCol).cast("long").as("doc_id"), mh.as("mh"))
       .select(col("doc_id"), col("mh.sh").as("sh"), col("mh.sig").as("sig"))
@@ -488,63 +434,36 @@ object StreamingPipeline {
         col("bk.band").as("band"), col("bk.bh").as("bh"))
       .as[(Long, Seq[Long], Int, Long)]
       .groupByKey(r => (r._3, r._4))
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: (Int, Long), it: Iterator[(Long, Seq[Long], Int, Long)],
          state: GroupState[BandRep]) => {
-          if (state.hasTimedOut) {
-            // TTL horizon passed with no arrivals: forget the bucket
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = it.toIndexedSeq.sortBy(_._1)
-            var st = state.getOption
-            val out = Seq.newBuilder[SelfDupRow]
-            sorted.foreach { case (id, sh, band, _) =>
-              st match {
-                case None => st = Some(BandRep(id, sh.toArray.sorted))
-                case Some(rep) =>
-                  // exact |A∩B| by sorted-merge against the stored
-                  // sorted array (shingle hashes are distinct per doc)
-                  val a = sh.toArray.sorted
-                  val b = rep.sh
-                  var i = 0; var j = 0; var inter = 0L
-                  while (i < a.length && j < b.length) {
-                    if (a(i) == b(j)) { inter += 1; i += 1; j += 1 }
-                    else if (a(i) < b(j)) i += 1
-                    else j += 1
-                  }
-                  val uni = a.length.toLong + b.length - inter
-                  // floor(inter·10⁶/uni): exact in double at these
-                  // sizes, the same contract as the static alarm
-                  val jac = math.floor(inter.toDouble * 1e6 / uni).toLong
-                  if (jac >= thrMicro) out += SelfDupRow(id, rep.repId, band, jac)
-              }
+          val sorted = it.toIndexedSeq.sortBy(_._1)
+          var st = state.getOption
+          val out = Seq.newBuilder[SelfDupRow]
+          sorted.foreach { case (id, sh, band, _) =>
+            st match {
+              case None => st = Some(BandRep(id, sh.toArray.sorted))
+              case Some(rep) =>
+                // exact |A∩B| by sorted-merge against the stored
+                // sorted array (shingle hashes are distinct per doc)
+                val a = sh.toArray.sorted
+                val b = rep.sh
+                var i = 0; var j = 0; var inter = 0L
+                while (i < a.length && j < b.length) {
+                  if (a(i) == b(j)) { inter += 1; i += 1; j += 1 }
+                  else if (a(i) < b(j)) i += 1
+                  else j += 1
+                }
+                val uni = a.length.toLong + b.length - inter
+                // floor(inter·10⁶/uni): exact in double at these
+                // sizes, the same contract as the static alarm
+                val jac = math.floor(inter.toDouble * 1e6 / uni).toLong
+                if (jac >= thrMicro) out += SelfDupRow(id, rep.repId, band, jac)
             }
-            st.foreach { s =>
-              state.update(s)
-              stateTtl.foreach(state.setTimeoutDuration)
-            }
-            out.result().iterator
           }
+          st.foreach(state.update)
+          out.result().iterator
         })
-  }
-
-  /** Stateless in-stream fingerprinting: attach simhash + MinHash
-    * signature per document via the native kernels (pure projection —
-    * safe in any output mode, no state, no watermark needed).
-    */
-  def fingerprintStream(docs: DataFrame, textCol: String = "text",
-      shingleN: Int = 3, numHashes: Int = 16): DataFrame = {
-    val words: Column = split(col(textCol), " ")
-    val mh = call_function("minhash_state", words, lit(shingleN), lit(numHashes))
-    docs
-      .withColumn("simhash", call_function("simhash64", words))
-      // docs shorter than shingleN words have no signature: persist
-      // NULL, not the empty-set sentinel — a stored sentinel would
-      // band-match every other short doc when batch LSH consumes the
-      // signature table
-      .withColumn("minhash_sig",
-        when(size(mh.getField("sh")) > 0, mh.getField("sig")))
   }
 
   /** Per-key integer EWMA state (`acc := (acc >> 1) + value_micro`)
@@ -564,17 +483,12 @@ object StreamingPipeline {
     * parity therefore holds when each key's history arrives in one
     * batch (the replay/drain case, like q54's DISTINCT equivalence)
     * or when batches are event-time aligned — the usual property of a
-    * replayed log. State is two longs per key; with the default
-    * `stateTtl = None` it lives forever, and per-user keys on a
-    * crawl-scale stream grow without bound — pass a TTL (e.g.
-    * `"7 days"`) to arm a processing-time timeout per key: a key idle
-    * past the TTL drops its state and a later event restarts its fold
-    * from zero (a retention policy, the bounded-state contract every
-    * keyed stream here shares).
+    * replayed log. State is two longs per key and lives forever, so
+    * per-user keys on a crawl-scale stream grow without bound.
     */
   def ewmaStream(events: DataFrame, keyCol: String = "user_id",
       tsCol: String = "ts", valCol: String = "value",
-      tieCol: String = "event_id", stateTtl: Option[String] = None)
+      tieCol: String = "event_id")
       : org.apache.spark.sql.Dataset[EwmaRow] = {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, GroupState, OutputMode}
     val spark = events.sparkSession
@@ -586,19 +500,15 @@ object StreamingPipeline {
         floor(col(valCol) * 1e6).cast("long").as("vm"))
       .as[(Long, Long, Long, Long)]
       .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, ttlTimeout(stateTtl))(
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
         (key: Long, rows: Iterator[(Long, Long, Long, Long)],
          state: GroupState[EwmaState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = rows.toIndexedSeq.sortBy(r => (r._2, r._3))
-            val st = sorted.foldLeft(state.getOption.getOrElse(EwmaState(0L, 0L))) {
-              case (s, (_, _, _, vm)) => EwmaState(s.n + 1, (s.acc >> 1) + vm)
-            }
-            state.update(st)
-            stateTtl.foreach(state.setTimeoutDuration)
-            Iterator.single(EwmaRow(key, st.n, st.acc))
+          val sorted = rows.toIndexedSeq.sortBy(r => (r._2, r._3))
+          val st = sorted.foldLeft(state.getOption.getOrElse(EwmaState(0L, 0L))) {
+            case (s, (_, _, _, vm)) => EwmaState(s.n + 1, (s.acc >> 1) + vm)
           }
+          state.update(st)
+          Iterator.single(EwmaRow(key, st.n, st.acc))
         })
   }
 
@@ -627,8 +537,7 @@ object StreamingPipeline {
     */
   def tokenBucketStream(events: DataFrame, capacity: Int = 3,
       refillUs: Long = 86400000000L, keyCol: String = "user_id",
-      tsCol: String = "ts", idCol: String = "event_id",
-      stateTtl: Option[String] = None)
+      tsCol: String = "ts", idCol: String = "event_id")
       : org.apache.spark.sql.Dataset[ThrottleRow] = {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, GroupState, OutputMode}
     require(capacity >= 1, s"capacity must be positive, got $capacity")
@@ -642,25 +551,21 @@ object StreamingPipeline {
         unix_micros(col(tsCol)).as("us"), col(idCol).cast("long").as("id"))
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtl))(
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: Long, rows: Iterator[(Long, Long, Long)],
          state: GroupState[BucketState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = rows.toIndexedSeq.sortBy(r => (r._2, r._3))
-            var st = state.getOption.getOrElse(BucketState(capUs, -1L))
-            val out = sorted.map { case (_, us, id) =>
-              val delta = if (st.prevUs < 0) 0L else math.max(0L, us - st.prevUs)
-              val avail = math.min(capUs, st.tokUs + delta)
-              val allowed = avail >= refillUs
-              st = BucketState(avail - (if (allowed) refillUs else 0L),
-                math.max(st.prevUs, us))
-              ThrottleRow(key, id, allowed, avail)
-            }
-            state.update(st)
-            stateTtl.foreach(state.setTimeoutDuration)
-            out.iterator
+          val sorted = rows.toIndexedSeq.sortBy(r => (r._2, r._3))
+          var st = state.getOption.getOrElse(BucketState(capUs, -1L))
+          val out = sorted.map { case (_, us, id) =>
+            val delta = if (st.prevUs < 0) 0L else math.max(0L, us - st.prevUs)
+            val avail = math.min(capUs, st.tokUs + delta)
+            val allowed = avail >= refillUs
+            st = BucketState(avail - (if (allowed) refillUs else 0L),
+              math.max(st.prevUs, us))
+            ThrottleRow(key, id, allowed, avail)
           }
+          state.update(st)
+          out.iterator
         })
   }
 
@@ -685,15 +590,13 @@ object StreamingPipeline {
     * order (the batch op's tie-proof order); ACROSS batches arrivals
     * are assumed in event-time order — a late fetch folds at its
     * arrival position, the same in-order caveat the beacon stream
-    * documents. `stateTtl` evicts URLs idle past the TTL (the
-    * uniform contract).
+    * documents.
     */
   def recrawlStatsStream(fetches: DataFrame,
       urlCol: String = "url_key", tsCol: String = "ts",
-      contentCol: String = "content_hash",
-      stateTtl: Option[String] = None)
+      contentCol: String = "content_hash")
       : org.apache.spark.sql.Dataset[RecrawlRow] = {
-    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = fetches.sparkSession
     import spark.implicits._
     fetches.where(col(urlCol).isNotNull && col(tsCol).isNotNull &&
@@ -703,28 +606,24 @@ object StreamingPipeline {
         col(contentCol).cast("string").as("h"))
       .as[(Long, Long, String)]
       .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, ttlTimeout(stateTtl))(
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
         (u: Long, rows: Iterator[(Long, Long, String)],
          state: GroupState[RecrawlState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = rows.map(r => (r._2, r._3)).toArray.sortInPlace()
-            var st = state.getOption.getOrElse(
-              RecrawlState(sorted.head._1, sorted.head._1, null, 0L, 0L,
-                0L))
-            sorted.foreach { case (us, h) =>
-              val flip = st.lastH != null && st.lastH != h
-              st = RecrawlState(math.min(st.firstUs, us),
-                math.max(st.lastUs, us), h, st.n + 1,
-                st.chg + (if (flip) 1L else 0L), st.upd)
-            }
-            st = st.copy(upd = st.upd + 1)
-            state.update(st)
-            stateTtl.foreach(state.setTimeoutDuration)
-            Iterator.single(RecrawlRow(u, st.n, st.chg,
-              st.lastUs / 1000000L - st.firstUs / 1000000L,
-              st.lastUs / 1000000L, st.upd))
+          val sorted = rows.map(r => (r._2, r._3)).toArray.sortInPlace()
+          var st = state.getOption.getOrElse(
+            RecrawlState(sorted.head._1, sorted.head._1, null, 0L, 0L,
+              0L))
+          sorted.foreach { case (us, h) =>
+            val flip = st.lastH != null && st.lastH != h
+            st = RecrawlState(math.min(st.firstUs, us),
+              math.max(st.lastUs, us), h, st.n + 1,
+              st.chg + (if (flip) 1L else 0L), st.upd)
           }
+          st = st.copy(upd = st.upd + 1)
+          state.update(st)
+          Iterator.single(RecrawlRow(u, st.n, st.chg,
+            st.lastUs / 1000000L - st.firstUs / 1000000L,
+            st.lastUs / 1000000L, st.upd))
         })
   }
 
@@ -744,14 +643,13 @@ object StreamingPipeline {
     * draw, so the final sample is arrival-order-INDEPENDENT — batch
     * and stream agree on any partitioning of the input, which is what
     * lets the two share one oracle. State is O(k) per label
-    * regardless of stream length; `stateTtl` arms per-key eviction
-    * for label spaces that churn.
+    * regardless of stream length.
     */
   def prioritySampleStream(docs: DataFrame, k: Int = 10,
       labelCol: String = "source", textCol: String = "text",
-      idCol: String = "doc_id", stateTtl: Option[String] = None)
+      idCol: String = "doc_id")
       : org.apache.spark.sql.Dataset[PriRow] = {
-    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = docs.sparkSession
     import spark.implicits._
     require(k >= 1, s"k must be positive, got $k")
@@ -766,24 +664,20 @@ object StreamingPipeline {
       .select("label", "np", "doc_id", "weight")
       .as[(String, Double, Long, Long)]
       .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, ttlTimeout(stateTtl))(
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
         (label: String, rows: Iterator[(String, Double, Long, Long)],
          state: GroupState[PriState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val prev = state.getOption.getOrElse(PriState(Nil, 0L))
-            // tuple ordering = the batch aggregate's struct ordering:
-            // (np asc = priority desc, doc_id asc)
-            val merged = (prev.items ++
-              rows.map(r => (r._2, r._3, r._4))).sorted.take(k + 1)
-            val upd = prev.upd + 1
-            state.update(PriState(merged, upd))
-            stateTtl.foreach(state.setTimeoutDuration)
-            val tau = if (merged.size == k + 1) -merged.last._1 else 0.0
-            merged.take(k).iterator.zipWithIndex.map {
-              case ((np, id, w), i) =>
-                PriRow(label, upd, i + 1, id, w, -np, tau)
-            }
+          val prev = state.getOption.getOrElse(PriState(Nil, 0L))
+          // tuple ordering = the batch aggregate's struct ordering:
+          // (np asc = priority desc, doc_id asc)
+          val merged = (prev.items ++
+            rows.map(r => (r._2, r._3, r._4))).sorted.take(k + 1)
+          val upd = prev.upd + 1
+          state.update(PriState(merged, upd))
+          val tau = if (merged.size == k + 1) -merged.last._1 else 0.0
+          merged.take(k).iterator.zipWithIndex.map {
+            case ((np, id, w), i) =>
+              PriRow(label, upd, i + 1, id, w, -np, tau)
           }
         })
   }
@@ -811,7 +705,7 @@ object StreamingPipeline {
     * candidate set.
     */
   def heavyHittersStream(events: DataFrame, keyCol: String = "user_id",
-      k: Int = 4096, buckets: Int = 32, stateTtl: Option[String] = None)
+      k: Int = 4096, buckets: Int = 32)
       : org.apache.spark.sql.Dataset[MgRow] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
@@ -821,32 +715,28 @@ object StreamingPipeline {
         col(keyCol).cast("long").as("v"))
       .as[(Int, Long)]
       .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, ttlTimeout(stateTtl))(
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
         (bucket: Int, rows: Iterator[(Int, Long)],
          state: GroupState[MgState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val prev = state.getOption.getOrElse(MgState(Map.empty, 0L))
-            val m = scala.collection.mutable.LongMap.empty[Long]
-            prev.counts.foreach { case (i, c) => m(i) = c }
-            var processed = prev.processed
-            rows.foreach { case (_, v) =>
-              processed += 1
-              if (m.contains(v)) m(v) += 1
-              else if (m.size < k) m(v) = 1
-              else {
-                val dead = scala.collection.mutable.ArrayBuffer.empty[Long]
-                m.foreachEntry { (key, c) =>
-                  if (c == 1L) dead += key else m(key) = c - 1
-                }
-                dead.foreach(m.remove)
+          val prev = state.getOption.getOrElse(MgState(Map.empty, 0L))
+          val m = scala.collection.mutable.LongMap.empty[Long]
+          prev.counts.foreach { case (i, c) => m(i) = c }
+          var processed = prev.processed
+          rows.foreach { case (_, v) =>
+            processed += 1
+            if (m.contains(v)) m(v) += 1
+            else if (m.size < k) m(v) = 1
+            else {
+              val dead = scala.collection.mutable.ArrayBuffer.empty[Long]
+              m.foreachEntry { (key, c) =>
+                if (c == 1L) dead += key else m(key) = c - 1
               }
+              dead.foreach(m.remove)
             }
-            state.update(MgState(m.toMap, processed))
-            stateTtl.foreach(state.setTimeoutDuration)
-            val p = processed
-            m.iterator.map { case (item, est) => MgRow(bucket, item, est, p) }
           }
+          state.update(MgState(m.toMap, processed))
+          val p = processed
+          m.iterator.map { case (item, est) => MgRow(bucket, item, est, p) }
         })
   }
 
@@ -915,8 +805,7 @@ object StreamingPipeline {
     * single-batch replay.
     */
   def seqPairStream(events: DataFrame, typeCol: String = "event_type",
-      userCol: String = "user_id", tsCol: String = "ts",
-      stateTtl: Option[String] = None)
+      userCol: String = "user_id", tsCol: String = "ts")
       : org.apache.spark.sql.Dataset[SeqTypeRow] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
@@ -928,23 +817,19 @@ object StreamingPipeline {
         expr(s"unix_micros($tsCol)").as("us"))
       .as[(Long, String, Long)]
       .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtl))(
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (u: Long, rows: Iterator[(Long, String, Long)],
          state: GroupState[SeqPairState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(
-              SeqPairState(Map.empty, Map.empty))
-            rows.foreach { case (_, t, us) =>
-              st = SeqPairState(
-                st.lo.updated(t, st.lo.get(t).fold(us)(math.min(_, us))),
-                st.hi.updated(t, st.hi.get(t).fold(us)(math.max(_, us))))
-            }
-            state.update(st)
-            stateTtl.foreach(state.setTimeoutDuration)
-            st.lo.keysIterator.toSeq.sorted.iterator
-              .map(t => SeqTypeRow(u, t, st.lo(t), st.hi(t)))
+          var st = state.getOption.getOrElse(
+            SeqPairState(Map.empty, Map.empty))
+          rows.foreach { case (_, t, us) =>
+            st = SeqPairState(
+              st.lo.updated(t, st.lo.get(t).fold(us)(math.min(_, us))),
+              st.hi.updated(t, st.hi.get(t).fold(us)(math.max(_, us))))
           }
+          state.update(st)
+          st.lo.keysIterator.toSeq.sorted.iterator
+            .map(t => SeqTypeRow(u, t, st.lo(t), st.hi(t)))
         })
   }
 
@@ -965,7 +850,7 @@ object StreamingPipeline {
     * map (bounded by the distinct-gap count of the key).
     */
   def beaconStream(events: DataFrame,
-      gapBucketUs: Long = 21600000000L, stateTtl: Option[String] = None)
+      gapBucketUs: Long = 21600000000L)
       : org.apache.spark.sql.Dataset[BeaconRow] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
@@ -977,27 +862,23 @@ object StreamingPipeline {
         expr("unix_micros(ts)").as("us"), col("event_id").cast("long").as("id"))
       .as[(Long, String, Long, Long)]
       .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtl))(
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: (Long, String), rows: Iterator[(Long, String, Long, Long)],
          state: GroupState[BeaconState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(
-              BeaconState(Long.MinValue, Map.empty))
-            var last = st.lastUs
-            var counts = st.counts
-            rows.toSeq.sortBy(r => (r._3, r._4)).foreach { r =>
-              if (last != Long.MinValue) {
-                val b = (r._3 - last) / gapBucketUs
-                counts = counts.updated(b, counts.getOrElse(b, 0L) + 1L)
-              }
-              last = r._3
+          var st = state.getOption.getOrElse(
+            BeaconState(Long.MinValue, Map.empty))
+          var last = st.lastUs
+          var counts = st.counts
+          rows.toSeq.sortBy(r => (r._3, r._4)).foreach { r =>
+            if (last != Long.MinValue) {
+              val b = (r._3 - last) / gapBucketUs
+              counts = counts.updated(b, counts.getOrElse(b, 0L) + 1L)
             }
-            state.update(BeaconState(last, counts))
-            stateTtl.foreach(state.setTimeoutDuration)
-            counts.toSeq.sortBy(_._1).iterator
-              .map { case (b, c) => BeaconRow(key._1, key._2, b, c) }
+            last = r._3
           }
+          state.update(BeaconState(last, counts))
+          counts.toSeq.sortBy(_._1).iterator
+            .map { case (b, c) => BeaconRow(key._1, key._2, b, c) }
         })
   }
 
@@ -1011,10 +892,9 @@ object StreamingPipeline {
     * touched window re-emits its full per-user table (latest emission
     * per (key, user) wins — counts only grow). State per key is the
     * hour's distinct-user count map; hour keys stop growing an hour
-    * after their window passes — pass `stateTtl` (e.g. `"2 hours"`)
-    * to evict closed hours, the shared [[ttlTimeout]] contract.
+    * after their window passes, and their state stays.
     */
-  def sprayStream(events: DataFrame, stateTtl: Option[String] = None)
+  def sprayStream(events: DataFrame)
       : org.apache.spark.sql.Dataset[SprayRow] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
@@ -1027,20 +907,16 @@ object StreamingPipeline {
         col("user_id").cast("long").as("u"))
       .as[(String, Long, Long)]
       .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtl))(
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: (String, Long), rows: Iterator[(String, Long, Long)],
          state: GroupState[SprayState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var counts = state.getOption.map(_.counts).getOrElse(Map.empty)
-            rows.foreach { case (_, _, u) =>
-              counts = counts.updated(u, counts.getOrElse(u, 0L) + 1L)
-            }
-            state.update(SprayState(counts))
-            stateTtl.foreach(state.setTimeoutDuration)
-            counts.toSeq.sortBy(_._1).iterator
-              .map { case (u, c) => SprayRow(key._1, key._2, u, c) }
+          var counts = state.getOption.map(_.counts).getOrElse(Map.empty)
+          rows.foreach { case (_, _, u) =>
+            counts = counts.updated(u, counts.getOrElse(u, 0L) + 1L)
           }
+          state.update(SprayState(counts))
+          counts.toSeq.sortBy(_._1).iterator
+            .map { case (u, c) => SprayRow(key._1, key._2, u, c) }
         })
   }
 
@@ -1056,7 +932,7 @@ object StreamingPipeline {
     * via the SAME shared tail as the batch op, so q322's oracle
     * applies verbatim to a single-batch replay.
     */
-  def rfmStream(events: DataFrame, stateTtl: Option[String] = None)
+  def rfmStream(events: DataFrame)
       : org.apache.spark.sql.Dataset[RfmRow] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
@@ -1069,19 +945,15 @@ object StreamingPipeline {
         expr("cast(round(value * 100) as bigint)").as("vc"))
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtl))(
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (u: Long, rows: Iterator[(Long, Long, Long)],
          state: GroupState[RfmState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(RfmState(Long.MinValue, 0L, 0L))
-            rows.foreach { case (_, d, vc) =>
-              st = RfmState(math.max(st.lastD, d), st.f + 1L, st.mC + vc)
-            }
-            state.update(st)
-            stateTtl.foreach(state.setTimeoutDuration)
-            Iterator.single(RfmRow(u, st.lastD, st.f, st.mC))
+          var st = state.getOption.getOrElse(RfmState(Long.MinValue, 0L, 0L))
+          rows.foreach { case (_, d, vc) =>
+            st = RfmState(math.max(st.lastD, d), st.f + 1L, st.mC + vc)
           }
+          state.update(st)
+          Iterator.single(RfmRow(u, st.lastD, st.f, st.mC))
         })
   }
 
@@ -1104,8 +976,7 @@ object StreamingPipeline {
     * verbatim.
     */
   def centroidStream(embeddings: DataFrame, dim: Int = 64,
-      labelCol: String = "label", vecCol: String = "embedding",
-      stateTtl: Option[String] = None)
+      labelCol: String = "label", vecCol: String = "embedding")
       : org.apache.spark.sql.Dataset[CentroidRow] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = embeddings.sparkSession
@@ -1117,35 +988,30 @@ object StreamingPipeline {
         col(vecCol).cast("array<double>").as("v"))
       .as[(Int, Seq[Double])]
       .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtl))(
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (label: Int, rows: Iterator[(Int, Seq[Double])],
          state: GroupState[CentroidState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val st = state.getOption.getOrElse(
-              CentroidState(0L, Vector.fill(dim)(0L)))
-            val sums = st.sums.toArray
-            var n = st.n
-            rows.foreach { case (_, v) =>
-              var i = 0
-              while (i < dim) {
-                sums(i) += math.floor(v(i) * 1e6).toLong
-                i += 1
-              }
-              n += 1L
+          val st = state.getOption.getOrElse(
+            CentroidState(0L, Vector.fill(dim)(0L)))
+          val sums = st.sums.toArray
+          var n = st.n
+          rows.foreach { case (_, v) =>
+            var i = 0
+            while (i < dim) {
+              sums(i) += math.floor(v(i) * 1e6).toLong
+              i += 1
             }
-            state.update(CentroidState(n, sums.toVector))
-            stateTtl.foreach(state.setTimeoutDuration)
-            (0 until dim).iterator.map(i =>
-              CentroidRow(label, i, n, sums(i), Math.floorDiv(sums(i), n)))
+            n += 1L
           }
+          state.update(CentroidState(n, sums.toVector))
+          (0 until dim).iterator.map(i =>
+            CentroidRow(label, i, n, sums(i), Math.floorDiv(sums(i), n)))
         })
   }
 
   def funnelStream(events: DataFrame, firstType: String, secondType: String,
       windowUs: Long = 3600000000L, keyCol: String = "user_id",
-      typeCol: String = "event_type", tsCol: String = "ts",
-      stateTtl: Option[String] = None)
+      typeCol: String = "event_type", tsCol: String = "ts")
       : org.apache.spark.sql.Dataset[FunnelRow] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
@@ -1158,39 +1024,35 @@ object StreamingPipeline {
         unix_micros(col(tsCol)).as("us"))
       .as[(Long, Boolean, Long)]
       .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, ttlTimeout(stateTtl))(
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: Long, rows: Iterator[(Long, Boolean, Long)],
          state: GroupState[FunnelState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val batch = rows.toIndexedSeq
-            var st = state.getOption.getOrElse(FunnelState(-1L, -1L))
-            // batch-fold order: settle the earliest first, THEN scan
-            // seconds at-or-after it — the exact shape of the batch op
-            val batchFirst = batch.collect { case (_, true, us) => us }
-            val newFirst =
-              (batchFirst ++ Option.when(st.firstUs >= 0)(st.firstUs)).minOption
-                .getOrElse(-1L)
-            if (newFirst >= 0) {
-              val cand = batch.collect {
-                case (_, false, us) if us >= newFirst => us
-              } ++ Option.when(st.secondUs >= newFirst && st.secondUs >= 0)(
-                st.secondUs)
-              st = FunnelState(newFirst, cand.minOption.getOrElse(-1L))
-              state.update(st)
-              stateTtl.foreach(state.setTimeoutDuration)
-              Iterator.single(FunnelRow(key, st.firstUs,
-                Option.when(st.secondUs >= 0)(st.secondUs),
-                if (st.secondUs >= 0 && st.secondUs - st.firstUs <= windowUs) 1
-                else 0))
-            } else {
-              // seconds-only so far: hold nothing. Under in-order
-              // arrival a first that shows up later has a LATER
-              // event time, so these seconds are < first_us and the
-              // batch op drops them too; only a late (out-of-order)
-              // first loses them — the documented undercount window.
-              Iterator.empty
-            }
+          val batch = rows.toIndexedSeq
+          var st = state.getOption.getOrElse(FunnelState(-1L, -1L))
+          // batch-fold order: settle the earliest first, THEN scan
+          // seconds at-or-after it — the exact shape of the batch op
+          val batchFirst = batch.collect { case (_, true, us) => us }
+          val newFirst =
+            (batchFirst ++ Option.when(st.firstUs >= 0)(st.firstUs)).minOption
+              .getOrElse(-1L)
+          if (newFirst >= 0) {
+            val cand = batch.collect {
+              case (_, false, us) if us >= newFirst => us
+            } ++ Option.when(st.secondUs >= newFirst && st.secondUs >= 0)(
+              st.secondUs)
+            st = FunnelState(newFirst, cand.minOption.getOrElse(-1L))
+            state.update(st)
+            Iterator.single(FunnelRow(key, st.firstUs,
+              Option.when(st.secondUs >= 0)(st.secondUs),
+              if (st.secondUs >= 0 && st.secondUs - st.firstUs <= windowUs) 1
+              else 0))
+          } else {
+            // seconds-only so far: hold nothing. Under in-order
+            // arrival a first that shows up later has a LATER
+            // event time, so these seconds are < first_us and the
+            // batch op drops them too; only a late (out-of-order)
+            // first loses them — the documented undercount window.
+            Iterator.empty
           }
         })
   }

@@ -41,14 +41,6 @@ class AuditSpec extends AnyFunSuite with SparkSuite {
     assert(plan.contains("Expand") || plan.split("LocalRelation").length <= 3)
   }
 
-  test("orphanCount: testdata lineitem has no dangling orderkeys; planted orphan counts") {
-    val li = Tables(spark, sf(), "lineitem")
-    val o = Tables(spark, sf(), "orders")
-    assert(Audit.orphanCount(li, "l_orderkey", o, "o_orderkey") === 0L)
-    val planted = li.limit(5).withColumn("l_orderkey", lit(-1L))
-    assert(Audit.orphanCount(planted, "l_orderkey", o, "o_orderkey") === 5L)
-  }
-
   test("snapshotDiff classifies added / removed / changed; unchanged drops") {
     val old = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "text")
     val cur = Seq((2L, "b"), (3L, "C2"), (4L, "d")).toDF("doc_id", "text")

@@ -14,17 +14,17 @@ import graft.sources.Lake
   * query ran, `Criteria.withPartitionColumns`' `date_format(ts,'HH')`
   * returned the literal "HH" and every later lake write in the shared
   * session landed in partitions `hour='HH'` (q51/q108/q109 red,
-  * PlanSpec pruning red). The contract now: [[Functions.register]]
-  * NEVER claims a builtin name (divergent shims register as
+  * PlanSpec pruning red). The contract now: [[Functions.dialect]]
+  * NEVER claims a builtin name (divergent shims are named
   * `presto_<name>`, [[Criteria.rewrite]] maps the tokens), and this
-  * spec registers FIRST and then asserts the engine's own paths still
-  * behave (reference layout alerta.py:136-146).
+  * spec asserts that in a session holding the dialect from its build
+  * the engine's own paths still behave (reference layout
+  * alerta.py:136-146).
   */
 class BuiltinShadowSpec extends AnyFunSuite with SparkSuite {
 
   test("after Functions.register, Spark builtins keep their semantics " +
       "and a lake roundtrip still writes real hour partitions") {
-    Functions.ensureRegistered(spark)
 
     // ① builtin canaries THROUGH the registry (both SQL and DSL hit it)
     val r = spark.sql(
@@ -55,7 +55,7 @@ class BuiltinShadowSpec extends AnyFunSuite with SparkSuite {
     assert(p.getString(1) === "03:04") // MySQL tokens
     assert(p.isNullAt(2)) // Presto-lax NULL, no ANSI throw
 
-    // ③ the poisoned path end-to-end: register happened FIRST, then a
+    // ③ the poisoned path end-to-end: the dialect is in the session, then a
     //    lake write + partition-window scan — the exact r7 blast shape
     import spark.implicits._
     val events = Seq(
@@ -81,7 +81,6 @@ class BuiltinShadowSpec extends AnyFunSuite with SparkSuite {
     // pointless; and their presto_ twins must not be)
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-    Functions.ensureRegistered(spark)
     val reg = spark.sessionState.functionRegistry
     for (n <- Seq("split", "date_format", "from_unixtime", "contains",
         "element_at", "array_agg", "map_concat")) {

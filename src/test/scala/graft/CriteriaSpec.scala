@@ -73,7 +73,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
     // these four are native Spark functions whose names AND argument
     // orders already match Presto, so a wild criteria using them needs
     // no rewrite and no registry shim — pin that contract per function
-    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql(
       """SELECT 'a-b-c' AS s, map('x', 1, 'y', 2) AS m,
         |       array('p', 'q') AS arr,
@@ -155,7 +154,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
 
   test("Presto 6th tranche: mixed-case TRY_CAST, array_sort comparator " +
       "lambda, json_array_length, regexp_like — through criteria text") {
-    graft.functions.Functions.ensureRegistered(spark)
     val r = spark.sql(Criteria.rewrite(
       """SELECT Try_Cast('7' AS INTEGER) AS ok,
         |  TRY_CAST('x' AS INTEGER) AS bad,
@@ -209,7 +207,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
 
   test("seventh tranche: json_parse/json_format canonicalize, " +
       "at_timezone shifts fields, MAP(ARRAY, ARRAY) constructs") {
-    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql("SELECT TIMESTAMP '2024-03-15 22:45:12' AS ts")
     // canonical compact text: whitespace dropped, field order kept
     assert(row.where(Criteria.toColumn(
@@ -238,7 +235,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
 
   test("eighth tranche: Presto regex defaults (group 0, NULL on miss, " +
       "2-arg replace deletes), array repeat, last_day_of_month") {
-    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql(
       "SELECT 'click' AS s, TIMESTAMP '2024-02-10 09:00:00' AS ts")
     // 2-arg regexp_extract: WHOLE match (Spark's bare builtin would
@@ -268,7 +264,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
 
   test("ninth tranche: split_part NULL past the field count, format, " +
       "regexp_split, strrpos, from_base/to_base, IEEE predicates") {
-    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql("SELECT 'purchase' AS s, 255L AS n")
     // 1-based literal-delimiter split; index past the fields is NULL
     // (Spark's bare builtin would return '')
@@ -307,7 +302,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
   test("seventh-tranche parity set needs no shim: map_filter / " +
       "map_zip_with / array_position / negative-start slice / " +
       "ISO date_trunc('week')") {
-    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql("SELECT TIMESTAMP '2024-03-15 13:45:12' AS ts")
     assert(row.where(Criteria.toColumn(
       "cardinality(map_filter(MAP(ARRAY['a','b','c'], ARRAY[1, 2, 3]), " +
@@ -339,7 +333,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
   test("tenth tranche: width_bucket 4-arg + Presto array-bins form, " +
       "json_array_get with negative indexes, zip, and the parity set " +
       "(zip_with, 3-arg array_join, try)") {
-    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql("SELECT 'purchase' AS s")
     // 4-arg equi-width form delegates to the builtin expression
     assert(row.where(Criteria.toColumn(
@@ -385,7 +378,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
 
   test("eleventh tranche: levenshtein_distance, to_hex/from_hex, " +
       "codepoint, truncate toward zero, infinity()/nan(), ngrams") {
-    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql("SELECT 'purchase' AS s")
     assert(row.where(Criteria.toColumn(
       "levenshtein_distance('kitten', 'sitting') = 3 AND " +
@@ -412,7 +404,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
 
   test("twelfth tranche: url_extract_* family — host without port, " +
       "NULL absent components, per-name parameter, numeric port") {
-    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql(
       "SELECT 'https://u@Ex.com:8443/a/b?x=1&y=2#frag' AS u")
     assert(row.where(Criteria.toColumn(
@@ -434,7 +425,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
   test("thirteenth tranche: from_iso8601_date, cosine_similarity " +
       "(sparse maps), geometric_mean / histogram / multimap_agg " +
       "aggregates, and transform_keys/values parity") {
-    graft.functions.Functions.ensureRegistered(spark)
     val row = spark.sql("SELECT 1 AS one")
     // Trino find_first composes from registered names instead of a
     // shim (lambda parents must be HOFs — see the tranche comment)
@@ -479,7 +469,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
   test("histogram / multimap_agg one-pass aggregates: shim-parity " +
       "entry order (keys ascending, values ascending nulls-first), " +
       "null-input skip vs null-key rejection, distributed merge") {
-    graft.functions.Functions.ensureRegistered(spark)
     // distributed: 200 rows over 8 partitions force partial buffers
     // to serialize, shuffle, and merge — the TypedImperativeAggregate
     // round-trip the old regroup shim never exercised
@@ -537,7 +526,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
   test("reduce_agg: Presto fold contracts — null inputs skipped, " +
       "struct state survives the distributed serialize/merge " +
       "round-trip, and contract violations fail TYPED at analysis") {
-    graft.functions.Functions.ensureRegistered(spark)
     // 8 partitions force partial-state serialization and combineFn
     // merges — the path a single-partition test never exercises
     spark.range(200).repartition(8)
@@ -588,7 +576,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
   test("histogram / multimap_agg float keys use SQL equality: -0.0 " +
       "and 0.0 land in ONE bucket (boxed JVM equality would split " +
       "them), top-level and nested, single-partition and merged") {
-    graft.functions.Functions.ensureRegistered(spark)
     // coalesce(1): the single-partition path never serializes the
     // buffer, so a missed normalization in update() shows up HERE
     // (the UnsafeProjection round-trip can mask it on shuffled paths)
@@ -620,28 +607,6 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
       "SELECT histogram(k) AS h FROM negzero_d")).head()
       .getMap[Double, Long](0).toMap
     assert(h === Map(0.0 -> 64L))
-  }
-
-  test("toColumn registers the dialect once per session, in that session") {
-    import org.apache.spark.sql.SparkSession
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val fresh = spark.newSession()
-    val registry = fresh.sessionState.functionRegistry
-    assert(!registry.functionExists(FunctionIdentifier("presto_element_at")))
-    SparkSession.setActiveSession(fresh)
-    try {
-      // the first call registers on the fresh session: the rewritten
-      // subscript resolves to presto_element_at (NULL out of range)
-      val oob = Criteria.toColumn("element_at(array(1, 2), 5) IS NULL")
-      assert(fresh.range(1).where(oob).count() === 1)
-      // a second call must not register again: a replaced shim survives
-      registry.createOrReplaceTempFunction("presto_element_at",
-        _ => Literal(7), "built-in")
-      Criteria.toColumn("strpos('abc', 'b') = 2")
-      assert(fresh.range(1).selectExpr("presto_element_at(array(1), 1)")
-        .head().getInt(0) === 7)
-    } finally SparkSession.setActiveSession(spark)
   }
 }
 

@@ -19,7 +19,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   private def psql(q: String) = spark.sql(graft.criteria.Criteria.rewrite(q))
 
   test("json_extract_scalar registered as native Catalyst function") {
-    Functions.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT json_extract_scalar('{"a":{"b":"x"}}', '$.a.b') AS v""").head()
     assert(r.getString(0) === "x")
@@ -30,7 +29,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("strpos and json_extract registered with Presto argument order") {
-    Functions.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT strpos('hello world', 'world') AS p,
         |  json_extract('{"a":{"b":1}}', '$.a') AS j""".stripMargin).head()
@@ -39,7 +37,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("contains registered with Presto array semantics") {
-    Functions.ensureRegistered(spark)
     val r = psql(
       """SELECT contains(array('a','b'), 'b') AS c1,
         |  contains(array('a','b'), 'z') AS c2""".stripMargin).head()
@@ -48,7 +45,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("element_at / cardinality / from_iso8601_timestamp: Presto semantics") {
-    graft.functions.Functions.ensureRegistered(spark)
     val r = psql(
       """SELECT element_at(array(10, 20), 2) AS a,
         |       element_at(array(10, 20), 5) AS oob,
@@ -67,7 +63,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("codepoint and Presto 4-arg reduce lambda parse through the registry") {
-    Functions.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT codepoint('a') AS cp,
         |       reduce(transform(split('abc', ''), c -> codepoint(c)),
@@ -83,7 +78,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("Presto URL/map/time surface: extractors, split_to_map, unixtime") {
-    Functions.ensureRegistered(spark)
     val r = psql(
       """SELECT url_extract_host('https://ex.com:8080/a/b?u=7&x=1') AS h,
         |       url_extract_path('https://ex.com/a/b?u=7') AS p,
@@ -104,7 +98,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("Presto regexp_like / json_size parse through the registry") {
-    Functions.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT regexp_like('error-4xx', 'err.*xx$') AS hit,
         |       regexp_like('ok', 'err') AS miss,
@@ -131,7 +124,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
     // forcing a real distributed evaluation over a DataFrame filter —
     // the shape a wild criteria like `json_size(details, '$.tags') > 1`
     // takes (alerts/an_alert.yml:5's json-predicate style).
-    Functions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq(
       ("e1", """{"tags":["a","b"],"sev":3}"""),
@@ -152,7 +144,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("array_agg retains NULLs; map_agg tolerates duplicate keys") {
-    Functions.ensureRegistered(spark)
     import spark.implicits._
     Seq((1L, "a", Some(10L)), (1L, "a", Some(99L)), (1L, "b", None))
       .toDF("g", "k", "v").createOrReplaceTempView("t_agg_presto")
@@ -171,7 +162,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
 
   test("Presto approx_distinct / approx_percentile / arbitrary " +
       "aggregate through the registry") {
-    Functions.ensureRegistered(spark)
     import spark.implicits._
     (1 to 100).map(i => (i % 5, i.toDouble))
       .toDF("g", "v").createOrReplaceTempView("t_approx")
@@ -187,7 +177,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("Presto array_agg / map_agg aggregate through the registry") {
-    Functions.ensureRegistered(spark)
     import spark.implicits._
     Seq((1L, "a", 10L), (1L, "b", 20L), (2L, "c", 30L))
       .toDF("g", "k", "v").createOrReplaceTempView("t_agg")
@@ -203,7 +192,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
 
   test("Presto TRY(expr): runtime errors become NULL; success passes " +
       "through; reduce/transform carry Presto's lambda arg order") {
-    Functions.ensureRegistered(spark)
     val ansi = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try {
@@ -226,7 +214,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   test("Presto 4th-tranche registry: lambda matchers, starts_with, " +
       "levenshtein_distance, dow/doy/week, from_unixtime TIMESTAMP, " +
       "bitwise forms, to_hex(sha256(to_utf8()))") {
-    Functions.ensureRegistered(spark)
     val r = psql(
       """SELECT any_match(array(1, 5), x -> x > 4) AS am,
         |       all_match(array(1, 5), x -> x > 0) AS alm,
@@ -261,7 +248,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("Presto day_of_week is ISO: Monday=1, Sunday=7") {
-    Functions.ensureRegistered(spark)
     // 2024-01-01 is a Monday; 2024-01-07 a Sunday
     val r = spark.sql(
       """SELECT day_of_week(date'2024-01-01') AS mon,
@@ -276,7 +262,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   test("Presto 5th-tranche registry: literal split, MySQL-token " +
       "date_format/date_parse, ngrams, map_concat last-wins, " +
       "normalize, hamming_distance, url_encode/url_decode") {
-    Functions.ensureRegistered(spark)
     val r = psql(
       """SELECT split('a.b.c', '.') AS sp,
         |       split('a,b,c,d', ',', 2) AS sp2,
@@ -320,7 +305,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("Presto normalize composes combining marks (NFC)") {
-    Functions.ensureRegistered(spark)
     import spark.implicits._
     // decomposed e + U+0301 COMBINING ACUTE → composed U+00E9
     val decomposed = "e" + 0x0301.toChar
@@ -334,7 +318,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
 
   test("registered split keeps Spark's char-split for '' and regex " +
       "reading for non-literal delimiters") {
-    Functions.ensureRegistered(spark)
     val r = psql(
       """SELECT split('ab', '') AS chars,
         |       split('axxb', concat('x', 'x')) AS nonlit""".stripMargin).head()
@@ -356,7 +339,6 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("to_utc UDF coerces epochs of any magnitude") {
-    Functions.ensureRegistered(spark)
     val r = spark.sql("SELECT to_utc('1704068166000') AS t").head()
     assert(r.getTimestamp(0).toInstant === java.time.Instant.parse("2024-01-01T00:16:06Z"))
   }
@@ -492,17 +474,44 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
     assert(out.exists(e => AlertDoc.seq(e, "plugins") === Seq("loader_tag")))
   }
 
-  test("a dialect query's body registers the dialect once per session") {
-    val s = spark.newSession()
+  test("a fresh session holds the whole dialect: no query or toColumn " +
+      "registers it") {
+    import org.apache.spark.sql.AnalysisException
     val replaced = "replaced a previously registered function"
-    val logger = s.sessionState.functionRegistry.getClass.getName
+    val logger = spark.sessionState.functionRegistry.getClass.getName
+    val (fresh, built) = logged(logger) {
+      val s = spark.newSession()
+      s.range(1).collect() // builds the session state, registry included
+      s
+    }
+    // every dialect name resolves with no call before it; a call with
+    // the wrong arity may fail, but never as an unknown routine
+    val names = Functions.dialect.map(_._1.funcName)
+    assert(names.size === 86 && names.distinct.size === 86)
+    val unresolved = names.filter { n =>
+      scala.util.Try(fresh.range(1).selectExpr(s"$n()")).failed.toOption
+        .exists {
+          case e: AnalysisException => e.getCondition == "UNRESOLVED_ROUTINE"
+          case _ => false
+        }
+    }
+    assert(unresolved.isEmpty, unresolved)
+    assert(fresh.range(1).selectExpr("presto_element_at(array(1), 5)")
+      .head().isNullAt(0))
+    // a dialect query's body runs twice, then criteria compile: the
+    // results repeat, the rewritten subscript resolves to
+    // presto_element_at (NULL out of range) and nothing re-registers
     val body = SparkEntry.queries("q50_presto_dialect")
-    val first = body(s, sf()).collect().toSeq
-    val (second, messages) = logged(logger)(body(s, sf()).collect().toSeq)
-    assert(second === first)
-    assert(!messages.exists(_.contains(replaced)), messages.take(3))
-    // the probe sees a re-registration when one happens
-    val (_, again) = logged(logger)(Functions.register(s))
-    assert(again.exists(_.contains(replaced)))
+    val ((first, second, oob), messages) = logged(logger) {
+      val first = body(fresh, sf()).collect().toSeq
+      val second = body(fresh, sf()).collect().toSeq
+      val oob = graft.criteria.Criteria.toColumn("element_at(array(1, 2), 5) IS NULL")
+      (first, second, fresh.range(1).where(oob).count())
+    }
+    assert(first.nonEmpty && second === first)
+    assert(oob === 1)
+    assert(!(built ++ messages).exists(_.contains(replaced)),
+      (built ++ messages).take(3))
   }
+
 }

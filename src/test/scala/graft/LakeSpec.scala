@@ -36,38 +36,6 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     assert(back.where(col("hour") === "10").count() == 1)
   }
 
-  test("streaming toLake lands the same hour-partitioned layout") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    // timestamps enter as strings and cast through the session zone
-    // (pinned UTC) — Timestamp.valueOf would build them in the JVM
-    // default zone and shift the partition values on non-UTC machines
-    val mem = MemoryStream[(Long, String, String)]
-    val dir = s"$tmp/stream"
-    val q = graft.streaming.StreamingPipeline.toLake(
-      mem.toDF().toDF("id", "ts", "v")
-        .withColumn("ts", col("ts").cast("timestamp")),
-      dir, s"$tmp/stream-ckpt")
-    try {
-      mem.addData((1L, "2024-03-05 10:15:00", "a"),
-        (2L, "2024-03-05 11:20:00", "b"),
-        (3L, null, "d"))
-      q.processAllAvailable()
-      val back = Lake.read(spark, dir)
-      // null-ts row dropped; partition values zero-padded strings —
-      // byte-identical layout to the batch Lake.write side
-      assert(back.count() === 2)
-      assert(back.select("hour").distinct().as[String].collect().toSet ===
-        Set("10", "11"))
-      assert(new java.io.File(s"$dir/year=2024/month=03/day=05/hour=10").isDirectory)
-      // a second microbatch APPENDS (streaming sink semantics)
-      mem.addData((4L, "2024-03-05 10:45:00", "e"))
-      q.processAllAvailable()
-      assert(Lake.read(spark, dir).where(col("hour") === "10").count() === 2)
-    } finally q.stop()
-  }
-
   test("hour-equality predicates prune the scan to one directory") {
     import spark.implicits._
     val df = (0 until 48).map(h =>

@@ -257,23 +257,6 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
     assert((exact & got).size >= exact.size / 2)
   }
 
-  test("ivf persisted index round-trips: topKIndexed == inline topK") {
-    val e = Tables(spark, sf("sf0.01"), "embeddings")
-    val queries = e.where(col("vec_id") < 5)
-    val dir = tempDir("graft_ivf_").toString
-    graft.ops.Ivf.buildIndex(e, dir, cells = 16)
-    val inline = graft.ops.Ivf.topK(e, queries, k = 3, cells = 16, nprobe = 4)
-      .collect().map(_.toSeq).toSeq
-    val indexed = graft.ops.Ivf.topKIndexed(spark, dir, queries, k = 3, nprobe = 4)
-      .collect().map(_.toSeq).toSeq
-    assert(indexed === inline)
-    // the index layout is one directory per cell (the probe's
-    // partition-pruning key at scale)
-    val cellDirs = new java.io.File(s"$dir/corpus").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-    assert(cellDirs.nonEmpty && cellDirs.length <= 16)
-  }
-
   test("prefix-filter jaccard is lossless: equals brute-force pair set") {
     // the prefix-filtering lemma's claim is exactness — verify the
     // candidate generator against an in-memory brute force over the
@@ -657,21 +640,6 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
     assert(cut === full, "no shingle in this corpus is hot enough to change results")
   }
 
-  test("multimodal binaryFile source feeds the same decode pipeline") {
-    val dir = tempDir("graft-media")
-    java.nio.file.Files.write(dir.resolve("a.img"), Array.fill[Byte](100)(1))
-    java.nio.file.Files.write(dir.resolve("b.img"), Array.fill[Byte](321)(2))
-    java.nio.file.Files.write(dir.resolve("skip.txt"), Array.fill[Byte](9)(3))
-    val blobs = Multimodal.readBinaryDir(spark, dir.toString, glob = "*.img")
-    val metas = Multimodal.extractMetadata(blobs).collect()
-    assert(metas.length === 2) // glob filtered the .txt out
-    assert(metas.map(_.byte_len).sorted.toSeq === Seq(100L, 321L))
-    // ids are deterministic across re-reads (derived from the path)
-    val again = Multimodal.readBinaryDir(spark, dir.toString, glob = "*.img")
-      .collect().map(_.doc_id).sorted.toSeq
-    assert(again === blobs.collect().map(_.doc_id).sorted.toSeq)
-  }
-
   test("qualityScore: integer linear head, exact score and keep decision") {
     val d = Seq((1L, "aa bb aa the", "en", "s")).toDF("doc_id", "text", "lang", "source")
     val r = TextAnalysis.qualityScore(d).collect()(0)
@@ -749,13 +717,14 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("multimodal stub pipeline: deterministic metadata through mapPartitions") {
-    val m = Multimodal.pipeline(docs).collect()
+    val m = Multimodal.extractMetadata(Multimodal.toBlobs(docs)).collect()
+      .sortBy(_.doc_id)
     assert(m.length === 5)
     val r0 = m.head
     val len = "the quick brown fox jumps over the lazy dog".length
-    assert(r0.getAs[Long]("byte_len") === len.toLong)
-    assert(r0.getAs[Int]("width") === 320 + len % 320)
-    assert(r0.getAs[Long]("total_px") ===
+    assert(r0.byte_len === len.toLong)
+    assert(r0.width === 320 + len % 320)
+    assert(r0.total_px ===
       (320 + len % 320).toLong * (240 + len % 240) * (1 + len % 8))
   }
 

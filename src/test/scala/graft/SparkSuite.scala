@@ -31,10 +31,11 @@ trait TempDirs extends BeforeAndAfterAll { self: Suite =>
   * suite that mutates the session `FunctionRegistry` over a BUILTIN
   * name poisons every later suite (the r7 PlanSpec red: a date_format
   * shadow turned lake partition values into the literal "HH",
-  * order-dependently). [[Functions.register]] now refuses builtin
-  * names at register time; the `afterAll` canary below is the second
-  * line of defense — it fails LOUDLY in whichever suite broke the
-  * invariant, instead of some unrelated suite failing later.
+  * order-dependently). [[graft.functions.Functions.dialect]] refuses
+  * builtin names when the session is built; the `afterAll` canary
+  * below is the second line of defense — it fails LOUDLY in whichever
+  * suite broke the invariant, instead of some unrelated suite failing
+  * later.
   */
 trait SparkSuite extends TempDirs { self: AnyFunSuite =>
   @volatile private var sparkStarted = false

@@ -825,33 +825,6 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(e.getMessage.contains("32-hash"))
   }
 
-  test("fingerprintStream tags documents statelessly, matching batch values") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[Doc]
-    val out = graft.streaming.StreamingPipeline.fingerprintStream(mem.toDF())
-    val q = out.writeStream.format("memory").queryName("fps")
-      .outputMode(OutputMode.Append).start()
-    try {
-      val text = "one two three four five six seven"
-      mem.addData(Doc(ts(1), 1, text), Doc(ts(2), 2, "too short"))
-      q.processAllAvailable()
-      val rows = spark.table("fps").collect()
-      // short docs persist a NULL signature, never the empty-set
-      // sentinel (which would band-match every other short doc)
-      val shortRow = rows.find(_.getAs[Long]("doc_id") == 2L).get
-      assert(shortRow.isNullAt(shortRow.fieldIndex("minhash_sig")))
-      val row = rows.find(_.getAs[Long]("doc_id") == 1L).get
-      // batch twins computed through the same registered kernels
-      val batch = spark.sql(
-        s"""SELECT simhash64(split('$text', ' ')) AS sh,
-           |  minhash_state(split('$text', ' '), 3, 16).sig AS sig""".stripMargin)
-        .collect().head
-      assert(row.getAs[Long]("simhash") === batch.getAs[Long]("sh"))
-      assert(row.getSeq[Long](row.fieldIndex("minhash_sig")) ===
-        batch.getSeq[Long](batch.fieldIndex("sig")))
-    } finally q.stop()
-  }
-
   test("decontaminateStream flags eval-gram overlap map-only, " +
       "stateless across batches") {
     implicit val sc = spark.sqlContext
@@ -1340,81 +1313,14 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     } finally q.stop()
   }
 
-  test("selfDedupStream with a TTL arms a processing-time timeout " +
-      "(eviction contract is wired, not just documented)") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val out = graft.streaming.StreamingPipeline.selfDedupStream(
-      mem.toDF().toDF("doc_id", "text"), stateTtl = Some("1 hour"))
-    val timeouts = out.queryExecution.analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState =>
-        f.timeout
-    }
-    assert(timeouts ===
-      Seq(org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout))
-    // and the default stays NoTimeout (self-dedup against all history)
-    val def0 = graft.streaming.StreamingPipeline
-      .selfDedupStream(mem.toDF().toDF("doc_id", "text"))
-      .queryExecution.analyzed.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState =>
-          f.timeout
-      }
-    assert(def0 ===
-      Seq(org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout))
-  }
-
   case class FullEv(ts: Timestamp, user_id: Long, event_type: String,
       event_id: Long, value: Double)
   case class EmbRow(label: Int, embedding: Seq[Double])
-
-  test("every keyed stream arms the uniform stateTtl eviction contract: " +
-      "ProcessingTimeTimeout when set, NoTimeout by default") {
-    implicit val sc = spark.sqlContext
-    import org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    val e = MemoryStream[FullEv].toDF()
-    val emb = MemoryStream[EmbRow].toDF()
-    val docs = MemoryStream[(Long, String, String)].toDF()
-      .toDF("doc_id", "text", "source")
-    val P = graft.streaming.StreamingPipeline
-    def timeoutOf(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.analyzed.collect {
-        case f: FlatMapGroupsWithState => f.timeout
-      }
-    def build(ttl: Option[String]) = Seq(
-      "ewma" -> P.ewmaStream(e, stateTtl = ttl).toDF(),
-      "tokenBucket" -> P.tokenBucketStream(e, stateTtl = ttl).toDF(),
-      "heavyHitters" -> P.heavyHittersStream(e, stateTtl = ttl).toDF(),
-      "seqPair" -> P.seqPairStream(e, stateTtl = ttl).toDF(),
-      "beacon" -> P.beaconStream(e, stateTtl = ttl).toDF(),
-      "spray" -> P.sprayStream(e, stateTtl = ttl).toDF(),
-      "rfm" -> P.rfmStream(e, stateTtl = ttl).toDF(),
-      "centroid" -> P.centroidStream(emb, dim = 2, stateTtl = ttl).toDF(),
-      "funnel" -> P.funnelStream(e, "a", "b", stateTtl = ttl).toDF(),
-      "prioritySample" -> P.prioritySampleStream(docs, stateTtl = ttl)
-        .toDF(),
-      "recrawlStats" -> P.recrawlStatsStream(e, urlCol = "user_id",
-        contentCol = "event_type", stateTtl = ttl).toDF())
-    build(Some("1 hour")).foreach { case (name, df) =>
-      assert(timeoutOf(df) === Seq(GroupStateTimeout.ProcessingTimeTimeout),
-        s"$name: TTL must arm a processing-time timeout")
-    }
-    build(None).foreach { case (name, df) =>
-      assert(timeoutOf(df) === Seq(GroupStateTimeout.NoTimeout),
-        s"$name: default stays NoTimeout (oracle semantics unchanged)")
-    }
-  }
 
   test("ewmaStream state is one row per key: replaying known keys adds " +
       "ZERO rows, a new key adds one (bounded-state plateau)") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[FullEv]
-    // NoTimeout here deliberately: the plateau property (state rows =
-    // distinct keys) is timeout-independent, and an ARMED
-    // ProcessingTimeTimeout makes the micro-batch engine schedule
-    // batches forever (a potential timeout always "requires another
-    // batch"), so processAllAvailable never settles. The TTL wiring
-    // itself is pinned by the plan-level contract test above.
     val out = graft.streaming.StreamingPipeline
       .ewmaStream(mem.toDF())
     val q = out.toDF().writeStream.format("memory").queryName("ewma_plateau")
@@ -1444,9 +1350,6 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       "never stream length)") {
     implicit val sc = spark.sqlContext
     val P = graft.streaming.StreamingPipeline
-    // NoTimeout on purpose, same reason as the ewma plateau row: an
-    // armed ProcessingTimeTimeout makes processAllAvailable spin; the
-    // TTL arming is pinned by the plan-level contract test above.
     val batch = Seq(
       FullEv(ts(1), 1L, "a", 10L, 1.0), FullEv(ts(2), 2L, "a", 11L, 2.0),
       FullEv(ts(3), 3L, "a", 12L, 3.0), FullEv(ts(4), 1L, "b", 13L, 4.0))

@@ -56,24 +56,6 @@ class VersionedTableSpec extends AnyFunSuite with SparkSuite {
     assert(state(dir)(7L) === "v7b" && state(dir).size === 64)
   }
 
-  test("vacuum drops unreferenced history, keeps the retained window intact") {
-    val dir = tmp()
-    VersionedTable.merge(spark, dir, toDf(Seq(
-      row(1, 10, 1, "a1"), row(2, 11, 1, "b1"))), "k")
-    VersionedTable.merge(spark, dir, toDf(Seq(row(1, 12, 5, "a2"))), "k")
-    VersionedTable.merge(spark, dir, toDf(Seq(row(1, 13, 9, "a3"))), "k")
-    val deleted = VersionedTable.vacuum(dir, keepLast = 2)
-    // txn1's bucket for key 1 was superseded twice → gone; key 2's
-    // bucket is still referenced by v2 AND v3 manifests → survives
-    assert(deleted >= 1)
-    assert(state(dir) === Map(1L -> "a3", 2L -> "b1"))
-    assert(state(dir, 2) === Map(1L -> "a2", 2L -> "b1"))
-    // the vacuumed version is no longer readable
-    intercept[IllegalArgumentException] {
-      VersionedTable.read(spark, dir, 1).collect()
-    }
-  }
-
   test("stale updates lose against history exactly as in KeyedTable") {
     val dir = tmp()
     VersionedTable.merge(spark, dir, toDf(Seq(row(1, 10, 8, "new"))), "k")
