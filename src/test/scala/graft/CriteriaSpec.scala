@@ -608,5 +608,28 @@ class CriteriaSpec extends AnyFunSuite with SparkSuite {
       .getMap[Double, Long](0).toMap
     assert(h === Map(0.0 -> 64L))
   }
+
+  test("toColumn registers the dialect once per session, in that session") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    // the session build registers the dialect; toColumn itself is pure
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    assert(registry.functionExists(FunctionIdentifier("presto_element_at")))
+    SparkSession.setActiveSession(fresh)
+    try {
+      // the rewritten subscript resolves to presto_element_at (NULL out
+      // of range) in the session the column runs in
+      val oob = Criteria.toColumn("element_at(array(1, 2), 5) IS NULL")
+      assert(fresh.range(1).where(oob).count() === 1)
+      // a later call must not register again: a replaced shim survives
+      registry.createOrReplaceTempFunction("presto_element_at",
+        _ => Literal(7), "built-in")
+      Criteria.toColumn("strpos('abc', 'b') = 2")
+      assert(fresh.range(1).selectExpr("presto_element_at(array(1), 1)")
+        .head().getInt(0) === 7)
+    } finally SparkSession.setActiveSession(spark)
+  }
 }
 
